@@ -70,6 +70,7 @@ from rust_dms_cdc_operator_spark.operators.similarity import (
     lsh_bucket_topk,
 )
 from rust_dms_cdc_operator_spark.session import (
+    conf_bytes as _conf_bytes,
     materialize_cache,
     materialize_leaf,
     read_table,
@@ -128,18 +129,6 @@ STREAM_SETUP_SECS: dict[str, float] = {}
 
 def _stream_setup_done(name: str, t0: float) -> None:
     STREAM_SETUP_SECS[name] = round(time.time() - t0, 3)
-
-
-def _conf_bytes(s: str) -> int:
-    """Parse a Spark byte-size conf string ('64MB', '256m', '1g')."""
-    t = s.strip().lower()
-    for suf, mult in (
-        ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-        ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1),
-    ):
-        if t.endswith(suf):
-            return int(float(t[: -len(suf)])) * mult
-    return int(float(t))
 
 
 class _stream_state_scope:

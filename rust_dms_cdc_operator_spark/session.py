@@ -10,8 +10,14 @@ Pandas-UDF slow path.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+#: The directory holding the ``rust_dms_cdc_operator_spark`` package.
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__))
+)
 
 
 def get_spark(
@@ -26,6 +32,10 @@ def get_spark(
     real cluster it is left to spark-submit. ``shuffle_partitions``
     defaults to the core count locally — on a 1000-executor cluster
     you would set this to ~2-3x total cores (AQE coalesces down).
+    A ``local[...]`` session also lists input paths on the driver and
+    puts the package's parent dir on the Python workers' path; cluster
+    sessions keep Spark's parallel listing and ship the package with
+    ``--py-files``. ``extra_conf`` is applied last, so its values win.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "4")
     if master is None:
@@ -62,12 +72,37 @@ def get_spark(
         .config("spark.scheduler.mode", "FAIR")  # per-table pools share fairly
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
+    if master.startswith("local"):
+        # Driver and executors share one machine here, so two settings
+        # hold only in local mode. Path listing stays on the driver: a
+        # distributed listing job runs on the same cores and only adds
+        # one task per path. Python workers import the package from its
+        # parent dir, whatever the driver's working directory is.
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(2**31 - 1),
+        ).config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_BYTE_SHIFT = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+
+
+def conf_bytes(value: str, default: int = 64 << 20) -> int:
+    """Parse a Spark byte-size conf string: an integer with an optional
+    ``k``/``m``/``g``/``t``/``p`` unit, each optionally followed by
+    ``b`` ('64MB', '256m', '1t', '134217728b'). A bare number is
+    bytes. An unparsable value returns ``default`` instead of
+    raising, so a conf the parser does not know never fails a query."""
+    m = re.fullmatch(r"(\d+)([kmgtp]?)b?", value.strip().lower())
+    if m is None:
+        return default
+    return int(m.group(1)) << _BYTE_SHIFT[m.group(2)]
 
 
 #: Per-process memo of fixture table schemas, keyed by (dir, table).

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rust_dms_cdc_operator_spark import fsio
-from rust_dms_cdc_operator_spark.session import local_relation
+from rust_dms_cdc_operator_spark.session import conf_bytes, local_relation
 from rust_dms_cdc_operator_spark.sources.manifest import ParquetFile
 
 FILE_SEQ_COL = "_cdc_file_seq"
@@ -52,12 +52,13 @@ def _norm_path(p: str) -> str:
 
 
 def _conf_bytes(spark: SparkSession, jgetter: str, key: str, default: int) -> int:
+    """A byte-size SQL conf as Spark resolves it (the JVM getter), or,
+    where the getter is unavailable, the conf string parsed by
+    :func:`session.conf_bytes`."""
     try:
         return int(getattr(spark._jsparkSession.sessionState().conf(), jgetter)())
-    except Exception:  # noqa: BLE001 - conf string fallback ("134217728b")
-        raw = spark.conf.get(key, str(default))
-        digits = "".join(ch for ch in raw if ch.isdigit())
-        return int(digits or str(default))
+    except Exception:  # noqa: BLE001 - getter missing on this Spark build
+        return conf_bytes(spark.conf.get(key, str(default)), default)
 
 
 def _effective_max_split_bytes(spark: SparkSession, sizes: list[int]) -> int:
@@ -86,10 +87,9 @@ def _check_csv_unsplit(spark: SparkSession, paths: list[str]) -> None:
     by size, not offset, so a split file scrambles ``_cdc_row_seq`` and
     with it last-writer-wins compaction). Gzipped CSV is unsplittable;
     plain CSV must fit in the EFFECTIVE split size Spark will actually
-    use (min(maxPartitionBytes, max(openCost, bytesPerCore))) — not
-    just maxPartitionBytes (round-2 review finding). Sizes resolve
-    through :mod:`fsio`, so remote (s3a/hdfs) drops are enforced too,
-    not skipped."""
+    use (min(maxPartitionBytes, max(openCost, bytesPerCore))), not
+    just maxPartitionBytes. Sizes resolve through :mod:`fsio`, so
+    remote (s3a/hdfs) drops are enforced too, not skipped."""
     sizes = [
         fsio.getsize(p)
         for p in paths
@@ -123,7 +123,10 @@ def read_manifest(
     """Read an ordered manifest as ONE scan, annotated with replay order.
 
     The (path → rank) map is tiny (one row per file) and broadcast, so
-    sequencing adds no shuffle regardless of data size.
+    sequencing adds no shuffle regardless of data size. A session from
+    :func:`session.get_spark` in local mode lists the paths on the
+    driver; a cluster session lists more than 32 paths with a
+    distributed Spark job.
 
     ``fmt="csv"`` supports DMS's CSV target format (a drop the
     reference's parquet-only reader cannot replay). CSV needs an
@@ -176,10 +179,9 @@ def read_manifest(
     rank_rows = [
         (_norm_path(p), i, files[i].is_load_file()) for i, p in enumerate(paths)
     ]
-    # Arrow local relation (round 12): this broadcast build side is
-    # evaluated in every manifest-reading query; the list form cost
-    # one Python-worker hop per pickled slice per evaluation — see
-    # session.local_relation
+    # Arrow local relation: this broadcast build side is evaluated
+    # JVM-side in every manifest-reading query, with no Python-worker
+    # hop per evaluation (see session.local_relation)
     rank_df = local_relation(
         spark,
         rank_rows,

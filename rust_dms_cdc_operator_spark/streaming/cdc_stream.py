@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 from rust_dms_cdc_operator_spark import fsio
 from rust_dms_cdc_operator_spark.functions.dmscols import DMS_OP_COL
 from rust_dms_cdc_operator_spark.operators.compact import compact_cdc
+from rust_dms_cdc_operator_spark.session import local_relation
 
 
 def apply_cdc_batch(
@@ -62,6 +63,25 @@ def apply_cdc_batch(
 
 
 BUCKET_COL = "_state_bucket"
+
+
+def write_buckets(df: DataFrame, buckets_in_play: int, out_dir: str) -> list[str]:
+    """Write ``df`` under ``out_dir`` partitioned by ``BUCKET_COL`` and
+    return the bucket ids (as strings) that got a directory.
+
+    One task → whole buckets → one file per bucket: hash partitioning
+    on the bucket column puts every row of a bucket in the same task,
+    and a task writes one file per bucket it holds. The task count is
+    ``min(buckets_in_play, defaultParallelism)``, so a commit that
+    touches more buckets than there are cores still runs one wave of
+    tasks instead of one task per bucket."""
+    sc = df.sparkSession.sparkContext
+    n = max(1, min(buckets_in_play, sc.defaultParallelism))
+    df.repartition(n, BUCKET_COL).write.partitionBy(BUCKET_COL).parquet(out_dir)
+    prefix = f"{BUCKET_COL}="
+    return [
+        d[len(prefix):] for d in fsio.listdir_dirs(out_dir) if d.startswith(prefix)
+    ]
 
 
 _MANIFEST_RE = re.compile(r"^(\d{20})\.json$")
@@ -218,11 +238,21 @@ class BucketedParquetState:
         last = compact_cdc(batch, self.pk_cols, order_cols=order_cols, op_col="__keep_d__")
         last = last.withColumn(BUCKET_COL, self._bucket(num_buckets)).persist()
         try:
-            touched = sorted(
-                r[BUCKET_COL] for r in last.select(BUCKET_COL).distinct().collect()
+            # one job over the persisted compacted batch yields the
+            # touched buckets and the commit's key counts
+            per_bucket = (
+                last.groupBy(BUCKET_COL)
+                .agg(
+                    F.count(F.lit(1)).alias("keys"),
+                    F.count_if(F.col(op_col) != "D").alias("upserts"),
+                )
+                .collect()
             )
-            if not touched:  # empty microbatch
+            if not per_bucket:  # empty microbatch
                 return False
+            touched = sorted(r[BUCKET_COL] for r in per_bucket)
+            n_keys = sum(r["keys"] for r in per_bucket)
+            n_upserts = sum(r["upserts"] for r in per_bucket)
             upserts = last.filter(F.col(op_col) != "D").select(*data_cols)
             live_dirs = [
                 fsio.join(self.path, buckets[str(b)])
@@ -247,18 +277,9 @@ class BucketedParquetState:
             else:
                 merged = upserts
             merged = merged.withColumn(BUCKET_COL, self._bucket(num_buckets))
-            # one task → one bucket → one file, instead of every shuffle
-            # partition spraying a file into every bucket directory
             gen = f"e{epoch + 1}-{uuid.uuid4().hex[:8]}"
             gen_dir = fsio.join(self.path, "data", gen)
-            merged.repartition(
-                min(num_buckets, len(touched)), BUCKET_COL
-            ).write.partitionBy(BUCKET_COL).parquet(gen_dir)
-            staged = {
-                int(d.split("=", 1)[1])
-                for d in fsio.listdir_dirs(gen_dir)
-                if d.startswith(f"{BUCKET_COL}=")
-            }
+            staged = {int(b) for b in write_buckets(merged, len(touched), gen_dir)}
             for b in touched:
                 # a touched bucket with no staged dir lost its every
                 # key: dropping it from the mapping IS the delete
@@ -284,12 +305,9 @@ class BucketedParquetState:
                     + [f for f in out_schema.fields if f.name not in have]
                 )
             schema_json = out_schema.json()
-            # per-epoch observability (the reference's self-timing log
-            # lines, cdc_operator.rs:219-229 — but queryable from the
-            # commit log): counts are two tiny jobs over the already-
-            # persisted compacted batch, never over the state
-            n_keys = last.count()
-            n_upserts = last.filter(F.col(op_col) != "D").count()
+            # per-epoch stats are queryable from the commit log; the
+            # counts come from the batch aggregation above, never from
+            # the state
             fsio.mkdirs(self._manifest_dir())
             fsio.publish_text(
                 fsio.join(self._manifest_dir(), f"{epoch + 1:020d}.json"),
@@ -337,7 +355,9 @@ class BucketedParquetState:
         # differs from table column order (silently wrong/empty results
         # when the types happen to coincide)
         pk_fields = [schema[c] for c in self.pk_cols]
-        keys_df = spark.createDataFrame(keys, T.StructType(pk_fields))
+        # an Arrow local relation: the keys frame and its bucket
+        # projection are evaluated JVM-side, with no Python worker
+        keys_df = local_relation(spark, keys, T.StructType(pk_fields))
         num_buckets = man["num_buckets"]
         wanted = {
             r[BUCKET_COL]
@@ -392,16 +412,12 @@ class BucketedParquetState:
             )
             gen = f"e{epoch + 1}-compact-{uuid.uuid4().hex[:8]}"
             gen_dir = fsio.join(self.path, "data", gen)
-            state.withColumn(
-                BUCKET_COL, self._bucket(num_buckets)
-            ).repartition(num_buckets, BUCKET_COL).write.partitionBy(
-                BUCKET_COL
-            ).parquet(gen_dir)
-            buckets = {
-                d.split("=", 1)[1]: f"data/{gen}/{BUCKET_COL}={d.split('=', 1)[1]}"
-                for d in fsio.listdir_dirs(gen_dir)
-                if d.startswith(f"{BUCKET_COL}=")
-            }
+            staged = write_buckets(
+                state.withColumn(BUCKET_COL, self._bucket(num_buckets)),
+                num_buckets,
+                gen_dir,
+            )
+            buckets = {b: f"data/{gen}/{BUCKET_COL}={b}" for b in staged}
         fsio.publish_text(
             fsio.join(self._manifest_dir(), f"{epoch + 1:020d}.json"),
             json.dumps(

@@ -42,6 +42,7 @@ from rust_dms_cdc_operator_spark import fsio
 from rust_dms_cdc_operator_spark.streaming.cdc_stream import (
     BUCKET_COL,
     BucketedParquetState,
+    write_buckets,
 )
 
 _MANIFEST_GLOB_WIDTH = 20
@@ -164,13 +165,8 @@ class IncrementalAggView:
             )
             gen = f"v{uuid.uuid4().hex[:8]}"
             gen_dir = fsio.join(self.path, "aggs", gen)
-            partials.repartition(
-                min(len(stale), sman["num_buckets"]), BUCKET_COL
-            ).write.partitionBy(BUCKET_COL).parquet(gen_dir)
-            for d in fsio.listdir_dirs(gen_dir):
-                if d.startswith(f"{BUCKET_COL}="):
-                    b = d.split("=", 1)[1]
-                    agg_dirs[b] = f"aggs/{gen}/{d}"
+            for b in write_buckets(partials, len(stale), gen_dir):
+                agg_dirs[b] = f"aggs/{gen}/{BUCKET_COL}={b}"
 
         epoch = (vman["epoch"] + 1) if vman else 1
         fsio.mkdirs(self._manifest_dir())

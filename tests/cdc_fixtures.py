@@ -17,6 +17,7 @@ that the Spark window compaction must match.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from datetime import datetime
 from decimal import Decimal
 
@@ -160,3 +161,20 @@ def write_schema_drift(root: str) -> dict:
     _write(root, t, "LOAD00000001.parquet", _cols(["I"], [customers_row(1)]))
     _write(root, t, "2026/08/01/20260801-120000000.parquet", _cols(["I"], rows))
     return {"table": t, "pk": ["id"]}
+
+
+@contextmanager
+def stage_task_counts(sc, group: str):
+    """Run the block under Spark job group ``group``; on exit, the
+    yielded list holds the task count of every stage its jobs ran."""
+    counts: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield counts
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    for j in tracker.getJobIdsForGroup(group):
+        for s in tracker.getJobInfo(j).stageIds:
+            if (info := tracker.getStageInfo(s)) is not None:
+                counts.append(info.numTasks)

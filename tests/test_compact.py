@@ -242,3 +242,30 @@ def test_scd2_history_lifecycle(spark):
     h2 = build_history(cdc2, ["id"], order_col="seq").collect()
     assert len(h2) == 1
     assert (h2[0].valid_to, h2[0].is_current) == (2, False)
+
+
+def test_read_manifest_lists_paths_on_driver(spark, tmp_path):
+    """40 files is above Spark's 32-path parallel-listing threshold; in
+    local mode the listing stays on the driver, so no stage of reading
+    and counting the manifest runs one task per file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from rust_dms_cdc_operator_spark.sources.manifest import ParquetFile
+    from rust_dms_cdc_operator_spark.sources.reader import read_manifest
+
+    n = 40
+    keys = ["t/LOAD00000001.parquet"] + [
+        f"t/2026/01/01/{i:05d}.parquet" for i in range(1, n)
+    ]
+    for i, key in enumerate(keys):
+        path = tmp_path / key
+        path.parent.mkdir(parents=True, exist_ok=True)
+        pq.write_table(pa.table({"Op": ["I"], "id": [i]}), str(path))
+    with cdc_fixtures.stage_task_counts(
+        spark.sparkContext, "read-manifest-40"
+    ) as stage_tasks:
+        df = read_manifest(spark, str(tmp_path), [ParquetFile(k) for k in keys])
+        assert df.count() == n
+    assert stage_tasks, "no jobs recorded under the group"
+    assert n not in stage_tasks, stage_tasks

@@ -1,0 +1,72 @@
+"""Session helpers: byte-size conf parsing and Python-worker imports."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+import textwrap
+
+import pytest
+
+from rust_dms_cdc_operator_spark.inventory_llm import _conf_bytes
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@pytest.mark.parametrize(
+    ("raw", "want"),
+    [
+        ("1t", 1 << 40),
+        ("2p", 2 << 50),
+        ("64MB", 64 << 20),
+        ("134217728b", 134_217_728),
+        ("garbage", 64 << 20),
+    ],
+)
+def test_conf_bytes_suffixes_and_fallback(raw, want):
+    assert _conf_bytes(raw) == want
+
+
+def test_reader_conf_fallback_parses_units(spark):
+    """Without the JVM getter, the reader parses the conf string with
+    its unit instead of keeping only the digits."""
+    from rust_dms_cdc_operator_spark.sources import reader
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "128m")
+    try:
+        got = reader._conf_bytes(spark, "noSuchGetter", key, 1)
+    finally:
+        spark.conf.set(key, old)
+    assert got == 128 << 20
+
+
+def test_python_worker_imports_package_from_any_cwd(tmp_path):
+    """A driver started outside the repository, with the package on
+    its own sys.path only, runs a Python UDF that imports the package."""
+    script = tmp_path / "udf_import.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from pyspark.sql import functions as F
+        from rust_dms_cdc_operator_spark.session import get_spark
+
+        spark = get_spark(app_name="worker-import", master="local[1]",
+                          shuffle_partitions=1)
+
+        @F.udf("string")
+        def package_name(_):
+            import rust_dms_cdc_operator_spark
+            return rust_dms_cdc_operator_spark.__name__
+
+        print("UDF:" + spark.range(1).select(package_name("id")).first()[0])
+        spark.stop()
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert "UDF:rust_dms_cdc_operator_spark" in out.stdout, out.stderr[-3000:]

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rust_dms_cdc_operator_spark.streaming.cdc_stream import stream_replay
+from tests.cdc_fixtures import stage_task_counts
 
 SCHEMA = T.StructType(
     [
@@ -1461,3 +1462,115 @@ def test_neardup_accumulate_crash_replay_idempotent(spark, tmp_path):
         r.doc_id: r.is_neardup for r in spark.read.parquet(out).collect()
     }
     assert got == want
+
+
+def _parquet_files(d: str) -> list[str]:
+    return [f for f in os.listdir(d) if f.endswith(".parquet")]
+
+
+def test_bucket_writes_one_file_per_bucket_above_parallelism(spark, tmp_path):
+    """More buckets touched than defaultParallelism: the write runs
+    fewer tasks than buckets, yet every committed bucket dir (merge,
+    re-bucketing compact, view refresh) holds exactly one file."""
+    from rust_dms_cdc_operator_spark.streaming.cdc_stream import (
+        BucketedParquetState,
+    )
+    from rust_dms_cdc_operator_spark.streaming.ivm import IncrementalAggView
+
+    nb = 16
+    assert spark.sparkContext.defaultParallelism < nb
+    root = tmp_path / "wstate"
+    store = BucketedParquetState(str(root / "state"), ["id"], nb)
+    view = IncrementalAggView(
+        store, str(root / "view"), ["val"], {"n": ("count", "*")}
+    )
+
+    def one_file_per_bucket(base, rels):
+        for rel in rels:
+            files = _parquet_files(os.path.join(base, rel))
+            assert len(files) == 1, (rel, files)
+
+    # first commit (no live state), then one that merges live buckets
+    for i in range(2):
+        batch = spark.createDataFrame(
+            [("U", k, f"g{k % 3}", i) for k in range(i * 100, i * 100 + 400)],
+            schema=SCHEMA,
+        )
+        with stage_task_counts(spark.sparkContext, f"bucket-merge-{i}") as stage_tasks:
+            store.merge_batch(batch, order_cols=["seq"])
+        # no stage runs one task per bucket
+        assert stage_tasks and nb not in stage_tasks, stage_tasks
+        man = store._load_manifest()
+        assert store.stats()["buckets_touched"] == nb
+        one_file_per_bucket(store.path, man["buckets"].values())
+        view.refresh(spark)
+        one_file_per_bucket(view.path, view._load_manifest()["agg_buckets"].values())
+    assert store.read(spark).count() == 500
+
+    store.compact(spark, new_num_buckets=24)
+    man = store._load_manifest()
+    assert man["num_buckets"] == 24 and len(man["buckets"]) == 24
+    one_file_per_bucket(store.path, man["buckets"].values())
+    assert store.read(spark).count() == 500
+    view.refresh(spark)
+    vman = view._load_manifest()
+    assert len(vman["agg_buckets"]) == 24
+    one_file_per_bucket(view.path, vman["agg_buckets"].values())
+    assert {(r.val, r.n) for r in view.result(spark).collect()} == {
+        (r.val, r["count"]) for r in store.read(spark).groupBy("val").count().collect()
+    }
+
+
+def test_lookup_keys_frame_is_a_local_relation(spark, tmp_path):
+    """The lookup's keys frame is JVM-side: no RDD scan (the pickled
+    slices of ``createDataFrame(list)``) anywhere in its plan."""
+    from rust_dms_cdc_operator_spark.streaming.cdc_stream import (
+        BucketedParquetState,
+    )
+
+    store = BucketedParquetState(str(tmp_path / "kstate" / "state"), ["id"], 8)
+    store.merge_batch(
+        spark.createDataFrame(
+            [("I", i, f"v{i}", 1) for i in range(50)], schema=SCHEMA
+        ),
+        order_cols=["seq"],
+    )
+    df = store.lookup(spark, [(3,), (17,), (49,)])
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
+    assert {(r.id, r.val) for r in df.collect()} == {
+        (3, "v3"), (17, "v17"), (49, "v49")
+    }
+
+
+def test_lookup_matches_full_state_filter(spark, tmp_path):
+    """Single-PK and mixed-type composite-PK lookups return exactly the
+    rows a semi-join of the full state against the same keys returns,
+    including keys that were deleted or never existed."""
+    from rust_dms_cdc_operator_spark.streaming.cdc_stream import (
+        BucketedParquetState,
+    )
+
+    rows = [("I", f"a{i % 7}", i, f"v{i}", 1) for i in range(200)]
+    schema = "Op string, acct string, line long, val string, seq long"
+    for pk in (["line"], ["acct", "line"], ["line", "acct"]):
+        store = BucketedParquetState(
+            str(tmp_path / "_".join(pk) / "state"), pk, 8
+        )
+        store.merge_batch(spark.createDataFrame(rows, schema), order_cols=["seq"])
+        store.merge_batch(
+            spark.createDataFrame([("D", "a3", 3, None, 2)], schema),
+            order_cols=["seq"],
+        )
+        by_col = {"acct": lambda i: f"a{i % 7}", "line": lambda i: i}
+        keys = [tuple(by_col[c](i) for c in pk) for i in (0, 3, 64, 199, 500)]
+        want = {
+            r.val
+            for r in store.read(spark)
+            .join(spark.createDataFrame(keys, ", ".join(
+                f"{c} {'string' if c == 'acct' else 'long'}" for c in pk
+            )), pk, "left_semi")
+            .collect()
+        }
+        assert want == {"v0", "v64", "v199"}
+        assert {r.val for r in store.lookup(spark, keys).collect()} == want
