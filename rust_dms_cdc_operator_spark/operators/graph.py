@@ -659,7 +659,9 @@ def label_propagation(
     edges: DataFrame, iters: int = 3, assume_distinct: bool = False
 ) -> DataFrame:
     """Semi-synchronous label propagation (community detection) on an
-    undirected (id_a < id_b) edge list: labels initialize to node ids;
+    undirected edge list, in either orientation (with
+    ``assume_distinct`` each edge must appear once, oriented
+    id_a < id_b): labels initialize to node ids;
     each round every node adopts the most frequent label among its
     neighbors, ties broken by the smallest label — fully deterministic,
     so the ``iters``-level unrolled SQL oracle reproduces it exactly.
@@ -678,7 +680,12 @@ def label_propagation(
     adjacency cache (module contract)."""
     e = edges.select("id_a", "id_b")
     if not assume_distinct:
-        e = e.distinct()
+        # orient each edge before dedup: (a, b) and (b, a) are one
+        # undirected edge and must cast one vote each way, not two
+        e = e.select(
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
+        ).distinct()
     if iters <= 0:
         # identity labels — the pre-round-11 iters=0 behavior, which
         # the round-1 fold would otherwise silently absorb into one

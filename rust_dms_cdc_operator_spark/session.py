@@ -5,12 +5,24 @@ AQE on (runtime re-planning, skew-join splitting, partition
 coalescing), UTC session timezone (required for oracle parity and for
 the DMS `_dms_ingestion_timestamp` semantics), Arrow enabled for the
 Pandas-UDF slow path.
+
+The generated-code class cache (``spark.sql.codegen.cache.maxEntries``)
+holds :data:`CODEGEN_CACHE_ENTRIES` classes instead of Spark's 100.
+The engine repeats the same plans within one session (``snapshot`` and
+``validate`` per table, one CDC merge per microbatch, every rep of a
+registered query), and one pass of them generates more than 100
+distinct classes; with the default LRU every class is evicted before
+it is reused, so every repeat recompiles them all and the JIT warms the
+new classes again. The setting is static: a session this module did
+not build keeps Spark's default, and its effect on cluster executors
+is unmeasured.
 """
 
 from __future__ import annotations
 
 import os
 import re
+from datetime import timezone
 
 from pyspark.sql import SparkSession
 
@@ -18,6 +30,13 @@ from pyspark.sql import SparkSession
 _PACKAGE_PARENT = os.path.dirname(
     os.path.dirname(os.path.abspath(__file__))
 )
+
+#: Entries in Spark's generated-code class cache. About 5x the largest
+#: per-pass working set measured on the engine's benchmark workloads
+#: (about 190-220 classes in a dedup-panel warm-up pass). One pass of
+#: every registered query generates more (about 3,700 classes), so a
+#: second such pass still recompiles most of them.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -35,7 +54,13 @@ def get_spark(
     A ``local[...]`` session also lists input paths on the driver and
     puts the package's parent dir on the Python workers' path; cluster
     sessions keep Spark's parallel listing and ship the package with
-    ``--py-files``. ``extra_conf`` is applied last, so its values win.
+    ``--py-files``. Every session caches :data:`CODEGEN_CACHE_ENTRIES`
+    generated classes (Spark's default is 100), so repeated operations
+    reuse their compiled code instead of recompiling it. That conf is
+    static: it applies only when this call creates the session, not to
+    a session that is already running (e.g. one handed to
+    ``__spark_entry__.entry``), and what it does on cluster executors
+    is unmeasured. ``extra_conf`` is applied last, so its values win.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "4")
     if master is None:
@@ -71,6 +96,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.scheduler.mode", "FAIR")  # per-table pools share fairly
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
+        )
     )
     if master.startswith("local"):
         # Driver and executors share one machine here, so two settings
@@ -88,6 +116,15 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark) -> int:
+    """Janino compiles so far in this JVM: the sample count of Spark's
+    ``CodegenMetrics`` compilation-time histogram. The difference
+    across a repeated operation is 0 when every generated class it
+    needs is still in the class cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 _BYTE_SHIFT = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
@@ -149,6 +186,12 @@ def local_relation(spark, rows, schema):
     masked dtype, nulls stay nulls and values stay exact int64 for
     any caller, not just the current null-free ones.
 
+    Naive ``datetime`` values of ``TimestampType`` columns are read in
+    the host's time zone, as ``createDataFrame(list)`` and ``collect()``
+    read them; left naive, pandas/Arrow would read them in the session
+    time zone instead, and a key collected on a non-UTC host would name
+    a different instant.
+
     Private-API note: the string-schema convenience rides
     ``T._parse_datatype_string``, pinned to the vendored pyspark
     (4.1.x); callers that must outlive a pyspark upgrade can pass a
@@ -170,6 +213,12 @@ def local_relation(spark, rows, schema):
     data = {}
     for i, f in enumerate(schema.fields):
         vals = [t[i] for t in tuples]
+        if isinstance(f.dataType, T.TimestampType):
+            # naive values read as host-local, like createDataFrame(list)
+            vals = [
+                None if v is None else v.astimezone(timezone.utc)
+                for v in vals
+            ]
         dt = _pd_int.get(type(f.dataType))
         data[f.name] = pd.array(vals, dtype=dt) if dt else vals
     pdf = pd.DataFrame(data, columns=[f.name for f in schema.fields])

@@ -203,6 +203,26 @@ def test_label_propagation_matches_python_replay(spark):
     assert got == labels
 
 
+def test_label_propagation_ignores_edge_orientation(spark):
+    """An undirected edge listed both ways, (a, b) and (b, a), is one
+    edge: the labels equal those of the oriented input, and so do the
+    labels of a fully reversed input."""
+    from rust_dms_cdc_operator_spark.operators.graph import (
+        label_propagation,
+    )
+
+    edges = [(1, 2), (1, 3), (2, 3), (4, 5), (4, 6), (5, 6), (3, 4),
+             (7, 8), (8, 9)]
+
+    def labels(rows):
+        df = spark.createDataFrame(rows, "id_a long, id_b long")
+        return {r.v: r.label for r in label_propagation(df, iters=3).collect()}
+
+    want = labels(edges)
+    assert labels(edges + [(4, 3), (2, 1), (9, 8)]) == want
+    assert labels([(b, a) for a, b in edges]) == want
+
+
 def test_cc_schema_identical_across_paths(spark):
     """Which path the edge count selects (driver union-find fast path
     vs distributed contraction) must never be observable: the output

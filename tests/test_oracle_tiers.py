@@ -32,7 +32,7 @@ def test_oracle_tiers_contract():
     assert not (set(t1) & set(t2))
     # tier1/tier2 EXTEND the recorded panel (no duplication)
     assert not ((set(t1) | set(t2)) & set(panel))
-    # the recorded panel matches the last driver CORRECTNESS artifact
+    # the recorded panel matches the round-11 driver CORRECTNESS artifact
     with open(os.path.join(REPO, "CORRECTNESS_r11.json")) as f:
         driver = set(json.load(f))
     assert set(panel) == driver

@@ -1,4 +1,5 @@
-"""Session helpers: byte-size conf parsing and Python-worker imports."""
+"""Session helpers: byte-size conf parsing, Python-worker imports and
+the generated-code class cache."""
 
 from __future__ import annotations
 
@@ -10,6 +11,10 @@ import textwrap
 import pytest
 
 from rust_dms_cdc_operator_spark.inventory_llm import _conf_bytes
+from rust_dms_cdc_operator_spark.session import (
+    CODEGEN_CACHE_ENTRIES,
+    codegen_compiles,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -70,3 +75,45 @@ def test_python_worker_imports_package_from_any_cwd(tmp_path):
         capture_output=True, text=True, timeout=600,
     )
     assert "UDF:rust_dms_cdc_operator_spark" in out.stdout, out.stderr[-3000:]
+
+
+def test_repeated_pass_reuses_generated_classes(spark):
+    """A pass generating more distinct classes than Spark's default
+    cache (100) compiles nothing when it runs a second time."""
+    from pyspark.sql import functions as F
+
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert spark.conf.get(key) == str(CODEGEN_CACHE_ENTRIES)
+
+    def one_pass():
+        # a distinct literal per query: one distinct generated class each
+        for i in range(120):
+            spark.range(8).select(F.col("id") + i).collect()
+
+    c0 = codegen_compiles(spark)
+    one_pass()
+    c1 = codegen_compiles(spark)
+    one_pass()
+    c2 = codegen_compiles(spark)
+    assert c1 - c0 > 100
+    assert c2 - c1 == 0
+
+
+def test_extra_conf_overrides_codegen_cache_size(tmp_path):
+    script = tmp_path / "codegen_cache_conf.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from rust_dms_cdc_operator_spark.session import get_spark
+
+        key = "spark.sql.codegen.cache.maxEntries"
+        spark = get_spark(app_name="codegen-conf", master="local[1]",
+                          shuffle_partitions=1, extra_conf={{key: "7"}})
+        print("MAX:" + spark.conf.get(key))
+        spark.stop()
+    """))
+    out = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert "MAX:7" in out.stdout, out.stderr[-3000:]

@@ -1574,3 +1574,54 @@ def test_lookup_matches_full_state_filter(spark, tmp_path):
         }
         assert want == {"v0", "v64", "v199"}
         assert {r.val for r in store.lookup(spark, keys).collect()} == want
+
+
+def test_lookup_timestamp_key_matches_full_state_filter(spark, tmp_path):
+    """Timestamp primary keys, as PySpark hands them back (naive
+    datetimes in the host's time zone), look up exactly the rows a
+    full-state semi-join against the same keys returns, on a host whose
+    time zone is not the session's (UTC)."""
+    import datetime as dt
+    import time
+
+    from rust_dms_cdc_operator_spark.streaming.cdc_stream import (
+        BucketedParquetState,
+    )
+
+    schema = "Op string, acct string, ts timestamp, val string, seq long"
+    base = dt.datetime(2024, 1, 15, tzinfo=dt.timezone.utc)
+    rows = [
+        ("I", f"a{i % 3}", base + dt.timedelta(hours=i), f"v{i}", 1)
+        for i in range(48)
+    ]
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        for pk in (["ts"], ["acct", "ts"]):
+            store = BucketedParquetState(
+                str(tmp_path / "_".join(pk) / "state"), pk, 8
+            )
+            store.merge_batch(
+                spark.createDataFrame(rows, schema), order_cols=["seq"]
+            )
+            state = store.read(spark)
+            by_val = {r.val: tuple(r[c] for c in pk) for r in state.collect()}
+            keys = [by_val[v] for v in ("v0", "v5", "v47")]
+            keys.append(tuple(
+                dt.datetime(2030, 1, 1) if c == "ts" else "a0" for c in pk
+            ))
+            keys_df = spark.createDataFrame(keys, ", ".join(
+                f"{c} {'timestamp' if c == 'ts' else 'string'}" for c in pk
+            ))
+            want = {
+                r.val for r in state.join(keys_df, pk, "left_semi").collect()
+            }
+            assert want == {"v0", "v5", "v47"}
+            assert {r.val for r in store.lookup(spark, keys).collect()} == want
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
