@@ -73,42 +73,60 @@ def _loadavg() -> list[float]:
         return []
 
 
+def _warm(spark, sf_dir: str) -> None:
+    """One-time session costs, paid before any timed query so
+    per-query numbers are steady-state: JVM/codegen paths, the Python
+    worker pool (daemon + worker fork), the Arrow local-relation
+    conversion (its first use pays ~1 s of codec init) and the
+    one-time offline builds (IVF partitioned table + trained
+    centroids) that production does once."""
+    from rust_dms_cdc_operator_spark.inventory_llm import prepare_bench
+    from rust_dms_cdc_operator_spark.session import local_relation
+
+    spark.range(1000).selectExpr("sum(id)").collect()
+    spark.range(1).mapInPandas(lambda it: it, "id long").collect()
+    local_relation(spark, [(1,)], "x long").collect()
+    prepare_bench(spark, sf_dir)
+
+
+def _run_query(spark, fn, sf_dir: str) -> tuple[float, float, float | None]:
+    """Build ``fn(spark, sf_dir)`` and run it through the noop sink
+    (all compute, no driver materialization). Returns wall seconds,
+    JVM cpu seconds and host steal seconds (None when the counter is
+    unavailable). Then, outside the timed region, frees the query's
+    caches and persisted RDDs (localCheckpoint blocks included, see
+    session.release_persistent_rdds), so each measurement is
+    self-contained and no query's caches pressure the next one."""
+    from rust_dms_cdc_operator_spark.session import release_persistent_rdds
+
+    c0 = _jvm_cpu_secs(spark)
+    s0 = _host_steal_secs()
+    t0 = time.time()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    wall = round(time.time() - t0, 3)
+    cpu = round(_jvm_cpu_secs(spark) - c0, 3)
+    s1 = _host_steal_secs()
+    steal = round(s1 - s0, 3) if s0 is not None and s1 is not None else None
+    spark.catalog.clearCache()
+    release_persistent_rdds(spark)
+    return wall, cpu, steal
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     os.environ["SPARK_GRAFT_CPUS"] = cpus
 
     from rust_dms_cdc_operator_spark.inventory import QUERIES
-    from rust_dms_cdc_operator_spark.session import (
-        get_spark,
-        release_persistent_rdds,
-    )
+    from rust_dms_cdc_operator_spark.inventory_llm import STREAM_SETUP_SECS
+    from rust_dms_cdc_operator_spark.session import get_spark
 
     spark = get_spark(app_name="bench")
-    # warm the JVM/codegen paths once so per-query numbers are steady-state
-    spark.range(1000).selectExpr("sum(id)").collect()
-    # warm the Python worker pool the same way (daemon + worker fork is
-    # a one-time session cost, not a per-query cost)
-    spark.range(1).mapInPandas(lambda it: it, "id long").collect()
-    # warm the Arrow local-relation conversion path (round 12:
-    # session.local_relation rides pandas->Arrow; its first use pays
-    # ~1 s of one-time conversion/codec init that otherwise lands in
-    # whichever query builds the first driver-side relation)
-    from rust_dms_cdc_operator_spark.session import local_relation
-    local_relation(spark, [(1,)], "x long").collect()
-    # one-time offline builds (IVF partitioned table + trained
-    # centroids): production does these once, so they are not part of
-    # any per-query cost
-    from rust_dms_cdc_operator_spark.inventory_llm import (
-        STREAM_SETUP_SECS,
-        prepare_bench,
-    )
-
-    prepare_bench(spark, sf_dir)
+    _warm(spark, sf_dir)
 
     timings: dict[str, float] = {}
     cpu_secs: dict[str, float] = {}
-    steal_secs: dict[str, float] = {}
+    steal_secs: dict[str, float | None] = {}
     load_before = _loadavg()
     # one-shot streaming queries rebuild their harness per run
     # (tempdir + source links + slice pre-writes) — a cost a real
@@ -117,30 +135,11 @@ def main() -> None:
     # round-over-round comparisons can subtract the scaffolding.
     stream_setup: dict[str, float] = {}
     for name, fn in QUERIES.items():
-        c0 = _jvm_cpu_secs(spark)
-        s0 = _host_steal_secs()
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.time() - t0, 3)
-        cpu_secs[name] = round(_jvm_cpu_secs(spark) - c0, 3)
-        s1 = _host_steal_secs()
-        steal_secs[name] = (
-            round(s1 - s0, 3) if s0 is not None and s1 is not None else None
+        timings[name], cpu_secs[name], steal_secs[name] = _run_query(
+            spark, fn, sf_dir
         )
         if name in STREAM_SETUP_SECS:
             stream_setup[name] = STREAM_SETUP_SECS.pop(name)
-        # queries own their persist() lifetimes only within one run
-        # (dedup shingle tables, LSH candidate streams); dropping them
-        # between queries keeps each measurement self-contained and
-        # stops 200M-row caches from pressuring later queries' memory.
-        # Round 12: also release localCheckpoint block sets, which
-        # clearCache does not cover — leaked checkpoint blocks
-        # otherwise accumulate across the suite and evict live
-        # working sets (see session.release_persistent_rdds). Both
-        # run OUTSIDE the timed region, exactly like clearCache did.
-        spark.catalog.clearCache()
-        release_persistent_rdds(spark)
 
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
@@ -510,7 +509,6 @@ def _sf1_section(spark, sf, sf_dir, sf01_timings) -> dict | None:
         return None
 
     from rust_dms_cdc_operator_spark.inventory import QUERIES
-    from rust_dms_cdc_operator_spark.session import release_persistent_rdds
 
     if not os.path.isdir(SF1_DIR):
         from tools.gen_native_sf import generate
@@ -526,20 +524,9 @@ def _sf1_section(spark, sf, sf_dir, sf01_timings) -> dict | None:
     steal: dict[str, float | None] = {}
     load0 = _loadavg()
     for name in SCALE_QUERIES:
-        c0 = _jvm_cpu_secs(spark)
-        s0 = _host_steal_secs()
-        t0 = time.time()
-        QUERIES[name](spark, SF1_DIR).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        timings[name] = round(time.time() - t0, 3)
-        cpu[name] = round(_jvm_cpu_secs(spark) - c0, 3)
-        s1 = _host_steal_secs()
-        steal[name] = (
-            round(s1 - s0, 3) if s0 is not None and s1 is not None else None
+        timings[name], cpu[name], steal[name] = _run_query(
+            spark, QUERIES[name], SF1_DIR
         )
-        spark.catalog.clearCache()  # same per-query cache hygiene
-        release_persistent_rdds(spark)
     ratios = {
         q: round(timings[q] / sf01_timings[q], 2)
         for q in SCALE_QUERIES

@@ -5,9 +5,10 @@ A brand-new engine with the query and data-processing capabilities of
 surveyed in SURVEY.md): replay AWS-DMS-style full-load + CDC Parquet
 files into table state, sink that state to Postgres, and validate
 source vs. target with chunked PK-ordered hash diffing — expressed
-Spark-first (DataFrame scans, window compaction, hash-aggregate diff
-joins, JDBC sinks), plus a large-scale training-data operator pack
-(dedup, similarity search, text analysis, multimodal columns).
+Spark-first (DataFrame scans, ``max_by`` aggregation compaction,
+hash-aggregate diff joins, JDBC sinks), plus a large-scale
+training-data operator pack (dedup, similarity search, text analysis,
+multimodal columns).
 """
 
 from rust_dms_cdc_operator_spark.engine import CdcEngine

@@ -33,7 +33,6 @@ from rust_dms_cdc_operator_spark.operators.chunk import with_chunk_id
 from rust_dms_cdc_operator_spark.operators.compact import (
     apply_deletes,
     compact_cdc,
-    compact_cdc_agg,
     merge_full_load_with_cdc,
     upsert,
 )
@@ -276,10 +275,10 @@ def q_w1_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
     adversarial distribution the driver gate never otherwise sees.
     A deterministic remap funnels ~30% of ALL events onto one hot key
     (every user_id ≡ 0..2 mod 10 becomes key 0), then compacts with
-    the aggregation strategy (`compact_cdc_agg`): last-writer-wins as
-    max_by with map-side partial aggregation, so the hot key ships one
-    row per map task through the shuffle instead of its whole history
-    into a single window task. Plan-gated in tests/test_plans.py:
+    `compact_cdc`: last-writer-wins as max_by with map-side partial
+    aggregation, so the hot key ships one row per map task through the
+    shuffle instead of its whole history into one task. Plan-gated in
+    tests/test_plans.py:
     partial+final aggregate, NO Window node, no single-partition
     exchange."""
     ev = _events_as_cdc(spark, sf_dir).withColumn(
@@ -288,7 +287,7 @@ def q_w1_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("user_id")
         ),
     )
-    out = compact_cdc_agg(ev, ["user_id"], order_cols=["ts", "event_id"])
+    out = compact_cdc(ev, ["user_id"], order_cols=["ts", "event_id"])
     return out.select(
         "user_id",
         F.col("event_id").alias("last_event_id"),

@@ -26,10 +26,11 @@ deliberately added to the registry with a justification.
 
 from __future__ import annotations
 
+import itertools
 import os
 import tempfile
 import time
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import ThreadPoolExecutor, as_completed
 
 import pandas as pd
 from collections.abc import Callable
@@ -9795,49 +9796,56 @@ ORACLE_SQL_LLM["docs_group_split"] = f"""
 QUERIES_LLM["docs_group_split"] = q_docs_group_split
 
 
-_OVERLAP_SEQ = [0]  # monotone job-group ids for _overlap2
+_OVERLAP_SEQ = itertools.count(1)  # job-tag ids for _overlap2
 
 
 def _overlap2(spark, thunk_a, thunk_b):
-    """Run two INDEPENDENT eager pipelines on driver threads (guide
-    §2.6 back-fill) with failure containment (round 13, advisor
-    note): each stack runs under its own thread-local job group with
-    interrupt-on-cancel; if either stack raises — or the submitting
-    thread is interrupted while futures are live — the sibling's
-    Spark jobs are cancelled before the exception propagates, so no
-    job runs detached and the with-block never waits out a doomed
-    full CC run. Returns (result_a, result_b); results are identical
-    to sequential execution by construction (both thunks build
+    """Run two INDEPENDENT eager pipelines on driver threads, so the
+    scheduler back-fills one stack's idle stage tails with the other's
+    tasks, with failure containment. Both stacks' jobs carry
+    this call's job tag plus every tag of the submitting thread, with
+    interrupt-on-cancel. As soon as either stack raises — or the
+    submitting thread is interrupted while futures are live — every
+    job tagged with this call's tag is cancelled, so the sibling stops
+    instead of being waited out. A nested ``_overlap2`` inside a stack
+    inherits the tag, so its jobs are cancelled too and no job runs
+    detached. Returns (result_a, result_b); results are identical to
+    sequential execution by construction (both thunks build
     independent plans over already-materialized inputs)."""
-    _OVERLAP_SEQ[0] += 1
-    tag = f"overlap-{_OVERLAP_SEQ[0]}"
+    tag = f"overlap-{next(_OVERLAP_SEQ)}"
     sc = spark.sparkContext
+    # job tags are thread-local (pinned-thread mode): a worker thread
+    # starts with none, so it takes on the submitter's tags
+    tags = [*sc.getJobTags(), tag]
 
-    def run(i, thunk):
-        # job groups are thread-local (pinned-thread mode), so each
-        # stack is cancellable independently
-        sc.setJobGroup(f"{tag}-{i}", f"overlapped stack {i}", True)
+    def run(thunk):
+        for t in tags:
+            sc.addJobTag(t)
+        sc.setInterruptOnCancel(True)
         try:
             return thunk()
         finally:
-            # clear the thread-local group so a pooled thread reused
-            # by a later caller doesn't inherit a cancellable tag
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.interruptOnCancel", None)
+            # a pooled thread reused by a later caller must not keep
+            # cancellable tags
+            sc.clearJobTags()
+            sc.setInterruptOnCancel(False)
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fa = pool.submit(run, 0, thunk_a)
-        fb = pool.submit(run, 1, thunk_b)
+        fa = pool.submit(run, thunk_a)
+        fb = pool.submit(run, thunk_b)
         try:
+            # surface the FIRST failure at once, not after the sibling
+            # finishes
+            for f in as_completed((fa, fb)):
+                f.result()
             return fa.result(), fb.result()
         except BaseException:
             for f in (fa, fb):
                 f.cancel()
-            for i in (0, 1):
-                try:
-                    sc.cancelJobGroup(f"{tag}-{i}")
-                except Exception:
-                    pass
+            try:
+                sc.cancelJobsWithTag(tag)
+            except Exception:
+                pass
             raise
 
 

@@ -7,12 +7,14 @@ UPDATE, D → DELETE). The net effect is *keyed last-writer-wins
 compaction*: for each primary key, the latest event in (file order,
 row order) decides the final row, and a latest ``D`` removes the key.
 
-Spark-first re-expression: ONE window over the union —
-``row_number() over (partition by pk order by seq desc) = 1`` then
-drop ``D`` rows. This is a single hash shuffle on the PK (stock
-Catalyst exchange + whole-stage-codegen window), linear in input,
-no driver materialization — it scales to 100 TB where the
-reference's per-row SQL cannot. AQE handles skewed keys.
+Spark-first re-expression: last-writer-wins is an argmax per key, so
+compaction is ONE aggregation over the union —
+``groupBy(pk).agg(max_by(struct(data), struct(order)))`` then drop
+``D`` rows. It compiles to a partial aggregate on the map side, one
+hash exchange on the PK and a final aggregate: linear in input, no
+driver materialization. A hot key (one entity absorbing a large share
+of events) collapses to one row per map task before the exchange, so
+skew costs O(#tasks) shuffled rows, not the key's whole history.
 
 Deliberate semantic choices vs. the reference (SURVEY §7):
 - delete detection is equality ``Op == 'D'`` (the DMS contract), not
@@ -24,7 +26,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rust_dms_cdc_operator_spark.functions.dmscols import (
@@ -49,61 +51,25 @@ def compact_cdc(
 ) -> DataFrame:
     """W1 keyed last-state compaction.
 
-    Keeps, per PK, only the latest event; a latest ``D`` deletes the
-    key. One shuffle (hash on pk), one window pass.
+    Keeps, per PK, only the row with the greatest ``order_cols`` tuple;
+    a latest ``D`` deletes the key. Physically
+    ``max_by(struct(data), struct(order))`` with map-side partial
+    aggregation around one exchange on the PK. Column order is kept.
+
+    Ties: rows of one key with EQUAL order tuples pick an arbitrary
+    winner. The engine's replay order ``(_cdc_file_seq, _cdc_row_seq)``
+    is unique, so replays never tie. Struct comparison orders NULL
+    order values first, so a row with a NULL order value loses to any
+    non-NULL one.
+
+    ``op_col`` naming no column keeps ``D`` rows in the output (the
+    stream merge passes such a name: a key whose last event is ``D``
+    must still delete state).
     """
     if not pk_cols:
         # no PK → upsert degenerates to insert-all (reference keeps all
         # rows; table_query.rs:79-83 creates the table without a PK)
         return cdc.filter(F.col(op_col) != F.lit("D")) if op_col in cdc.columns else cdc
-    w = Window.partitionBy(*[F.col(c) for c in pk_cols]).orderBy(
-        *[F.col(c).desc() for c in order_cols]
-    )
-    out = (
-        cdc.withColumn("_cdc_rn", F.row_number().over(w))
-        .filter(F.col("_cdc_rn") == 1)
-        .drop("_cdc_rn")
-    )
-    if op_col in cdc.columns:
-        out = out.filter(F.col(op_col) != F.lit("D"))
-    return out
-
-
-def compact_cdc_agg(
-    cdc: DataFrame,
-    pk_cols: Sequence[str],
-    order_cols: Sequence[str] = (FILE_SEQ_COL, ROW_SEQ_COL),
-    op_col: str = DMS_OP_COL,
-) -> DataFrame:
-    """W1 compaction as an AGGREGATION — the hot-key-safe strategy.
-
-    Same semantics as :func:`compact_cdc` (latest event per PK wins, a
-    latest ``D`` deletes the key) when the ``order_cols`` tuple is
-    unique within each key — which the engine's replay order
-    (file seq, row seq) always is. The difference is the physical
-    shape: last-writer-wins is an argmax, so it compiles to
-    ``max_by(struct(data), struct(order))`` with MAP-SIDE PARTIAL
-    AGGREGATION. A Zipfian key (one entity absorbing a large share of
-    events — a fleet heartbeat row, a monitoring counter) collapses to
-    ONE row per map task before the exchange, so the hot key ships
-    O(#tasks) rows through the shuffle instead of funneling its entire
-    event history into a single window task. No salting, no AQE skew
-    handling needed — the combine IS the skew cure.
-
-    Trade-off vs the window strategy: the row is rebuilt from a struct
-    (one extra projection) and ties in ``order_cols`` pick an
-    arbitrary winner rather than a partition-order-dependent one —
-    with the unique replay order both pick the identical row. Use this
-    strategy whenever the key distribution is unknown or known-skewed;
-    the window form remains for order tuples that are NOT unique where
-    its first-in-partition tie behavior is relied upon.
-    """
-    if not pk_cols:
-        return (
-            cdc.filter(F.col(op_col) != F.lit("D"))
-            if op_col in cdc.columns
-            else cdc
-        )
     others = [c for c in cdc.columns if c not in pk_cols]
     out = (
         cdc.groupBy(*[F.col(c) for c in pk_cols])
@@ -113,10 +79,8 @@ def compact_cdc_agg(
                 F.struct(*[F.col(c) for c in order_cols]),
             ).alias("_last")
         )
-        .select(
-            *pk_cols, *[F.col(f"_last.{c}").alias(c) for c in others]
-        )
-        .select(*cdc.columns)  # restore caller's column order
+        .select(*pk_cols, *[F.col("_last").getField(c).alias(c) for c in others])
+        .select(*cdc.columns)
     )
     if op_col in cdc.columns:
         out = out.filter(F.col(op_col) != F.lit("D"))
@@ -134,7 +98,7 @@ def merge_full_load_with_cdc(
 
     Implemented by ranking LOAD rows *below* every CDC row (a LOAD row
     only survives if no CDC event touched its key) and running the same
-    single-shuffle W1 window — instead of the reference's sequential
+    single-shuffle W1 compaction — instead of the reference's sequential
     insert-then-upsert passes (cdc_operator.rs:173-216).
     """
     load_cols = [c for c in load.columns if c not in (DMS_OP_COL, DMS_TS_COL)]
@@ -188,7 +152,7 @@ def replay_manifest(
     csv_options: dict[str, str] | None = None,
 ) -> DataFrame:
     """End-to-end table rebuild: ordered manifest → single scan →
-    LOAD ∪ CDC window compaction → final state (no DMS columns).
+    LOAD ∪ CDC compaction → final state (no DMS columns).
 
     Schema-drift check (P3, cdc_operator.rs:177-185): every Parquet
     column other than the two DMS columns must exist in

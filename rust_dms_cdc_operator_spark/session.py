@@ -225,78 +225,48 @@ def local_relation(spark, rows, schema):
     return spark.createDataFrame(pdf, schema)
 
 
-#: Live leaf blocks created by :func:`materialize_leaf` — the py4j
-#: RDD handles backing each localCheckpoint, in creation order. A
-#: long-lived session releases them with :func:`release_leaves` after
-#: the consuming action finishes (round 13, r12 verdict item 6: leaf
-#: lifetimes must not depend on a bench-only sweep).
-_LIVE_LEAVES: list = []
-
-
-def materialize_leaf(df, bounded: bool = True):
+def materialize_leaf(df):
     """Materialize a heavy BOUNDED intermediate ONCE and hand
-    consumers a leaf (round 12, guide §5 localCheckpoint). For
-    iterative consumers (CC, PageRank/LPA BSP rounds, k-core sweeps)
-    of an expensive pair plan this is the difference between every
-    round shipping the whole banded-LSH DAG in its task binary +
-    re-planning it per AQE stage, and reading a leaf RDD
-    (dedup_pagerank_capped measured: build 4.5-6.4 s → 0.7-0.8 s,
-    exec 2.4-3.0 → 1.3-1.4 s at sf0.1).
+    consumers a leaf: ``localCheckpoint`` plus a coalesce to the core
+    count. Iterative consumers (CC, PageRank/LPA BSP rounds, k-core
+    sweeps) of an expensive pair plan then read a leaf RDD every round
+    instead of shipping the whole banded-LSH DAG in each task binary
+    and re-planning it per AQE stage. Measured against
+    :func:`materialize_cache` on the seven callers at sf0.1 (4 cores,
+    4 alternating runs): warm wall 40.2 vs 57.8 s, JVM CPU 83.0 vs
+    109.9 s; ``dedup_pagerank_capped`` alone 4.4 vs 9.6 s.
 
-    BOUNDED STREAMS ONLY (round 13, the r12 regression): the stream's
-    row count must be bounded by construction (hot-bucket caps, probe
-    caps — a few hundred MB at any corpus size). An UNBOUNDED stream
-    (the uncapped banded pair stream grows with quadratic bucket
-    occupancy — ~200M rows at native sf1) must use
-    :func:`materialize_cache` instead: the checkpoint's block
-    materialization is what killed round 12 — deserialized blocks
-    OOMed the local[32] driver bench (32 concurrent block builders ×
-    ~250 MB > the 8 GB heap, ``java.lang.OutOfMemoryError`` inside
-    ``Dataset.localCheckpoint``, BENCH_r12.json) and GC-thrashed the
-    8-core run (exact-family sf1 cpu +68..+166%) — and the
-    disk-backed repair was measured WORSE than no cut at all:
-    ``localCheckpoint(storageLevel=DISK_ONLY)`` pushes every row
-    through the block-store serializer, and at native sf1 the
-    serialize+reread tax dwarfs what the lineage cut saves
-    (dedup_pagerank 2326 cpu-s DISK_ONLY vs 788 with a plain eager
-    cache vs 785 with no materialization at all; wall 129/38/48 s —
-    measured this round, 32 cores). ``bounded`` stays as the explicit
-    declaration at the call site; passing ``False`` raises rather
-    than silently picking a storage level, so the next unbounded
-    caller is routed to the cache form at author time.
+    Bounded streams only: the stream's row count must be bounded by
+    construction (hot-bucket caps, probe caps — a few hundred MB at
+    any corpus size). An UNBOUNDED stream (the uncapped banded pair
+    stream grows with quadratic bucket occupancy — ~200M rows at
+    native sf1) must use :func:`materialize_cache`: checkpoint blocks
+    are built through the block store, and at that size they OOMed a
+    local[32] driver (32 concurrent block builders × ~250 MB > the
+    8 GB heap); the ``DISK_ONLY`` form pushes every row through the
+    serializer (dedup_pagerank 2326 cpu-s vs 788 with the eager cache,
+    32 cores).
 
     Checkpoints at the plan's NATURAL partitioning and coalesces the
     LEAF afterwards — order matters: ``coalesce(cores)`` BELOW the
-    checkpoint squeezed the whole upstream band-join pipeline into
-    ``cores`` fat tasks, and at native sf1 (~200M pairs) the per-task
-    sort/aggregation state exhausted the execution pool
-    (SparkOutOfMemoryError UNABLE_TO_ACQUIRE_MEMORY in the driver
-    bench's scale section — dedup_pagerank). Coalescing ABOVE the
-    checkpoint is a narrow merge of already-materialized blocks:
-    materialization keeps every stage at its AQE-sized parallelism,
-    while consumers still read ~cores partitions instead of one per
-    salt shard (never increased: coalesce only shrinks). Blocks are
-    tracked in ``_LIVE_LEAVES``; callers that own the action free
-    them with :func:`release_leaves` once the action returns (the
-    ContextCleaner remains the GC fallback). Do NOT call this
-    per-level inside a recursive operator — consecutive LogicalRDD
-    rewrites compound Catalyst's stats/constraint propagation
-    exponentially (see connected_components' e0 note)."""
-    if not bounded:
-        raise ValueError(
-            "materialize_leaf is for bounded streams; unbounded "
-            "streams must use materialize_cache (the checkpoint "
-            "block serialization is the r12 sf1 regression)"
-        )
+    checkpoint squeezes the whole upstream band-join pipeline into
+    ``cores`` fat tasks (at native sf1 the per-task sort/aggregation
+    state exhausted the execution pool), while ABOVE it is a narrow
+    merge of already-materialized blocks (never increased: coalesce
+    only shrinks).
+
+    Lifetime: the blocks live as long as the returned frame does.
+    Nothing else holds them, so once the caller drops the frame the
+    ContextCleaner frees them at the next JVM garbage collection;
+    :func:`release_persistent_rdds` frees them at once between
+    queries. Do NOT call this per-level inside a recursive operator —
+    consecutive LogicalRDD rewrites compound Catalyst's
+    stats/constraint propagation exponentially (see
+    connected_components' e0 note)."""
     spark = df.sparkSession
-    ck = df.localCheckpoint(eager=True)
-    try:
-        plan = ck._jdf.queryExecution().logical()
-        if plan.getClass().getName().endswith("LogicalRDD"):
-            _LIVE_LEAVES.append(plan.rdd())
-    except Exception:  # pragma: no cover — ContextCleaner fallback
-        pass
-    return ck.coalesce(max(spark.sparkContext.defaultParallelism, 1))
+    return df.localCheckpoint(eager=True).coalesce(
+        max(spark.sparkContext.defaultParallelism, 1)
+    )
 
 
 def materialize_cache(df):
@@ -329,58 +299,30 @@ def materialize_cache(df):
     return d
 
 
-def release_leaves() -> int:
-    """Free every leaf block set created by :func:`materialize_leaf`
-    since the last call (round 13, r12 verdict item 6). The precise
-    production-side release: a caller that materialized a query
-    through its action calls ``clearCache()`` for the operator-owned
-    persists and ``release_leaves()`` for the checkpoint blocks —
-    nothing else in the session is touched, so concurrent queries'
-    state (streaming state stores, other sessions' caches) survives.
-    Only call between queries: a truncated lineage cannot recompute,
-    so a frame still holding a released leaf must not be re-executed.
-    Returns the number of leaf RDDs released."""
-    n = 0
-    while _LIVE_LEAVES:
-        jrdd = _LIVE_LEAVES.pop()
-        try:
-            jrdd.unpersist(False)
-            n += 1
-        except Exception:  # pragma: no cover — already cleaned
-            pass
-    return n
-
-
 def release_persistent_rdds(spark) -> int:
     """Free every persisted RDD — including ``localCheckpoint`` block
     sets, which ``spark.catalog.clearCache()`` does NOT cover (it only
     drops CacheManager entries). Harness-level cleanup between
-    independent queries (round 12): a lazily-GC'd localCheckpoint
-    leaks its blocks until the ContextCleaner happens to run, and a
-    suite that runs hundreds of queries back-to-back accumulates
-    gigabytes of dead blocks that evict live working sets (measured:
-    a +58 s regression window across the mid-inventory until GC
-    caught up). Returns the number of RDDs released. Never call this
-    while a query that still references a checkpointed frame is
-    in flight — truncated lineage cannot recompute. Round 13 (advisor
-    note): refuses to sweep while streaming queries are active — an
-    in-flight stream's state or checkpointed frames would be
-    unrecoverable. Prefer :func:`release_leaves` + ``clearCache()``
-    outside bench-style harnesses; this whole-session sweep stays for
-    harnesses that rebuild every frame per repetition."""
+    independent queries: a dropped leaf's blocks otherwise stay until
+    the ContextCleaner sees a JVM garbage collection, and a suite that
+    runs hundreds of queries back-to-back accumulates gigabytes of dead
+    blocks that evict live working sets (measured: a +58 s regression
+    window across the mid-inventory until GC caught up). Returns the
+    number of RDDs released. Never call this while a query that still
+    references a checkpointed frame is in flight — truncated lineage
+    cannot recompute. Refuses to sweep while streaming queries are
+    active: an in-flight stream's state or checkpointed frames would
+    be unrecoverable."""
     if spark.streams.active:
         raise RuntimeError(
             "release_persistent_rdds: active streaming queries hold "
-            "state that this sweep would corrupt; stop them first or "
-            "use release_leaves()"
+            "state that this sweep would corrupt; stop them first"
         )
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     n = 0
     for jrdd in list(jmap.values()):  # py4j JavaMap view
         jrdd.unpersist(False)
         n += 1
-    # the swept set covers every live leaf; drop the stale handles
-    _LIVE_LEAVES.clear()
     return n
 
 

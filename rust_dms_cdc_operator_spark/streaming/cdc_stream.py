@@ -3,7 +3,7 @@
 The reference processes CDC files as batch (SURVEY §2.7: no streaming
 operators anywhere); this module is the engine's streaming-native
 equivalent: ``readStream`` over the DMS drop directory, per-microbatch
-window compaction, and a ``foreachBatch`` MERGE into the target state
+compaction, and a ``foreachBatch`` MERGE into the target state
 table — the incremental form of ``operators.compact``.
 
 Exactly-once: foreachBatch + a manifest-committed bucketed parquet
@@ -31,35 +31,6 @@ from rust_dms_cdc_operator_spark import fsio
 from rust_dms_cdc_operator_spark.functions.dmscols import DMS_OP_COL
 from rust_dms_cdc_operator_spark.operators.compact import compact_cdc
 from rust_dms_cdc_operator_spark.session import local_relation
-
-
-def apply_cdc_batch(
-    state: DataFrame | None,
-    batch: DataFrame,
-    pk_cols: Sequence[str],
-    order_cols: Sequence[str],
-    op_col: str = DMS_OP_COL,
-) -> DataFrame:
-    """Merge one microbatch of CDC events into the current state:
-    compact the batch (last writer wins within the batch), then apply
-    upserts + deletes against the state. Deletes must be applied from
-    the batch's *last* event per key, so the compaction keeps D rows
-    until after the merge."""
-    # order cols stay in the state when they are real data columns;
-    # synthetic ones (the _cdc_* bookkeeping) are dropped
-    data_cols = [
-        c
-        for c in batch.columns
-        if c != op_col and not (c in order_cols and c.startswith("_cdc"))
-    ]
-    last = compact_cdc(batch, pk_cols, order_cols=order_cols, op_col="__keep_d__")
-    # op_col passed as a non-existent name ⇒ D rows survive compaction;
-    # they must: a key whose LAST batch event is D has to delete state
-    upserts = last.filter(F.col(op_col) != "D").select(*data_cols)
-    if state is None:
-        return upserts
-    survivors = state.join(last.select(*pk_cols), list(pk_cols), "left_anti")
-    return survivors.unionByName(upserts)
 
 
 BUCKET_COL = "_state_bucket"
@@ -200,9 +171,11 @@ class BucketedParquetState:
         op_col: str = DMS_OP_COL,
         allow_schema_evolution: bool = False,
     ) -> bool:
-        """Merge one compacted microbatch into the state and commit a
-        new manifest epoch. Returns True if a commit was published,
-        False for an empty microbatch (no epoch, no state change)."""
+        """Merge one microbatch of CDC events into the state and commit
+        a new manifest epoch: the batch's last event per key wins, its
+        upserts replace and its deletes remove state rows. Returns True
+        if a commit was published, False for an empty microbatch (no
+        epoch, no state change)."""
         spark = batch.sparkSession
         man = self._load_manifest()
         num_buckets = man["num_buckets"] if man else self.num_buckets
@@ -235,6 +208,8 @@ class BucketedParquetState:
                     "opt in with allow_schema_evolution=True)"
                 )
         t0 = time.monotonic()
+        # op_col names no column, so D rows survive compaction: a key
+        # whose LAST batch event is D has to delete state
         last = compact_cdc(batch, self.pk_cols, order_cols=order_cols, op_col="__keep_d__")
         last = last.withColumn(BUCKET_COL, self._bucket(num_buckets)).persist()
         try:
@@ -487,8 +462,14 @@ def stream_replay_bucketed(
     compact_every: int | None = None,
     after_merge=None,
 ) -> DataFrame:
-    """``stream_replay`` with the bucketed incremental state table —
-    same contract, per-batch cost proportional to touched buckets.
+    """Replay a directory of CDC parquet as a stream into a bucketed
+    incremental state table; returns the final state DataFrame.
+    Per-microbatch cost is proportional to the buckets the batch
+    touches (``BucketedParquetState.merge_batch``), not to the state.
+
+    Uses ``availableNow`` so the call is synchronous (drains whatever
+    exists, then stops) — the 24/7 deployment drops the trigger and
+    keeps the query running.
 
     ``compact_every=N`` folds maintenance into the loop: after every
     N merged batches the state is compacted to one generation
@@ -532,41 +513,3 @@ def stream_replay_bucketed(
     q.awaitTermination()
     return store.read(spark)
 
-
-def stream_replay(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    pk_cols: Sequence[str],
-    order_cols: Sequence[str],
-    state_dir: str,
-    op_col: str = DMS_OP_COL,
-    max_files_per_trigger: int | None = None,
-    transform=None,
-    num_buckets: int = 64,
-) -> DataFrame:
-    """Replay a directory of CDC parquet as a stream into a parquet
-    state table; returns the final state DataFrame.
-
-    Uses ``availableNow`` so the call is synchronous (drains whatever
-    exists, then stops) — the 24/7 deployment drops the trigger and
-    keeps the query running.
-
-    Delegates to :func:`stream_replay_bucketed`: the bucketed
-    incremental state (O(touched buckets) per microbatch) is the only
-    state backend. The earlier full-rewrite versioned store was
-    O(total state) per batch — a scale-killer for a 24/7 stream — and
-    was removed in favor of this.
-    """
-    return stream_replay_bucketed(
-        spark,
-        source_dir,
-        schema,
-        pk_cols,
-        order_cols,
-        state_dir,
-        op_col=op_col,
-        num_buckets=num_buckets,
-        max_files_per_trigger=max_files_per_trigger,
-        transform=transform,
-    )

@@ -1,4 +1,4 @@
-"""CDC replay correctness: Spark window compaction vs the sequential
+"""CDC replay correctness: Spark compaction vs the sequential
 pure-Python replay oracle (FIXTURES.md A.3 scenarios)."""
 
 from __future__ import annotations

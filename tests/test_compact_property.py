@@ -3,7 +3,7 @@
 Hypothesis generates random event sequences (I/U/D over a small key
 space); a pure-Python sequential replay — the reference's imperative
 apply order (cdc_operator.rs:155-217) — produces the expected final
-state; the Spark window compaction must agree. All generated scenarios
+state; the Spark compaction must agree. All generated scenarios
 are unioned into ONE DataFrame keyed by scenario id and compacted in a
 single Spark job (pk = (scenario, key)), so the property runs at
 fixture speed instead of one Spark job per example.
@@ -36,7 +36,7 @@ def python_replay(events: list[tuple[str, int, str]]) -> dict[int, str]:
 
 @settings(max_examples=3, deadline=None, derandomize=True)
 @given(st.lists(SCENARIO, min_size=40, max_size=40))
-def test_window_compaction_equals_sequential_replay(spark, scenarios):
+def test_compaction_equals_sequential_replay(spark, scenarios):
     rows = []
     expected: dict[tuple[int, int], str] = {}
     for sid, events in enumerate(scenarios):

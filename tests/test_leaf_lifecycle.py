@@ -1,12 +1,15 @@
-"""Leaf/cache lifecycle at the public-API layer (round 13, r12
-verdict item 6): materialize_leaf blocks must be releasable by the
-CALLER — production sessions don't run bench.py's whole-session
-sweep — and a query that went through materialize_leaf +
-release_leaves() + clearCache() must leave no persistent RDDs behind.
-materialize_cache keeps lineage, so its blocks must survive eviction
-semantics (recomputable) and clearCache() must fully release them."""
+"""Leaf/cache lifecycle at the public-API layer: a materialize_leaf
+block set lives as long as its frame — a caller that drops the frame
+gets the blocks back from the ContextCleaner, with no release call and
+no whole-session sweep — and the harness sweep still frees live leaves
+at once. materialize_cache keeps lineage, so its blocks must survive
+eviction semantics (recomputable) and clearCache() must fully release
+them."""
 
 from __future__ import annotations
+
+import gc
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,19 +17,35 @@ from pyspark.sql import functions as F
 from rust_dms_cdc_operator_spark.session import (
     materialize_cache,
     materialize_leaf,
-    release_leaves,
     release_persistent_rdds,
 )
 
 
 def _n_persistent(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+    # RDDInfo holds no RDD reference. getPersistentRDDs() would return
+    # a map that pins every persisted RDD until py4j's finalizer thread
+    # releases the handle, so polling it would itself keep a dropped
+    # leaf alive across the next GC.
+    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
 
 
 def _clean(spark) -> None:
     spark.catalog.clearCache()
-    release_leaves()
     release_persistent_rdds(spark)
+
+
+def _reclaimed_within(spark, timeout_s: float = 60.0) -> bool:
+    """Poll until no RDD is persisted: each round collects Python
+    garbage (py4j then drops its JVM handles) and requests a JVM GC,
+    after which the ContextCleaner unpersists unreachable RDDs."""
+    deadline = time.monotonic() + timeout_s
+    while time.monotonic() < deadline:
+        gc.collect()
+        spark._jvm.java.lang.System.gc()
+        if _n_persistent(spark) == 0:
+            return True
+        time.sleep(0.5)
+    return False
 
 
 def test_leaf_blocks_released_by_caller(spark):
@@ -34,24 +53,26 @@ def test_leaf_blocks_released_by_caller(spark):
     assert _n_persistent(spark) == 0
     leaf = materialize_leaf(spark.range(500).selectExpr("id", "id % 3 as k"))
     assert leaf.count() == 500
-    # the checkpoint's block set is live after the action...
+    # the checkpoint's block set is live while the frame is...
     assert _n_persistent(spark) >= 1
-    # ...and the caller-owned release path frees it without a
-    # whole-session sweep
-    assert release_leaves() >= 1
+    # ...and dropping the frame is the release: nothing else pins it
+    del leaf
+    assert _reclaimed_within(spark)
+
+
+def test_harness_sweep_frees_live_leaves(spark):
+    _clean(spark)
+    leaf = materialize_leaf(spark.range(100))
+    assert leaf.count() == 100
+    assert release_persistent_rdds(spark) >= 1
     assert _n_persistent(spark) == 0
-
-
-def test_leaf_rejects_unbounded_streams(spark):
-    with pytest.raises(ValueError, match="materialize_cache"):
-        materialize_leaf(spark.range(10), bounded=False)
 
 
 def test_query_action_leaves_no_persistent_rdds(spark, tmp_path):
     """Public-API contract: run a capped graph query end-to-end (it
-    routes its pair stream through materialize_leaf), then the
-    caller's release pair (clearCache + release_leaves) restores a
-    clean session — nothing persists until the harness sweep."""
+    routes its pair stream through materialize_leaf), then clearCache
+    plus dropping the frames restores a clean session without a
+    harness sweep."""
     from rust_dms_cdc_operator_spark.operators.dedup import minhash_lsh_pairs
     from rust_dms_cdc_operator_spark.operators.graph import pagerank_undirected
 
@@ -67,8 +88,8 @@ def test_query_action_leaves_no_persistent_rdds(spark, tmp_path):
     pr.write.format("noop").mode("overwrite").save()
     assert _n_persistent(spark) >= 1
     spark.catalog.clearCache()  # operator-owned persists (adjacency, deg)
-    release_leaves()  # checkpoint block sets
-    assert _n_persistent(spark) == 0
+    del pairs, pr  # the leaf's blocks go with the frames
+    assert _reclaimed_within(spark)
 
 
 def test_cache_keeps_lineage_and_clears(spark):

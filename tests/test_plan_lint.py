@@ -219,11 +219,10 @@ PERSIST_CALLER_OWNED = {
     "inventory_llm.py:q_dedup_semantic_pairs": 1,    # centroid-scored docs
     "inventory_llm.py:q_docs_rareterm_neighbors": 1, # rare-term postings
     "inventory_llm.py:_bm25_scored": 1,              # doc-length table
-    # round 12: the shared lineage-cut helper — materializes a heavy
-    # BOUNDED intermediate once (localCheckpoint) and returns the
-    # leaf; round 13: blocks are tracked in session._LIVE_LEAVES and
-    # released by session.release_leaves() (harness sweeps and the
-    # ContextCleaner remain fallbacks)
+    # the shared lineage-cut helper — materializes a heavy BOUNDED
+    # intermediate once (localCheckpoint) and returns the leaf; its
+    # blocks live as long as the returned frame (the ContextCleaner
+    # frees a dropped leaf; harness sweeps free them at once)
     "session.py:materialize_leaf": 1,
     # round 13: the UNBOUNDED counterpart — eager persist, lineage
     # kept (LRU-evictable/recomputable, so no block-store OOM);

@@ -35,7 +35,8 @@ def test_s1_filter_pushdown_and_column_pruning(spark):
 
 def test_w1_compaction_single_shuffle(spark):
     df = QUERIES["w1_cdc_compact"](spark, SF_DIR)
-    # one hash exchange on the PK feeds the window — no more
+    # one hash exchange on the PK between the partial and final
+    # aggregates — no more
     assert count_exchanges(df) == 1
 
 
@@ -300,48 +301,104 @@ def test_q4_semi_join_shape(spark):
     assert "LeftSemi" in formatted_plan(df)
 
 
-def test_w1_skewed_is_partial_aggregate_not_window(spark):
-    """The skew-stress compaction (compact_cdc_agg) must compile to a
-    partial+final max_by AGGREGATION — the hot key collapses to one
-    row per map task before the exchange — with NO Window node (a
-    window would funnel the hot key's whole history into one task)
-    and exactly one shuffle."""
+def _assert_aggregate_compaction(df):
+    """CDC compaction plan shape: a partial+final ``max_by`` aggregate
+    pair around exactly one hash exchange on the key, and no Window
+    node (a window would funnel a hot key's whole history into one
+    task)."""
+    import re
+
     from rust_dms_cdc_operator_spark.plans.inspect import formatted_plan
 
-    df = QUERIES["w1_skewed"](spark, SF_DIR)
     plan = formatted_plan(df)
     assert "Window" not in plan, plan
-    # partial (map-side) + final aggregate pair around one exchange
-    aggs = [ln for ln in plan.splitlines() if "Aggregate" in ln and "(" in ln]
-    assert len(aggs) >= 2, plan
-    assert "max_by" in plan
-    assert count_exchanges(df) == 1
+    aggs = re.findall(r"\(\d+\) \w*Aggregate\b", plan)
+    assert len(aggs) == 2, plan
+    assert "partial_max_by" in plan, plan
+    assert count_exchanges(df) == 1, plan
     # the shuffle is hash-partitioned on the key, never single-partition
     assert "SinglePartition" not in plan, plan
 
 
-def test_compact_cdc_agg_matches_window_strategy(spark):
-    """Semantic equivalence gate: on a skewed CDC frame with a unique
-    order tuple, the aggregation strategy returns exactly the window
-    strategy's rows (including delete handling)."""
-    from rust_dms_cdc_operator_spark.operators.compact import (
-        compact_cdc,
-        compact_cdc_agg,
+def test_w1_skewed_is_partial_aggregate_not_window(spark):
+    """The skew-stress compaction must compile to a partial+final
+    max_by AGGREGATION — the hot key collapses to one row per map task
+    before the exchange — with NO Window node and exactly one
+    shuffle."""
+    _assert_aggregate_compaction(QUERIES["w1_skewed"](spark, SF_DIR))
+
+
+def test_cdc_compaction_is_partial_aggregate_not_window(spark, tmp_path):
+    """Every CDC compaction has the same plan shape: the registered
+    W1 query and a full LOAD + CDC manifest replay."""
+    from rust_dms_cdc_operator_spark.operators.compact import replay_manifest
+    from rust_dms_cdc_operator_spark.payloads import LoadMode
+    from rust_dms_cdc_operator_spark.sources.manifest import build_manifest
+    from tests import cdc_fixtures
+
+    _assert_aggregate_compaction(QUERIES["w1_cdc_compact"](spark, SF_DIR))
+    root = str(tmp_path)
+    fx = cdc_fixtures.write_orders_cdc(root)
+    manifest = build_manifest(
+        mode=LoadMode.DATE_AWARE,
+        root=root,
+        database=cdc_fixtures.DB,
+        schema=cdc_fixtures.SCHEMA,
+        table=fx["table"],
+        start_date="2000-01-01",
     )
+    _assert_aggregate_compaction(
+        replay_manifest(spark, root, manifest, fx["pk"])
+    )
+
+
+def _python_last_writer_wins(rows, pk, order):
+    """Reference replay: per key, the row with the greatest order
+    tuple wins (``None`` orders below every value); a winning ``D``
+    deletes the key."""
+    def rank(r):
+        return tuple((r[c] is not None, r[c] or 0) for c in order)
+
+    best = {}
+    for r in rows:
+        k = tuple(r[c] for c in pk)
+        if k not in best or rank(r) > rank(best[k]):
+            best[k] = r
+    return {k: r for k, r in best.items() if r["Op"] != "D"}
+
+
+def test_compact_cdc_matches_python_last_writer_wins(spark):
+    """compact_cdc equals a pure-Python last-writer-wins replay on a
+    hot key, cold keys with deletes, a composite PK, a NULL order value
+    and a key whose latest event is D."""
+    from rust_dms_cdc_operator_spark.operators.compact import compact_cdc
 
     rows = []
     # hot key 0: 60 events; cold keys 1..20: 2 events each
     for s in range(60):
-        rows.append(("U" if s % 7 else "D", 0, f"h{s}", s))
+        rows.append(("U" if s % 7 else "D", 0, 0, f"h{s}", s))
     for k in range(1, 21):
-        rows.append(("U", k, f"a{k}", 100 + k))
-        rows.append(("D" if k % 4 == 0 else "U", k, f"b{k}", 200 + k))
-    cdc = spark.createDataFrame(rows, "Op string, id long, val string, seq long")
-    win = {(r.id, r.val, r.seq) for r in
-           compact_cdc(cdc, ["id"], order_cols=["seq"]).collect()}
-    agg = {(r.id, r.val, r.seq) for r in
-           compact_cdc_agg(cdc, ["id"], order_cols=["seq"]).collect()}
-    assert win == agg and len(agg) > 0
+        rows.append(("U", k, 0, f"a{k}", 100 + k))
+        rows.append(("D" if k % 4 == 0 else "U", k, 0, f"b{k}", 200 + k))
+    # composite PK: same id, different part — independent keys
+    rows += [("I", 30, 1, "p1", 1), ("U", 30, 2, "p2", 2), ("U", 30, 1, "p1b", 3)]
+    # a NULL order value loses to any non-NULL one
+    rows += [("U", 31, 0, "late", 5), ("U", 31, 0, "null-seq", None)]
+    # latest event D deletes the key
+    rows += [("I", 32, 0, "x", 1), ("U", 32, 0, "y", 2), ("D", 32, 0, "y", 3)]
+    cols = ["Op", "id", "part", "val", "seq"]
+    cdc = spark.createDataFrame(
+        rows, "Op string, id long, part int, val string, seq long"
+    )
+    expected = _python_last_writer_wins(
+        [dict(zip(cols, r)) for r in rows], ["id", "part"], ["seq"]
+    )
+    out = compact_cdc(cdc, ["id", "part"], order_cols=["seq"])
+    assert out.columns == cols
+    got = {(r.id, r.part): (r.val, r.seq) for r in out.collect()}
+    assert got == {k: (r["val"], r["seq"]) for k, r in expected.items()}
+    assert got[(31, 0)] == ("late", 5) and (32, 0) not in got
+    assert (0, 0) in got and got[(30, 1)] == ("p1b", 3)
 
 
 def test_asof_join_is_union_window_not_range_join(spark):

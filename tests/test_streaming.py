@@ -10,7 +10,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from rust_dms_cdc_operator_spark.streaming.cdc_stream import stream_replay
+from rust_dms_cdc_operator_spark.operators.compact import compact_cdc
+from rust_dms_cdc_operator_spark.streaming.cdc_stream import stream_replay_bucketed
 from tests.cdc_fixtures import stage_task_counts
 
 SCHEMA = T.StructType(
@@ -49,7 +50,7 @@ def test_stream_replay_multibatch(spark, tmp_path):
         mtime=2000,
     )
 
-    final = stream_replay(
+    final = stream_replay_bucketed(
         spark,
         str(src),
         SCHEMA,
@@ -69,7 +70,7 @@ def test_stream_delete_then_reinsert(spark, tmp_path):
     _write(str(src / "f1.parquet"), [("I", 1, "x", 1)], mtime=1000)
     _write(str(src / "f2.parquet"), [("D", 1, "x", 2)], mtime=2000)
     _write(str(src / "f3.parquet"), [("I", 1, "x2", 3)], mtime=3000)
-    final = stream_replay(
+    final = stream_replay_bucketed(
         spark, str(src), SCHEMA, ["id"], ["seq"], str(state),
         max_files_per_trigger=1,
     )
@@ -78,13 +79,8 @@ def test_stream_delete_then_reinsert(spark, tmp_path):
 
 def test_incremental_stream_matches_single_batch_apply(spark, tmp_path):
     """Multi-microbatch incremental replay through the bucketed state
-    must equal applying the whole event log as ONE batch (the batch
+    must equal compacting the whole event log as ONE batch (the batch
     compaction semantics the w1 oracle checks)."""
-    from rust_dms_cdc_operator_spark.streaming.cdc_stream import (
-        apply_cdc_batch,
-        stream_replay_bucketed,
-    )
-
     src = tmp_path / "src3"
     os.makedirs(src)
     _write(
@@ -97,8 +93,8 @@ def test_incremental_stream_matches_single_batch_apply(spark, tmp_path):
         [("U", 5, "upd", 100), ("D", 6, "x", 101), ("I", 99, "new", 102)],
         mtime=2000,
     )
-    a = apply_cdc_batch(
-        None, spark.read.schema(SCHEMA).parquet(str(src)), ["id"], ["seq"]
+    a = compact_cdc(
+        spark.read.schema(SCHEMA).parquet(str(src)), ["id"], order_cols=["seq"]
     )
     b = stream_replay_bucketed(
         spark, str(src), SCHEMA, ["id"], ["seq"], str(tmp_path / "sb"),

@@ -1,19 +1,20 @@
-"""Round-12 optimization harness: time named queries through the noop
-sink (guide §1.4) on the bench session and dump their formatted plans.
+"""Optimization harness: time named queries through the noop sink on
+the bench session and dump their formatted plans.
 
 Usage:
     python tools/profile_queries.py [--plans-dir plans/r12] \
         [--suffix before] [--repeat 1] [--sf-dir /root/testdata/sf0.1] \
         [name ...]
 
-Each query runs exactly like bench.py does (same session, same noop
-sink, cache cleared between queries, job description labeled per
-guide §1.5). With no names, every registered query runs. Per-query
-wall, JVM cpu seconds and Janino compile count per rep print as one
+Each query runs through bench.py's own warm-up and measurement loop
+(``_warm``, ``_run_query``: same session, same noop sink, caches and
+persisted RDDs freed between queries), with the job description
+labeled per query and rep. With no names, every registered query runs.
+Per-query wall, JVM cpu seconds and Janino compile count per rep print as one
 JSON line at the end, followed by a line with the total compile count
 and the JVM heap and Metaspace used after the pass. With --plans-dir,
 each query's .explain("formatted") is written to
-<plans-dir>/<name>_<suffix>.txt (the round-12 deliverable).
+<plans-dir>/<name>_<suffix>.txt.
 """
 
 from __future__ import annotations
@@ -22,7 +23,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -48,21 +48,12 @@ def main() -> None:
     args = ap.parse_args()
 
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    from bench import _jvm_cpu_secs
+    from bench import _run_query, _warm
     from rust_dms_cdc_operator_spark.inventory import QUERIES
-    from rust_dms_cdc_operator_spark.inventory_llm import prepare_bench
-    from rust_dms_cdc_operator_spark.session import (
-        codegen_compiles,
-        get_spark,
-        release_persistent_rdds,
-    )
+    from rust_dms_cdc_operator_spark.session import codegen_compiles, get_spark
 
     spark = get_spark(app_name="profile")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    spark.range(1).mapInPandas(lambda it: it, "id long").collect()
-    from rust_dms_cdc_operator_spark.session import local_relation
-    local_relation(spark, [(1,)], "x long").collect()
-    prepare_bench(spark, args.sf_dir)
+    _warm(spark, args.sf_dir)
 
     out: dict[str, list] = {}
     compiles_start = codegen_compiles(spark)
@@ -70,16 +61,11 @@ def main() -> None:
         walls, cpus, compiles = [], [], []
         for i in range(args.repeat):
             spark.sparkContext.setJobDescription(f"{name} [rep {i}]")
-            c0 = _jvm_cpu_secs(spark)
             k0 = codegen_compiles(spark)
-            t0 = time.time()
-            df = QUERIES[name](spark, args.sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            walls.append(round(time.time() - t0, 3))
-            cpus.append(round(_jvm_cpu_secs(spark) - c0, 3))
+            wall, cpu, _steal = _run_query(spark, QUERIES[name], args.sf_dir)
+            walls.append(wall)
+            cpus.append(cpu)
             compiles.append(codegen_compiles(spark) - k0)
-            spark.catalog.clearCache()
-            release_persistent_rdds(spark)
             spark.sparkContext.setJobDescription(None)
         out[name] = [walls, cpus, compiles]
         if args.plans_dir:
