@@ -58,6 +58,7 @@ from rust_dms_cdc_operator_spark.functions.text import (
     whitespace_token_count,
 )
 from rust_dms_cdc_operator_spark.operators.dedup import (
+    band_key_cols,
     exact_dedup,
     minhash_lsh_pairs,
     minhash_signature_cols,
@@ -1164,37 +1165,27 @@ def q_docs_length_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production two-stage near-dup pipeline in one plan: banded
-    MinHash-LSH (2 bands x 8 rows) proposes candidate pairs, exact
-    Jaccard at the standard dedup threshold 0.8 disposes
-    (operators/dedup.jaccard_verify_pairs: size-prepass halves the
-    candidates before any array moves, 32-bit-hashed shingles shrink
-    the rest — needed because the synthetic corpus's tiny vocabulary
-    makes LSH collide on ~16% of ALL pairs, the adversarial case for
-    any candidate-generation scheme)."""
+    """The production two-stage near-dup census: pairs that banded
+    MinHash-LSH (2 bands x 8 rows) proposes AND whose exact Jaccard
+    reaches the standard dedup threshold 0.8. For a positive
+    threshold that set is the exact prefix-filter join at 0.8
+    (operators/dedup.prefix_jaccard_join, 32-bit-hashed shingles)
+    restricted to pairs that share a band key
+    (operators/dedup.lsh_band_filter) — so no candidate stream is
+    enumerated: the synthetic corpus's tiny vocabulary makes LSH
+    collide on ~16% of ALL pairs, while the prefix join only reaches
+    threshold-feasible pairs through each doc's rarest shingles."""
     from rust_dms_cdc_operator_spark.operators.dedup import (  # noqa: PLC0415
-        jaccard_verify_pairs,
+        lsh_band_filter,
+        prefix_jaccard_join,
     )
 
     d = _t(spark, sf_dir, "documents")
-    # persist: the tokens-strategy verify consumes the pair stream
-    # twice (participant extraction + the inter-count LEFT join) —
-    # caller-owned cache, the cohesion convention
-    pairs = minhash_lsh_pairs(
-        d, "doc_id", "text", num_hashes=16, bands=2
-    ).persist()
-    # round 12: materialize before the fan-out — the verify's
-    # participant extraction and inter-count join race on a cold
-    # cache otherwise (see minhash_lsh_pairs keyed.count())
-    pairs.count()
-    # tokens strategy (round 11): this is the dense FULL census — the
-    # uncapped pair stream is cluster-quadratic, so shared-token
-    # intersection counting beats dragging two shingle arrays through
-    # every pair row (the capped/sampled twins keep the array path,
-    # where candidates are sparse relative to participants)
-    return jaccard_verify_pairs(
-        pairs, d, "doc_id", "text", n=3, min_jaccard=0.8,
-        hash_shingles=True, strategy="tokens",
+    return lsh_band_filter(
+        prefix_jaccard_join(
+            d, "doc_id", "text", n=3, min_jaccard=0.8, hash_shingles=True
+        ),
+        d, "doc_id", "text", num_hashes=16, bands=2,
     )
 
 
@@ -1690,27 +1681,30 @@ def q_events_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric containment near-dup
-    (operators/dedup.containment_verify_pairs): LSH candidates
-    re-verified by |A∩B| / min(|A|,|B|) ≥ 0.9 — catches
-    excerpt/quote/boilerplate duplication whose Jaccard the union
-    inflation hides. Same hashed-shingle machinery as
-    dedup_lsh_verified, different disposal criterion."""
+    """Asymmetric containment near-dup: LSH candidate pairs with
+    |A∩B| / min(|A|,|B|) ≥ 0.9 — catches excerpt/quote/boilerplate
+    duplication whose Jaccard the union inflation hides. Same route
+    as dedup_lsh_verified: the exact prefix containment join at 0.9
+    (operators/dedup.prefix_containment_join), then the band filter.
+    The prefix join emits the smaller set first; the census reports
+    pairs as (least id, greatest id) with sizes following the ids."""
     from rust_dms_cdc_operator_spark.operators.dedup import (  # noqa: PLC0415
-        containment_verify_pairs,
+        lsh_band_filter,
+        prefix_containment_join,
     )
 
     d = _t(spark, sf_dir, "documents")
-    # persist: tokens-strategy verify consumes the pair stream twice
-    pairs = minhash_lsh_pairs(
-        d, "doc_id", "text", num_hashes=16, bands=2
-    ).persist()
-    # tokens strategy: dense full census, same rationale as
-    # dedup_lsh_verified (the capped twin keeps the array path)
-    return containment_verify_pairs(
-        pairs, d, "doc_id", "text", n=3, min_containment=0.9,
-        hash_shingles=True, strategy="tokens",
+    swap = F.col("id_a") > F.col("id_b")
+    pairs = prefix_containment_join(
+        d, "doc_id", "text", n=3, min_containment=0.9, hash_shingles=True
+    ).select(
+        F.least("id_a", "id_b").alias("id_a"),
+        F.greatest("id_a", "id_b").alias("id_b"),
+        "inter_size",
+        F.when(swap, F.col("size_b")).otherwise(F.col("size_a")).alias("size_a"),
+        F.when(swap, F.col("size_a")).otherwise(F.col("size_b")).alias("size_b"),
     )
+    return lsh_band_filter(pairs, d, "doc_id", "text", num_hashes=16, bands=2)
 
 
 _VERIFY_BUDGET = 5000  # shared by the capped variants and their oracles
@@ -13521,13 +13515,7 @@ def q_dedup_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.struct(
                     F.lit(f"{b}x{rows}").alias("config"),
                     F.lit(i).alias("band_idx"),
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.col(f"mh_{i * rows + r}")
-                            for r in range(rows)
-                        ],
-                    ).alias("bk"),
+                    band_key_cols(16, b)[i].alias("bk"),
                 )
             )
     banded = sigs.select(

@@ -11,7 +11,14 @@ whole-stage codegen — no Python UDFs in the hot path) and scale as:
   explode(words) + one groupBy(doc) shuffle;
 - n-gram Jaccard: shingle sets per row (array ops), bounded candidate
   join, array_intersect/array_union sizes — exact fractions, no
-  floating point.
+  floating point;
+- thresholded near-dup censuses (Jaccard, containment): exact
+  prefix-filter self-joins on each doc's globally rarest shingles, so
+  candidate volume is bounded by the threshold, not the vocabulary.
+  The LSH-verified census is that join followed by a band filter
+  keeping the pairs that share a band key (``lsh_band_filter``); the
+  candidate-stream verifiers (``jaccard_verify_pairs``,
+  ``containment_verify_pairs``) serve sampled or capped candidates.
 
 Portability note: hashes are md5-hex (same on every engine) rather
 than xxhash64 (Spark-specific seeds), so results are oracle-checkable;
@@ -100,6 +107,23 @@ def minhash_signature_cols(
     return word_hashes.alias("_wh"), sig
 
 
+def band_key_cols(num_hashes: int, bands: int) -> list[Column]:
+    """The LSH band keys ``bk_0 .. bk_{bands-1}`` over the ``mh_i``
+    columns of :func:`minhash_signature_cols`: band b is its
+    ``num_hashes // bands`` consecutive signature values joined with
+    ``|``. Every band-keyed operator here builds its keys with this
+    one expression, so "two docs share a key" means the same thing to
+    the pair generator, the band-key index and the band filter."""
+    rows_per_band = num_hashes // bands
+    return [
+        F.concat_ws(
+            "|",
+            *[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)],
+        ).alias(f"bk_{b}")
+        for b in range(bands)
+    ]
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -175,7 +199,6 @@ def minhash_lsh_pairs(
     k-NN ranking); the capped path makes it unnecessary.
     """
     carry_cols = list(carry_cols or [])
-    rows_per_band = num_hashes // bands
     wh, sig_cols = minhash_signature_cols(F.col(text_col), num_hashes)
     # round 12: NO parallelism floor here, deliberately — floored
     # signature input propagates a multi-partition layout into the
@@ -198,16 +221,7 @@ def minhash_lsh_pairs(
         else []
     )
     keyed = sigs.select(
-        F.col(id_col),
-        *carry,
-        *carry_cols,
-        *[
-            F.concat_ws(
-                "|",
-                *[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)],
-            ).alias(f"bk_{b}")
-            for b in range(bands)
-        ],
+        F.col(id_col), *carry, *carry_cols, *band_key_cols(num_hashes, bands)
     ).persist()
     # round 12: materialize the signature cache BEFORE the per-band
     # joins fan out. AQE launches the band joins' broadcast builds as
@@ -334,23 +348,61 @@ def minhash_band_keys(
     keys for ITS OWN docs only, then probes the index
     (:func:`lsh_pairs_incremental`) — per-ingest candidate discovery
     costs O(batch keys + touched buckets), never O(corpus)."""
-    rows_per_band = num_hashes // bands
-    wh, sig_cols = minhash_signature_cols(F.col(text_col), num_hashes)
-    sigs = df.select(F.col(id_col), wh).select(F.col(id_col), *sig_cols)
     entries = F.array(*[
-        F.struct(
-            F.lit(b).cast("int").alias("band"),
-            F.concat_ws(
-                "|",
-                *[F.col(f"mh_{b * rows_per_band + r}")
-                  for r in range(rows_per_band)],
-            ).alias("bk"),
-        )
+        F.struct(F.lit(b).cast("int").alias("band"), F.col(f"bk_{b}").alias("bk"))
         for b in range(bands)
     ])
-    return sigs.select(
+    return _band_keys_wide(df, id_col, text_col, num_hashes, bands).select(
         F.col(id_col), F.explode(entries).alias("_k")
     ).select(id_col, F.col("_k.band").alias("band"), F.col("_k.bk").alias("bk"))
+
+
+def _band_keys_wide(
+    df: DataFrame, id_col: str, text_col: str, num_hashes: int, bands: int
+) -> DataFrame:
+    """(id_col, bk_0 .. bk_{bands-1}): one row per document."""
+    wh, sig_cols = minhash_signature_cols(F.col(text_col), num_hashes)
+    return (
+        df.select(F.col(id_col), wh)
+        .select(F.col(id_col), *sig_cols)
+        .select(F.col(id_col), *band_key_cols(num_hashes, bands))
+    )
+
+
+def lsh_band_filter(
+    pairs: DataFrame,
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = 8,
+    bands: int = 2,
+) -> DataFrame:
+    """Keep the rows of a pair frame (``id_a``, ``id_b``, any other
+    columns) whose two documents share a band key in at least one
+    band — exactly the pairs :func:`minhash_lsh_pairs` with the same
+    ``num_hashes``/``bands`` emits, in either orientation.
+
+    This turns an exact threshold join into the LSH-verified census:
+    for a threshold t > 0, "LSH candidate whose exact similarity is
+    ≥ t" is the same set as "pair of :func:`prefix_jaccard_join` /
+    :func:`prefix_containment_join` at t that collides in a band". The
+    prefix join enumerates only threshold-reachable pairs through the
+    rarest-token prefixes, so no candidate stream is materialized and
+    no token self-join runs; this filter then costs two id-key joins
+    of the (small) result against one narrow row per document. Both
+    joins read the same unrenamed key frame, so Spark computes the
+    signatures once and reuses that exchange for the second join."""
+    keys = _band_keys_wide(docs, id_col, text_col, num_hashes, bands)
+    collides = F.lit(False)
+    for b in range(bands):
+        collides = collides | (F.col(f"_ka.bk_{b}") == F.col(f"_kb.bk_{b}"))
+    return (
+        pairs.alias("_p")
+        .join(keys.alias("_ka"), F.col("_p.id_a") == F.col(f"_ka.{id_col}"))
+        .join(keys.alias("_kb"), F.col("_p.id_b") == F.col(f"_kb.{id_col}"))
+        .filter(collides)
+        .select("_p.*")
+    )
 
 
 def band_key_bucket_counts(keys: DataFrame) -> DataFrame:
@@ -598,25 +650,7 @@ def lsh_bucket_truncation_census(
     these are SLOTS, not lost documents). Same signature pipeline as
     the pair generator; one narrow occupancy aggregation per band, a
     ``2*bands``-row result — bounded driver output at any scale."""
-    rows_per_band = num_hashes // bands
-    wh, sig_cols = minhash_signature_cols(F.col(text_col), num_hashes)
-    keyed = (
-        df.select(F.col(id_col), wh)
-        .select(F.col(id_col), *sig_cols)
-        .select(
-            F.col(id_col),
-            *[
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.col(f"mh_{b * rows_per_band + r}")
-                        for r in range(rows_per_band)
-                    ],
-                ).alias(f"bk_{b}")
-                for b in range(bands)
-            ],
-        )
-    )
+    keyed = _band_keys_wide(df, id_col, text_col, num_hashes, bands)
     per_band = [
         keyed.groupBy(F.col(f"bk_{i}").alias("bk"))
         .agg(F.count(F.lit(1)).alias("c"))
@@ -669,7 +703,6 @@ def minhash_knn_topk(
     candidate set, so the result is exact."""
     from pyspark.sql import Window  # noqa: PLC0415
 
-    rows_per_band = num_hashes // bands
     wh, sig_cols = minhash_signature_cols(F.col(text_col), num_hashes)
     keyed = (
         df.select(F.col(id_col), wh)
@@ -679,16 +712,7 @@ def minhash_knn_topk(
             F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)]).alias(
                 "sig"
             ),
-            *[
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.col(f"mh_{b * rows_per_band + r}")
-                        for r in range(rows_per_band)
-                    ],
-                ).alias(f"bk_{b}")
-                for b in range(bands)
-            ],
+            *band_key_cols(num_hashes, bands),
         )
         .persist()
     )
@@ -1012,75 +1036,6 @@ def candidate_budget_sample(
     return pairs.filter(key % k == 0)
 
 
-def _pair_inter_counts(
-    pairs: DataFrame, s: DataFrame, id_col: str
-) -> DataFrame:
-    """Exact |A ∩ B| per candidate pair via the SHARED-TOKEN equi-join
-    (round 11 — the cohesion-oracle shape applied engine-side):
-    shingle arrays are DISTINCT, so the token self-join's per-pair row
-    count IS the intersection size. The shingle table is first
-    restricted to pair PARTICIPANTS (one narrow distinct over the
-    candidate ids), tokens explode narrow (id, tok), and the join
-    output partial-aggregates into (id_a, id_b, inter) — nothing
-    array-sized ever shuffles with the pair stream. Pairs sharing
-    zero tokens are absent (LEFT-join + coalesce at the caller).
-
-    Trade: the token join enumerates co-token pairs among
-    participants — a SUPERSET of the candidates. On dense near-dup
-    graphs (full LSH censuses: participants are cluster members,
-    co-token pairs ≈ candidate pairs) this is the win that removes
-    the |pairs| x array-width shuffle; on sparse/sampled candidate
-    sets the array path attaches only what the pairs need — hence
-    ``strategy`` stays caller-chosen with "arrays" as default."""
-    ids = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    tokh = (
-        s.join(ids, id_col, "left_semi")
-        .select(F.col(id_col), F.explode("sh").alias("tok"))
-    )
-    return (
-        tokh.select(F.col(id_col).alias("id_a"), "tok")
-        .join(tokh.select(F.col(id_col).alias("id_b"), "tok"), "tok")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("_inter"))
-    )
-
-
-def _attach_inter_counts(
-    pairs: DataFrame, s: DataFrame, id_col: str
-) -> DataFrame:
-    """LEFT-attach exact ``_inter`` to a candidate stream of ANY pair
-    orientation: :func:`_pair_inter_counts` emits ordered
-    (id_a < id_b) keys only, so this probe normalizes with
-    least/greatest for the join and keeps the caller's original
-    columns — the tokens strategy thereby matches the arrays path
-    row-for-row on unordered candidate input instead of silently
-    reporting zero intersections for id_a > id_b rows (round-12
-    hardening; candidate generators in this repo all emit ordered
-    pairs, but the public verify surface no longer assumes it).
-    Self-pairs (id_a == id_b) remain out of contract: no generator
-    emits them and :func:`lsh_pairs_incremental` now filters them."""
-    ic = _pair_inter_counts(pairs, s, id_col)
-    return (
-        pairs.withColumn("_na", F.least("id_a", "id_b"))
-        .withColumn("_nb", F.greatest("id_a", "id_b"))
-        .join(
-            ic.select(
-                F.col("id_a").alias("_na"),
-                F.col("id_b").alias("_nb"),
-                "_inter",
-            ),
-            ["_na", "_nb"],
-            "left",
-        )
-        .drop("_na", "_nb")
-    )
-
-
 def jaccard_verify_pairs(
     pairs: DataFrame,
     docs: DataFrame,
@@ -1090,12 +1045,14 @@ def jaccard_verify_pairs(
     min_jaccard: float | None = None,
     hash_shingles: bool = False,
     max_candidates: int | None = None,
-    strategy: str = "arrays",
 ) -> DataFrame:
-    """Exact-Jaccard verification stage for LSH candidate pairs — the
-    second half of the production two-stage near-dup pipeline (LSH
-    proposes, exact similarity disposes; candidates that collided by
-    hash luck get filtered on the exact integer sizes).
+    """Exact-Jaccard verification stage for a candidate pair stream:
+    (id_a, id_b, inter_size, union_size) per candidate, thresholded
+    at ``min_jaccard`` when set. It serves candidate sets that are
+    sampled or capped (the budget-sampled ``*_capped`` queries) and
+    hand-built ones; the full LSH census at a threshold is
+    :func:`prefix_jaccard_join` followed by :func:`lsh_band_filter`,
+    which never materializes the candidate stream.
 
     With ``min_jaccard`` set, a SIZE PREPASS runs before any array
     moves: J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so a pair whose shingle
@@ -1108,14 +1065,15 @@ def jaccard_verify_pairs(
     Scale shape: the candidate stream joins the narrow per-doc shingle
     table twice on the id key — two id-key shuffles, both linear in
     |surviving pairs| + |docs|; nothing quadratic, no re-tokenization
-    per pair (shingle arrays are computed once per doc).
+    per pair (shingle arrays are computed once per doc). Candidates
+    may come in either orientation; each row is verified as given.
 
     With ``max_candidates`` set, the (prepass-surviving) candidate
     stream additionally passes through :func:`candidate_budget_sample`
     — a deterministic keyed 1-in-k census sample that bounds verifier
-    cost on adversarial vocabularies where LSH selectivity collapses
-    (the documented 383 s containment cliff at native sf1); the output
-    is then a census SAMPLE, scaled by k for full-census estimates.
+    cost on adversarial vocabularies where LSH selectivity collapses;
+    the output is then a census SAMPLE, scaled by k for full-census
+    estimates.
 
     Cache lifetime: the per-doc shingle table is ``persist()``-ed and
     referenced by the RETURNED lazy plan, so this function cannot
@@ -1125,19 +1083,7 @@ def jaccard_verify_pairs(
     which is the default behavior). Repeated calls in one session each
     pin a fresh shingle table until evicted.
     """
-    mk = hashed_shingle_set if hash_shingles else shingle_set
-    # round 12: floor the shingle-hash stage's parallelism (serial on
-    # a single-file corpus otherwise; no-op at scale) — also gives the
-    # persisted table >= cores cache partitions for the join sides
-    s = scan_parallelism_floor(
-        docs.select(F.col(id_col), F.col(text_col))
-    ).select(
-        F.col(id_col), mk(F.col(text_col), n).alias("sh")
-    ).persist()  # consumed by both join sides (and the size prepass)
-    # round 12: materialize before the fan-out — concurrent consumers
-    # of a cold multi-partition cache each recompute it (see
-    # minhash_lsh_pairs keyed.count())
-    s.count()
+    s = _shingle_table(docs, id_col, text_col, n, hash_shingles)
     if min_jaccard is not None:
         sizes = s.select(F.col(id_col), F.size("sh").alias("sz"))
         pa = sizes.select(
@@ -1146,16 +1092,6 @@ def jaccard_verify_pairs(
         pb = sizes.select(
             F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b")
         )
-        # round 13 (guide §2.4 remove shuffles outright): KEEP the
-        # sizes the prepass already attached — the tokens branch
-        # below needs exactly these two columns, and re-joining the
-        # per-doc size table onto the surviving pair stream paid two
-        # more pair-sized joins for values already in hand (at corpus
-        # scale the size table outgrows the broadcast threshold and
-        # each re-join is a full pair-stream shuffle). Values are
-        # identical by construction (same `s`), so results are
-        # unchanged; the two narrow longs per sampled row are the
-        # only extra bytes the budget-sample persist pays.
         pairs = (
             pairs.join(pa, "id_a")
             .join(pb, "id_b")
@@ -1163,58 +1099,46 @@ def jaccard_verify_pairs(
                 F.least("sz_a", "sz_b")
                 >= F.greatest("sz_a", "sz_b") * F.lit(min_jaccard)
             )
-            .select(
-                "id_a",
-                "id_b",
-                F.col("sz_a").cast("long").alias("_sz_a"),
-                F.col("sz_b").cast("long").alias("_sz_b"),
-            )
+            .select("id_a", "id_b")
         )
     if max_candidates is not None:
         pairs = candidate_budget_sample(pairs, max_candidates)
-    if strategy == "tokens":
-        # shared-token intersection counts (see _pair_inter_counts):
-        # pairs + sizes are the only pair-stream-shaped shuffles, all
-        # narrow; identical rows to the array path by distinctness
-        inter_c = F.coalesce(F.col("_inter"), F.lit(0)).cast("long")
-        withsz = _attach_inter_counts(pairs, s, id_col)
-        if min_jaccard is None:
-            # sizes not attached by a prepass — join them once here
-            sz = s.select(
-                F.col(id_col), F.size("sh").cast("long").alias("_sz")
-            )
-            withsz = withsz.join(
-                sz.select(F.col(id_col).alias("id_a"),
-                          F.col("_sz").alias("_sz_a")), "id_a"
-            ).join(
-                sz.select(F.col(id_col).alias("id_b"),
-                          F.col("_sz").alias("_sz_b")), "id_b"
-            )
-        out = withsz.select(
-            "id_a",
-            "id_b",
-            inter_c.alias("inter_size"),
-            (F.col("_sz_a") + F.col("_sz_b") - inter_c)
-            .cast("long").alias("union_size"),
-        )
-    else:
-        a = s.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-        b = s.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-        j = pairs.join(a, "id_a").join(b, "id_b")
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size("sh_a") + F.size("sh_b") - inter
-        out = j.select(
-            "id_a",
-            "id_b",
-            inter.cast("long").alias("inter_size"),
-            union.cast("long").alias("union_size"),
-        )
+    a = s.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
+    b = s.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
+    j = pairs.join(a, "id_a").join(b, "id_b")
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - inter
+    out = j.select(
+        "id_a",
+        "id_b",
+        inter.cast("long").alias("inter_size"),
+        union.cast("long").alias("union_size"),
+    )
     if min_jaccard is not None:
         out = out.filter(
             F.col("inter_size")
             >= F.col("union_size") * F.lit(min_jaccard)
         )
     return out
+
+
+def _shingle_table(
+    docs: DataFrame, id_col: str, text_col: str, n: int, hash_shingles: bool
+) -> DataFrame:
+    """(id_col, sh): the persisted and materialized per-doc shingle
+    array table the verify and prefix-join stages read. The shingle
+    hashing stage gets a parallelism floor (serial on a single-file
+    corpus otherwise; a no-op at scale), and the cache is filled by
+    one count before its consumers fan out — concurrent consumers of
+    a cold multi-partition cache each recompute it."""
+    mk = hashed_shingle_set if hash_shingles else shingle_set
+    s = scan_parallelism_floor(
+        docs.select(F.col(id_col), F.col(text_col))
+    ).select(
+        F.col(id_col), mk(F.col(text_col), n).alias("sh")
+    ).persist()
+    s.count()
+    return s
 
 
 def segment_dedup(
@@ -1301,7 +1225,6 @@ def containment_verify_pairs(
     min_containment: float = 0.9,
     hash_shingles: bool = False,
     max_candidates: int | None = None,
-    strategy: str = "arrays",
 ) -> DataFrame:
     """ASYMMETRIC near-dup verification: containment
     C = |A ∩ B| / min(|A|, |B|) — a short document embedded inside a
@@ -1309,7 +1232,11 @@ def containment_verify_pairs(
     low (the long side's extra shingles inflate the union), so the
     Jaccard threshold silently misses quote/excerpt/boilerplate
     duplication. The companion disposal stage to
-    :func:`jaccard_verify_pairs` over the same LSH candidates.
+    :func:`jaccard_verify_pairs` over the same candidates; returns
+    (id_a, id_b, inter_size, size_a, size_b) in the candidates'
+    orientation. The full LSH census at a threshold is
+    :func:`prefix_containment_join` followed by
+    :func:`lsh_band_filter`.
 
     No size prepass exists for containment (a tiny set can be 100%
     contained in any larger one — sizes alone never disqualify a
@@ -1322,114 +1249,20 @@ def containment_verify_pairs(
     cliff. Same scale shape otherwise: two id-key joins of the
     candidate stream against the once-computed shingle table; the
     caller owns the persisted shingle cache lifetime."""
-    mk = hashed_shingle_set if hash_shingles else shingle_set
-    # round 12: floor the shingle-hash stage (see jaccard_verify_pairs)
-    s = scan_parallelism_floor(
-        docs.select(F.col(id_col), F.col(text_col))
-    ).select(
-        F.col(id_col), mk(F.col(text_col), n).alias("sh")
-    ).persist()
-    # round 12: materialize before the fan-out — concurrent consumers
-    # of a cold multi-partition cache each recompute it (see
-    # minhash_lsh_pairs keyed.count())
-    s.count()
+    s = _shingle_table(docs, id_col, text_col, n, hash_shingles)
     if max_candidates is not None:
         pairs = candidate_budget_sample(pairs, max_candidates)
-    if strategy == "tokens":
-        # shared-token intersection counts (see _pair_inter_counts)
-        sz = s.select(F.col(id_col), F.size("sh").cast("long").alias("_sz"))
-        sza = sz.select(F.col(id_col).alias("id_a"), F.col("_sz").alias("_sz_a"))
-        szb = sz.select(F.col(id_col).alias("id_b"), F.col("_sz").alias("_sz_b"))
-        if min_containment > 0:
-            # round 13 (guide §2.3 decide on small rows, attach late):
-            # with a positive threshold, a pair ABSENT from the
-            # inter-count table (zero shared tokens) can only pass
-            # inter >= min(size)*t when one side has ZERO shingles —
-            # so the size attach does not need to touch the full
-            # candidate stream. Join inter-counts INNER (the matched
-            # stream is intra-cluster-bounded, orders of magnitude
-            # smaller than the candidates), attach sizes to THAT, and
-            # recover the zero-shingle pairs through two semi/anti
-            # probes against the (usually empty) zero-size id set.
-            # The former LEFT + two candidate-sized size joins paid
-            # two full pair-stream passes for values only the matched
-            # rows ever keep. Row set and multiplicity identical: the
-            # anti/semi split is disjoint by construction and every
-            # unmatched nonzero-size pair fails the threshold filter
-            # below in both shapes.
-            ic = _pair_inter_counts(pairs, s, id_col)
-            matched = (
-                pairs.withColumn("_na", F.least("id_a", "id_b"))
-                .withColumn("_nb", F.greatest("id_a", "id_b"))
-                .join(
-                    ic.select(
-                        F.col("id_a").alias("_na"),
-                        F.col("id_b").alias("_nb"),
-                        "_inter",
-                    ),
-                    ["_na", "_nb"],
-                )
-                .drop("_na", "_nb")
-                .join(sza, "id_a")
-                .join(szb, "id_b")
-                .select(
-                    "id_a",
-                    "id_b",
-                    F.col("_inter").cast("long").alias("inter_size"),
-                    F.col("_sz_a").alias("size_a"),
-                    F.col("_sz_b").alias("size_b"),
-                )
-            )
-            zs = sz.filter(F.col("_sz") == 0).select(id_col)
-            za = pairs.join(
-                zs.select(F.col(id_col).alias("id_a")), "id_a", "left_semi"
-            )
-            zb = pairs.join(
-                zs.select(F.col(id_col).alias("id_a")), "id_a", "left_anti"
-            ).join(
-                zs.select(F.col(id_col).alias("id_b")), "id_b", "left_semi"
-            )
-            zout = (
-                za.unionByName(zb)
-                .join(sza, "id_a")
-                .join(szb, "id_b")
-                .select(
-                    "id_a",
-                    "id_b",
-                    F.lit(0).cast("long").alias("inter_size"),
-                    F.col("_sz_a").alias("size_a"),
-                    F.col("_sz_b").alias("size_b"),
-                )
-            )
-            out = matched.unionByName(zout)
-        else:
-            # threshold 0: EVERY candidate passes, so all of them
-            # need sizes — the LEFT shape is the only correct one
-            out = (
-                _attach_inter_counts(pairs, s, id_col)
-                .join(sza, "id_a")
-                .join(szb, "id_b")
-                .select(
-                    "id_a",
-                    "id_b",
-                    F.coalesce(F.col("_inter"), F.lit(0)).cast("long")
-                    .alias("inter_size"),
-                    F.col("_sz_a").alias("size_a"),
-                    F.col("_sz_b").alias("size_b"),
-                )
-            )
-    else:
-        a = s.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-        b = s.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-        j = pairs.join(a, "id_a").join(b, "id_b")
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        out = j.select(
-            "id_a",
-            "id_b",
-            inter.cast("long").alias("inter_size"),
-            F.size("sh_a").cast("long").alias("size_a"),
-            F.size("sh_b").cast("long").alias("size_b"),
-        )
+    a = s.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
+    b = s.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
+    j = pairs.join(a, "id_a").join(b, "id_b")
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    out = j.select(
+        "id_a",
+        "id_b",
+        inter.cast("long").alias("inter_size"),
+        F.size("sh_a").cast("long").alias("size_a"),
+        F.size("sh_b").cast("long").alias("size_b"),
+    )
     return out.filter(
         F.col("inter_size")
         >= F.least("size_a", "size_b") * F.lit(min_containment)
@@ -1559,16 +1392,7 @@ def _ranked_shingles(
     cache lifetime, same contract as the verify stages above)."""
     from pyspark.sql import Window  # noqa: PLC0415
 
-    mk = hashed_shingle_set if hash_shingles else shingle_set
-    # round 12: floor the shingle-hash stage (see jaccard_verify_pairs)
-    s = scan_parallelism_floor(
-        docs.select(F.col(id_col), F.col(text_col))
-    ).select(
-        F.col(id_col), mk(F.col(text_col), n).alias("sh")
-    ).persist()
-    # round 12: materialize before the fan-out (freq agg + ranked
-    # window + the prefix-join probes race on a cold cache otherwise)
-    s.count()
+    s = _shingle_table(docs, id_col, text_col, n, hash_shingles)
     tok = s.select(
         F.col(id_col),
         F.size("sh").alias("sz"),
@@ -1587,6 +1411,16 @@ def _ranked_shingles(
         .persist()
     )
     return s, ranked
+
+
+def _prefix_tokens(ranked: DataFrame, num: int, den: int) -> DataFrame:
+    """The prefix rows of a :func:`_ranked_shingles` table at threshold
+    num/den: each doc's first |X| - ⌈t·|X|⌉ + 1 tokens in the global
+    rarity order. A token shared by most of the corpus ranks last in
+    every doc that has anything rarer, so it only enters the prefix of
+    a doc made almost entirely of frequent tokens."""
+    plen = F.col("sz") - F.expr(f"(({num} * sz + {den - 1}) div {den})") + 1
+    return ranked.filter(F.col("rn") <= plen)
 
 
 def prefix_jaccard_join(
@@ -1627,10 +1461,7 @@ def prefix_jaccard_join(
     (similarity is undefined on them; explode drops them)."""
     num, den = _frac(min_jaccard)
     s, ranked = _ranked_shingles(docs, id_col, text_col, n, hash_shingles)
-    plen = F.col("sz") - F.expr(
-        f"(({num} * sz + {den - 1}) div {den})"
-    ) + 1
-    pref = ranked.filter(F.col("rn") <= plen)
+    pref = _prefix_tokens(ranked, num, den)
     a = pref.select(
         F.col(id_col).alias("id_a"),
         "tok",
@@ -1714,10 +1545,7 @@ def prefix_containment_join(
     survive adversarial vocabularies."""
     num, den = _frac(min_containment)
     s, ranked = _ranked_shingles(docs, id_col, text_col, n, hash_shingles)
-    plen = F.col("sz") - F.expr(
-        f"(({num} * sz + {den - 1}) div {den})"
-    ) + 1
-    a = ranked.filter(F.col("rn") <= plen).select(
+    a = _prefix_tokens(ranked, num, den).select(
         F.col(id_col).alias("id_a"),
         "tok",
         F.col("sz").alias("sz_a"),
@@ -1913,10 +1741,7 @@ def prefix_jaccard_join_rs(
     s, ranked = _ranked_shingles(tagged, "_uid", text_col, n, hash_shingles)
     sides = tagged.select("_uid", "_side", id_col).distinct()
     ranked = ranked.join(sides, "_uid")
-    plen = F.col("sz") - F.expr(
-        f"(({num} * sz + {den - 1}) div {den})"
-    ) + 1
-    pref = ranked.filter(F.col("rn") <= plen)
+    pref = _prefix_tokens(ranked, num, den)
     a = pref.filter(F.col("_side") == "l").select(
         F.col("_uid").alias("uid_l"),
         F.col(id_col).alias("id_l"),

@@ -164,17 +164,27 @@ def write_schema_drift(root: str) -> dict:
 
 
 @contextmanager
+def group_job_ids(sc, group: str):
+    """Run the block under Spark job group ``group``; on exit, the
+    yielded list holds the ids of the jobs it launched."""
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextmanager
 def stage_task_counts(sc, group: str):
     """Run the block under Spark job group ``group``; on exit, the
     yielded list holds the task count of every stage its jobs ran."""
     counts: list[int] = []
-    sc.setJobGroup(group, group)
-    try:
+    with group_job_ids(sc, group) as jobs:
         yield counts
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
     tracker = sc.statusTracker()
-    for j in tracker.getJobIdsForGroup(group):
+    for j in jobs:
         for s in tracker.getJobInfo(j).stageIds:
             if (info := tracker.getStageInfo(s)) is not None:
                 counts.append(info.numTasks)

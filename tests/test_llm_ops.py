@@ -789,98 +789,225 @@ def test_jaccard_verify_pairs(spark, docs):
     assert thr == {(1, 2)}
 
 
-def test_verify_tokens_strategy_matches_arrays(spark, docs):
-    """Round 11: the shared-token intersection strategy must produce
-    BIT-IDENTICAL rows to the array-intersect path for both verify
-    shapes — including the zero-overlap pair that the tokens path
-    reconstructs via LEFT join + coalesce, hashed and unhashed
-    shingles, and the thresholded forms."""
+def _near_dup_corpus(spark, docs):
+    """The ``docs`` fixture plus the verify edge cases: short, empty,
+    duplicated and null texts, pairs exactly at the Jaccard 4/5 and
+    containment 9/10 thresholds, a containment pair whose larger id
+    holds the smaller set, a size tie, and a pair above both
+    thresholds that shares no MinHash band key (16 hashes, 2 bands).
+    Pairs that must collide have identical word sets, hence identical
+    signatures."""
+    j = [f"j{i}" for i in range(1, 11)]
+    k = [f"k{i}" for i in range(1, 13)]
+    m = [f"m{i}" for i in range(1, 13)]
+    q = [f"q{i}" for i in range(30)]
+    extra = [
+        (21, "abcdefghij"),  # one word < n: the whole text is the shingle
+        (22, "abcdefghij"),  # identical to 21
+        (23, ""),            # shingles to [""]
+        (24, "xy"),
+        (25, "xy zz"),       # two words: one shingle "xy zz", not "xy"
+        (26, "zzz"),
+        (27, None),
+        (28, None),
+        (31, " ".join(j)),                   # 8 trigrams
+        (32, " ".join(j + ["j1", "j2"])),    # 10, 8 of them 31's: J = 4/5
+        (41, " ".join(k[:11] + ["k3", "k12", "k7"])),  # 12 trigrams
+        (42, " ".join(k)),   # 10, 9 of them in 41's: C = 9/10
+        (51, " ".join(m)),                   # 10 trigrams
+        (52, " ".join(m[-1:] + m[:-1])),     # 10, 9 shared: size tie
+        (61, " ".join(q)),                   # 28 trigrams
+        (62, " ".join(q + ["x3", "y3"])),    # 30 ⊇ 61's, no common band key
+    ]
+    rows = [(r.doc_id, r.text) for r in docs.select("doc_id", "text").collect()]
+    return spark.createDataFrame(rows + extra, "doc_id long, text string")
+
+
+_SHORT_OR_NULL = {23, 24, 25, 26, 27, 28}
+
+
+@pytest.fixture(scope="module")
+def near_dup_sf(spark, docs, tmp_path_factory):
+    """A data directory whose documents table is ``_near_dup_corpus``,
+    written as one file like the generated fixtures."""
+    root = tmp_path_factory.mktemp("near_dup_sf")
+    _near_dup_corpus(spark, docs).coalesce(1).write.parquet(
+        str(root / "documents.parquet")
+    )
+    return str(root)
+
+
+def _lsh_candidates(spark, sf_dir):
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return d, minhash_lsh_pairs(d, "doc_id", "text", num_hashes=16, bands=2)
+
+
+def test_dedup_lsh_verified_equals_verified_lsh_candidates(spark, near_dup_sf):
+    """The rerouted query (prefix join at 0.8, then the band filter)
+    returns exactly the LSH candidates that pass the array verify."""
+    from rust_dms_cdc_operator_spark.inventory_llm import q_dedup_lsh_verified
+    from rust_dms_cdc_operator_spark.operators.dedup import (
+        jaccard_verify_pairs,
+        prefix_jaccard_join,
+    )
+
+    d, cand = _lsh_candidates(spark, near_dup_sf)
+    want = sorted(
+        tuple(r) for r in jaccard_verify_pairs(
+            cand, d, min_jaccard=0.8, hash_shingles=True
+        ).collect()
+    )
+    got = sorted(tuple(r) for r in q_dedup_lsh_verified(spark, near_dup_sf).collect())
+    assert got == want
+    rows = {(a, b): (i, u) for a, b, i, u in got}
+    assert rows[(1, 2)] == (4, 4)
+    assert rows[(21, 22)] == (1, 1)
+    assert rows[(31, 32)] == (8, 10)  # J = 4/5 exactly is kept
+    assert rows[(51, 52)] == (9, 11)
+    assert not [p for p in rows if _SHORT_OR_NULL & set(p)]
+    exact = {(r.id_a, r.id_b) for r in prefix_jaccard_join(d).collect()}
+    assert (61, 62) in exact and (61, 62) not in rows
+
+
+def test_dedup_containment_equals_verified_lsh_candidates(spark, near_dup_sf):
+    """The rerouted containment query (prefix join at 0.9, re-oriented
+    to (least id, greatest id), then the band filter) returns exactly
+    the LSH candidates that pass the array verify."""
+    from rust_dms_cdc_operator_spark.inventory_llm import q_dedup_containment
+    from rust_dms_cdc_operator_spark.operators.dedup import (
+        containment_verify_pairs,
+        prefix_containment_join,
+    )
+
+    d, cand = _lsh_candidates(spark, near_dup_sf)
+    want = sorted(
+        tuple(r) for r in containment_verify_pairs(
+            cand, d, min_containment=0.9, hash_shingles=True
+        ).collect()
+    )
+    got = sorted(tuple(r) for r in q_dedup_containment(spark, near_dup_sf).collect())
+    assert got == want
+    rows = {(a, b): (i, sa, sb) for a, b, i, sa, sb in got}
+    assert rows[(1, 2)] == (4, 4, 4)
+    assert rows[(21, 22)] == (1, 1, 1)
+    assert rows[(31, 32)] == (8, 8, 10)
+    assert rows[(41, 42)] == (9, 12, 10)  # sizes follow the ids
+    assert rows[(51, 52)] == (9, 10, 10)  # C = 9/10 exactly, size tie
+    assert not [p for p in rows if _SHORT_OR_NULL & set(p)]
+    exact = {(r.id_a, r.id_b) for r in prefix_containment_join(d).collect()}
+    assert (42, 41) in exact  # the prefix join puts the smaller set first
+    assert (61, 62) in exact and (61, 62) not in rows
+
+
+def test_verify_pairs_unordered_input(spark, near_dup_sf):
+    """The array verifies check each candidate in the orientation it
+    arrives in: flipping (id_a, id_b) changes no intersection or
+    union, and containment sizes follow their ids."""
     from rust_dms_cdc_operator_spark.operators.dedup import (
         containment_verify_pairs,
         jaccard_verify_pairs,
     )
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 3), (4, 5)], "id_a long, id_b long"
+    d, cand = _lsh_candidates(spark, near_dup_sf)
+    flip = F.col("id_a") % 2 == 0
+    unordered = cand.select(
+        F.when(flip, F.col("id_b")).otherwise(F.col("id_a")).alias("id_a"),
+        F.when(flip, F.col("id_a")).otherwise(F.col("id_b")).alias("id_b"),
     )
+    assert unordered.filter(F.col("id_a") > F.col("id_b")).count() > 0
+
+    def jkey(rows):
+        return sorted((min(a, b), max(a, b), i, u) for a, b, i, u in rows)
+
+    def ckey(rows):
+        return sorted(
+            (a, b, i, sa, sb) if a < b else (b, a, i, sb, sa)
+            for a, b, i, sa, sb in rows
+        )
+
     for hashed in (False, True):
-        for thr in (None, 0.5):
-            a = sorted(
-                tuple(r) for r in jaccard_verify_pairs(
-                    pairs, docs, min_jaccard=thr, hash_shingles=hashed
-                ).collect()
-            )
-            t = sorted(
-                tuple(r) for r in jaccard_verify_pairs(
-                    pairs, docs, min_jaccard=thr, hash_shingles=hashed,
-                    strategy="tokens",
-                ).collect()
-            )
-            assert a == t, (hashed, thr)
-        ca = sorted(
-            tuple(r) for r in containment_verify_pairs(
-                pairs, docs, min_containment=0.5, hash_shingles=hashed
-            ).collect()
-        )
-        ct = sorted(
-            tuple(r) for r in containment_verify_pairs(
-                pairs, docs, min_containment=0.5, hash_shingles=hashed,
-                strategy="tokens",
-            ).collect()
-        )
-        assert ca == ct, hashed
+        ja = jkey(jaccard_verify_pairs(cand, d, hash_shingles=hashed).collect())
+        ju = jkey(jaccard_verify_pairs(unordered, d, hash_shingles=hashed).collect())
+        assert ja == ju and len(ja) > 0, hashed
+        ca = ckey(containment_verify_pairs(
+            cand, d, min_containment=0.1, hash_shingles=hashed
+        ).collect())
+        cu = ckey(containment_verify_pairs(
+            unordered, d, min_containment=0.1, hash_shingles=hashed
+        ).collect())
+        assert ca == cu and len(ca) > 0, hashed
 
 
-def test_containment_tokens_inner_restructure_edges(spark):
-    """Round 13: with a positive threshold the tokens strategy joins
-    inter-counts INNER and attaches sizes to the (cluster-bounded)
-    matched stream instead of the full candidate stream, plus a
-    zero-shingle-correction union. shingle_set is empty-safe (a text
-    with fewer than n words shingles to the whole text), so sizes are
-    >= 1 by construction, every zero-overlap pair fails
-    inter >= min(size)*t, and the correction branch is provably empty
-    — this test pins exactly those semantics on the shortest/empty
-    texts the public surface can produce, against the arrays
-    reference, including the pair orientation the normalization
-    handles (id_a > id_b)."""
+def test_dedup_lsh_verified_hot_token(spark, tmp_path):
+    """One shingle occurs in all 2,000 documents, each of which also
+    has rarer shingles. The rerouted dedup_lsh_verified still returns
+    the reference pairs (LSH candidates through the array verify), and
+    the hot shingle is in no document's prefix, so the prefix join
+    never expands it — a token self-join over these documents emits
+    about 2·10⁶ co-token pairs for that one shingle."""
+    from rust_dms_cdc_operator_spark.inventory_llm import q_dedup_lsh_verified
     from rust_dms_cdc_operator_spark.operators.dedup import (
-        containment_verify_pairs,
+        _frac,
+        _prefix_tokens,
+        _ranked_shingles,
+        hashed_shingle_set,
+        jaccard_verify_pairs,
     )
 
-    docs = spark.createDataFrame(
-        [
-            (1, "abcdefghij"),   # whole-text shingle (1 word < n)
-            (2, "abcdefghij"),   # identical to 1 -> containment 1.0
-            (3, ""),             # empty text -> [""] (size 1, not 0)
-            (4, "xy"),           # short text -> ["xy"]
-            (5, "zzz"),          # one shingle, shares nothing
-        ],
-        "doc_id long, text string",
+    n = 2000
+    text = {
+        i: "hot common phrase " + " ".join(f"u{i}{c}" for c in "abcdef")
+        for i in range(n)
+    }
+    planted = [(i, i + 1) for i in range(0, n, 100)]
+    for a, b in planted:
+        text[b] = text[a]
+    root = tmp_path / "sf"
+    spark.createDataFrame(
+        sorted(text.items()), "doc_id long, text string"
+    ).coalesce(1).write.parquet(str(root / "documents.parquet"))
+    d = spark.read.parquet(str(root / "documents.parquet"))
+
+    cand = minhash_lsh_pairs(d, "doc_id", "text", num_hashes=16, bands=2)
+    want = sorted(
+        tuple(r) for r in jaccard_verify_pairs(
+            cand, d, min_jaccard=0.8, hash_shingles=True
+        ).collect()
     )
-    pairs = spark.createDataFrame(
-        # (1,2): duplicate, must pass; all others share zero tokens
-        # and sizes >= 1, so every one must be DROPPED at t=0.9 —
-        # (5,4) is deliberately reversed to exercise normalization
-        [(1, 2), (1, 3), (3, 4), (2, 5), (5, 4)],
-        "id_a long, id_b long",
+    got = sorted(tuple(r) for r in q_dedup_lsh_verified(spark, str(root)).collect())
+    assert got == want
+    assert [(a, b, 7, 7) for a, b in planted] == got
+
+    hot = spark.range(1).select(
+        F.explode(hashed_shingle_set(F.lit("hot common phrase"))).alias("tok")
     )
-    for hashed in (False, True):
-        ca = sorted(
-            tuple(r) for r in containment_verify_pairs(
-                pairs, docs, min_containment=0.9, hash_shingles=hashed
-            ).collect()
-        )
-        ct = sorted(
-            tuple(r) for r in containment_verify_pairs(
-                pairs, docs, min_containment=0.9, hash_shingles=hashed,
-                strategy="tokens",
-            ).collect()
-        )
-        assert ca == ct, hashed
-        kept = {(r[0], r[1]) for r in ct}
-        assert kept == {(1, 2)}, kept
-        sizes = {(r[0], r[1]): (r[3], r[4]) for r in ct}
-        assert sizes[(1, 2)][0] >= 1 and sizes[(1, 2)][1] >= 1
+    _, ranked = _ranked_shingles(d, "doc_id", "text", 3, True)
+    num, den = _frac(0.8)
+    assert ranked.join(hot, "tok").count() == n
+    assert _prefix_tokens(ranked, num, den).join(hot, "tok").count() == 0
+
+
+def test_lsh_verified_queries_build_without_pair_jobs(spark, near_dup_sf):
+    """Building dedup_lsh_verified or dedup_containment runs only the
+    prefix join's shingle-cache fill: no LSH signature cache, no
+    pair-stream count. Jobs are counted under a job group on a cold
+    cache with the table schema already memoized."""
+    from rust_dms_cdc_operator_spark.inventory_llm import (
+        q_dedup_containment,
+        q_dedup_lsh_verified,
+    )
+    from rust_dms_cdc_operator_spark.session import read_table
+    from tests.cdc_fixtures import group_job_ids
+
+    read_table(spark, near_dup_sf, "documents")
+    for name, q in (
+        ("dedup_lsh_verified", q_dedup_lsh_verified),
+        ("dedup_containment", q_dedup_containment),
+    ):
+        spark.catalog.clearCache()
+        with group_job_ids(spark.sparkContext, f"build-{name}") as jobs:
+            q(spark, near_dup_sf)
+        assert len(jobs) == 4, (name, len(jobs))
 
 
 def _golden_wav(channels=2, rate=11025, n_samples=123, junk_chunk=True):
@@ -5566,50 +5693,6 @@ def test_probe_truncation_census_hand_check(spark):
         ).collect()
     }
     assert got == dict(exp)
-
-
-def test_verify_pairs_tokens_strategy_unordered_input(spark):
-    """Round 12 (ADVICE): strategy='tokens' must match the arrays path
-    row-for-row on candidate streams of ANY orientation — before the
-    least/greatest normalization, an id_a > id_b candidate silently
-    got inter_size = 0 from the ordered-only _pair_inter_counts."""
-    from rust_dms_cdc_operator_spark.operators.dedup import (
-        containment_verify_pairs,
-        jaccard_verify_pairs,
-        minhash_lsh_pairs,
-    )
-
-    d = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).limit(200)
-    cand = minhash_lsh_pairs(d, "doc_id", "text", num_hashes=16, bands=2)
-    # flip half the candidates to violate the old id_a < id_b contract
-    flip = F.col("id_a") % 2 == 0
-    unordered = cand.select(
-        F.when(flip, F.col("id_b")).otherwise(F.col("id_a")).alias("id_a"),
-        F.when(flip, F.col("id_a")).otherwise(F.col("id_b")).alias("id_b"),
-    )
-
-    def key(rows):
-        return sorted(
-            (min(r.id_a, r.id_b), max(r.id_a, r.id_b)) + tuple(r)[2:]
-            for r in rows
-        )
-
-    ja = key(jaccard_verify_pairs(unordered, d, strategy="arrays").collect())
-    jt = key(jaccard_verify_pairs(unordered, d, strategy="tokens").collect())
-    assert ja == jt and len(ja) > 0
-    ca = key(
-        containment_verify_pairs(
-            unordered, d, strategy="arrays", min_containment=0.1
-        ).collect()
-    )
-    ct = key(
-        containment_verify_pairs(
-            unordered, d, strategy="tokens", min_containment=0.1
-        ).collect()
-    )
-    assert ca == ct and len(ca) > 0
 
 
 def test_bucket_counts_merge(spark):

@@ -86,6 +86,23 @@ def test_canon_cell_normalizes_decimal_scale():
     assert canon_cell(Decimal("1.23E+9")).endswith("1230000000")
 
 
+def test_check_oracle_imports_its_own_checkout(tmp_path):
+    """check_oracle puts the root of the checkout it lives in first on
+    sys.path, so a copy of the repository (an A/B checkout) checks its
+    own package, not another one."""
+    import shutil
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    (tmp_path / "tools").mkdir()
+    shutil.copy(os.path.join(root, "tools", "check_oracle.py"), tmp_path / "tools")
+    out = subprocess.run(
+        [sys.executable, "-c", "import sys, check_oracle; print(sys.path[0])"],
+        cwd=tmp_path / "tools", capture_output=True, text=True, check=True,
+    )
+    assert out.stdout.strip() == str(tmp_path)
+
+
 def test_no_duplicate_query_registrations():
     """Round-10 regression guard: module-level registration is
     latest-wins (``QUERIES_LLM[k] = ...`` and ``def q_x`` both shadow

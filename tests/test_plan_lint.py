@@ -210,8 +210,6 @@ PERSIST_CALLER_OWNED = {
     # inventory: collect + lazy-return double consumers
     "inventory_tpch2.py:q_q11_important_stock": 1,   # per-part agg
     "inventory_llm.py:_group_cohesion_body": 1,      # CC labels, 3 uses
-    "inventory_llm.py:q_dedup_lsh_verified": 1,      # pairs, 2 uses
-    "inventory_llm.py:q_dedup_containment": 1,       # pairs, 2 uses
     "inventory_llm.py:q_dedup_band_tuning": 2,       # tagged + verified
     # (round 12: the group-split/cohesion/rebuild pair streams now go
     # through session.materialize_leaf instead of in-function
@@ -233,9 +231,8 @@ PERSIST_CALLER_OWNED = {
     "operators/dedup.py:minhash_knn_topk": 1,        # signature table
     "operators/dedup.py:ngram_jaccard_pairs": 1,     # shingle table
     "operators/dedup.py:candidate_budget_sample": 1, # sampled pairs
-    "operators/dedup.py:jaccard_verify_pairs": 1,    # token table
-    "operators/dedup.py:containment_verify_pairs": 1,  # token table
-    "operators/dedup.py:_ranked_shingles": 2,        # ranked + sizes
+    "operators/dedup.py:_shingle_table": 1,          # shingle arrays
+    "operators/dedup.py:_ranked_shingles": 1,        # ranked tokens
     "operators/dedup.py:sorted_neighborhood_pairs": 1,  # sorted keys
     "operators/dedup.py:hamming_pairs_from_signatures": 1,  # sig table
     "operators/graph.py:_make_ckpt": 1,  # factory; freed by

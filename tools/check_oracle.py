@@ -42,11 +42,12 @@ from __future__ import annotations
 import argparse
 import datetime as dt
 import math
+import os
 import sys
 import time
 from decimal import Decimal
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
