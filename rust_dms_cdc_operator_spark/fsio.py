@@ -232,7 +232,8 @@ def publish_text(path: str, text: str, tmp_suffix: str) -> None:
     - HDFS: ``FileSystem.rename`` — atomic metadata op
     - s3a: rename = server-side COPY + DELETE; the COPY is a single
       PUT, so the destination key appears atomically (a crashed DELETE
-      only leaves a temp object, which listings filter out)
+      only leaves a temp object, which the manifest log's listing —
+      the only reader of these keys — filters out by name)
 
     This is why the commit protocol never needs overwrite-rename or
     PUT-if-absent: each commit targets a new, monotonically numbered

@@ -55,114 +55,162 @@ def write_buckets(df: DataFrame, buckets_in_play: int, out_dir: str) -> list[str
     ]
 
 
-_MANIFEST_RE = re.compile(r"^(\d{20})\.json$")
+#: commits each manifest log keeps; GC never deletes a generation dir
+#: that a retained manifest references
+RETAINED_MANIFESTS = 2
 
 
-class BucketedParquetState:
-    """Incremental state table: parquet hash-bucketed by PK, committed
-    through a manifest log. A microbatch only rewrites the buckets its
-    keys touch, so per-batch cost is O(touched buckets), not O(total
-    state) — the property that keeps a 24/7 CDC stream viable when the
-    state is 100 TB and a batch touches a few GB.
+class _ManifestLog:
+    """The commit log of one bucketed table (the CDC state, or an
+    incremental view over it)::
 
-    Layout::
-
-        <path>/_manifests/<epoch, 20 digits>.json   # commit log
-        <path>/data/e<epoch>-<uuid8>/_state_bucket=<b>/part-*.parquet
+        <root>/_manifests/<epoch, 20 digits>.json   # commit log
+        <root>/<data_subdir>/<generation>/_state_bucket=<b>/part-*.parquet
 
     Commit protocol (object-store safe — the design constraint is that
     s3a has no atomic directory rename and no POSIX ``os.*``):
 
     1. every data file is IMMUTABLE and lives in a generation directory
        with a unique, never-reused name; nothing is ever renamed or
-       overwritten in ``data/``;
+       overwritten under ``data_subdir``;
     2. the COMMIT POINT is publishing manifest ``N+1`` — a single small
-       JSON mapping bucket → current generation directory — under a
-       fresh monotonically numbered key (atomic everywhere: os.rename
-       locally, FileSystem.rename on HDFS, single COPY-object PUT on
-       s3a; see :func:`fsio.publish_text`);
-    3. readers take the highest-numbered manifest; a crash before the
-       manifest publish leaves only invisible orphan generation dirs —
-       the streaming checkpoint replays the batch and the idempotent
-       merge converges;
+       JSON record whose ``paths_field`` maps bucket → current
+       generation directory — under a fresh monotonically numbered key
+       (atomic everywhere: os.rename locally, FileSystem.rename on
+       HDFS, single COPY-object PUT on s3a; see
+       :func:`fsio.publish_text`);
+    3. readers take the highest-numbered manifest; only names matching
+       ``_NAME`` count, so a crashed publish's ``.tmp-*`` sibling is
+       invisible, and a crash before the publish leaves only invisible
+       orphan generation dirs — the streaming checkpoint replays the
+       batch and the idempotent merge converges;
     4. GC runs after a successful commit and deletes only generation
-       dirs referenced by NO retained manifest (last
-       ``keep_manifests``), so a reader of the previous manifest never
-       loses files mid-scan.
+       dirs referenced by NO retained manifest (the last
+       ``RETAINED_MANIFESTS``), so a reader of the previous manifest
+       never loses files mid-scan.
 
     All filesystem metadata goes through :mod:`fsio`, so a
-    ``s3a://bucket/state`` path uses the session's Hadoop connector
+    ``s3a://bucket/state`` root uses the session's Hadoop connector
     end-to-end.
     """
 
-    def __init__(
-        self,
-        path: str,
-        pk_cols: Sequence[str],
-        num_buckets: int = 64,
-        keep_manifests: int = 2,
-    ):
+    _NAME = re.compile(r"^(\d{20})\.json$")
+
+    def __init__(self, root: str, data_subdir: str, paths_field: str):
+        self.root = root
+        self.dir = fsio.join(root, "_manifests")
+        self.data_subdir = data_subdir
+        self.paths_field = paths_field
+
+    def _file(self, epoch: int) -> str:
+        return fsio.join(self.dir, f"{epoch:020d}.json")
+
+    def _read(self, epoch: int) -> dict:
+        return json.loads(fsio.read_text(self._file(epoch)))
+
+    def epochs(self) -> list[int]:
+        """Retained commit epochs, oldest first."""
+        names = (self._NAME.match(n) for n in fsio.listdir(self.dir))
+        return sorted(int(m.group(1)) for m in names if m)
+
+    def load(self, epoch: int | None = None) -> dict | None:
+        """The latest committed record (None before the first commit),
+        or the record of a retained ``epoch``."""
+        retained = self.epochs()
+        if epoch is None:
+            return self._read(retained[-1]) if retained else None
+        if epoch not in retained:
+            raise ValueError(
+                f"epoch {epoch} not retained at {self.root} "
+                f"(retained: {retained})"
+            )
+        return self._read(epoch)
+
+    def commit(self, record: dict) -> None:
+        """Publish ``record`` as epoch ``record["epoch"]`` — raises if
+        that epoch already exists (a lost commit race) — then GC."""
+        fsio.mkdirs(self.dir)
+        fsio.publish_text(
+            self._file(record["epoch"]),
+            json.dumps(record),
+            tmp_suffix=f".tmp-{uuid.uuid4().hex[:8]}",
+        )
+        self._gc()
+
+    def _gc(self) -> None:
+        """Drop manifests beyond the retention window, then any
+        generation dir no retained manifest references (replaced
+        generations AND orphans from pre-commit crashes). Best-effort —
+        a crash mid-GC just leaves garbage for the next commit."""
+        epochs = self.epochs()
+        referenced = {
+            rel.split("/")[1]  # <data_subdir>/<gen>/<bucket>
+            for e in epochs[-RETAINED_MANIFESTS:]
+            for rel in self._read(e)[self.paths_field].values()
+        }
+        for e in epochs[:-RETAINED_MANIFESTS]:
+            fsio.delete(self._file(e), recursive=False)
+        data_dir = fsio.join(self.root, self.data_subdir)
+        for gen in fsio.listdir_dirs(data_dir):
+            if gen not in referenced:
+                fsio.delete(fsio.join(data_dir, gen))
+
+
+def committed_schema(man: dict) -> T.StructType:
+    """The data schema a state manifest commits — the union of every
+    column ever merged, so reads under it see columns added by schema
+    evolution as NULL in older buckets."""
+    return T.StructType.fromJson(json.loads(man["schema"]))
+
+
+class BucketedParquetState:
+    """Incremental state table: parquet hash-bucketed by PK, committed
+    through a :class:`_ManifestLog` (data subdir ``data``, manifest
+    field ``buckets``). A microbatch only rewrites the buckets its
+    keys touch, so per-batch cost is O(touched buckets), not O(total
+    state) — the property that keeps a 24/7 CDC stream viable when the
+    state is 100 TB and a batch touches a few GB.
+
+    Generation dirs are ``data/e<epoch>-<uuid8>`` for merges and
+    ``data/e<epoch>-compact-<uuid8>`` for compactions.
+    """
+
+    def __init__(self, path: str, pk_cols: Sequence[str], num_buckets: int = 64):
         self.path = path
         self.pk_cols = list(pk_cols)
         self.num_buckets = num_buckets
-        self.keep_manifests = max(1, keep_manifests)
+        self.log = _ManifestLog(path, "data", "buckets")
 
     def _bucket(self, num_buckets: int) -> F.Column:
         return F.pmod(
             F.xxhash64(*[F.col(c) for c in self.pk_cols]), F.lit(num_buckets)
         ).cast("int")
 
-    def _manifest_dir(self) -> str:
-        return fsio.join(self.path, "_manifests")
-
-    def _manifest_epochs(self) -> list[int]:
-        out = []
-        for name in fsio.listdir(self._manifest_dir()):
-            m = _MANIFEST_RE.match(name)
-            if m:
-                out.append(int(m.group(1)))
-        return sorted(out)
-
-    def _load_manifest(self) -> dict | None:
-        epochs = self._manifest_epochs()
-        if not epochs:
-            return None
-        path = fsio.join(self._manifest_dir(), f"{epochs[-1]:020d}.json")
-        return json.loads(fsio.read_text(path))
+    def _scan(self, spark: SparkSession, man: dict, rels) -> DataFrame:
+        """The committed bucket dirs ``rels`` (paths relative to the
+        state root) read under the committed schema: buckets written
+        before an additive evolution read the newer columns as NULL
+        (parquet schema clipping) instead of failing a mergeSchema
+        union. No dirs (e.g. every key deleted): an empty, typed frame."""
+        schema = committed_schema(man)
+        dirs = [fsio.join(self.path, rel) for rel in rels]
+        if not dirs:
+            return spark.createDataFrame([], schema)
+        return spark.read.schema(schema).parquet(*dirs)
 
     def exists(self) -> bool:
-        return bool(self._manifest_epochs())
+        return bool(self.log.epochs())
 
     def read(self, spark: SparkSession, epoch: int | None = None) -> DataFrame:
         """Full state (no DMS/bookkeeping columns) at the latest
         commit, or — time travel — at a specific retained ``epoch``
-        (the manifest log keeps the last ``keep_manifests`` commits;
-        generation dirs referenced by any retained manifest are never
-        GC'd, so a pinned read stays consistent)."""
-        if epoch is None:
-            man = self._load_manifest()
-            if man is None:
-                raise FileNotFoundError(f"no committed state at {self.path}")
-        else:
-            retained = self._manifest_epochs()
-            if epoch not in retained:
-                raise ValueError(
-                    f"epoch {epoch} not retained at {self.path} "
-                    f"(retained: {retained})"
-                )
-            man = json.loads(
-                fsio.read_text(
-                    fsio.join(self._manifest_dir(), f"{epoch:020d}.json")
-                )
-            )
-        schema = T.StructType.fromJson(json.loads(man["schema"]))
-        if not man["buckets"]:  # every key deleted: empty, typed
-            return spark.createDataFrame([], schema)
-        dirs = [fsio.join(self.path, rel) for rel in man["buckets"].values()]
-        # explicit committed schema: after additive evolution, buckets
-        # written before a column existed read it as NULL (parquet
-        # schema clipping) instead of failing a mergeSchema union
-        return spark.read.schema(schema).parquet(*dirs)
+        (the manifest log keeps the last ``RETAINED_MANIFESTS``
+        commits; generation dirs referenced by any retained manifest
+        are never GC'd, so a pinned read stays consistent)."""
+        man = self.log.load(epoch)
+        if man is None:
+            raise FileNotFoundError(f"no committed state at {self.path}")
+        return self._scan(spark, man, man["buckets"].values())
 
     def merge_batch(
         self,
@@ -177,7 +225,7 @@ class BucketedParquetState:
         if a commit was published, False for an empty microbatch (no
         epoch, no state change)."""
         spark = batch.sparkSession
-        man = self._load_manifest()
+        man = self.log.load()
         num_buckets = man["num_buckets"] if man else self.num_buckets
         epoch = man["epoch"] if man else 0
         buckets: dict[str, str] = dict(man["buckets"]) if man else {}
@@ -195,11 +243,8 @@ class BucketedParquetState:
             # rows read NULL), batch-missing columns fill NULL — the
             # unionByName(allowMissingColumns) below does both, and
             # the committed manifest schema becomes the union.
-            committed = {
-                f["name"]
-                for f in json.loads(man["schema"]).get("fields", [])
-            }
-            drift = set(data_cols) ^ committed
+            prev_schema = committed_schema(man)
+            drift = set(data_cols) ^ set(prev_schema.fieldNames())
             if drift and not allow_schema_evolution:
                 raise ValueError(
                     f"schema drift between batch and committed state at "
@@ -229,21 +274,12 @@ class BucketedParquetState:
             n_keys = sum(r["keys"] for r in per_bucket)
             n_upserts = sum(r["upserts"] for r in per_bucket)
             upserts = last.filter(F.col(op_col) != "D").select(*data_cols)
-            live_dirs = [
-                fsio.join(self.path, buckets[str(b)])
-                for b in touched
-                if str(b) in buckets
-            ]
-            if live_dirs:
+            live = [buckets[str(b)] for b in touched if str(b) in buckets]
+            if live:
                 # path-level pruning: ONLY the touched buckets' current
                 # generation dirs are listed/scanned — no filter over
-                # the full state is ever planned. The committed schema
-                # is explicit so pre-evolution buckets read added
-                # columns as NULL.
-                state = spark.read.schema(
-                    T.StructType.fromJson(json.loads(man["schema"]))
-                ).parquet(*live_dirs)
-                survivors = state.join(
+                # the full state is ever planned
+                survivors = self._scan(spark, man, live).join(
                     last.select(*self.pk_cols), self.pk_cols, "left_anti"
                 )
                 merged = survivors.unionByName(
@@ -263,7 +299,7 @@ class BucketedParquetState:
                 buckets[str(b)] = f"data/{gen}/{BUCKET_COL}={b}"
             # committed schema = union of the PREVIOUS committed schema
             # and the batch schema. merged.schema alone is wrong when no
-            # touched bucket had live state (live_dirs empty ⇒ merged is
+            # touched bucket had live state (live empty ⇒ merged is
             # batch-only): under allow_schema_evolution a column present
             # only in the committed state would silently vanish from the
             # manifest schema, and explicit-schema reads of untouched old
@@ -271,39 +307,29 @@ class BucketedParquetState:
             # narrowing from a feature that is documented additive-only.
             out_schema = merged.drop(BUCKET_COL).schema
             if man is not None:
-                committed_schema = T.StructType.fromJson(
-                    json.loads(man["schema"])
-                )
-                have = {f.name for f in committed_schema.fields}
+                have = set(prev_schema.fieldNames())
                 out_schema = T.StructType(
-                    list(committed_schema.fields)
+                    prev_schema.fields
                     + [f for f in out_schema.fields if f.name not in have]
                 )
-            schema_json = out_schema.json()
             # per-epoch stats are queryable from the commit log; the
             # counts come from the batch aggregation above, never from
             # the state
-            fsio.mkdirs(self._manifest_dir())
-            fsio.publish_text(
-                fsio.join(self._manifest_dir(), f"{epoch + 1:020d}.json"),
-                json.dumps(
-                    {
-                        "epoch": epoch + 1,
-                        "num_buckets": num_buckets,
-                        "schema": schema_json,
-                        "buckets": buckets,
-                        "stats": {
-                            "kind": "merge",
-                            "keys_upserted": n_upserts,
-                            "keys_deleted": n_keys - n_upserts,
-                            "buckets_touched": len(touched),
-                            "wall_ms": int((time.monotonic() - t0) * 1000),
-                        },
-                    }
-                ),
-                tmp_suffix=f".tmp-{uuid.uuid4().hex[:8]}",
+            self.log.commit(
+                {
+                    "epoch": epoch + 1,
+                    "num_buckets": num_buckets,
+                    "schema": out_schema.json(),
+                    "buckets": buckets,
+                    "stats": {
+                        "kind": "merge",
+                        "keys_upserted": n_upserts,
+                        "keys_deleted": n_keys - n_upserts,
+                        "buckets_touched": len(touched),
+                        "wall_ms": int((time.monotonic() - t0) * 1000),
+                    },
+                }
             )
-            self._gc()
             return True
         finally:
             last.unpersist()
@@ -320,10 +346,10 @@ class BucketedParquetState:
         O(|keys| + touched buckets), never O(total state) — the state
         inspection path for a 100 TB table.
         """
-        man = self._load_manifest()
+        man = self.log.load()
         if man is None:
             raise FileNotFoundError(f"no committed state at {self.path}")
-        schema = T.StructType.fromJson(json.loads(man["schema"]))
+        schema = committed_schema(man)
         # key tuples follow self.pk_cols order, so the StructType must
         # too — deriving it from committed-schema FIELD order binds
         # composite-PK values to the wrong fields whenever pk_cols order
@@ -340,14 +366,8 @@ class BucketedParquetState:
                 self._bucket(num_buckets).alias(BUCKET_COL)
             ).distinct().collect()
         }
-        dirs = [
-            fsio.join(self.path, rel)
-            for b, rel in man["buckets"].items()
-            if int(b) in wanted
-        ]
-        if not dirs:
-            return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(*dirs).join(
+        rels = [rel for b, rel in man["buckets"].items() if int(b) in wanted]
+        return self._scan(spark, man, rels).join(
             F.broadcast(keys_df), self.pk_cols, "left_semi"
         )
 
@@ -371,20 +391,14 @@ class BucketedParquetState:
         — a crash mid-compact leaves an invisible orphan generation
         and the old manifest intact.
         """
-        man = self._load_manifest()
+        man = self.log.load()
         if man is None:
             raise FileNotFoundError(f"no committed state at {self.path}")
         num_buckets = new_num_buckets or man["num_buckets"]
         epoch = man["epoch"]
         buckets: dict[str, str] = {}
         if man["buckets"]:
-            # committed schema explicit: generations written before an
-            # additive evolution read the newer columns as NULL
-            state = spark.read.schema(
-                T.StructType.fromJson(json.loads(man["schema"]))
-            ).parquet(
-                *[fsio.join(self.path, rel) for rel in man["buckets"].values()]
-            )
+            state = self._scan(spark, man, man["buckets"].values())
             gen = f"e{epoch + 1}-compact-{uuid.uuid4().hex[:8]}"
             gen_dir = fsio.join(self.path, "data", gen)
             staged = write_buckets(
@@ -393,59 +407,23 @@ class BucketedParquetState:
                 gen_dir,
             )
             buckets = {b: f"data/{gen}/{BUCKET_COL}={b}" for b in staged}
-        fsio.publish_text(
-            fsio.join(self._manifest_dir(), f"{epoch + 1:020d}.json"),
-            json.dumps(
-                {
-                    "epoch": epoch + 1,
-                    "num_buckets": num_buckets,
-                    "schema": man["schema"],
-                    "buckets": buckets,
-                    "stats": {"kind": "compact", "buckets": len(buckets)},
-                }
-            ),
-            tmp_suffix=f".tmp-{uuid.uuid4().hex[:8]}",
+        self.log.commit(
+            {
+                "epoch": epoch + 1,
+                "num_buckets": num_buckets,
+                "schema": man["schema"],
+                "buckets": buckets,
+                "stats": {"kind": "compact", "buckets": len(buckets)},
+            }
         )
-        self._gc()
 
     def stats(self, epoch: int | None = None) -> dict | None:
         """The stats block of the latest (or a retained) commit —
         keys upserted/deleted, buckets touched, wall ms for merges;
         kind='compact' for maintenance epochs. None for pre-stats
-        manifests."""
-        if epoch is None:
-            man = self._load_manifest()
-        else:
-            man = json.loads(
-                fsio.read_text(
-                    fsio.join(self._manifest_dir(), f"{epoch:020d}.json")
-                )
-            )
-        return (man or {}).get("stats")
-
-    def _gc(self) -> None:
-        """Post-commit cleanup: drop manifests beyond the retention
-        window, then any generation dir no retained manifest references
-        (replaced generations AND orphans from pre-commit crashes).
-        Best-effort — a crash mid-GC just leaves garbage for the next
-        commit."""
-        epochs = self._manifest_epochs()
-        retained, stale = epochs[-self.keep_manifests :], epochs[: -self.keep_manifests]
-        referenced: set[str] = set()
-        for e in retained:
-            man = json.loads(
-                fsio.read_text(fsio.join(self._manifest_dir(), f"{e:020d}.json"))
-            )
-            for rel in man["buckets"].values():
-                referenced.add(rel.split("/")[1])  # data/<gen>/<bucket>
-        for e in stale:
-            fsio.delete(
-                fsio.join(self._manifest_dir(), f"{e:020d}.json"), recursive=False
-            )
-        data_dir = fsio.join(self.path, "data")
-        for gen in fsio.listdir_dirs(data_dir):
-            if gen not in referenced:
-                fsio.delete(fsio.join(data_dir, gen))
+        manifests. An epoch outside the retention window raises
+        ValueError, as in :meth:`read`."""
+        return (self.log.load(epoch) or {}).get("stats")
 
 
 def stream_replay_bucketed(

@@ -12,9 +12,10 @@ carries forward BY REFERENCE. Refresh therefore:
    recorded in the view's own manifest (driver-side, O(buckets));
 2. recomputes partial aggregates for the stale buckets only — one
    scan of those buckets' dirs, one (bucket, group) aggregation;
-3. commits a new view manifest (same immutable-generation +
-   numbered-manifest pattern as the state store — atomic on
-   local/HDFS/s3a, crash-safe, GC by manifest retention).
+3. commits a new view manifest through the state's commit log
+   (``cdc_stream._ManifestLog``, data subdir ``aggs``, manifest field
+   ``agg_buckets``) — atomic on local/HDFS/s3a, crash-safe, GC by
+   manifest retention.
 
 `result()` re-aggregates the per-bucket partials — O(buckets x
 groups) rows, never O(state). Only decomposable aggregates are
@@ -30,7 +31,6 @@ hints at (recompute everything, compare) done incrementally: at
 
 from __future__ import annotations
 
-import json
 import uuid
 from collections.abc import Sequence
 
@@ -42,10 +42,10 @@ from rust_dms_cdc_operator_spark import fsio
 from rust_dms_cdc_operator_spark.streaming.cdc_stream import (
     BUCKET_COL,
     BucketedParquetState,
+    _ManifestLog,
+    committed_schema,
     write_buckets,
 )
-
-_MANIFEST_GLOB_WIDTH = 20
 
 #: measure -> (partial expr builder, re-agg fn name)
 _SUPPORTED = {"count", "sum", "min", "max"}
@@ -65,7 +65,6 @@ class IncrementalAggView:
         path: str,
         group_cols: Sequence[str],
         measures: dict[str, tuple[str, str]],
-        keep_manifests: int = 2,
     ):
         for alias, (fn, _col) in measures.items():
             if fn not in _SUPPORTED:
@@ -78,34 +77,7 @@ class IncrementalAggView:
         self.path = path
         self.group_cols = list(group_cols)
         self.measures = dict(measures)
-        self.keep_manifests = max(1, keep_manifests)
-
-    # -- manifest plumbing (the state store's commit pattern) --------
-    def _manifest_dir(self) -> str:
-        return fsio.join(self.path, "_manifests")
-
-    def _manifest_epochs(self) -> list[int]:
-        if not fsio.exists(self._manifest_dir()):
-            return []
-        out = []
-        for name in fsio.listdir(self._manifest_dir()):
-            stem = name.split(".json")[0]
-            if stem.isdigit():
-                out.append(int(stem))
-        return sorted(out)
-
-    def _load_manifest(self) -> dict | None:
-        epochs = self._manifest_epochs()
-        if not epochs:
-            return None
-        return json.loads(
-            fsio.read_text(
-                fsio.join(
-                    self._manifest_dir(),
-                    f"{epochs[-1]:0{_MANIFEST_GLOB_WIDTH}d}.json",
-                )
-            )
-        )
+        self.log = _ManifestLog(path, "aggs", "agg_buckets")
 
     # -- partial-aggregate expressions -------------------------------
     def _partial_exprs(self) -> list:
@@ -130,12 +102,12 @@ class IncrementalAggView:
     def refresh(self, spark: SparkSession) -> dict:
         """Bring the view up to the state's current epoch. Returns
         stats: buckets recomputed / carried / dropped."""
-        sman = self.state._load_manifest()
+        sman = self.state.log.load()
         if sman is None:
             raise FileNotFoundError(
                 f"state at {self.state.path} has no committed manifest"
             )
-        vman = self._load_manifest()
+        vman = self.log.load()
         prev_map: dict = vman["state_buckets"] if vman else {}
         cur_map: dict = sman["buckets"]
         agg_dirs: dict = dict(vman["agg_buckets"]) if vman else {}
@@ -150,11 +122,7 @@ class IncrementalAggView:
             agg_dirs.pop(b, None)
 
         if stale:
-            schema = T.StructType.fromJson(json.loads(sman["schema"]))
-            dirs = [
-                fsio.join(self.state.path, cur_map[b]) for b in stale
-            ]
-            df = spark.read.schema(schema).parquet(*dirs)
+            df = self.state._scan(spark, sman, [cur_map[b] for b in stale])
             # recompute the bucket id from the PK (the state's own
             # expression) — partition dirs don't carry the column
             df = df.withColumn(
@@ -168,24 +136,14 @@ class IncrementalAggView:
             for b in write_buckets(partials, len(stale), gen_dir):
                 agg_dirs[b] = f"aggs/{gen}/{BUCKET_COL}={b}"
 
-        epoch = (vman["epoch"] + 1) if vman else 1
-        fsio.mkdirs(self._manifest_dir())
-        fsio.publish_text(
-            fsio.join(
-                self._manifest_dir(),
-                f"{epoch:0{_MANIFEST_GLOB_WIDTH}d}.json",
-            ),
-            json.dumps(
-                {
-                    "epoch": epoch,
-                    "state_epoch": sman["epoch"],
-                    "state_buckets": cur_map,
-                    "agg_buckets": agg_dirs,
-                }
-            ),
-            tmp_suffix=f".tmp-{uuid.uuid4().hex[:8]}",
+        self.log.commit(
+            {
+                "epoch": (vman["epoch"] + 1) if vman else 1,
+                "state_epoch": sman["epoch"],
+                "state_buckets": cur_map,
+                "agg_buckets": agg_dirs,
+            }
         )
-        self._gc()
         return {
             "state_epoch": sman["epoch"],
             "buckets_recomputed": len(stale),
@@ -198,7 +156,7 @@ class IncrementalAggView:
     def result(self, spark: SparkSession) -> DataFrame:
         """The materialized aggregate: re-aggregate the per-bucket
         partials (O(buckets x groups) input rows, never O(state))."""
-        vman = self._load_manifest()
+        vman = self.log.load()
         if vman is None:
             raise FileNotFoundError(
                 f"view at {self.path} has never been refreshed"
@@ -215,8 +173,7 @@ class IncrementalAggView:
         return partials.groupBy(*self.group_cols).agg(*self._reagg_exprs())
 
     def _result_schema(self, spark: SparkSession):
-        sman = self.state._load_manifest()
-        schema = T.StructType.fromJson(json.loads(sman["schema"]))
+        schema = committed_schema(self.state.log.load())
         fields = [schema[c] for c in self.group_cols]
         for alias, (fn, col) in self.measures.items():
             if fn == "count":
@@ -224,33 +181,3 @@ class IncrementalAggView:
             else:
                 fields.append(T.StructField(alias, schema[col].dataType))
         return T.StructType(fields)
-
-    def _gc(self) -> None:
-        epochs = self._manifest_epochs()
-        retained = epochs[-self.keep_manifests :]
-        stale = epochs[: -self.keep_manifests]
-        referenced: set[str] = set()
-        for e in retained:
-            man = json.loads(
-                fsio.read_text(
-                    fsio.join(
-                        self._manifest_dir(),
-                        f"{e:0{_MANIFEST_GLOB_WIDTH}d}.json",
-                    )
-                )
-            )
-            for rel in man["agg_buckets"].values():
-                referenced.add(rel.split("/")[1])  # aggs/<gen>/<bucket>
-        for e in stale:
-            fsio.delete(
-                fsio.join(
-                    self._manifest_dir(),
-                    f"{e:0{_MANIFEST_GLOB_WIDTH}d}.json",
-                ),
-                recursive=False,
-            )
-        aggs_dir = fsio.join(self.path, "aggs")
-        if fsio.exists(aggs_dir):
-            for gen in fsio.listdir_dirs(aggs_dir):
-                if gen not in referenced:
-                    fsio.delete(fsio.join(aggs_dir, gen))

@@ -11,7 +11,6 @@ from __future__ import annotations
 import gc
 import time
 
-import pytest
 from pyspark.sql import functions as F
 
 from rust_dms_cdc_operator_spark.session import (
@@ -105,7 +104,13 @@ def test_cache_keeps_lineage_and_clears(spark):
     assert c.count() == 200
 
 
-def test_release_persistent_rdds_refuses_active_streams(spark, tmp_path):
+def test_release_persistent_rdds_refuses_active_streams(spark, tmp_path, caplog):
+    """Under a live stream the sweep warns, releases nothing and
+    returns 0: a checkpointed frame (truncated lineage, so it could
+    not recompute) stays readable. Once the stream stops, the sweep
+    runs again."""
+    _clean(spark)
+    leaf = materialize_leaf(spark.range(100).selectExpr("id", "id % 7 as k"))
     src = tmp_path / "src"
     src.mkdir()
     spark.range(5).write.mode("overwrite").parquet(str(src))
@@ -117,9 +122,13 @@ def test_release_persistent_rdds_refuses_active_streams(spark, tmp_path):
         .start()
     )
     try:
-        with pytest.raises(RuntimeError, match="active streaming"):
-            release_persistent_rdds(spark)
+        with caplog.at_level("WARNING"):
+            assert release_persistent_rdds(spark) == 0
+        assert "skipping the sweep" in caplog.text
+        assert _n_persistent(spark) >= 1
+        assert leaf.count() == 100
     finally:
         stream.stop()
         stream.awaitTermination()
-    release_persistent_rdds(spark)  # clean again once stopped
+    assert release_persistent_rdds(spark) >= 1  # sweeps once stopped
+    assert _n_persistent(spark) == 0

@@ -2,16 +2,24 @@
 
 from __future__ import annotations
 
+import json
 import os
+from collections import Counter
 from datetime import datetime
+from types import SimpleNamespace
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rust_dms_cdc_operator_spark.operators.compact import compact_cdc
-from rust_dms_cdc_operator_spark.streaming.cdc_stream import stream_replay_bucketed
+from rust_dms_cdc_operator_spark.streaming.cdc_stream import (
+    BucketedParquetState,
+    stream_replay_bucketed,
+)
+from rust_dms_cdc_operator_spark.streaming.ivm import IncrementalAggView
 from tests.cdc_fixtures import stage_task_counts
 
 SCHEMA = T.StructType(
@@ -207,25 +215,53 @@ def test_manifest_crash_before_publish(spark, tmp_path, monkeypatch):
     assert not (orphans & set(os.listdir(data_dir)))
 
 
-def test_manifest_partial_tmp_files_invisible(spark, tmp_path):
-    """A crash mid-manifest-write leaves a ``.tmp-*`` sibling; readers
-    must ignore it (only fully renamed ``<epoch>.json`` names count)."""
-    from rust_dms_cdc_operator_spark.streaming.cdc_stream import (
-        BucketedParquetState,
+def _log_owner(kind: str, spark, root: str) -> SimpleNamespace:
+    """An owner of a manifest log, for the commit-protocol tests that
+    hold for both: the bucketed state itself, or an incremental view
+    over it (one view commit = one state merge + one refresh).
+    ``result()`` is what a reader sees; ``expect(model)`` is what it
+    must see for the id -> val ``model`` — the state's rows, or the
+    view's full recompute (count of keys per val)."""
+    store = BucketedParquetState(os.path.join(root, "state"), ["id"], 4)
+    view = IncrementalAggView(
+        store, os.path.join(root, "view"), ["val"], {"n": ("count", "*")}
     )
 
-    store = BucketedParquetState(str(tmp_path / "tm" / "state"), ["id"], 4)
-    base = spark.createDataFrame([("I", 1, "a", 1), ("I", 2, "b", 2)], schema=SCHEMA)
-    store.merge_batch(base, order_cols=["seq"])
-    mdir = os.path.join(store.path, "_manifests")
-    junk = os.path.join(mdir, f"{99:020d}.json.tmp-dead")
+    def commit(rows):
+        store.merge_batch(
+            spark.createDataFrame(rows, schema=SCHEMA), order_cols=["seq"]
+        )
+        if kind == "view":
+            view.refresh(spark)
+
+    if kind == "state":
+        return SimpleNamespace(
+            commit=commit, log=store.log, path=store.path,
+            data="data", field="buckets",
+            result=lambda: {(r.id, r.val) for r in store.read(spark).collect()},
+            expect=lambda model: set(model.items()),
+        )
+    return SimpleNamespace(
+        commit=commit, log=view.log, path=view.path,
+        data="aggs", field="agg_buckets",
+        result=lambda: {(r.val, r.n) for r in view.result(spark).collect()},
+        expect=lambda model: set(Counter(model.values()).items()),
+    )
+
+
+@pytest.mark.parametrize("kind", ["state", "view"])
+def test_manifest_partial_tmp_files_invisible(spark, tmp_path, kind):
+    """A crash mid-manifest-write leaves a ``.tmp-*`` sibling; readers
+    must ignore it (only fully renamed ``<epoch>.json`` names count)."""
+    o = _log_owner(kind, spark, str(tmp_path / "tm"))
+    o.commit([("I", 1, "a", 1), ("I", 2, "b", 2)])
+    junk = os.path.join(o.path, "_manifests", f"{99:020d}.json.tmp-dead")
     with open(junk, "w") as fh:
         fh.write("{ partial")
-    assert store._manifest_epochs() == [1]
-    assert {r.id: r.val for r in store.read(spark).collect()} == {1: "a", 2: "b"}
-    delta = spark.createDataFrame([("U", 1, "a2", 10)], schema=SCHEMA)
-    store.merge_batch(delta, order_cols=["seq"])
-    assert {r.id: r.val for r in store.read(spark).collect()} == {1: "a2", 2: "b"}
+    assert o.log.epochs() == [1]
+    assert o.result() == o.expect({1: "a", 2: "b"})
+    o.commit([("U", 1, "a2", 10)])
+    assert o.result() == o.expect({1: "a2", 2: "b"})
 
 
 def test_bucketed_state_on_file_uri(spark, tmp_path):
@@ -257,7 +293,7 @@ def test_bucketed_state_on_file_uri(spark, tmp_path):
     local = str(tmp_path / "uri" / "state")
     assert os.path.isdir(os.path.join(local, "_manifests"))
     # Hadoop's checksummed local FS adds .crc sidecars — count manifests
-    assert store._manifest_epochs() == [1, 2]
+    assert store.log.epochs() == [1, 2]
 
 
 def test_state_fully_deleted_reads_typed_empty(spark, tmp_path):
@@ -452,30 +488,25 @@ def test_apply_in_pandas_with_state_running_profile(spark, tmp_path):
     assert key1_emits == [2, 3]
 
 
-def test_manifest_publish_collision_raises(spark, tmp_path):
+@pytest.mark.parametrize("kind", ["state", "view"])
+def test_manifest_publish_collision_raises(spark, tmp_path, kind):
     """Zombie-writer guard: the commit targets a FRESH numbered key;
     if that key already exists (a second writer or a replayed zombie
     committed first), the publish must fail loudly instead of
     silently clobbering the other commit."""
-    import pytest as _pytest
-
-    from rust_dms_cdc_operator_spark.streaming.cdc_stream import (
-        BucketedParquetState,
-    )
-
-    store = BucketedParquetState(str(tmp_path / "zz" / "state"), ["id"], 4)
-    base = spark.createDataFrame([("I", 1, "a", 1)], schema=SCHEMA)
-    store.merge_batch(base, order_cols=["seq"])
+    o = _log_owner(kind, spark, str(tmp_path / "zz"))
+    o.commit([("I", 1, "a", 1)])
     # model the race: this writer loaded manifest 1, then a faster
     # writer committed manifest 2 before our publish
-    man1 = store._load_manifest()
-    store._load_manifest = lambda: man1
-    mdir = os.path.join(store.path, "_manifests")
-    with open(os.path.join(mdir, f"{2:020d}.json"), "w") as fh:
-        fh.write('{"epoch": 2, "num_buckets": 4, "schema": "{}", "buckets": {}}')
-    delta = spark.createDataFrame([("U", 1, "a2", 5)], schema=SCHEMA)
-    with _pytest.raises(OSError):
-        store.merge_batch(delta, order_cols=["seq"])
+    man1 = o.log.load()
+    o.log.load = lambda epoch=None: man1
+    winner = os.path.join(o.path, "_manifests", f"{2:020d}.json")
+    with open(winner, "w") as fh:
+        json.dump({"epoch": 2, o.field: {}}, fh)
+    with pytest.raises(OSError, match="lost a commit race"):
+        o.commit([("U", 1, "a2", 5)])
+    with open(winner) as fh:
+        assert json.load(fh) == {"epoch": 2, o.field: {}}
 
 
 def test_manifest_crash_before_publish_on_file_uri(spark, tmp_path, monkeypatch):
@@ -517,33 +548,27 @@ def test_manifest_crash_before_publish_on_file_uri(spark, tmp_path, monkeypatch)
     assert not (orphans & set(os.listdir(os.path.join(local, "data"))))
 
 
-def test_manifest_gc_bounds_history(spark, tmp_path):
-    """State disk is O(live buckets + retention), not O(history):
-    after N commits only the last keep_manifests manifests survive,
-    and every generation dir on disk is referenced by one of them."""
-    import json as _json
-
-    from rust_dms_cdc_operator_spark.streaming.cdc_stream import (
-        BucketedParquetState,
-    )
-
-    store = BucketedParquetState(str(tmp_path / "gc" / "state"), ["id"], 4)
+@pytest.mark.parametrize("kind", ["state", "view"])
+def test_manifest_gc_bounds_history(spark, tmp_path, kind):
+    """Disk is O(live buckets + retention), not O(history): after N
+    commits only the last RETAINED_MANIFESTS manifests survive, and
+    every generation dir on disk is referenced by one of them."""
+    o = _log_owner(kind, spark, str(tmp_path / "gc"))
+    model = {}
     for i in range(1, 5):
-        batch = spark.createDataFrame(
-            [("I", i * 10 + j, f"v{i}", i * 100 + j) for j in range(3)],
-            schema=SCHEMA,
-        )
-        store.merge_batch(batch, order_cols=["seq"])
-    assert store._manifest_epochs() == [3, 4]
+        rows = [("I", i * 10 + j, f"v{i}", i * 100 + j) for j in range(3)]
+        o.commit(rows)
+        model.update({r[1]: r[2] for r in rows})
+    assert o.log.epochs() == [3, 4]
     referenced = set()
     for e in (3, 4):
-        with open(os.path.join(store.path, "_manifests", f"{e:020d}.json")) as fh:
-            for rel in _json.load(fh)["buckets"].values():
+        with open(os.path.join(o.path, "_manifests", f"{e:020d}.json")) as fh:
+            for rel in json.load(fh)[o.field].values():
                 referenced.add(rel.split("/")[1])
-    on_disk = set(os.listdir(os.path.join(store.path, "data")))
+    on_disk = set(os.listdir(os.path.join(o.path, o.data)))
     assert on_disk == referenced, (on_disk, referenced)
-    # and the state is complete despite the pruned history
-    assert store.read(spark).count() == 12
+    # and the result is complete despite the pruned history
+    assert o.result() == o.expect(model)
 
 
 def test_stream_schema_drift_raises(spark, tmp_path):
@@ -609,8 +634,13 @@ def test_read_at_retained_epoch_time_travel(spark, tmp_path):
         spark.createDataFrame([("I", 3, "c", 20)], schema=SCHEMA),
         order_cols=["seq"],
     )
-    with _pytest.raises(ValueError, match="not retained"):
-        store.read(spark, epoch=1)  # GC'd out of the retention window
+    assert store.stats(epoch=2)["keys_deleted"] == 1
+    # epoch 1 is GC'd out of the retention window: both pinned calls
+    # refuse it the same way
+    with _pytest.raises(ValueError, match=r"not retained .*\[2, 3\]"):
+        store.read(spark, epoch=1)
+    with _pytest.raises(ValueError, match=r"not retained .*\[2, 3\]"):
+        store.stats(epoch=1)
 
 
 def test_stream_dedup_drops_redeliveries(spark, tmp_path):
@@ -763,7 +793,7 @@ def test_compact_collapses_generations_and_rebuckets(spark, tmp_path):
     )
 
     store = BucketedParquetState(
-        str(tmp_path / "cstate" / "state"), ["id"], 16, keep_manifests=2
+        str(tmp_path / "cstate" / "state"), ["id"], 16
     )
     for i in range(5):  # 5 batches -> up to 5 live generations
         b = spark.createDataFrame(
@@ -778,7 +808,7 @@ def test_compact_collapses_generations_and_rebuckets(spark, tmp_path):
     got = {(r.id, r.val) for r in store.read(spark).collect()}
     assert got == want
     # the new manifest references exactly one generation, with 4 buckets
-    man = store._load_manifest()
+    man = store.log.load()
     assert man["num_buckets"] == 4
     gens = {rel.split("/")[1] for rel in man["buckets"].values()}
     assert len(gens) == 1 and next(iter(gens)).startswith("e6-compact-")
@@ -1496,20 +1526,20 @@ def test_bucket_writes_one_file_per_bucket_above_parallelism(spark, tmp_path):
             store.merge_batch(batch, order_cols=["seq"])
         # no stage runs one task per bucket
         assert stage_tasks and nb not in stage_tasks, stage_tasks
-        man = store._load_manifest()
+        man = store.log.load()
         assert store.stats()["buckets_touched"] == nb
         one_file_per_bucket(store.path, man["buckets"].values())
         view.refresh(spark)
-        one_file_per_bucket(view.path, view._load_manifest()["agg_buckets"].values())
+        one_file_per_bucket(view.path, view.log.load()["agg_buckets"].values())
     assert store.read(spark).count() == 500
 
     store.compact(spark, new_num_buckets=24)
-    man = store._load_manifest()
+    man = store.log.load()
     assert man["num_buckets"] == 24 and len(man["buckets"]) == 24
     one_file_per_bucket(store.path, man["buckets"].values())
     assert store.read(spark).count() == 500
     view.refresh(spark)
-    vman = view._load_manifest()
+    vman = view.log.load()
     assert len(vman["agg_buckets"]) == 24
     one_file_per_bucket(view.path, vman["agg_buckets"].values())
     assert {(r.val, r.n) for r in view.result(spark).collect()} == {
