@@ -17,23 +17,28 @@ with bounded parallelism via **boundary broadcast**:
 2. every row's bucket is ``#boundaries <= key`` — a deterministic,
    monotone literal expression, so exact per-bucket counts can be
    (re)computed from the data itself by any pass;
-3. main pass: per-(group, bucket) exact counts aggregate into
-   cumulative offsets (a tiny ≤ groups×buckets frame, single-partition
-   window) broadcast-joined back; one hash shuffle of the data on
-   (group, bucket); per-bucket ``row_number`` (parallel window) plus
-   the bucket's offset = exact global rank.
+3. main pass: per-(group, bucket) exact counts, collected to the
+   driver, become cumulative offsets that enter the plan as a literal
+   array lookup; one hash shuffle of the data on (group, bucket);
+   per-bucket ``row_number`` (parallel window) plus the bucket's
+   offset = exact global rank.
 
 No checkpoint/materialization, no lineage break — the plan is plain
-shuffles + a broadcast of a few hundred rows, AQE-friendly and
-fault-tolerant at 100 TB. Boundary quality only affects balance,
-never correctness: counts are always exact per bucket, and skewed
-buckets merely spill in the window sort.
+shuffles over literal lookups, AQE-friendly and fault-tolerant at
+100 TB. Boundary quality only affects balance, never correctness:
+counts are always exact per bucket, and skewed buckets merely spill in
+the window sort.
 
 ``group_cols`` generalizes to *per-group* exact ranks (rank restarts
 per group) while sharing one boundary set and ONE shuffle for all
 groups — the datadiff uses this to rank both comparison sides in a
 single pass instead of running the machinery twice. Group values must
 be non-null (they are engine-internal literal tags).
+
+``with_global_ranks`` ranks several frames at once with the same two
+driver round trips as one frame (one boundary aggregation, one count
+aggregation over the union of the frames' keys) — validate ranks every
+table of a schema this way; ``with_global_rank`` is its one-frame case.
 """
 
 from __future__ import annotations
@@ -77,19 +82,38 @@ def _monotone_double(col: str, dtype: T.DataType) -> Column | None:
     return None
 
 
+_FRAME_COL = "_frame"
+
+
 def _numeric_boundaries(
-    df: DataFrame, num_expr: Column, num_parts: int
-) -> list[float]:
-    """Approximate quantile boundaries of the leading key column via
-    one aggregation — partial-aggregated scan, no shuffle of rows."""
+    keyed: list[tuple[int, DataFrame, Column]], num_parts: int
+) -> dict[int, list[float]]:
+    """Approximate quantile boundaries of each frame's leading key
+    column via ONE aggregation over the union of all frames' keys —
+    partial-aggregated scans, no shuffle of rows. ``keyed`` holds
+    (frame index, frame, numeric key expression); an empty frame gets
+    no boundaries."""
+    if not keyed:
+        return {}
     probs = [i / num_parts for i in range(1, num_parts)]
+    keys = reduce(
+        DataFrame.unionByName,
+        [
+            df.select(F.lit(i).alias(_FRAME_COL), expr.alias("_key"))
+            for i, df, expr in keyed
+        ],
+    )
     # low accuracy on purpose: boundaries only affect balance, never
     # rank correctness, and a cheaper sketch keeps the boundary job short
-    row = df.agg(
-        F.percentile_approx(num_expr, probs, 1_000).alias("_b")
-    ).first()
-    bounds = row["_b"] if row and row["_b"] else []
-    return sorted({b for b in bounds if b is not None})
+    rows = (
+        keys.groupBy(_FRAME_COL)
+        .agg(F.percentile_approx("_key", probs, 1_000).alias("_b"))
+        .collect()
+    )
+    return {i: [] for i, _df, _expr in keyed} | {
+        r[_FRAME_COL]: sorted({b for b in r["_b"] or [] if b is not None})
+        for r in rows
+    }
 
 
 def _range_boundaries(
@@ -111,40 +135,17 @@ def _range_boundaries(
     return [r["_min"] for r in rows[1:]]
 
 
-def with_global_rank(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    rank_col: str = RANK_COL,
-    group_cols: Sequence[str] = (),
-    weight_col: str | None = None,
-    prefix_col: str = "_prefix_sum",
-) -> DataFrame:
-    """Exact 1-based global rank in ``order_cols`` order (restarting
-    per ``group_cols`` group), computed scalably — no single-partition
-    window, no materialization.
-
-    With ``weight_col``, also emits ``prefix_col`` = the EXCLUSIVE
-    global prefix sum of the weights in the same order (the running
-    total before this row) from the same single shuffle — the
-    primitive behind sequence packing (cumulative token budgets),
-    byte-offset assignment, and any "running total in key order" at
-    scale. Same mechanics as the rank: per-bucket window sums plus
-    driver-collected per-bucket totals as a literal lookup."""
-    spark = df.sparkSession
-    num_parts = min(
-        max(spark.sparkContext.defaultParallelism, 2), MAX_RANK_BUCKETS
-    )
-    group_cols = list(group_cols)
+def _bucket_expr(
+    df: DataFrame, order_cols: Sequence[str], bounds: list | None, num_parts: int
+) -> Column:
+    """Every row's bucket: ``#boundaries <= key``. ``bounds`` are the
+    frame's numeric boundaries (None: a non-numeric leading key, whose
+    range boundaries are computed here)."""
     dtypes = {f.name: f.dataType for f in df.schema.fields}
-    c0 = order_cols[0]
-
-    num_expr = _monotone_double(c0, dtypes[c0])
-    if num_expr is not None:
-        bounds = _numeric_boundaries(df, num_expr, num_parts)
-        cmp_key = num_expr
+    if bounds is not None:
+        cmp_key = _monotone_double(order_cols[0], dtypes[order_cols[0]])
         boundary_lits = [F.lit(b) for b in bounds]
     else:
-        bounds = _range_boundaries(df, order_cols, num_parts)
         cmp_key = _key_struct(order_cols)
         boundary_lits = [
             F.struct(
@@ -153,42 +154,98 @@ def with_global_rank(
                     for i, c in enumerate(order_cols)
                 ]
             )
-            for b in bounds
+            for b in _range_boundaries(df, order_cols, num_parts)
         ]
-
-    bucket: Column = (
-        reduce(
-            operator.add,
-            [
-                F.coalesce((cmp_key >= b).cast("int"), F.lit(0))
-                for b in boundary_lits
-            ],
-        )
-        if boundary_lits
-        else F.lit(0)
+    if not boundary_lits:
+        return F.lit(0)
+    return reduce(
+        operator.add,
+        [F.coalesce((cmp_key >= b).cast("int"), F.lit(0)) for b in boundary_lits],
     )
 
-    bucketed = df.withColumn(BUCKET_COL, bucket)
 
-    # Exact per-(group, bucket) counts from ONE pruned, map-side
-    # partial-agged pass (only ≤ groups × buckets combined rows cross
-    # the wire), collected and prefix-summed on the driver — bounded by
-    # MAX_RANK_BUCKETS regardless of data size. The cumulative offsets
-    # then enter the main plan as a LITERAL array lookup, so the data
-    # DAG is just: scan → one (group, bucket) shuffle → window — no
-    # offsets window stage, no broadcast exchange, no join. (Round-1
-    # plan audit: at small scale every saved stage is ~0.2-0.3 s; at
-    # 100 TB the saved broadcast-join of the data frame is real too.)
+def with_global_ranks(
+    frames: Sequence[tuple[DataFrame, Sequence[str]]],
+    rank_col: str = RANK_COL,
+    group_cols: Sequence[str] = (),
+    weight_col: str | None = None,
+    prefix_col: str = "_prefix_sum",
+) -> list[tuple[DataFrame, dict[tuple, int]]]:
+    """:func:`with_global_rank` of several ``(df, order_cols)`` frames
+    at once, sharing its two driver round trips: one boundary
+    aggregation for every frame whose leading key is numeric or
+    temporal, and one per-(frame, group, bucket) count aggregation.
+    Returns, per frame, the ranked frame and its row count per
+    ``group_cols`` value tuple (groups with no rows are absent)."""
+    spark = frames[0][0].sparkSession
+    num_parts = min(
+        max(spark.sparkContext.defaultParallelism, 2), MAX_RANK_BUCKETS
+    )
+    group_cols = list(group_cols)
+    keyed = []
+    for i, (df, order_cols) in enumerate(frames):
+        c0 = order_cols[0]
+        expr = _monotone_double(c0, df.schema[c0].dataType)
+        if expr is not None:
+            keyed.append((i, df, expr))
+    numeric = _numeric_boundaries(keyed, num_parts)
+    buckets = [
+        _bucket_expr(df, order_cols, numeric.get(i), num_parts)
+        for i, (df, order_cols) in enumerate(frames)
+    ]
+
+    # Exact per-(frame, group, bucket) counts from ONE pruned,
+    # map-side partial-agged pass (only ≤ frames × groups × buckets
+    # combined rows cross the wire), collected and prefix-summed on the
+    # driver. The cumulative offsets then enter each frame's plan as a
+    # LITERAL array lookup, so its data DAG is just: scan → one
+    # (group, bucket) shuffle → window — no offsets window stage, no
+    # broadcast exchange, no join.
+    weights = [weight_col] if weight_col else []
     aggs = [F.count(F.lit(1)).alias("_cnt")]
     if weight_col:
         aggs.append(F.sum(F.col(weight_col)).alias("_wsum"))
     cnt_rows = (
-        df.select(*group_cols, bucket.alias(BUCKET_COL), *( [weight_col] if weight_col else [] ))
-        .groupBy(*group_cols, BUCKET_COL)
+        reduce(
+            DataFrame.unionByName,
+            [
+                df.select(
+                    F.lit(i).alias(_FRAME_COL),
+                    *group_cols,
+                    bucket.alias(BUCKET_COL),
+                    *weights,
+                )
+                for i, ((df, _o), bucket) in enumerate(zip(frames, buckets))
+            ],
+        )
+        .groupBy(_FRAME_COL, *group_cols, BUCKET_COL)
         .agg(*aggs)
         .collect()
     )
-    n_buckets = len(boundary_lits) + 1
+    per_frame: dict[int, list] = {}
+    for r in cnt_rows:
+        per_frame.setdefault(r[_FRAME_COL], []).append(r)
+    return [
+        _rank_frame(
+            df, order_cols, bucket, per_frame.get(i, []),
+            rank_col, group_cols, weight_col, prefix_col,
+        )
+        for i, ((df, order_cols), bucket) in enumerate(zip(frames, buckets))
+    ]
+
+
+def _rank_frame(
+    df: DataFrame,
+    order_cols: Sequence[str],
+    bucket: Column,
+    cnt_rows: list,
+    rank_col: str,
+    group_cols: list[str],
+    weight_col: str | None,
+    prefix_col: str,
+) -> tuple[DataFrame, dict[tuple, int]]:
+    """One frame's rank from its collected per-(group, bucket) counts."""
+    n_buckets = 1 + max((r[BUCKET_COL] for r in cnt_rows), default=0)
 
     def _prefix_arrays(field: str) -> dict[tuple, list[int]]:
         per_group: dict[tuple, list[int]] = {}
@@ -227,12 +284,23 @@ def with_global_rank(
             out = pick if out is None else F.when(cond, pick).otherwise(out)
         return out
 
+    totals: dict[tuple, int] = {}
+    for r in cnt_rows:
+        g = tuple(r[c] for c in group_cols)
+        totals[g] = totals.get(g, 0) + int(r["_cnt"])
+
     w = Window.partitionBy(*group_cols, BUCKET_COL).orderBy(
         *[F.col(c) for c in order_cols]
     )
-    result = bucketed.withColumn("_local_rn", F.row_number().over(w)).withColumn(
-        rank_col,
-        (_offset_lookup(_prefix_arrays("_cnt")) + F.col("_local_rn")).cast("long"),
+    result = (
+        df.withColumn(BUCKET_COL, bucket)
+        .withColumn("_local_rn", F.row_number().over(w))
+        .withColumn(
+            rank_col,
+            (_offset_lookup(_prefix_arrays("_cnt")) + F.col("_local_rn")).cast(
+                "long"
+            ),
+        )
     )
     if weight_col:
         # null weights count as 0 (a bare `- weight` would null the
@@ -245,7 +313,32 @@ def with_global_rank(
                 "long"
             ),
         )
-    return result.drop(BUCKET_COL, "_local_rn")
+    return result.drop(BUCKET_COL, "_local_rn"), totals
+
+
+def with_global_rank(
+    df: DataFrame,
+    order_cols: Sequence[str],
+    rank_col: str = RANK_COL,
+    group_cols: Sequence[str] = (),
+    weight_col: str | None = None,
+    prefix_col: str = "_prefix_sum",
+) -> DataFrame:
+    """Exact 1-based global rank in ``order_cols`` order (restarting
+    per ``group_cols`` group), computed scalably — no single-partition
+    window, no materialization. The one-frame case of
+    :func:`with_global_ranks`.
+
+    With ``weight_col``, also emits ``prefix_col`` = the EXCLUSIVE
+    global prefix sum of the weights in the same order (the running
+    total before this row) from the same single shuffle — the
+    primitive behind sequence packing (cumulative token budgets),
+    byte-offset assignment, and any "running total in key order" at
+    scale. Same mechanics as the rank: per-bucket window sums plus
+    driver-collected per-bucket totals as a literal lookup."""
+    return with_global_ranks(
+        [(df, order_cols)], rank_col, group_cols, weight_col, prefix_col
+    )[0][0]
 
 
 def with_chunk_id(
@@ -259,6 +352,9 @@ def with_chunk_id(
     order — the Spark form of the reference's 10k-row insert slices and
     of pgdatadiff's comparison chunks."""
     ranked = with_global_rank(df, order_cols, group_cols=group_cols)
-    return ranked.withColumn(
-        chunk_col, F.floor((F.col(RANK_COL) - 1) / F.lit(chunk_size)).cast("long")
-    )
+    return ranked.withColumn(chunk_col, chunk_of_rank(chunk_size))
+
+
+def chunk_of_rank(chunk_size: int, rank_col: str = RANK_COL) -> Column:
+    """The chunk id of a 1-based rank: ``floor((rank-1)/chunk_size)``."""
+    return F.floor((F.col(rank_col) - 1) / F.lit(chunk_size)).cast("long")

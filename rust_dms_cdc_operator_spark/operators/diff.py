@@ -9,9 +9,9 @@ JDBC, anything Spark reads):
 
 - V1 ``count_diff`` — count(*) on both sides.
 - V2 ``chunked_hash_diff`` — global PK-order rank → chunk bucket →
-  per-chunk digest on each side → full outer join on bucket → rows
-  where the digests differ. Two balanced shuffles per side; the join
-  is on tiny (one row per chunk) aggregates.
+  per-chunk digest of each side in one aggregation → rows where the
+  digests differ. ``validate`` runs the same pieces
+  (``side_digests``, ``chunk_digests``) for many tables in one plan.
 - V3 ``row_diff`` — chunk size 1 generalized: full outer join on PK,
   compare row digests, classify source_only/target_only/different.
 
@@ -85,7 +85,67 @@ def count_diff(source: DataFrame, target: DataFrame) -> DataFrame:
     )
 
 
-_SIDE_COL = "_side"
+SIDE_COL = "_side"
+ROW_MD5_COL = "_row_md5"
+
+
+def side_digests(
+    source: DataFrame, target: DataFrame, pk_cols: Sequence[str]
+) -> DataFrame:
+    """Both sides projected to ``(pk..., _row_md5, _side)`` and
+    unioned: digest FIRST in each scan stage, so only (pk, md5) flows
+    through the shuffles that follow."""
+    return source.select(
+        *pk_cols,
+        row_digest(source).alias(ROW_MD5_COL),
+        F.lit("source").alias(SIDE_COL),
+    ).unionByName(
+        target.select(
+            *pk_cols,
+            row_digest(target).alias(ROW_MD5_COL),
+            F.lit("target").alias(SIDE_COL),
+        )
+    )
+
+
+def chunk_digests(chunked: DataFrame, keys: Sequence[str] = ()) -> DataFrame:
+    """The side-by-side chunk comparison of :func:`side_digests` rows
+    carrying ``CHUNK_COL``, per ``(*keys, chunk_id)``: ``source_hash,
+    target_hash, source_rows, target_rows, chunks_match``.
+
+    ONE aggregation: the chunk digest (order-insensitive: sort row
+    digests, concat, md5) is computed per side with conditional
+    collect_list — no second shuffle, no pivot, no outer join. A side
+    absent from a chunk yields empty collect_list/zero count → nullif
+    keeps the null-for-missing-side contract of a full outer join."""
+
+    def _side(side: str, col: Column) -> Column:
+        return F.when(F.col(SIDE_COL) == side, col)
+
+    def _side_agg(side: str) -> list[Column]:
+        return [
+            F.md5(
+                F.nullif(
+                    F.concat_ws(
+                        "",
+                        F.array_sort(F.collect_list(_side(side, F.col(ROW_MD5_COL)))),
+                    ),
+                    F.lit(""),
+                )
+            ).alias(f"{side}_hash"),
+            F.nullif(F.count(_side(side, F.lit(1))), F.lit(0)).alias(
+                f"{side}_rows"
+            ),
+        ]
+
+    joined = chunked.groupBy(*keys, CHUNK_COL).agg(
+        *_side_agg("source"), *_side_agg("target")
+    )
+    return joined.withColumn(
+        "chunks_match",
+        (F.col("source_hash") == F.col("target_hash"))
+        & (F.col("source_rows") == F.col("target_rows")),
+    ).fillna({"chunks_match": False})
 
 
 def chunked_hash_diff(
@@ -102,59 +162,15 @@ def chunked_hash_diff(
     source_rows, target_rows, chunks_match``. ``start_position`` skips
     leading chunks (resume support, reference default 0).
 
-    Single-pass plan: digest FIRST in each scan stage (only (pk, md5)
-    flows through the shuffle), union both sides with a side tag, and
-    rank per side in ONE grouped-rank pass (`group_cols`) — one shuffle
-    carries both sides, and the side-by-side comparison is a pivot of
-    the per-(side, chunk) digests instead of a full outer join of two
-    independently ranked plans."""
-    s = source.select(
-        *pk_cols,
-        row_digest(source).alias("_row_md5"),
-        F.lit("source").alias(_SIDE_COL),
-    )
-    t = target.select(
-        *pk_cols,
-        row_digest(target).alias("_row_md5"),
-        F.lit("target").alias(_SIDE_COL),
-    )
+    Single-pass plan: :func:`side_digests`, ranked per side in ONE
+    grouped-rank pass (`group_cols`) — one shuffle carries both sides —
+    then :func:`chunk_digests` compares the sides in one aggregation
+    instead of a full outer join of two independently ranked plans."""
     chunked = with_chunk_id(
-        s.unionByName(t), pk_cols, chunk_size, group_cols=[_SIDE_COL]
+        side_digests(source, target, pk_cols), pk_cols, chunk_size,
+        group_cols=[SIDE_COL],
     )
-
-    # ONE aggregation produces the side-by-side comparison: the chunk
-    # digest (order-insensitive: sort row digests, concat, md5) is
-    # computed per side with conditional collect_list — no second
-    # shuffle, no pivot, no outer join. A side absent from a chunk
-    # yields empty collect_list/zero count → nullif keeps the
-    # null-for-missing-side contract of a full outer join.
-    def _side(side: str, col: Column) -> Column:
-        return F.when(F.col(_SIDE_COL) == side, col)
-
-    def _side_agg(side: str) -> list[Column]:
-        return [
-            F.md5(
-                F.nullif(
-                    F.concat_ws(
-                        "",
-                        F.array_sort(F.collect_list(_side(side, F.col("_row_md5")))),
-                    ),
-                    F.lit(""),
-                )
-            ).alias(f"{side}_hash"),
-            F.nullif(F.count(_side(side, F.lit(1))), F.lit(0)).alias(
-                f"{side}_rows"
-            ),
-        ]
-
-    joined = chunked.groupBy(CHUNK_COL).agg(
-        *_side_agg("source"), *_side_agg("target")
-    )
-    joined = joined.withColumn(
-        "chunks_match",
-        (F.col("source_hash") == F.col("target_hash"))
-        & (F.col("source_rows") == F.col("target_rows")),
-    ).fillna({"chunks_match": False})
+    joined = chunk_digests(chunked)
     if start_position:
         joined = joined.filter(F.col(CHUNK_COL) >= start_position // chunk_size)
     if only_mismatches:
@@ -191,9 +207,13 @@ def row_diff(
 __all__ = [
     "CHUNK_COL",
     "RANK_COL",
+    "ROW_MD5_COL",
+    "SIDE_COL",
     "canonical_str",
+    "chunk_digests",
     "chunked_hash_diff",
     "count_diff",
     "row_diff",
     "row_digest",
+    "side_digests",
 ]

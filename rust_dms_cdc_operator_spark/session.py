@@ -128,6 +128,15 @@ def codegen_compiles(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
+def jit_compile_s(spark) -> float:
+    """Seconds the driver JVM's JIT compilers have spent so far, summed
+    over compiler threads (``CompilationMXBean.getTotalCompilationTime``).
+    Most of a cold iteration's CPU can be JIT, not Spark work, so read
+    it next to job and plan counts before blaming the engine."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    return mf.getCompilationMXBean().getTotalCompilationTime() / 1000.0
+
+
 _BYTE_SHIFT = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
 
 

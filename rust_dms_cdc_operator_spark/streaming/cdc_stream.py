@@ -22,8 +22,9 @@ import re
 import time
 import uuid
 from collections.abc import Sequence
+from decimal import Decimal
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -60,6 +61,22 @@ def write_buckets(df: DataFrame, buckets_in_play: int, out_dir: str) -> list[str
 RETAINED_MANIFESTS = 2
 
 
+def bucket_entry(entry) -> dict:
+    """A state manifest's bucket entry as ``{"base": rel | None,
+    "deltas": [rel, ...]}`` (paths relative to the state root, deltas
+    oldest first). A plain string entry, as older manifests and the
+    incremental views write, is a base with no deltas."""
+    if isinstance(entry, str):
+        return {"base": entry, "deltas": []}
+    return entry
+
+
+def entry_rels(entry) -> list[str]:
+    """Every bucket dir a manifest entry references."""
+    e = bucket_entry(entry)
+    return ([e["base"]] if e["base"] else []) + list(e["deltas"])
+
+
 class _ManifestLog:
     """The commit log of one bucketed table (the CDC state, or an
     incremental view over it)::
@@ -74,8 +91,9 @@ class _ManifestLog:
        with a unique, never-reused name; nothing is ever renamed or
        overwritten under ``data_subdir``;
     2. the COMMIT POINT is publishing manifest ``N+1`` — a single small
-       JSON record whose ``paths_field`` maps bucket → current
-       generation directory — under a fresh monotonically numbered key
+       JSON record whose ``paths_field`` maps bucket → its entry (a
+       bucket dir, or a ``{"base", "deltas"}`` entry of bucket dirs, see
+       :func:`bucket_entry`) — under a fresh monotonically numbered key
        (atomic everywhere: os.rename locally, FileSystem.rename on
        HDFS, single COPY-object PUT on s3a; see
        :func:`fsio.publish_text`);
@@ -146,7 +164,8 @@ class _ManifestLog:
         referenced = {
             rel.split("/")[1]  # <data_subdir>/<gen>/<bucket>
             for e in epochs[-RETAINED_MANIFESTS:]
-            for rel in self._read(e)[self.paths_field].values()
+            for entry in self._read(e)[self.paths_field].values()
+            for rel in entry_rels(entry)
         }
         for e in epochs[:-RETAINED_MANIFESTS]:
             fsio.delete(self._file(e), recursive=False)
@@ -163,13 +182,54 @@ def committed_schema(man: dict) -> T.StructType:
     return T.StructType.fromJson(json.loads(man["schema"]))
 
 
+#: columns a delta generation carries besides the data: the op of the
+#: key's last batch event (a ``D`` row is a tombstone) and the epoch of
+#: the commit that wrote it, the order a read merges by. A base row
+#: reads both as NULL: op ``I``, and an epoch below every delta's.
+OP_COL = "_state_op"
+EPOCH_COL = "_state_epoch"
+#: a decimal, not a long: generated code inlines a long literal but
+#: references a decimal one, so every commit's plan compiles to the
+#: same classes instead of new ones per epoch
+_EPOCH_TYPE = T.DecimalType(20, 0)
+_LAYER_FIELDS = [
+    T.StructField(OP_COL, T.StringType()),
+    T.StructField(EPOCH_COL, _EPOCH_TYPE),
+]
+
+#: the most deltas a bucket holds: a commit that starts with a bucket at
+#: this many folds it into a new base (swept against commit and lookup
+#: cost in CHANGES.md)
+FOLD_DELTAS = 8
+
+
 class BucketedParquetState:
     """Incremental state table: parquet hash-bucketed by PK, committed
     through a :class:`_ManifestLog` (data subdir ``data``, manifest
-    field ``buckets``). A microbatch only rewrites the buckets its
-    keys touch, so per-batch cost is O(touched buckets), not O(total
-    state) — the property that keeps a 24/7 CDC stream viable when the
-    state is 100 TB and a batch touches a few GB.
+    field ``buckets``), merge-on-read.
+
+    Each bucket's manifest entry is a base dir plus the delta dirs
+    committed on top of it (:func:`bucket_entry`). A commit compacts
+    the microbatch to the last event per key and writes it as ONE delta
+    generation in one Spark query: the batch's op per key (deletes kept
+    as tombstones) and the commit epoch ride along as ``OP_COL`` and
+    ``EPOCH_COL``. So a commit costs O(batch), not O(state) — the
+    property that keeps a 24/7 CDC stream viable when the state is
+    100 TB and a batch is a few GB. Reads (``read``, ``lookup``,
+    ``compact`` and the incremental view's stale-bucket scan) merge
+    each bucket's base and deltas with :func:`compact_cdc`, the one
+    last-writer-wins path: the latest epoch per key wins, a base row
+    ranks below every delta, and a winning tombstone drops the key. A
+    base-only bucket reads as a plain scan.
+
+    Fold policy: a bucket that holds ``FOLD_DELTAS`` deltas when a
+    commit starts is folded by that commit. In the same query, its base
+    and deltas are unioned with the batch and compacted into a new base
+    without tombstones. A read thus merges at most ``FOLD_DELTAS`` + 1
+    layers per bucket, and a bucket is rewritten once per
+    ``FOLD_DELTAS`` deltas it received. A batch's rows for a bucket with
+    no entry become that bucket's base (a delete there deletes
+    nothing). ``compact`` folds every bucket.
 
     Generation dirs are ``data/e<epoch>-<uuid8>`` for merges and
     ``data/e<epoch>-compact-<uuid8>`` for compactions.
@@ -186,17 +246,53 @@ class BucketedParquetState:
             F.xxhash64(*[F.col(c) for c in self.pk_cols]), F.lit(num_buckets)
         ).cast("int")
 
-    def _scan(self, spark: SparkSession, man: dict, rels) -> DataFrame:
-        """The committed bucket dirs ``rels`` (paths relative to the
-        state root) read under the committed schema: buckets written
-        before an additive evolution read the newer columns as NULL
-        (parquet schema clipping) instead of failing a mergeSchema
-        union. No dirs (e.g. every key deleted): an empty, typed frame."""
+    def _dirs(self, rels) -> list[str]:
+        return [fsio.join(self.path, rel) for rel in rels]
+
+    def _layers(self, spark: SparkSession, schema: T.StructType, entries) -> DataFrame:
+        """Every row of the ``entries``' bases and deltas in one scan,
+        with ``OP_COL`` and ``EPOCH_COL`` (a base row: op ``I``, epoch
+        NULL)."""
+        rels = [rel for e in entries for rel in entry_rels(e)]
+        rows = spark.read.schema(T.StructType(schema.fields + _LAYER_FIELDS))
+        return rows.parquet(*self._dirs(rels)).withColumn(
+            OP_COL, F.coalesce(F.col(OP_COL), F.lit("I"))
+        )
+
+    def _live(
+        self, spark: SparkSession, man: dict, entries, keys: DataFrame | None = None
+    ) -> DataFrame:
+        """The live rows of the bucket ``entries`` under the committed
+        schema: buckets written before an additive evolution read the
+        newer columns as NULL (parquet schema clipping) instead of
+        failing a mergeSchema union. Base-only buckets are a plain
+        scan; buckets with deltas merge through ``compact_cdc``.
+        ``keys`` (a frame of the PK columns) semi-joins the rows BEFORE
+        the merge, so a point read compacts only the probed keys' rows.
+        No dirs (e.g. every key deleted): an empty, typed frame."""
         schema = committed_schema(man)
-        dirs = [fsio.join(self.path, rel) for rel in rels]
-        if not dirs:
+        entries = [bucket_entry(e) for e in entries]
+
+        def probe(df: DataFrame) -> DataFrame:
+            if keys is None:
+                return df
+            return df.join(F.broadcast(keys), self.pk_cols, "left_semi")
+
+        parts = []
+        bases = [e["base"] for e in entries if e["base"] and not e["deltas"]]
+        if bases:
+            parts.append(probe(spark.read.schema(schema).parquet(*self._dirs(bases))))
+        layered = [e for e in entries if e["deltas"]]
+        if layered:
+            rows = probe(self._layers(spark, schema, layered))
+            parts.append(
+                compact_cdc(rows, self.pk_cols, [EPOCH_COL], OP_COL).drop(
+                    OP_COL, EPOCH_COL
+                )
+            )
+        if not parts:
             return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(*dirs)
+        return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
     def exists(self) -> bool:
         return bool(self.log.epochs())
@@ -210,7 +306,7 @@ class BucketedParquetState:
         man = self.log.load(epoch)
         if man is None:
             raise FileNotFoundError(f"no committed state at {self.path}")
-        return self._scan(spark, man, man["buckets"].values())
+        return self._live(spark, man, man["buckets"].values())
 
     def merge_batch(
         self,
@@ -223,26 +319,34 @@ class BucketedParquetState:
         a new manifest epoch: the batch's last event per key wins, its
         upserts replace and its deletes remove state rows. Returns True
         if a commit was published, False for an empty microbatch (no
-        epoch, no state change)."""
+        epoch, no state change).
+
+        One Spark query: compact the batch (with the rows of any bucket
+        due for a fold), write it as one generation, and count the
+        batch's upserted and deleted keys through an Observation on the
+        written frame."""
         spark = batch.sparkSession
         man = self.log.load()
         num_buckets = man["num_buckets"] if man else self.num_buckets
-        epoch = man["epoch"] if man else 0
-        buckets: dict[str, str] = dict(man["buckets"]) if man else {}
+        epoch = (man["epoch"] if man else 0) + 1
+        entries = (
+            {b: bucket_entry(e) for b, e in man["buckets"].items()} if man else {}
+        )
         data_cols = [
             c
             for c in batch.columns
             if c != op_col and not (c in order_cols and c.startswith("_cdc"))
         ]
+        keep = set(data_cols)
         if man is not None:
             # P3 parity for the stream (compact.py:161-167): surface
             # drift as a clear error before any state byte is staged,
             # not as a union failure mid-merge. With
             # allow_schema_evolution, drift is instead resolved
             # Delta-style: batch-added columns extend the state (old
-            # rows read NULL), batch-missing columns fill NULL — the
-            # unionByName(allowMissingColumns) below does both, and
-            # the committed manifest schema becomes the union.
+            # rows read NULL), and a key the batch writes reads NULL in
+            # the columns the batch lacks — the committed manifest
+            # schema becomes the union.
             prev_schema = committed_schema(man)
             drift = set(data_cols) ^ set(prev_schema.fieldNames())
             if drift and not allow_schema_evolution:
@@ -253,98 +357,109 @@ class BucketedParquetState:
                     "opt in with allow_schema_evolution=True)"
                 )
         t0 = time.monotonic()
-        # op_col names no column, so D rows survive compaction: a key
-        # whose LAST batch event is D has to delete state
-        last = compact_cdc(batch, self.pk_cols, order_cols=order_cols, op_col="__keep_d__")
-        last = last.withColumn(BUCKET_COL, self._bucket(num_buckets)).persist()
-        try:
-            # one job over the persisted compacted batch yields the
-            # touched buckets and the commit's key counts
-            per_bucket = (
-                last.groupBy(BUCKET_COL)
-                .agg(
-                    F.count(F.lit(1)).alias("keys"),
-                    F.count_if(F.col(op_col) != "D").alias("upserts"),
-                )
-                .collect()
+        fold = [b for b, e in entries.items() if len(e["deltas"]) >= FOLD_DELTAS]
+        layered = {int(b) for b in entries if b not in fold}
+        this_epoch = F.lit(Decimal(epoch)).cast(_EPOCH_TYPE)
+        rows = batch.select(
+            *data_cols,
+            *[c for c in order_cols if c not in data_cols],
+            # a NULL op deletes the key, as in compact_cdc
+            F.coalesce(F.col(op_col), F.lit("D")).alias(OP_COL),
+            this_epoch.alias(EPOCH_COL),
+        )
+        if fold:
+            rows = rows.unionByName(
+                self._layers(spark, prev_schema, [entries[b] for b in fold]),
+                allowMissingColumns=True,
             )
-            if not per_bucket:  # empty microbatch
-                return False
-            touched = sorted(r[BUCKET_COL] for r in per_bucket)
-            n_keys = sum(r["keys"] for r in per_bucket)
-            n_upserts = sum(r["upserts"] for r in per_bucket)
-            upserts = last.filter(F.col(op_col) != "D").select(*data_cols)
-            live = [buckets[str(b)] for b in touched if str(b) in buckets]
-            if live:
-                # path-level pruning: ONLY the touched buckets' current
-                # generation dirs are listed/scanned — no filter over
-                # the full state is ever planned
-                survivors = self._scan(spark, man, live).join(
-                    last.select(*self.pk_cols), self.pk_cols, "left_anti"
-                )
-                merged = survivors.unionByName(
-                    upserts, allowMissingColumns=allow_schema_evolution
-                )
+            keep |= set(prev_schema.fieldNames())
+        # the epoch ranks a batch row above every state row; op_col
+        # names no column, so tombstones survive the compaction
+        last = compact_cdc(
+            rows, self.pk_cols, [EPOCH_COL, *order_cols], op_col="__keep_d__"
+        ).withColumn(BUCKET_COL, self._bucket(num_buckets))
+        from_batch = F.col(EPOCH_COL) == this_epoch
+        counts = Observation()
+        last = last.observe(
+            counts,
+            F.count_if(from_batch).alias("keys"),
+            F.count_if(from_batch & (F.col(OP_COL) != "D")).alias("upserts"),
+        )
+        # a delta keeps op and epoch; a new base (a bucket with no entry,
+        # or a fold) drops tombstones and reads op I, epoch NULL. The
+        # per-bucket flags are one array literal, which generated code
+        # references instead of inlining
+        is_delta = F.element_at(
+            F.lit([b in layered for b in range(num_buckets)]),
+            F.col(BUCKET_COL) + 1,
+        )
+        written = last.filter(is_delta | (F.col(OP_COL) != "D")).select(
+            *[c for c in last.columns if c in keep],
+            F.when(is_delta, F.col(OP_COL)).alias(OP_COL),
+            F.when(is_delta, F.col(EPOCH_COL)).alias(EPOCH_COL),
+            BUCKET_COL,
+        )
+        gen = f"e{epoch}-{uuid.uuid4().hex[:8]}"
+        gen_dir = fsio.join(self.path, "data", gen)
+        staged = set(write_buckets(written, num_buckets, gen_dir))
+        n_keys, n_upserts = counts.get["keys"], counts.get["upserts"]
+        if not n_keys:  # empty microbatch
+            fsio.delete(gen_dir)
+            return False
+        for b in staged:
+            rel = f"data/{gen}/{BUCKET_COL}={b}"
+            if int(b) in layered:
+                e = entries[b]
+                entries[b] = {"base": e["base"], "deltas": [*e["deltas"], rel]}
             else:
-                merged = upserts
-            merged = merged.withColumn(BUCKET_COL, self._bucket(num_buckets))
-            gen = f"e{epoch + 1}-{uuid.uuid4().hex[:8]}"
-            gen_dir = fsio.join(self.path, "data", gen)
-            staged = {int(b) for b in write_buckets(merged, len(touched), gen_dir)}
-            for b in touched:
-                # a touched bucket with no staged dir lost its every
-                # key: dropping it from the mapping IS the delete
-                buckets.pop(str(b), None)
-            for b in staged:
-                buckets[str(b)] = f"data/{gen}/{BUCKET_COL}={b}"
-            # committed schema = union of the PREVIOUS committed schema
-            # and the batch schema. merged.schema alone is wrong when no
-            # touched bucket had live state (live empty ⇒ merged is
-            # batch-only): under allow_schema_evolution a column present
-            # only in the committed state would silently vanish from the
-            # manifest schema, and explicit-schema reads of untouched old
-            # buckets would drop that column's data — destructive
-            # narrowing from a feature that is documented additive-only.
-            out_schema = merged.drop(BUCKET_COL).schema
-            if man is not None:
-                have = set(prev_schema.fieldNames())
-                out_schema = T.StructType(
-                    prev_schema.fields
-                    + [f for f in out_schema.fields if f.name not in have]
-                )
-            # per-epoch stats are queryable from the commit log; the
-            # counts come from the batch aggregation above, never from
-            # the state
-            self.log.commit(
-                {
-                    "epoch": epoch + 1,
-                    "num_buckets": num_buckets,
-                    "schema": out_schema.json(),
-                    "buckets": buckets,
-                    "stats": {
-                        "kind": "merge",
-                        "keys_upserted": n_upserts,
-                        "keys_deleted": n_keys - n_upserts,
-                        "buckets_touched": len(touched),
-                        "wall_ms": int((time.monotonic() - t0) * 1000),
-                    },
-                }
+                entries[b] = {"base": rel, "deltas": []}
+        for b in fold:
+            if b not in staged:  # the fold left no live key
+                entries.pop(b)
+        # committed schema = union of the PREVIOUS committed schema and
+        # the batch schema: a column present only in the committed
+        # state must not vanish from the manifest schema, or explicit-
+        # schema reads of the buckets the batch missed would drop that
+        # column's data
+        out_schema = T.StructType([batch.schema[c] for c in data_cols])
+        if man is not None:
+            have = set(prev_schema.fieldNames())
+            out_schema = T.StructType(
+                prev_schema.fields
+                + [f for f in out_schema.fields if f.name not in have]
             )
-            return True
-        finally:
-            last.unpersist()
+        # per-epoch stats are queryable from the commit log; the
+        # counts come from the commit query's observation, never from
+        # the state
+        self.log.commit(
+            {
+                "epoch": epoch,
+                "num_buckets": num_buckets,
+                "schema": out_schema.json(),
+                "buckets": entries,
+                "stats": {
+                    "kind": "merge",
+                    "keys_upserted": n_upserts,
+                    "keys_deleted": n_keys - n_upserts,
+                    "buckets_touched": len(staged),
+                    "buckets_folded": len(fold),
+                    "wall_ms": int((time.monotonic() - t0) * 1000),
+                },
+            }
+        )
+        return True
 
     def lookup(self, spark: SparkSession, keys: list[tuple]) -> DataFrame:
         """Point lookup: current state rows for the given PK tuples
         (each tuple's values in ``pk_cols`` order as passed to the
-        constructor),
-        reading ONLY the buckets those keys hash to. The bucket
-        assignment runs through the SAME JVM expression the writer
-        uses (xxhash64 — not reimplementable driver-side in Python),
-        on a tiny keys frame; the state scan then lists just the
-        matched buckets' generation dirs and semi-joins. Cost:
-        O(|keys| + touched buckets), never O(total state) — the state
-        inspection path for a 100 TB table.
+        constructor), reading ONLY the buckets those keys hash to. The
+        bucket assignment runs through the SAME JVM expression the
+        writer uses (xxhash64 — not reimplementable driver-side in
+        Python) over a local relation of the keys, which collects
+        without a Spark job; the matched buckets' rows are semi-joined
+        to the keys before their layers merge. Cost: O(|keys| + their
+        buckets), never O(total state) — the state inspection path for
+        a 100 TB table.
         """
         man = self.log.load()
         if man is None:
@@ -356,29 +471,27 @@ class BucketedParquetState:
         # differs from table column order (silently wrong/empty results
         # when the types happen to coincide)
         pk_fields = [schema[c] for c in self.pk_cols]
-        # an Arrow local relation: the keys frame and its bucket
-        # projection are evaluated JVM-side, with no Python worker
+        # an Arrow local relation: the keys and their bucket ids are
+        # evaluated JVM-side, with no Python worker, and the projection
+        # collects as a local scan, with no Spark job. The keys enter
+        # the plan as data (a broadcast semi-join), not as literals, so
+        # every lookup reuses the same generated classes.
         keys_df = local_relation(spark, keys, T.StructType(pk_fields))
-        num_buckets = man["num_buckets"]
         wanted = {
-            r[BUCKET_COL]
-            for r in keys_df.select(
-                self._bucket(num_buckets).alias(BUCKET_COL)
-            ).distinct().collect()
+            r[0] for r in keys_df.select(self._bucket(man["num_buckets"])).collect()
         }
-        rels = [rel for b, rel in man["buckets"].items() if int(b) in wanted]
-        return self._scan(spark, man, rels).join(
-            F.broadcast(keys_df), self.pk_cols, "left_semi"
-        )
+        entries = [e for b, e in man["buckets"].items() if int(b) in wanted]
+        return self._live(spark, man, entries, keys=keys_df)
 
     def compact(
         self, spark: SparkSession, new_num_buckets: int | None = None
     ) -> None:
-        """Maintenance OPTIMIZE: rewrite every live bucket into ONE
-        fresh generation and commit it as the next epoch. Long-running
-        streams scatter state across one generation dir per batch;
-        compaction collapses the listing back to a single generation
-        (and lets GC reap the old ones at the retention horizon).
+        """Maintenance OPTIMIZE: fold every bucket's base and deltas
+        into ONE fresh generation of bases and commit it as the next
+        epoch. Long-running streams scatter state across one generation
+        dir per batch; compaction collapses the listing back to a
+        single generation (and lets GC reap the old ones at the
+        retention horizon), and every read after it is a plain scan.
 
         ``new_num_buckets`` additionally RE-BUCKETS the state — the
         scale knob that is otherwise frozen at table creation: as state
@@ -396,9 +509,9 @@ class BucketedParquetState:
             raise FileNotFoundError(f"no committed state at {self.path}")
         num_buckets = new_num_buckets or man["num_buckets"]
         epoch = man["epoch"]
-        buckets: dict[str, str] = {}
+        buckets: dict[str, dict] = {}
         if man["buckets"]:
-            state = self._scan(spark, man, man["buckets"].values())
+            state = self._live(spark, man, man["buckets"].values())
             gen = f"e{epoch + 1}-compact-{uuid.uuid4().hex[:8]}"
             gen_dir = fsio.join(self.path, "data", gen)
             staged = write_buckets(
@@ -406,7 +519,10 @@ class BucketedParquetState:
                 num_buckets,
                 gen_dir,
             )
-            buckets = {b: f"data/{gen}/{BUCKET_COL}={b}" for b in staged}
+            buckets = {
+                b: {"base": f"data/{gen}/{BUCKET_COL}={b}", "deltas": []}
+                for b in staged
+            }
         self.log.commit(
             {
                 "epoch": epoch + 1,
@@ -419,10 +535,10 @@ class BucketedParquetState:
 
     def stats(self, epoch: int | None = None) -> dict | None:
         """The stats block of the latest (or a retained) commit —
-        keys upserted/deleted, buckets touched, wall ms for merges;
-        kind='compact' for maintenance epochs. None for pre-stats
-        manifests. An epoch outside the retention window raises
-        ValueError, as in :meth:`read`."""
+        keys upserted/deleted, buckets touched (written) and folded,
+        wall ms for merges; kind='compact' for maintenance epochs. None
+        for pre-stats manifests. An epoch outside the retention window
+        raises ValueError, as in :meth:`read`."""
         return (self.log.load(epoch) or {}).get("stats")
 
 
@@ -442,17 +558,18 @@ def stream_replay_bucketed(
 ) -> DataFrame:
     """Replay a directory of CDC parquet as a stream into a bucketed
     incremental state table; returns the final state DataFrame.
-    Per-microbatch cost is proportional to the buckets the batch
-    touches (``BucketedParquetState.merge_batch``), not to the state.
+    Per-microbatch cost is proportional to the batch
+    (``BucketedParquetState.merge_batch`` appends one delta
+    generation), not to the state.
 
     Uses ``availableNow`` so the call is synchronous (drains whatever
     exists, then stops) — the 24/7 deployment drops the trigger and
     keeps the query running.
 
     ``compact_every=N`` folds maintenance into the loop: after every
-    N merged batches the state is compacted to one generation
-    (``BucketedParquetState.compact``), bounding the generation-dir
-    count a 24/7 stream accretes. Compaction is itself a committed
+    N merged batches every bucket is folded into one generation of
+    bases (``BucketedParquetState.compact``), bounding the
+    generation-dir count a 24/7 stream accretes. Compaction is itself a committed
     epoch, so a crash between merge and compact loses nothing.
 
     ``after_merge(store, spark)``: optional hook invoked after every

@@ -2,16 +2,19 @@
 
 A materialized aggregate whose refresh cost is bounded by the CDC
 churn, not the table size: the state table is hash-bucketed by PK and
-every merge epoch rewrites ONLY the touched buckets' generation dirs
-(`cdc_stream.py`), so a bucket's data path doubles as a change vector
-— if the path recorded at the last refresh still matches, every row
-in the bucket is byte-identical and its per-bucket partial aggregate
-carries forward BY REFERENCE. Refresh therefore:
+every merge epoch appends a delta ONLY to the buckets its batch wrote
+(`cdc_stream.py`), so a bucket's manifest entry — its
+``{"base", "deltas"}`` dirs — doubles as a change vector: if the entry
+recorded at the last refresh still matches, every row in the bucket
+is unchanged and its per-bucket partial aggregate carries forward BY
+REFERENCE. Refresh therefore:
 
-1. diffs the state manifest's bucket→path map against the snapshot
-   recorded in the view's own manifest (driver-side, O(buckets));
+1. diffs the state manifest's bucket → entry map against the snapshot
+   recorded in the view's own manifest (driver-side, O(buckets)); a
+   refresh that finds no stale or dropped bucket commits nothing;
 2. recomputes partial aggregates for the stale buckets only — one
-   scan of those buckets' dirs, one (bucket, group) aggregation;
+   merged read of those buckets' base and deltas, one (bucket, group)
+   aggregation;
 3. commits a new view manifest through the state's commit log
    (``cdc_stream._ManifestLog``, data subdir ``aggs``, manifest field
    ``agg_buckets``) — atomic on local/HDFS/s3a, crash-safe, GC by
@@ -43,6 +46,7 @@ from rust_dms_cdc_operator_spark.streaming.cdc_stream import (
     BUCKET_COL,
     BucketedParquetState,
     _ManifestLog,
+    bucket_entry,
     committed_schema,
     write_buckets,
 )
@@ -101,28 +105,43 @@ class IncrementalAggView:
     # -- the IVM core ------------------------------------------------
     def refresh(self, spark: SparkSession) -> dict:
         """Bring the view up to the state's current epoch. Returns
-        stats: buckets recomputed / carried / dropped."""
+        stats: buckets recomputed / carried / dropped. A refresh with
+        nothing stale or dropped publishes no view epoch."""
         sman = self.state.log.load()
         if sman is None:
             raise FileNotFoundError(
                 f"state at {self.state.path} has no committed manifest"
             )
         vman = self.log.load()
-        prev_map: dict = vman["state_buckets"] if vman else {}
-        cur_map: dict = sman["buckets"]
+        prev_map = {
+            b: bucket_entry(e)
+            for b, e in (vman["state_buckets"] if vman else {}).items()
+        }
+        cur_map = {b: bucket_entry(e) for b, e in sman["buckets"].items()}
         agg_dirs: dict = dict(vman["agg_buckets"]) if vman else {}
 
-        # change vector: a bucket whose generation path moved is stale;
-        # a bucket absent from the state lost its every key
-        stale = sorted(
-            b for b, p in cur_map.items() if prev_map.get(b) != p
-        )
+        # change vector: a bucket whose entry moved (a new delta, base
+        # or fold) is stale; a bucket absent from the state lost its
+        # every key
+        stale = sorted(b for b, e in cur_map.items() if prev_map.get(b) != e)
         dropped = sorted(b for b in agg_dirs if b not in cur_map)
-        for b in dropped:
+        stats = {
+            "state_epoch": sman["epoch"],
+            "buckets_recomputed": len(stale),
+            "buckets_carried": len(agg_dirs) - len(dropped) - len(
+                {b for b in stale if b in agg_dirs}
+            ),
+            "buckets_dropped": len(dropped),
+        }
+        if vman is not None and not stale and not dropped:
+            return stats
+        # a stale bucket whose keys are all deleted stages no partials,
+        # so its old ones must not carry forward
+        for b in dropped + stale:
             agg_dirs.pop(b, None)
 
         if stale:
-            df = self.state._scan(spark, sman, [cur_map[b] for b in stale])
+            df = self.state._live(spark, sman, [cur_map[b] for b in stale])
             # recompute the bucket id from the PK (the state's own
             # expression) — partition dirs don't carry the column
             df = df.withColumn(
@@ -144,14 +163,7 @@ class IncrementalAggView:
                 "agg_buckets": agg_dirs,
             }
         )
-        return {
-            "state_epoch": sman["epoch"],
-            "buckets_recomputed": len(stale),
-            "buckets_carried": len(agg_dirs) - len(
-                {b for b in stale if b in agg_dirs}
-            ),
-            "buckets_dropped": len(dropped),
-        }
+        return stats
 
     def result(self, spark: SparkSession) -> DataFrame:
         """The materialized aggregate: re-aggregate the per-bucket

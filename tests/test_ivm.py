@@ -69,9 +69,11 @@ def test_refresh_parity_and_incrementality(spark, tmp_path):
     assert s2["buckets_recomputed"] == 1
     assert _got(view, spark) == _expect(state, spark)
 
-    # no-op refresh: nothing stale
+    # no-op refresh: nothing stale, so no view epoch is published
+    epochs = view.log.epochs()
     s3 = view.refresh(spark)
     assert s3["buckets_recomputed"] == 0
+    assert view.log.epochs() == epochs
     assert _got(view, spark) == _expect(state, spark)
 
 

@@ -191,7 +191,7 @@ def test_unpartitioned_window_allowlist_not_stale(plans):
 # belonged to. This registry makes the convention machine-checked:
 # every .persist()/.cache()/.localCheckpoint() call site in the
 # package must either be RELEASED inside its own function (an
-# unpersist on the happy path — kcore/CC/heavy_hitters/merge_batch)
+# unpersist on the happy path — kcore/CC/heavy_hitters)
 # or be deliberately registered here as a caller-owned cache with its
 # expected site count. A new unreleased persist anywhere in the
 # package fails test_persist_sites_registered until it is added here
@@ -244,9 +244,6 @@ PERSIST_CALLER_OWNED = {
     "operators/similarity.py:ivf_knn_density": 1,    # assigned lists
     "operators/perplexity.py:unigram_logppl": 1,     # token table
     "operators/perplexity.py:source_token_drift": 1, # joint counts
-    "streaming/cdc_stream.py:merge_batch": 1,        # bucketed state —
-    # released on replaced buckets (:316); the LIVE state cache
-    # intentionally survives the call (it IS the stream's state)
 }
 
 _PERSIST_ATTRS = ("persist", "cache", "localCheckpoint")
@@ -324,16 +321,11 @@ def test_persist_sites_registered():
 def test_persist_registry_not_stale():
     """Every registry entry still names a live function whose persist
     count matches — prune entries when a function is released or
-    removed (the BNLJ/window staleness contract, mirrored). merge_batch
-    is the one registered function with BOTH a registered live cache
-    and an in-function release of replaced state."""
+    removed (the BNLJ/window staleness contract, mirrored)."""
     sites = _persist_sites()
     for key, want in PERSIST_CALLER_OWNED.items():
         assert key in sites, f"{key} vanished — prune the registry"
         n, released = sites[key]
-        if key == "streaming/cdc_stream.py:merge_batch":
-            assert released and n == want, key
-            continue
         assert not released, (
             f"{key} now releases in-function — prune the registry"
         )

@@ -14,6 +14,7 @@ from rust_dms_cdc_operator_spark.inventory_llm import _conf_bytes
 from rust_dms_cdc_operator_spark.session import (
     CODEGEN_CACHE_ENTRIES,
     codegen_compiles,
+    jit_compile_s,
 )
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -97,6 +98,23 @@ def test_repeated_pass_reuses_generated_classes(spark):
     c2 = codegen_compiles(spark)
     assert c1 - c0 > 100
     assert c2 - c1 == 0
+
+
+def test_jit_compile_seconds_grow_across_a_first_query(spark):
+    """The driver JVM's JIT time is readable and a first query, whose
+    generated classes the JVM has never run, adds to it."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    j0 = jit_compile_s(spark)
+    assert j0 >= 0
+    # a literal no other query used: a class the JIT has never compiled
+    salt = uuid.uuid4().int % 1_000_003
+    spark.range(3_000_000).select(
+        (F.col("id") * F.lit(salt) % F.lit(7919)).alias("x")
+    ).agg(F.sum("x")).collect()
+    assert jit_compile_s(spark) > j0
 
 
 def test_extra_conf_overrides_codegen_cache_size(tmp_path):

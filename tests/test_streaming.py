@@ -17,6 +17,7 @@ from pyspark.sql import types as T
 from rust_dms_cdc_operator_spark.operators.compact import compact_cdc
 from rust_dms_cdc_operator_spark.streaming.cdc_stream import (
     BucketedParquetState,
+    entry_rels,
     stream_replay_bucketed,
 )
 from rust_dms_cdc_operator_spark.streaming.ivm import IncrementalAggView
@@ -563,8 +564,8 @@ def test_manifest_gc_bounds_history(spark, tmp_path, kind):
     referenced = set()
     for e in (3, 4):
         with open(os.path.join(o.path, "_manifests", f"{e:020d}.json")) as fh:
-            for rel in json.load(fh)[o.field].values():
-                referenced.add(rel.split("/")[1])
+            for entry in json.load(fh)[o.field].values():
+                referenced.update(rel.split("/")[1] for rel in entry_rels(entry))
     on_disk = set(os.listdir(os.path.join(o.path, o.data)))
     assert on_disk == referenced, (on_disk, referenced)
     # and the result is complete despite the pruned history
@@ -810,9 +811,10 @@ def test_compact_collapses_generations_and_rebuckets(spark, tmp_path):
     # the new manifest references exactly one generation, with 4 buckets
     man = store.log.load()
     assert man["num_buckets"] == 4
-    gens = {rel.split("/")[1] for rel in man["buckets"].values()}
+    rels = [rel for e in man["buckets"].values() for rel in entry_rels(e)]
+    gens = {rel.split("/")[1] for rel in rels}
     assert len(gens) == 1 and next(iter(gens)).startswith("e6-compact-")
-    assert len({rel.split("=", 1)[1] for rel in man["buckets"].values()}) <= 4
+    assert len({rel.split("=", 1)[1] for rel in rels}) <= 4
 
     # one more commit pushes pre-compact manifests past retention: GC
     # reaps their generations, leaving compact's + the new one
@@ -887,10 +889,19 @@ def test_stream_auto_compaction(spark, tmp_path):
     )
     assert final.count() == 40
     gens = _glob.glob(str(tmp_path / "acstate" / "state" / "data" / "*"))
-    # 4 merge epochs + 2 compact epochs, retention 2 -> few live gens,
-    # and at least one is a compact generation
+    # 4 merge epochs + 2 compact epochs, retention 2: the latest commit
+    # (a compaction) references ONE generation of bases; the retained
+    # commit before it pins the previous compaction and the two deltas
+    # merged on top of it
+    store = BucketedParquetState(
+        str(tmp_path / "acstate" / "state"), ["id"], 8
+    )
+    latest = store.log.load()
+    rels = [r for e in latest["buckets"].values() for r in entry_rels(e)]
+    assert len({r.split("/")[1] for r in rels}) == 1, rels
+    assert all(not e["deltas"] for e in latest["buckets"].values())
     assert any("-compact-" in os.path.basename(g) for g in gens), gens
-    assert len(gens) <= 3, gens
+    assert len(gens) <= 4, gens
 
 
 def test_schema_evolution_additive(spark, tmp_path):
@@ -1511,8 +1522,8 @@ def test_bucket_writes_one_file_per_bucket_above_parallelism(spark, tmp_path):
         store, str(root / "view"), ["val"], {"n": ("count", "*")}
     )
 
-    def one_file_per_bucket(base, rels):
-        for rel in rels:
+    def one_file_per_bucket(base, entries):
+        for rel in (r for e in entries for r in entry_rels(e)):
             files = _parquet_files(os.path.join(base, rel))
             assert len(files) == 1, (rel, files)
 
@@ -1651,3 +1662,179 @@ def test_lookup_timestamp_key_matches_full_state_filter(spark, tmp_path):
         else:
             os.environ["TZ"] = old_tz
         time.tzset()
+
+
+def _state_rows(df) -> set:
+    return {(r.id, r.val, r.seq) for r in df.collect()}
+
+
+def _apply(model: dict, rows) -> dict:
+    """Last-writer-wins over one batch in ``seq`` order: the reference
+    semantics merge-on-read has to reproduce."""
+    out = dict(model)
+    for op, key, val, seq in sorted(rows, key=lambda r: r[3]):
+        if op == "D":
+            out.pop(key, None)
+        else:
+            out[key] = (val, seq)
+    return out
+
+
+def test_merge_on_read_matches_last_writer_wins_model(spark, tmp_path, monkeypatch):
+    """Commits through deltas and folds read exactly what a sequential
+    last-writer-wins replay holds, after every commit and at the
+    retained previous epoch: re-insert after delete, deletes of keys
+    never seen (in a bucket with and without an entry), a key's last
+    batch event winning, and a fold as buckets cross ``FOLD_DELTAS``."""
+    from rust_dms_cdc_operator_spark.streaming import cdc_stream
+
+    monkeypatch.setattr(cdc_stream, "FOLD_DELTAS", 2)
+    store = BucketedParquetState(str(tmp_path / "mor" / "state"), ["id"], 4)
+    batches = [
+        [("I", k, f"a{k}", 1) for k in range(20)] + [("D", 500, None, 1)],
+        [("D", 3, None, 2), ("D", 4, None, 2), ("D", 99, None, 2), ("U", 5, "b5", 2)],
+        [("I", 3, "c3", 3), ("U", 5, "c5", 3), ("D", 6, None, 3)],
+        [("U", k, f"d{k}", 4) for k in range(0, 20, 2)]
+        + [("D", 5, None, 4), ("I", 5, "d5", 5)],
+        [("D", k, None, 6) for k in range(10, 20)],
+        [("I", 15, "f15", 7), ("D", 0, None, 7), ("U", 6, "f6", 7)],
+    ]
+    model: dict = {}
+    folded = 0
+    for epoch, rows in enumerate(batches, start=1):
+        prev = model
+        model = _apply(model, rows)
+        assert store.merge_batch(
+            spark.createDataFrame(rows, schema=SCHEMA), order_cols=["seq"]
+        )
+        want = {(k, v, s) for k, (v, s) in model.items()}
+        assert _state_rows(store.read(spark)) == want, epoch
+        if epoch > 1:
+            assert _state_rows(store.read(spark, epoch=epoch - 1)) == {
+                (k, v, s) for k, (v, s) in prev.items()
+            }, epoch
+        probes = [3, 5, 6, 15, 99, 500]
+        assert _state_rows(store.lookup(spark, [(k,) for k in probes])) == {
+            r for r in want if r[0] in probes
+        }, epoch
+        man = store.log.load()
+        assert all(
+            len(e["deltas"]) <= cdc_stream.FOLD_DELTAS for e in man["buckets"].values()
+        )
+        folded += store.stats()["buckets_folded"]
+    assert folded > 0
+    store.compact(spark)
+    assert all(not e["deltas"] for e in store.log.load()["buckets"].values())
+    assert _state_rows(store.read(spark)) == {(k, v, s) for k, (v, s) in model.items()}
+
+
+def test_parent_format_manifest_reads_merges_and_compacts(spark, tmp_path):
+    """A state committed with plain string bucket entries and base
+    files without the delta columns (the copy-on-write layout) reads,
+    merges on top and compacts as base-only buckets."""
+    from rust_dms_cdc_operator_spark.streaming.cdc_stream import (
+        BUCKET_COL,
+        write_buckets,
+    )
+
+    root = str(tmp_path / "old" / "state")
+    store = BucketedParquetState(root, ["id"], 4)
+    rows = spark.createDataFrame(
+        [(k, f"v{k}", 1) for k in range(30)], "id long, val string, seq long"
+    )
+    gen = "e1-0000beef"
+    staged = write_buckets(
+        rows.withColumn(BUCKET_COL, store._bucket(4)), 4,
+        os.path.join(root, "data", gen),
+    )
+    os.makedirs(os.path.join(root, "_manifests"))
+    with open(os.path.join(root, "_manifests", f"{1:020d}.json"), "w") as fh:
+        json.dump({
+            "epoch": 1,
+            "num_buckets": 4,
+            "schema": rows.schema.json(),
+            "buckets": {b: f"data/{gen}/{BUCKET_COL}={b}" for b in staged},
+            "stats": {"kind": "merge", "keys_upserted": 30, "keys_deleted": 0,
+                      "buckets_touched": len(staged), "wall_ms": 0},
+        }, fh)
+    model = {k: (f"v{k}", 1) for k in range(30)}
+    assert _state_rows(store.read(spark)) == {(k, v, s) for k, (v, s) in model.items()}
+
+    batch = [("U", 4, "u4", 2), ("D", 5, None, 2), ("I", 40, "n40", 2)]
+    store.merge_batch(spark.createDataFrame(batch, schema=SCHEMA), order_cols=["seq"])
+    model = _apply(model, batch)
+    want = {(k, v, s) for k, (v, s) in model.items()}
+    assert _state_rows(store.read(spark)) == want
+    assert _state_rows(store.lookup(spark, [(4,), (5,), (40,), (7,)])) == {
+        r for r in want if r[0] in (4, 5, 40, 7)
+    }
+    # the parent's base dirs stay referenced under the new entry format
+    entries = store.log.load()["buckets"].values()
+    assert {e["base"].split("/")[1] for e in entries if e["base"]} == {gen}
+    store.compact(spark, new_num_buckets=2)
+    assert _state_rows(store.read(spark)) == want
+
+
+def _tree_bytes(path: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _dirs, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
+def test_small_commit_into_large_state_writes_a_small_delta(spark, tmp_path):
+    """A commit costs O(batch), not O(state): 1k events into a 1M-row
+    state write under 5% of the state's bytes."""
+    root = str(tmp_path / "big" / "state")
+    store = BucketedParquetState(root, ["id"], 16)
+    store.merge_batch(
+        spark.range(1_000_000).select(
+            F.lit("I").alias("Op"),
+            F.col("id"),
+            F.concat(F.lit("v"), F.col("id").cast("string")).alias("val"),
+            F.lit(1).cast("long").alias("seq"),
+        ),
+        order_cols=["seq"],
+    )
+    data = os.path.join(root, "data")
+    state_bytes = _tree_bytes(data)
+    before = set(os.listdir(data))
+    store.merge_batch(
+        spark.range(0, 1_000_000, 1_000).select(
+            F.lit("U").alias("Op"),
+            F.col("id"),
+            F.lit("u").alias("val"),
+            F.lit(2).cast("long").alias("seq"),
+        ),
+        order_cols=["seq"],
+    )
+    new = set(os.listdir(data)) - before
+    written = sum(_tree_bytes(os.path.join(data, g)) for g in new)
+    assert store.stats()["keys_upserted"] == 1_000
+    assert 0 < written < 0.05 * state_bytes, (written, state_bytes)
+    got = {(r.id, r.val) for r in store.lookup(spark, [(0,), (1,), (999_000,)]).collect()}
+    assert got == {(0, "u"), (1, "v1"), (999_000, "u")}
+
+
+def test_lookup_builds_without_a_spark_job(spark, tmp_path):
+    """Building a lookup frame launches no Spark job: the keys' bucket
+    ids collect from a local relation, and the bucket reads are lazy."""
+    from tests.cdc_fixtures import group_job_ids
+
+    store = BucketedParquetState(str(tmp_path / "nj" / "state"), ["id"], 8)
+    for seq in (1, 2):
+        store.merge_batch(
+            spark.createDataFrame(
+                [("U", i, f"v{i}.{seq}", seq) for i in range(0, 60, seq)],
+                schema=SCHEMA,
+            ),
+            order_cols=["seq"],
+        )
+    with group_job_ids(spark.sparkContext, "lookup-build") as jobs:
+        df = store.lookup(spark, [(3,), (4,), (17,)])
+    assert jobs == []
+    assert {(r.id, r.val) for r in df.collect()} == {
+        (3, "v3.1"), (4, "v4.2"), (17, "v17.1")
+    }
