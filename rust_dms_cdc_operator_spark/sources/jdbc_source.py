@@ -25,7 +25,7 @@ from rust_dms_cdc_operator_spark.sources.catalog import (
     get_primary_key,
     get_tables_in_schema,
 )
-from rust_dms_cdc_operator_spark.validate import TableReport, validate
+from rust_dms_cdc_operator_spark.validate import FUSED_TABLES, TableReport, validate
 
 
 def partition_bounds_sql(schema: str, table: str, column: str) -> str:
@@ -91,7 +91,8 @@ def catalog_validate(
     resolves each PK (``pk_resolver`` — ``get_primary_key`` on
     Postgres; injectable for engines without ``pg_index``), the source
     scan is the PK-partitioned read above, and ``validate`` runs
-    V1+V2 per table against the caller's target frames.
+    V1+V2 against the caller's target frames, in fused groups whose
+    source scans together stay within ``payload.max_connections``.
 
     ``targets`` maps table → target DataFrame (an engine state dir, a
     second database, …); tables discovered in the schema but absent
@@ -100,10 +101,6 @@ def catalog_validate(
     """
     props = properties or {}
     payload = payload or CdcValidatePayload(schema_name=schema)
-    # the reference sizes its connection pool from the payload's
-    # max_connections (postgres_config.rs:54-82): cap the per-table
-    # scan fan-out the same way
-    num_partitions = max(1, min(num_partitions, payload.max_connections))
     discovered = get_tables_in_schema(
         spark,
         url,
@@ -112,15 +109,30 @@ def catalog_validate(
         excluded=tuple(payload.excluded_tables or ()),
         properties=props,
     )
-    tables: dict[str, tuple[DataFrame, DataFrame, list[str]]] = {}
-    for t in discovered:
-        if t not in targets:
-            continue
-        pk = pk_resolver(spark, url, schema, t, props) or (
-            (target_pks or {}).get(t, [])
-        )
-        source = read_table_partitioned(
-            spark, url, schema, t, pk, props, num_partitions
-        )
-        tables[t] = (source, targets[t], pk)
-    return validate(spark, payload, tables)
+    pks = {
+        t: pk_resolver(spark, url, schema, t, props) or (target_pks or {}).get(t, [])
+        for t in discovered
+        if t in targets
+    }
+    # the reference sizes its connection pool from the payload's
+    # max_connections (postgres_config.rs:54-82). validate() scans the
+    # tables of one fused group in one plan, so their range scans share
+    # that pool: a group holds at most max_connections tables, and each
+    # table's scan fan-out is its share of the pool
+    names = sorted(pks)
+    group = max(1, min(FUSED_TABLES, payload.max_connections, len(names)))
+    num_partitions = max(1, min(num_partitions, payload.max_connections // group))
+    out: dict[str, TableReport] = {}
+    for i in range(0, len(names), group):
+        tables = {
+            t: (
+                read_table_partitioned(
+                    spark, url, schema, t, pks[t], props, num_partitions
+                ),
+                targets[t],
+                pks[t],
+            )
+            for t in names[i : i + group]
+        }
+        out.update(validate(spark, payload, tables))
+    return out

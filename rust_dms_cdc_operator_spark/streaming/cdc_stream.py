@@ -213,9 +213,8 @@ class BucketedParquetState:
     the microbatch to the last event per key and writes it as ONE delta
     generation in one Spark query: the batch's op per key (deletes kept
     as tombstones) and the commit epoch ride along as ``OP_COL`` and
-    ``EPOCH_COL``. So a commit costs O(batch), not O(state) — the
-    property that keeps a 24/7 CDC stream viable when the state is
-    100 TB and a batch is a few GB. Reads (``read``, ``lookup``,
+    ``EPOCH_COL``. So a delta commit costs O(batch), not O(state).
+    Reads (``read``, ``lookup``,
     ``compact`` and the incremental view's stale-bucket scan) merge
     each bucket's base and deltas with :func:`compact_cdc`, the one
     last-writer-wins path: the latest epoch per key wins, a base row
@@ -227,9 +226,15 @@ class BucketedParquetState:
     and deltas are unioned with the batch and compacted into a new base
     without tombstones. A read thus merges at most ``FOLD_DELTAS`` + 1
     layers per bucket, and a bucket is rewritten once per
-    ``FOLD_DELTAS`` deltas it received. A batch's rows for a bucket with
-    no entry become that bucket's base (a delete there deletes
-    nothing). ``compact`` folds every bucket.
+    ``FOLD_DELTAS`` deltas it received. The amortized commit cost is
+    O(batch + touched state / ``FOLD_DELTAS``). With hashed keys every
+    commit touches every bucket, so all buckets reach the threshold
+    together and every ``FOLD_DELTAS`` + 1-th commit rewrites the whole
+    state in its one query (measured in CHANGES.md: 3.7 bytes written
+    per event byte on a delta commit, 46 on the fold, 8.4 over the
+    cycle). A batch's rows for a bucket with no entry become that
+    bucket's base (a delete there deletes nothing). ``compact`` folds
+    every bucket.
 
     Generation dirs are ``data/e<epoch>-<uuid8>`` for merges and
     ``data/e<epoch>-compact-<uuid8>`` for compactions.
@@ -558,9 +563,10 @@ def stream_replay_bucketed(
 ) -> DataFrame:
     """Replay a directory of CDC parquet as a stream into a bucketed
     incremental state table; returns the final state DataFrame.
-    Per-microbatch cost is proportional to the batch
-    (``BucketedParquetState.merge_batch`` appends one delta
-    generation), not to the state.
+    A microbatch's commit appends one delta generation, at a cost
+    proportional to the batch, except that a bucket's
+    ``FOLD_DELTAS`` + 1-th commit folds it into a new base
+    (``BucketedParquetState``'s fold policy).
 
     Uses ``availableNow`` so the call is synchronous (drains whatever
     exists, then stops) — the 24/7 deployment drops the trigger and

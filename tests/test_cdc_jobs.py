@@ -16,8 +16,9 @@ from pyspark.sql import functions as F
 from rust_dms_cdc_operator_spark import validate as val_mod
 from rust_dms_cdc_operator_spark.operators.diff import chunked_hash_diff, count_diff
 from rust_dms_cdc_operator_spark.payloads import CdcValidatePayload
+from rust_dms_cdc_operator_spark.sources import jdbc_source
 from rust_dms_cdc_operator_spark.streaming.cdc_stream import BucketedParquetState
-from rust_dms_cdc_operator_spark.validate import validate, validate_table
+from rust_dms_cdc_operator_spark.validate import TableReport, validate, validate_table
 from tests.cdc_fixtures import group_job_ids
 
 #: jobs of validate() over the 4-table fixture: one boundary
@@ -116,18 +117,42 @@ def test_merge_batch_job_ratchet(spark, tmp_path):
     assert len(jobs) <= MERGE_JOBS, len(jobs)
 
 
+def _spy_groups(monkeypatch, run=True) -> list[list[str]]:
+    """Record the table names of every fused validate plan; with
+    ``run=False`` the plans are not run and every table reports ok."""
+    groups: list[list[str]] = []
+    fused = val_mod._validate_tables
+
+    def spy(tables, *args):
+        groups.append([name for name, *_rest in tables])
+        if run:
+            return fused(tables, *args)
+        return {name: TableReport(name, 0, 0, True) for name, *_rest in tables}
+
+    monkeypatch.setattr(val_mod, "_validate_tables", spy)
+    return groups
+
+
 @pytest.mark.parametrize(
-    ("start_position", "max_reported"),
-    [(0, val_mod.MAX_REPORTED_CHUNKS), (0, 2), (3 * CHUNK + 7, val_mod.MAX_REPORTED_CHUNKS)],
+    ("start_position", "max_reported", "fused_tables"),
+    [
+        (0, val_mod.MAX_REPORTED_CHUNKS, val_mod.FUSED_TABLES),
+        (0, 2, val_mod.FUSED_TABLES),
+        (3 * CHUNK + 7, val_mod.MAX_REPORTED_CHUNKS, val_mod.FUSED_TABLES),
+        (CHUNK, val_mod.MAX_REPORTED_CHUNKS, 2),
+    ],
 )
 def test_fused_reports_equal_per_table_reference(
-    spark, monkeypatch, start_position, max_reported
+    spark, monkeypatch, start_position, max_reported, fused_tables
 ):
-    """One fused validate() over every table reports exactly what the
-    per-table V1 + V2 operators compute: counts, chunk ids, truncation
-    at ``max_reported_chunks`` and the ``start_position`` resume."""
+    """Fused validate() plans report exactly what the per-table V1 + V2
+    operators compute: counts, chunk ids, truncation at
+    ``max_reported_chunks`` and the ``start_position`` resume, also
+    when the tables span several fused plans (in name order)."""
     tables = _tables(spark)
     monkeypatch.setattr(val_mod, "MAX_REPORTED_CHUNKS", max_reported)
+    monkeypatch.setattr(val_mod, "FUSED_TABLES", fused_tables)
+    groups = _spy_groups(monkeypatch)
     got = validate(
         spark,
         CdcValidatePayload(
@@ -136,6 +161,10 @@ def test_fused_reports_equal_per_table_reference(
         tables,
     )
     assert sorted(got) == sorted(tables)
+    names = sorted(tables)
+    assert groups == [
+        names[i : i + fused_tables] for i in range(0, len(names), fused_tables)
+    ]
     for name, (src, tgt, pk) in tables.items():
         want = _reference(src, tgt, pk, start_position, max_reported)
         assert _as_tuple(got[name]) == want, name
@@ -150,3 +179,38 @@ def test_validate_table_is_validate_of_one_table(spark):
     one = validate_table(src, tgt, "t", pk, CHUNK, max_reported_chunks=1)
     assert _as_tuple(one) == _reference(src, tgt, pk, max_reported=1)
     assert one.mismatched_chunks_truncated
+
+
+@pytest.mark.parametrize(
+    ("n_tables", "max_connections"), [(20, 100), (5, 3), (4, 20), (3, 1), (4, 100)]
+)
+def test_catalog_validate_keeps_fused_scans_within_the_pool(
+    monkeypatch, n_tables, max_connections
+):
+    """A fused plan scans all its tables' sources at once, so the JDBC
+    range scans summed over one fused group stay within the payload's
+    ``max_connections``, and every table is validated exactly once."""
+    names = [f"t{i:02d}" for i in range(n_tables)]
+    partitions: dict[str, int] = {}
+
+    def read(_spark, _url, _schema, table, _pk, _props, num_partitions):
+        partitions[table] = num_partitions
+        return table
+
+    monkeypatch.setattr(jdbc_source, "get_tables_in_schema", lambda *a, **k: names)
+    monkeypatch.setattr(jdbc_source, "read_table_partitioned", read)
+    groups = _spy_groups(monkeypatch, run=False)
+    reports = jdbc_source.catalog_validate(
+        None, "jdbc:none", "s",
+        targets={t: t for t in names},
+        payload=CdcValidatePayload(schema_name="s", max_connections=max_connections),
+        pk_resolver=lambda *a: ["id"],
+    )
+    assert sorted(reports) == names
+    assert sorted(t for g in groups for t in g) == names
+    for g in groups:
+        assert sum(partitions[t] for t in g) <= max_connections, (g, partitions)
+    # the pool is shared, not left idle: a lone group keeps the default
+    # fan-out while the pool allows it
+    if n_tables * 8 <= max_connections:
+        assert set(partitions.values()) == {8}

@@ -868,6 +868,7 @@ def test_stream_auto_compaction(spark, tmp_path):
     )
     from pyspark.sql import types as T
 
+    compact_every = 2
     src = tmp_path / "acsrc"
     os.makedirs(src)
     for i in range(4):
@@ -885,23 +886,34 @@ def test_stream_auto_compaction(spark, tmp_path):
     final = stream_replay_bucketed(
         spark, str(src), schema, ["id"], ["seq"],
         str(tmp_path / "acstate"), num_buckets=8,
-        max_files_per_trigger=1, compact_every=2,
+        max_files_per_trigger=1, compact_every=compact_every,
     )
     assert final.count() == 40
-    gens = _glob.glob(str(tmp_path / "acstate" / "state" / "data" / "*"))
-    # 4 merge epochs + 2 compact epochs, retention 2: the latest commit
-    # (a compaction) references ONE generation of bases; the retained
-    # commit before it pins the previous compaction and the two deltas
-    # merged on top of it
     store = BucketedParquetState(
         str(tmp_path / "acstate" / "state"), ["id"], 8
     )
-    latest = store.log.load()
+    # 4 merge epochs + 2 compact epochs, retention 2: nothing on disk
+    # outside what the retained manifests reference (no leak) ...
+    retained = [store.log.load(e) for e in store.log.epochs()]
+    referenced = {
+        rel.split("/")[1]
+        for man in retained
+        for entry in man["buckets"].values()
+        for rel in entry_rels(entry)
+    }
+    gens = {os.path.basename(g) for g in _glob.glob(
+        str(tmp_path / "acstate" / "state" / "data" / "*")
+    )}
+    assert gens == referenced, (gens, referenced)
+    # ... the latest commit (a compaction) references ONE generation of
+    # bases, and the retained commit before it a compaction's bases plus
+    # one delta per merge since: at most 2 + compact_every generations
+    latest = retained[-1]
     rels = [r for e in latest["buckets"].values() for r in entry_rels(e)]
     assert len({r.split("/")[1] for r in rels}) == 1, rels
     assert all(not e["deltas"] for e in latest["buckets"].values())
-    assert any("-compact-" in os.path.basename(g) for g in gens), gens
-    assert len(gens) <= 4, gens
+    assert any("-compact-" in g for g in gens), gens
+    assert len(gens) <= 2 + compact_every, gens
 
 
 def test_schema_evolution_additive(spark, tmp_path):
