@@ -44,10 +44,6 @@ EXPECTED_COLUMNS: dict[str, list[str]] = {
 }
 
 
-def events_path(sf_dir: str) -> str:
-    return f"{sf_dir}/events.parquet"
-
-
 def _enable_nanos_as_long(spark: SparkSession) -> None:
     """Required to even *read* the legacy int64-nanos encoding (Spark's
     parquet reader otherwise rejects TIMESTAMP(NANOS)); a no-op for

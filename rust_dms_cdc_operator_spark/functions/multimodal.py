@@ -5,14 +5,12 @@ compute pattern is Arrow-batched ``mapInPandas`` so decode libraries
 see contiguous byte buffers, never row-at-a-time Python. Header-level
 decode is REAL for netpbm/PNG/JPEG/BMP/GIF/TIFF/WebP/WAV/MP3 via the
 stdlib codecs in :mod:`.mediacodec` (``real_decode`` /
-``decode_media_features``; PIL is picked up automatically when
-importable), and pixel-level resize is REAL for raw binary netpbm
-(``mediacodec.resize_netpbm`` — nearest-neighbor over the
-uncompressed sample grid). Compressed-format pixel transforms and
-frame extraction remain stubbed behind deterministic fakes —
-PIL/librosa/av are not in this container — with the Spark-side
-plumbing (schema, batch shape, partitioning) real and tested either
-way.
+``decode_media_features``), and pixel-level resize is REAL for raw
+binary netpbm (``mediacodec.resize_netpbm`` — nearest-neighbor over
+the uncompressed sample grid). Compressed-format pixel transforms and
+frame extraction, which need a codec library, remain stubbed behind
+deterministic fakes, with the Spark-side plumbing (schema, batch
+shape, partitioning) real and tested either way.
 
 Scale notes: binary payloads ride the normal columnar path (parquet
 byte arrays); keep ``spark.sql.files.maxPartitionBytes`` sized so a
@@ -64,21 +62,12 @@ def with_media_columns(
     )
 
 
-def decode_stub(payload: bytes) -> dict:
-    """Placeholder for a real media decode (PIL/librosa/ffmpeg are not
-    in this container). Deterministic fake: byte length + first byte."""
-    if payload is None:
-        return {"n_bytes": 0, "first_byte": -1}
-    return {"n_bytes": len(payload), "first_byte": payload[0] if payload else -1}
-
-
 def real_decode(payload: bytes) -> dict:
-    """The integration point for an actual decoder — now wired to the
-    stdlib header codecs (netpbm/PNG/WAV; PIL when importable) in
+    """The integration point for an actual decoder, wired to the
+    stdlib header codecs in
     :mod:`rust_dms_cdc_operator_spark.functions.mediacodec`. Raises
     ``mediacodec.UnknownMediaError`` (a ``NotImplementedError``) for
-    formats that still need PIL/librosa/av — compressed codecs remain
-    out of reach in this container."""
+    magics none of them covers."""
     from rust_dms_cdc_operator_spark.functions import (  # noqa: PLC0415
         mediacodec,
     )

@@ -4049,23 +4049,12 @@ def q_sim_minhash_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document top-3 nearest neighbors by ESTIMATED Jaccard
     (matching MinHash components / 16) over the banded-LSH candidate
     graph — the doc-level k-NN join a semantic-dedup reviewer reads.
-    Candidates come from minhash_lsh_pairs (complete under the LSH
-    contract, no all-pairs) with ``carry_signature=True``, so the
-    signatures ride the pair stream out of the band joins — at 200M
-    candidates from 50k docs (the adversarial sf1 vocabulary), the
-    old shape re-joined a signature table against the candidate
-    stream twice and scored after a 2x directed union: two
-    candidate-stream shuffles and 2n score evaluations that all
-    disappear here (n_match is symmetric, computed ONCE per pair
-    before the union; the only remaining candidate-stream exchange is
-    the per-doc ranking window, whose rank<=3 filter compiles to a
-    map-side-partial WindowGroupLimit). Round 8: rebuilt on
-    operators/dedup.minhash_knn_topk — directed salted band joins
-    keep every doc's candidates in its own (bucket, salt) shard, so
-    the per-doc rank sorts IN PLACE and the quadratic candidate
+    Built on operators/dedup.minhash_knn_topk: directed salted band
+    joins keep every doc's candidates in its own (bucket, salt) shard,
+    so the per-doc rank sorts IN PLACE and the quadratic candidate
     stream never crosses an exchange; only <= k rows per doc per band
-    reach the global rank. Same result set, same oracle — physical
-    shape only (58 s -> measured at native sf1)."""
+    reach the global rank. Candidates are the banded-LSH pairs
+    (complete under the LSH contract, no all-pairs)."""
     from rust_dms_cdc_operator_spark.operators.dedup import (  # noqa: PLC0415
         minhash_knn_topk,
     )

@@ -130,7 +130,6 @@ def minhash_lsh_pairs(
     text_col: str,
     num_hashes: int = 8,
     bands: int = 2,
-    carry_signature: bool = False,
     carry_cols: list[str] | None = None,
     max_bucket: int | None = None,
     salt: int | None = None,
@@ -151,24 +150,14 @@ def minhash_lsh_pairs(
     skew=true in the executed SMJ node on a hot-bucket fixture), and
     band width tunes bucket size.
 
-    ``carry_signature=True`` additionally emits the full MinHash
-    signature arrays as ``sig_a``/``sig_b`` — the simhash_hamming
-    trick: downstream estimators (n-matching-components scoring, k-NN
-    ranking) read the signatures FROM the pair stream instead of
-    re-joining a signature table against hundreds of millions of
-    candidates. The extra shuffle weight is per-DOC (the keyed table
-    widens by ``num_hashes`` longs per row), while the avoided joins
-    were per-CANDIDATE — at 200M candidates from 50k docs that trades
-    ~2 candidate-stream shuffles for ~1 MB of wider doc rows.
-
-    ``carry_cols`` generalizes the same trade to arbitrary input
-    columns (emitted as ``{col}_a``/``{col}_b``): per-doc attributes a
-    downstream rollup needs (source shard, length bucket, language)
-    ride the band joins instead of joining against the candidate
-    stream afterwards. At test scale Spark would broadcast that dim
-    anyway; at 100 TB a one-row-per-doc table exceeds every broadcast
-    threshold and the post-hoc join becomes two candidate-stream
-    shuffles — carrying makes the plan scale-stable by construction.
+    ``carry_cols`` emits input columns as ``{col}_a``/``{col}_b``:
+    per-doc attributes a downstream rollup needs (source shard, length
+    bucket, language) ride the band joins instead of joining against
+    the candidate stream afterwards. At test scale Spark would
+    broadcast that dim anyway; at 100 TB a one-row-per-doc table
+    exceeds every broadcast threshold and the post-hoc join becomes
+    two candidate-stream shuffles — carrying makes the plan
+    scale-stable by construction.
 
     ``max_bucket`` (round 8) bounds candidate ENUMERATION itself — the
     `triangle_stats max_degree` pattern applied to band buckets: a
@@ -211,17 +200,8 @@ def minhash_lsh_pairs(
     sigs = df.select(F.col(id_col), *carry_cols, wh).select(
         F.col(id_col), *carry_cols, *sig_cols
     )
-    carry = (
-        [
-            F.array(
-                *[F.col(f"mh_{i}") for i in range(num_hashes)]
-            ).alias("sig")
-        ]
-        if carry_signature
-        else []
-    )
     keyed = sigs.select(
-        F.col(id_col), *carry, *carry_cols, *band_key_cols(num_hashes, bands)
+        F.col(id_col), *carry_cols, *band_key_cols(num_hashes, bands)
     ).persist()
     # round 12: materialize the signature cache BEFORE the per-band
     # joins fan out. AQE launches the band joins' broadcast builds as
@@ -256,17 +236,11 @@ def minhash_lsh_pairs(
             ],
         )
 
-    carry_a = ([F.col("sig").alias("sig_a")] if carry_signature else []) + [
-        F.col(c).alias(f"{c}_a") for c in carry_cols
+    carry_a = [F.col(c).alias(f"{c}_a") for c in carry_cols]
+    carry_b = [F.col(c).alias(f"{c}_b") for c in carry_cols]
+    out_cols = ["id_a", "id_b"] + [
+        f"{c}_{s}" for c in carry_cols for s in ("a", "b")
     ]
-    carry_b = ([F.col("sig").alias("sig_b")] if carry_signature else []) + [
-        F.col(c).alias(f"{c}_b") for c in carry_cols
-    ]
-    out_cols = (
-        ["id_a", "id_b"]
-        + (["sig_a", "sig_b"] if carry_signature else [])
-        + [f"{c}_{s}" for c in carry_cols for s in ("a", "b")]
-    )
     per_band = []
     for i in range(bands):
         src = (

@@ -1,22 +1,34 @@
-"""Connected components over pair edges — dedup *group* assignment.
+"""Graph operators over undirected pair edges — dedup *group*
+assignment and the structure statistics of a near-duplicate graph.
 
 The dedup operators (operators/dedup.py, operators/similarity.py)
 emit near-duplicate PAIRS; a training pipeline needs the transitive
 closure of those pairs — duplicate GROUPS — so it can keep one
 canonical document per group. That closure is connected components.
+Triangle census, PageRank, label propagation and k-core peeling
+describe the same graph.
 
-Implementation: local-min labeling + a fixed budget of pointer-jump
-rounds + contraction. Convergence is never probed — the contraction's
-union-find (bounded driver) or recursion (distributed) resolves
-whatever label connectivity the jumps left, so jump rounds are purely
-a size optimization and every round is exactly one checkpoint job
-with zero extra driver actions.
+Edges: every operator reads an undirected ``(id_a, id_b)`` list in
+which an edge may appear in either orientation, or in both. The
+operators with an ``assume_distinct`` knob read it through
+:func:`_edges`, which orients each edge ``id_a <= id_b`` and
+deduplicates; ``assume_distinct=True`` skips that shuffle for sources
+that already emit every edge once as ``id_a < id_b`` (as
+``dedup.minhash_lsh_pairs`` does). Connected components is
+orientation- and duplicate-blind by construction.
 
-Scale: labeling is one groupBy; each jump is one equi-join over the
-(node, comp) frame — orders of magnitude smaller than the input
-pairs; contraction joins the edge list once per level. LSH dup graphs
-(unions of near-cliques) finish in one level; adversarial chains
-contract ~4× per level, O(log n) levels, ``max_iter`` as the guard.
+Connected components: an edge list of at most ``DRIVER_UF_THRESHOLD``
+edges goes to one driver union-find. A larger one is contracted — one
+groupBy labels every node with the minimum of itself and its
+neighbours, ``JUMP_ROUNDS`` pointer jumps shorten the label chains,
+and one join rewrites the graph as edges between labels — and the
+contracted graph is resolved recursively. Convergence is never
+probed: the recursion resolves whatever label connectivity the jumps
+left, so the jumps only shrink the contracted graph. LSH dup graphs
+(unions of near-cliques) contract to the driver bound in one level.
+A path loses only ~4 edges per level (the jumps resolve pointer depth
+4), so a long path reaches the ``max_iter`` guard, and what is left
+of it then goes to the driver whatever its size.
 """
 
 from __future__ import annotations
@@ -30,7 +42,14 @@ from pyspark.sql import types as T
 from rust_dms_cdc_operator_spark.session import local_relation
 
 
+#: edge lists up to this size are collected into a driver union-find
+#: (a few MB); read at call time, so tests can patch it
 DRIVER_UF_THRESHOLD = 200_000
+
+#: pointer-jump rounds per contraction level: pointer depth 4 resolved
+#: collapses LSH near-clique graphs in one level; each round is one
+#: checkpoint job over the label frame
+JUMP_ROUNDS = 2
 
 # contraction-side broadcast bound for the (node, comp) label frame:
 # 4M rows x 2 longs ~ 64 MB serialized — comfortably under executor
@@ -39,26 +58,29 @@ DRIVER_UF_THRESHOLD = 200_000
 LABEL_BROADCAST_ROWS = 4_000_000
 
 
-def _all_leaves_materialized(df: DataFrame) -> bool:
-    """True iff every leaf of ``df``'s logical plan is an
-    already-materialized RDD (``LogicalRDD`` — what
-    ``session.materialize_leaf`` / ``localCheckpoint`` produce) or an
-    Arrow/list local relation. Used to gate narrow coalesces that are
-    safe over finished blocks but hazardous under a live shuffle
-    pipeline (see connected_components' e0 note). Conservative on any
-    py4j surprise: returns False (skip the coalesce)."""
-    try:
-        leaves = df._jdf.queryExecution().logical().collectLeaves()
-        n = leaves.size()
-        if n == 0:
-            return False
-        for i in range(n):
-            name = leaves.apply(i).getClass().getName()
-            if not name.endswith(("LogicalRDD", "LocalRelation")):
-                return False
-        return True
-    except Exception:  # pragma: no cover — py4j defensive
-        return False
+def _edges(edges: DataFrame, assume_distinct: bool) -> DataFrame:
+    """The undirected edge list as ``(id_a, id_b)``, one row per edge:
+    each edge oriented ``id_a <= id_b``, then deduplicated — or, with
+    ``assume_distinct``, the plain projection (the caller guarantees
+    every edge appears once, as ``id_a < id_b``). Lazy; the caller
+    owns any persist."""
+    if assume_distinct:
+        return edges.select("id_a", "id_b")
+    return edges.select(
+        F.least("id_a", "id_b").alias("id_a"),
+        F.greatest("id_a", "id_b").alias("id_b"),
+    ).distinct()
+
+
+def _symmetric(e: DataFrame) -> DataFrame:
+    """``(src, dst)`` adjacency of an :func:`_edges` list: both
+    directions of every edge. Lazy; the caller owns any repartition
+    and persist."""
+    return e.select(
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+    ).unionByName(
+        e.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+    )
 
 
 def _make_ckpt(
@@ -68,7 +90,7 @@ def _make_ckpt(
     executor-local — but NON-replicated: losing an executor mid-run
     kills the job). With ``checkpoint_dir``: reliable ``checkpoint()``
     to that path (HDFS/object store on a cluster), so a multi-hour CC
-    over billions of edges survives executor loss (r2 verdict #2)."""
+    over billions of edges survives executor loss."""
     if checkpoint_dir:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
         return lambda df: df.checkpoint(eager=True)
@@ -80,127 +102,71 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 20,
-    driver_threshold: int = DRIVER_UF_THRESHOLD,
     checkpoint_dir: str | None = None,
-    jump_rounds: int = 2,
 ) -> DataFrame:
     """(node, comp) for every node in ``edges``; ``comp`` is the
     smallest node id in the component (deterministic, engine-portable
     — the DuckDB oracle reproduces it with a recursive closure).
 
-    Two-level contraction: one distributed local-min round labels every
-    node with min(self, neighbors), then the graph is CONTRACTED to
-    edges between labels. For dup graphs (unions of near-cliques) the
-    contracted graph is tiny — each cluster collapses to ~1 label — so
-    it finishes in a bounded driver-side union-find
-    (``driver_threshold`` caps the collect; ≤ a few MB). A contracted
-    graph still above the threshold recurses distributed; each level
-    at least halves chains, so depth is O(log diameter) with
-    ``max_iter`` as the guard. Common case: init groupBy + contract
-    join + one broadcast mapping join — constant rounds, vs diameter
-    rounds for plain label propagation."""
-    # the edge list is consumed once per round — materialize the
-    # DIRECTED list (round 8: materializing the symmetrized union
-    # instead meant the whole upstream pair computation — minhash band
-    # joins, cosine candidates — ran TWICE, once per union branch; and
-    # every downstream join paid 2|E| where |E| suffices).
-    #
-    # Round 12 (guide §2.2 fewer-larger partitions): coalesce the edge
-    # list to defaultParallelism before caching — a salted LSH pair
-    # stream arrives in ~4x-cores micro-partitions (salt shards × skew
-    # splits), and every later pass (fast-path count, sym aggregation,
-    # contraction join) pays per-partition task overhead. coalesce
-    # never increases a partition count, so a real cluster scan with
-    # >= cores splits is untouched. Deliberately persist, NOT
-    # localCheckpoint: an extra per-recursion-level localCheckpoint
-    # compounds Catalyst's LogicalRDD stats/constraint rewriting
-    # (rewriteStatsAndConstraints) and on adversarial chains the
-    # contraction checkpoint's planning time grows exponentially with
-    # recursion depth (measured: 0.2 s/level → 5 s → stuck at level
-    # ~8 on a 40-edge chain). Callers that feed an expensive pair
-    # plan in cut its lineage ONCE at their own depth-1 site instead
-    # (see q_docs_group_split_incr), which keeps e0's task binary
-    # small without a per-level checkpoint.
-    #
-    # Round 13 (advisor note): the coalesce is GATED on the input
-    # already being a materialized leaf. Below the gate it was a
-    # scale hazard for callers that feed the LIVE banded-join plan
-    # (q_dedup_groups, q_docs_canonical_by_quality): coalesce under
-    # persist squeezes the whole post-shuffle band-join output stage
-    # into ~cores fat tasks — the exact per-task memory-exhaustion
-    # mode materialize_leaf documents at native sf1 — and can
-    # re-concentrate salt-spread hot-bucket shards into one task. A
-    # leaf input's blocks are already materialized (the coalesce is
-    # a narrow merge of finished blocks, the safe case the round-12
-    # win measured); a live plan instead materializes at its
-    # AQE-sized parallelism, and the cached-plan output coalescing
-    # conf (session.py) handles its partition sizing scale-adaptively.
-    ckpt = _make_ckpt(edges.sparkSession, checkpoint_dir)
-    e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    if _all_leaves_materialized(edges):
-        e0 = e0.coalesce(
-            max(edges.sparkSession.sparkContext.defaultParallelism, 1)
-        )
-    e0 = e0.persist()
-    try:
-        # FAST PATH: if the RAW edge list already fits the same
-        # bounded driver collect the contracted path is allowed (≤
-        # driver_threshold edges, a few MB), union-find it directly.
-        # The label/jump/contract machinery exists to SHRINK a big
-        # graph down to that bound — when the input is already under
-        # it, the machinery is ~6 fixed scheduler jobs spent
-        # shrinking nothing (measured 15 s → 3 s on the sf0.1
-        # embedding near-dup graph, 277 edges). The count also
-        # materializes the persist the slow path needs anyway, and
-        # comp = min member is algorithm-independent, so both paths
-        # return identical rows. (Union-find is direction-blind, so
-        # the directed list is enough — no symmetrize before collect.)
-        n_e = e0.count()
-        if n_e <= driver_threshold:
-            parent: dict[int, int] = {}
+    An edge list of at most ``DRIVER_UF_THRESHOLD`` edges is resolved
+    by a driver union-find; a larger one is contracted to edges
+    between labels (module docstring) and the contracted graph
+    resolved by this function, one level deeper. A level called with
+    ``max_iter < 0`` takes the driver path whatever its size, so at
+    most ``max_iter + 1`` levels contract. A contracting level costs
+    one edge count, ``JUMP_ROUNDS + 2`` checkpoint jobs and one label
+    count; the driver path costs the count and one collect.
 
-            def find(x: int) -> int:
+    The output schema derives from the input edge type on both paths
+    (``node`` and ``comp`` take the type of ``src``), so which path
+    the count selects is never observable. ``checkpoint_dir`` selects
+    reliable checkpoints for the lineage cuts (:func:`_make_ckpt`)."""
+    spark = edges.sparkSession
+    # persist, NOT localCheckpoint: a LogicalRDD leaf per recursion
+    # level compounds Catalyst's stats/constraint rewriting, and on
+    # adversarial chains planning time grew exponentially with depth
+    # (0.2 s/level → 5 s → stuck at level ~8 on a 40-edge chain).
+    # Callers that feed an expensive pair plan cut its lineage once at
+    # their own site (session.materialize_leaf).
+    e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist()
+    try:
+        # the edge count picks the path and materializes the persist
+        # that the contraction reads
+        n_edges = e0.count()
+        if n_edges <= DRIVER_UF_THRESHOLD or max_iter < 0:
+            parent: dict = {}
+
+            def find(x):
                 parent.setdefault(x, x)
                 while parent[x] != x:
                     parent[x] = parent[parent[x]]
                     x = parent[x]
                 return x
 
-            for r in e0.collect():
-                ra, rb = find(r["a"]), find(r["b"])
+            for a, b in e0.collect() if n_edges else ():
+                ra, rb = find(a), find(b)
+                # the larger root points at the smaller, so every root
+                # is its component's minimum (Python's min on str is
+                # F.least's lexicographic order)
                 if ra != rb:
                     parent[max(ra, rb)] = min(ra, rb)
-            comp_min: dict[int, int] = {}
-            for node in parent:
-                root = find(node)
-                comp_min[root] = min(comp_min.get(root, node), node)
-            rows = [(n, comp_min[find(n)]) for n in parent]
-            # schema derives from the INPUT edge type (select of
-            # src/dst keeps each side's type; least/greatest below
-            # coerce identically), so int/string node ids get the same
-            # output schema the distributed path would produce — which
-            # path the edge count selects must never be observable.
-            # Python min()/max() on str matches F.least's
-            # lexicographic order, so values agree too.
             node_type = e0.schema["a"].dataType
-            out_schema = T.StructType(
-                [  # nullable=True: what groupBy/join infer distributed
+            schema = T.StructType(
+                [  # nullable: what the contracting path's joins infer
                     T.StructField("node", node_type, True),
                     T.StructField("comp", node_type, True),
                 ]
             )
-            # Arrow local relation (round 12): the list form costs one
-            # Python-worker hop per slice at EVERY downstream
-            # evaluation — see session.local_relation
-            return local_relation(edges.sparkSession, rows, out_schema)
-        # level-0 round: node's label = min(self, direct neighbors).
-        # This is a FOREST: following comp pointers always ends at a
-        # local-minimum node (comp(r) == r). The symmetrized view is
-        # built lazily from the cached directed list — two cache
-        # reads, one map-combined shuffle; never its own cache.
-        sym = e0.union(
-            e0.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
+            rows = [(n, find(n)) for n in parent]
+            out = local_relation(spark, rows, schema)
+            # an empty local relation is an RDD the optimizer cannot
+            # see into; limit(0) lets it drop the caller level's join
+            return out if rows else out.limit(0)
+        ckpt = _make_ckpt(spark, checkpoint_dir)
+        # label = min(self, neighbours): a FOREST whose pointer chains
+        # end at local-minimum nodes (comp(r) == r). The symmetric view
+        # is two reads of the cached list and one map-combined shuffle.
+        sym = e0.union(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
         labels = ckpt(
             sym.groupBy("a")
             .agg(F.min("b").alias("_mb"))
@@ -209,18 +175,7 @@ def connected_components(
                 F.least(F.col("a"), F.col("_mb")).alias("comp"),
             )
         )
-        # pointer-jump comp ← comp(comp) a FIXED small number of
-        # rounds — no convergence probe at all (r2 verdict #8, taken
-        # further): convergence is not a correctness requirement,
-        # because the contraction below plus the driver union-find /
-        # recursion resolves whatever label connectivity remains.
-        # Jump rounds only SHRINK the contracted graph, so two rounds
-        # (pointer depth 4 resolved) cover LSH near-clique graphs in
-        # one level, and adversarial chains still contract ~4× per
-        # recursion level — O(log n) levels total. Fixed rounds = zero
-        # per-round driver actions (no agg, no take(1)): each round is
-        # exactly one checkpoint job over the tiny labels frame.
-        for _ in range(jump_rounds):
+        for _ in range(JUMP_ROUNDS):  # comp ← comp(comp)
             x, y = labels.alias("x"), labels.alias("y")
             labels = ckpt(
                 x.join(y, F.col("x.comp") == F.col("y.node"), "left")
@@ -229,37 +184,18 @@ def connected_components(
                     F.coalesce(F.col("y.comp"), F.col("x.comp")).alias("comp"),
                 )
             )
-        # contract: edges between LABELS (self-loops dropped). For a
-        # near-dup corpus this is the tiny inter-cluster remainder.
-        # Joins run over the DIRECTED list — half the rows of the
-        # symmetrized view — with least/greatest canonicalizing the
-        # label-edge orientation (union-find and the recursion are
-        # direction-blind, so one orientation per label edge is
-        # exactly what they need).
-        #
-        # The label frame is NODE-sized — orders of magnitude smaller
-        # than the edge list (46k nodes vs 200M pairs on the sf1
-        # near-dup fixture). When it fits a broadcast, the contraction
-        # becomes one cache scan + two map-side hash joins + the
-        # ca!=cb filter killing the intra-cluster majority BEFORE any
-        # exchange — the only shuffle left is the distinct over the
-        # tiny inter-label remainder (measured 26 s -> ~3 s at sf1).
-        # Past the row bound (billions of nodes at 100 TB) it falls
-        # back to the plain shuffle joins.
-        n_nodes = labels.count()  # cheap: labels is checkpointed
-        la = labels.select(
-            F.col("node").alias("a"), F.col("comp").alias("ca")
-        )
-        lb = labels.select(
-            F.col("node").alias("b"), F.col("comp").alias("cb")
-        )
-        if n_nodes <= LABEL_BROADCAST_ROWS:
+        # contract: edges between LABELS, self-loops dropped, one
+        # orientation per label edge. The label frame is node-sized,
+        # so under the broadcast bound the contraction is one cache
+        # scan + two map-side hash joins, and the ca != cb filter drops
+        # the intra-cluster majority before the only shuffle (the
+        # distinct over the inter-label remainder).
+        la = labels.select(F.col("node").alias("a"), F.col("comp").alias("ca"))
+        lb = labels.select(F.col("node").alias("b"), F.col("comp").alias("cb"))
+        if labels.count() <= LABEL_BROADCAST_ROWS:
             la, lb = F.broadcast(la), F.broadcast(lb)
-        # checkpoint: each contraction level must start from a leaf
-        # plan — recursion over lazy frames otherwise NESTS the whole
-        # lower-level plan per level (exponential planning cost,
-        # driver OOM). The checkpointed frame is the label-edge list,
-        # orders of magnitude smaller than the input pairs.
+        # checkpointed: the next level starts from a leaf, instead of
+        # nesting this level's whole plan
         contracted = ckpt(
             e0.join(la, "a")
             .join(lb, "b")
@@ -270,51 +206,12 @@ def connected_components(
             )
             .distinct()
         )
-        n2 = contracted.count()
-        if n2 == 0:
-            return labels
-        spark = edges.sparkSession
-        use_driver_uf = n2 <= driver_threshold or max_iter <= 0
-        if use_driver_uf:
-            # bounded driver union-find over label-edges (≤ a few MB)
-            parent: dict[int, int] = {}
-
-            def find(x: int) -> int:
-                parent.setdefault(x, x)
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            for r in contracted.collect():
-                ra, rb = find(r["ca"]), find(r["cb"])
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-            mapping = [(label, find(label)) for label in parent]
-            map_df = local_relation(
-                spark, mapping, "comp long, _root long"
-            )
-        else:
-            # contracted graph still large: recurse distributed —
-            # every level at least halves chains
-            sub = connected_components(
-                contracted, "ca", "cb",
-                max_iter=max_iter - 1,
-                driver_threshold=driver_threshold,
-                checkpoint_dir=checkpoint_dir,
-                jump_rounds=jump_rounds,
-            )
-            map_df = sub.select(
-                F.col("node").alias("comp"), F.col("comp").alias("_root")
-            )
-        # broadcast only the bounded driver mapping; the recursive
-        # branch's mapping is label-graph-sized and joins normally
-        if use_driver_uf:
-            map_df = F.broadcast(map_df)
-        resolved = labels.join(map_df, "comp", "left").select(
+        roots = connected_components(
+            contracted, "ca", "cb", max_iter - 1, checkpoint_dir
+        ).select(F.col("node").alias("comp"), F.col("comp").alias("_root"))
+        return labels.join(roots, "comp", "left").select(
             "node", F.coalesce(F.col("_root"), F.col("comp")).alias("comp")
         )
-        return resolved
     finally:
         e0.unpersist()
 
@@ -349,11 +246,10 @@ def incremental_groups(
     _comp: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental connected components for GROUP-AWARE SPLITTING at
-    ingest time (round 11, verdict item 1) — the `incremental_dedup`
-    digest-state pattern applied to CC: the full-corpus group
-    assignment is a PERSISTED ARTIFACT computed once; each ingest
-    batch is grouped against it without re-running CC over the
-    corpus.
+    ingest time — the `incremental_dedup` digest-state pattern applied
+    to CC: the full-corpus group assignment is a PERSISTED ARTIFACT
+    computed once; each ingest batch is grouped against it without
+    re-running CC over the corpus.
 
     Inputs::
 
@@ -388,11 +284,12 @@ def incremental_groups(
     the artifacts carried between ingests are the assignment table
     and the corpus band-key table (which also prices anchor-pair
     discovery at O(batch) bucket lookups).
+
+    ``_comp``: a caller that already ran :func:`dedup_groups` over
+    ``new_new_pairs`` (e.g. concurrently with the prior-epoch CC)
+    passes its (doc_id, group_id) result in; identical to computing
+    it here.
     """
-    # ``_comp``: optimization hook (round 12, guide §2.6) — a caller
-    # that already ran CC over ``new_new_pairs`` (e.g. concurrently
-    # with the prior-epoch CC) passes the (doc_id, group_id) result
-    # in; identical to computing it here by definition.
     comp = (
         _comp
         if _comp is not None
@@ -432,14 +329,14 @@ def group_rebuild_migration(
     rebuilt: DataFrame,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """The REBUILD AUDIT for the exact-required class (round 12,
-    verdict item 4): the incremental stability contract
-    (:func:`incremental_groups`) never rewrites prior assignments, and
-    defers cross-group merges to the periodic full rebuild — but a
-    rebuild MOVES documents between groups, and therefore potentially
-    between train/val/test splits. This is the report a curation team
-    runs BEFORE accepting a rebuild: every document whose group or
-    split would change, with both sides of the move.
+    """The REBUILD AUDIT for the exact-required class: the incremental
+    stability contract (:func:`incremental_groups`) never rewrites
+    prior assignments, and defers cross-group merges to the periodic
+    full rebuild — but a rebuild MOVES documents between groups, and
+    therefore potentially between train/val/test splits. This is the
+    report a curation team runs BEFORE accepting a rebuild: every
+    document whose group or split would change, with both sides of the
+    move.
 
     Inputs are two (id, group_id, split) assignment frames — the
     frozen incremental artifact and the candidate full rebuild (their
@@ -487,13 +384,13 @@ def triangle_stats(
     max_degree: int | None = None,
     assume_distinct: bool = False,
 ) -> DataFrame:
-    """Global triangle census of an undirected graph given as
-    (id_a < id_b) edges: edge count, wedge count (paths of length 2:
-    sum of deg*(deg-1)/2), triangle count, and the global clustering
-    coefficient 3*triangles/wedges — the structure report for a
-    near-dup candidate graph (high clustering = duplicate CLUSTERS,
-    sparse wedges = pairwise-only noise), which predicts connected-
-    component explosion before running CC.
+    """Global triangle census of an undirected (id_a, id_b) edge list
+    (normalized by :func:`_edges`): edge count, wedge count (paths of
+    length 2: sum of deg*(deg-1)/2), triangle count, and the global
+    clustering coefficient 3*triangles/wedges — the structure report
+    for a near-dup candidate graph (high clustering = duplicate
+    CLUSTERS, sparse wedges = pairwise-only noise), which predicts
+    connected-component explosion before running CC.
 
     Plan shape: triangles enumerate via two hash joins of the
     ordered edge list with itself — (a<b) x (b<c) wedges closed by an
@@ -512,31 +409,25 @@ def triangle_stats(
     census remains oracle-checkable; the cap bounds per-node wedge
     work at cap^2 regardless of data size — the knob that keeps the
     census linear at 100 TB."""
-    e = edges.select("id_a", "id_b")
-    if not assume_distinct:
-        e = e.distinct()
-    e = e.persist()
-    if max_degree is not None:
-        deg0 = (
+    e = _edges(edges, assume_distinct).persist()
+
+    def degrees(e: DataFrame) -> DataFrame:
+        return (
             e.select(F.col("id_a").alias("v"))
             .unionByName(e.select(F.col("id_b").alias("v")))
             .groupBy("v")
             .agg(F.count(F.lit(1)).alias("d"))
         )
-        keep = deg0.filter(F.col("d") <= max_degree).select("v")
+
+    if max_degree is not None:
+        keep = degrees(e).filter(F.col("d") <= max_degree).select("v")
         e = (
             e.join(keep.select(F.col("v").alias("id_a")), "id_a", "left_semi")
             .join(keep.select(F.col("v").alias("id_b")), "id_b", "left_semi")
             .select("id_a", "id_b")
             .persist()
         )
-    deg = (
-        e.select(F.col("id_a").alias("v"))
-        .unionByName(e.select(F.col("id_b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    wedges = deg.agg(
+    wedges = degrees(e).agg(
         F.sum(F.col("d") * (F.col("d") - 1) / 2).cast("long").alias("w")
     )
     ab = e.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
@@ -585,11 +476,11 @@ def pagerank_undirected(
     round_digits: int = 9,
     assume_distinct: bool = False,
 ) -> DataFrame:
-    """Fixed-iteration PageRank on an undirected graph given as
-    (id_a < id_b) edges — the iterative-algorithm shape (BSP rounds as
-    unrolled declarative stages, zero driver actions inside the loop;
-    Catalyst sees one plan with ``iters`` join+agg levels and AQE
-    re-plans each exchange at runtime).
+    """Fixed-iteration PageRank on an undirected (id_a, id_b) edge
+    list (normalized by :func:`_edges`) — the iterative-algorithm
+    shape (BSP rounds as unrolled declarative stages, zero driver
+    actions inside the loop; Catalyst sees one plan with ``iters``
+    join+agg levels and AQE re-plans each exchange at runtime).
 
     Cross-engine determinism: every rank is ROUNDED (default 9
     digits) after each iteration — per-node contribution sums carry
@@ -600,33 +491,15 @@ def pagerank_undirected(
     start; Σpr stays 1 up to rounding because every node here has
     degree >= 1 (it comes from an edge list — no dangling mass).
 
-    Round-10 build rework (the r9 verdict's exact-wall item; measured
-    151 -> 35 s at native sf1, 200.8M pairs): profiling showed the
-    adjacency BUILD was ~65% of the wall (99 of 151 s), not the BSP
-    rounds — three build costs were removable. (1) ``assume_distinct``
-    skips the safety ``distinct()`` (one full pair-stream shuffle)
-    when the edge source guarantees uniqueness, as
-    ``dedup.minhash_lsh_pairs`` does by its first-colliding-band
-    construction. (2) ``deg`` no longer joins back onto the
-    edge-sized stream: the cached adjacency stays a NARROW (src, dst)
-    pair and per-round contributions attach deg on the NODE-sized
-    side (deg ⋈ pr, then one edge-sized join) — removing a 2x-edges
-    shuffle+sort from the build and a third of the cache bytes.
-    (3) The adjacency caches PRE-PARTITIONED on the join key and each
-    round's edge join takes a shuffle-hash hint (scale-safe — the
-    build side is the node-sized rank table, never broadcast), so no
-    round re-sorts or re-shuffles the edge stream. Both the adjacency
-    and node-sized deg persist; caller owns both lifetimes (the
-    returned plan is lazy over them — module cache contract)."""
-    e = edges.select("id_a", "id_b")
-    if not assume_distinct:
-        e = e.distinct()
-    both = e.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).unionByName(
-        e.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-    )
-    adj = both.repartition("src").persist()
+    Build: the adjacency caches as a NARROW (src, dst) pair
+    PRE-PARTITIONED on src, and the node-sized degree table caches
+    beside it; each round attaches deg on the node-sized side (deg ⋈
+    pr, then one edge-sized join with a shuffle-hash hint whose build
+    side is the node-sized rank table, never broadcast), so no round
+    re-sorts or re-shuffles the edge stream. The caller owns both
+    caches (the returned plan is lazy over them — module cache
+    contract)."""
+    adj = _symmetric(_edges(edges, assume_distinct)).repartition("src").persist()
     # node-sized; computed off the cached adjacency (one scan), then
     # cached itself so the per-round deg ⋈ pr join never re-aggregates
     deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
@@ -659,51 +532,31 @@ def label_propagation(
     edges: DataFrame, iters: int = 3, assume_distinct: bool = False
 ) -> DataFrame:
     """Semi-synchronous label propagation (community detection) on an
-    undirected edge list, in either orientation (with
-    ``assume_distinct`` each edge must appear once, oriented
-    id_a < id_b): labels initialize to node ids;
-    each round every node adopts the most frequent label among its
-    neighbors, ties broken by the smallest label — fully deterministic,
-    so the ``iters``-level unrolled SQL oracle reproduces it exactly.
-    Same execution contract as :func:`pagerank_undirected`, including
-    its round-10 build rework (measured 246 -> ~40 s at native sf1):
-    ``assume_distinct`` skips the pair-stream safety ``distinct()``
-    for sources that guarantee uniqueness (minhash_lsh_pairs does);
-    the adjacency caches narrow and PRE-PARTITIONED on the join key;
-    each BSP round is one shuffle-hash edge join (build side = the
+    undirected (id_a, id_b) edge list (normalized by
+    :func:`_edges`): labels initialize to node ids; each round every
+    node adopts the most frequent label among its neighbors, ties
+    broken by the smallest label — fully deterministic, so the
+    ``iters``-level unrolled SQL oracle reproduces it exactly.
+    ``iters <= 0`` returns the identity labels.
+
+    Same execution contract as :func:`pagerank_undirected`: the
+    adjacency caches narrow and PRE-PARTITIONED on the join key; each
+    BSP round is one shuffle-hash edge join (build side = the
     node-sized label table, never the edges) + one keyed count + one
-    per-node ARGMAX AGGREGATION — max(struct(c, -label)) replaces the
-    former row_number window, so the round needs no per-partition
-    sort and combines map-side (identical vote/tie rules: most votes,
+    per-node ARGMAX AGGREGATION — max(struct(c, -label)), which
+    combines map-side and needs no per-partition sort (most votes,
     then smallest label; labels are ids >= 0, so the negation is
     exact). Zero driver actions inside the loop; the caller owns the
     adjacency cache (module contract)."""
-    e = edges.select("id_a", "id_b")
-    if not assume_distinct:
-        # orient each edge before dedup: (a, b) and (b, a) are one
-        # undirected edge and must cast one vote each way, not two
-        e = e.select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-        ).distinct()
+    e = _edges(edges, assume_distinct)
     if iters <= 0:
-        # identity labels — the pre-round-11 iters=0 behavior, which
-        # the round-1 fold would otherwise silently absorb into one
-        # propagation round (range(iters - 1) is empty for iters <= 1)
         nodes = (
             e.select(F.col("id_a").alias("v"))
             .unionByName(e.select(F.col("id_b").alias("v")))
             .distinct()
         )
         return nodes.select("v", F.col("v").alias("label"))
-    adj = (
-        e.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            e.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .repartition("src")
-        .persist()
-    )
+    adj = _symmetric(e).repartition("src").persist()
 
     def _argmax(votes: DataFrame) -> DataFrame:
         return (
@@ -718,27 +571,13 @@ def label_propagation(
             .select("v", (-F.col("m.nl")).alias("label"))
         )
 
-    # ROUND 1 FOLDED (round 11): labels initialize to node ids, so the
-    # first round's vote stream IS the adjacency itself (neighbor's
-    # label == neighbor's id) — no node-extraction distinct() and no
-    # edge-sized join for round 1; coverage is identical because every
-    # node appears as dst of the symmetric adjacency. Saves one full
-    # adjacency scan + one edge join per run (~15% of the sf1 wall).
-    #
-    # ROUND 1 DEGENERATE ARGMAX (round 13, guide §1.2 "the
-    # distributed algorithm" + §2.3 aggregate-before-shuffle): in
-    # round 1 every vote a node receives is DISTINCT (its neighbors'
-    # ids — the edge list is distinct pairs), so every label has
-    # count 1 and the most-frequent-then-smallest rule collapses to
-    # plain min(neighbor id). The generic argmax paid the worst-case
-    # round for nothing: with all-distinct votes the per-(v, label)
-    # count reduces NOTHING map-side, ships the full edge-sized
-    # stream, and the struct-max (not hash-aggregable — struct agg
-    # buffers are not mutable) SORTS it twice in SortAggregates.
-    # min() is a plain hash aggregate with effective partial
-    # reduction (node-sized after the map side). Identical labels by
-    # the vote rule itself; the unrolled SQL oracle — which keeps the
-    # full argmax for round 1 — hash-matches (checked this round).
+    # the first round reads the adjacency alone: labels start as node
+    # ids, so a node's votes are its neighbours' ids, each cast once
+    # (the edge list is distinct), and most-frequent-then-smallest
+    # reduces to min(neighbour id) — a plain hash aggregate that
+    # combines map-side, where the generic argmax would ship and sort
+    # the edge-sized vote stream. Every node is some edge's dst, so
+    # coverage is the same.
     labels = adj.groupBy(F.col("dst").alias("v")).agg(
         F.min("src").alias("label")
     )
@@ -775,18 +614,19 @@ def kcore_membership(
 ) -> DataFrame:
     """Fixed-round k-core peeling (Seidman 1983's degeneracy cores,
     run as ``rounds`` synchronous Matula–Beck peel sweeps) on an
-    undirected (id_a, id_b) edge list: every sweep deletes ALL nodes
-    whose remaining degree is < ``k`` at once, so after R sweeps
-    exactly the nodes whose peel depth exceeds R survive. On near-dup
-    candidate graphs (unions of near-cliques from banded LSH) peeling
-    converges in 1–2 sweeps — the loosely-attached bridge documents
-    fall out and the dense template cores remain, which is the graph
-    signal that separates "shares one hash band by luck" from "lives
-    in a boilerplate clique". Adversarial chains peel one layer per
-    sweep; ``rounds`` caps that (a path needs ~n/2 sweeps to empty),
-    and because the sweep schedule is part of the operator's contract,
-    the ``rounds``-level unrolled SQL oracle reproduces the exact
-    output even when peeling has not converged.
+    undirected (id_a, id_b) edge list (normalized by :func:`_edges`):
+    every sweep deletes ALL nodes whose remaining degree is < ``k`` at
+    once, so after R sweeps exactly the nodes whose peel depth exceeds
+    R survive. On near-dup candidate graphs (unions of near-cliques
+    from banded LSH) peeling converges in 1–2 sweeps — the
+    loosely-attached bridge documents fall out and the dense template
+    cores remain, which is the graph signal that separates "shares one
+    hash band by luck" from "lives in a boilerplate clique".
+    Adversarial chains peel one layer per sweep; ``rounds`` caps that
+    (a path needs ~n/2 sweeps to empty), and because the sweep
+    schedule is part of the operator's contract, the ``rounds``-level
+    unrolled SQL oracle reproduces the exact output even when peeling
+    has not converged.
 
     Returns (node, core_deg): survivors of the R-th sweep with their
     degree inside the surviving subgraph (core_deg >= k iff another
@@ -804,31 +644,18 @@ def kcore_membership(
     """
     if k < 1 or rounds < 1:
         raise ValueError("k and rounds must be >= 1")
-    e = edges.select("id_a", "id_b")
-    if not assume_distinct:
-        e = e.distinct()
-    adj = (
-        e.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            e.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .persist()
-    )
-    # Round-9 structure: the frontier is always ADJ MINUS A CUMULATIVE
-    # REMOVED SET, never a chain of per-sweep frames. A chained
-    # frontier references the previous sweep three times (directly,
-    # and twice through `removed`), so its logical plan grows
-    # 3^sweeps references to the upstream pair pipeline — four sweeps
-    # over the capped-LSH plan overflowed the driver heap just
-    # RENDERING the tree — and checkpointing the 400M-row frontier
-    # instead pinned unEVICTABLE storage that starved execution
-    # memory at native sf1. Here the only checkpoint is the CUMULATIVE
-    # REMOVED SET — whisker nodes, a small fraction of the graph —
-    # truncated per sweep (eager, tiny job), while each sweep's
-    # frontier re-derives from the ONE persisted adjacency via two
-    # anti-joins against that small (AQE-broadcast) set: plan growth
-    # is linear in sweeps, storage is one evictable recomputable
-    # cache plus one small leaf.
+    adj = _symmetric(_edges(edges, assume_distinct)).persist()
+    # The frontier is always ADJ MINUS A CUMULATIVE REMOVED SET, never
+    # a chain of per-sweep frames: a chained frontier references the
+    # previous sweep three times (directly, and twice through
+    # `removed`), so its plan grows 3^sweeps references to the
+    # upstream pair pipeline, and checkpointing the edge-sized
+    # frontier instead pins unevictable storage. The only checkpoint
+    # is the cumulative removed set — whisker nodes, a small fraction
+    # of the graph — truncated per sweep (eager, tiny job), while each
+    # sweep's frontier re-derives from the ONE persisted adjacency via
+    # two anti-joins: plan growth is linear in sweeps, storage is one
+    # evictable recomputable cache plus one small leaf.
     cur = adj
     removed_cum = None
     prev_cum = None

@@ -60,13 +60,3 @@ def has_whole_stage_codegen(df: DataFrame) -> bool:
     print as ``*(n)`` stage markers)."""
     plan = final_plan(df)
     return "WholeStageCodegen" in plan or re.search(r"\*\(\d+\)", plan) is not None
-
-
-def scan_summary(df: DataFrame) -> dict:
-    return {
-        "pushed_filters": pushed_filters(df),
-        "read_schemas": read_schemas(df),
-        "exchanges": count_exchanges(df),
-        "broadcast_joins": count_broadcast_joins(df),
-        "whole_stage_codegen": has_whole_stage_codegen(df),
-    }

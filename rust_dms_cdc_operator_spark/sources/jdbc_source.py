@@ -25,7 +25,11 @@ from rust_dms_cdc_operator_spark.sources.catalog import (
     get_primary_key,
     get_tables_in_schema,
 )
-from rust_dms_cdc_operator_spark.validate import FUSED_TABLES, TableReport, validate
+from rust_dms_cdc_operator_spark.validate import (
+    TableReport,
+    fused_group_size,
+    validate,
+)
 
 
 def partition_bounds_sql(schema: str, table: str, column: str) -> str:
@@ -117,22 +121,15 @@ def catalog_validate(
     # the reference sizes its connection pool from the payload's
     # max_connections (postgres_config.rs:54-82). validate() scans the
     # tables of one fused group in one plan, so their range scans share
-    # that pool: a group holds at most max_connections tables, and each
-    # table's scan fan-out is its share of the pool
-    names = sorted(pks)
-    group = max(1, min(FUSED_TABLES, payload.max_connections, len(names)))
+    # that pool: each table's scan fan-out is its share of the pool
+    group = fused_group_size(payload, len(pks))
     num_partitions = max(1, min(num_partitions, payload.max_connections // group))
-    out: dict[str, TableReport] = {}
-    for i in range(0, len(names), group):
-        tables = {
-            t: (
-                read_table_partitioned(
-                    spark, url, schema, t, pks[t], props, num_partitions
-                ),
-                targets[t],
-                pks[t],
-            )
-            for t in names[i : i + group]
-        }
-        out.update(validate(spark, payload, tables))
-    return out
+    tables = {
+        t: (
+            read_table_partitioned(spark, url, schema, t, pk, props, num_partitions),
+            targets[t],
+            pk,
+        )
+        for t, pk in pks.items()
+    }
+    return validate(spark, payload, tables)

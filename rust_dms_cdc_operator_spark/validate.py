@@ -153,21 +153,30 @@ def validate(
 ) -> dict[str, TableReport]:
     """Validate every table: name → (source_df, target_df, pk_cols).
     Table include/exclude follows the payload (V4). Tables run in
-    fused groups of ``FUSED_TABLES``, in name order."""
+    fused groups of :func:`fused_group_size`, in name order."""
     names = sorted(tables)
     if payload.included_tables:
         names = [t for t in names if t in set(payload.included_tables)]
     elif payload.excluded_tables:
         names = [t for t in names if t not in set(payload.excluded_tables)]
+    width = fused_group_size(payload, len(names))
     out: dict[str, TableReport] = {}
-    for i in range(0, len(names), FUSED_TABLES):
-        group = [(n, *tables[n]) for n in names[i : i + FUSED_TABLES]]
+    for i in range(0, len(names), width):
+        group = [(n, *tables[n]) for n in names[i : i + width]]
         out.update(
             _validate_tables(
                 group, payload.chunk_size, payload.start_position, MAX_REPORTED_CHUNKS
             )
         )
     return out
+
+
+def fused_group_size(payload: CdcValidatePayload, n_tables: int) -> int:
+    """Tables per fused validate plan: ``FUSED_TABLES``, at most the
+    payload's ``max_connections`` (one plan scans all its tables'
+    sources at once, so JDBC range scans of a group share one
+    connection pool) and at most ``n_tables``."""
+    return max(1, min(FUSED_TABLES, payload.max_connections, n_tables))
 
 
 def drill_down(

@@ -8,6 +8,10 @@ from pyspark.sql import functions as F
 from rust_dms_cdc_operator_spark.operators.graph import (
     connected_components,
     dedup_groups,
+    kcore_membership,
+    label_propagation,
+    pagerank_undirected,
+    triangle_stats,
 )
 
 
@@ -78,18 +82,21 @@ def test_dedup_groups_column_contract(spark):
     assert rows == {(3, 3), (7, 3), (9, 3)}
 
 
-def test_cc_reliable_checkpoint_path(spark, tmp_path):
+def test_cc_reliable_checkpoint_path(spark, tmp_path, monkeypatch):
     """checkpoint_dir routes every lineage cut through reliable
     checkpoint() — the executor-loss-safe mode for multi-hour runs.
     Same answers as the localCheckpoint default, including through the
-    distributed-recursion branch (driver_threshold=2 forces it), and
-    the checkpoint dir is actually used."""
+    distributed-recursion branch (a driver threshold of 2 forces it),
+    and the checkpoint dir is actually used."""
     import os
+
+    from rust_dms_cdc_operator_spark.operators import graph
 
     ckdir = str(tmp_path / "ck")
     chain = [(i, i + 1) for i in range(60)]
-    got = _cc(spark, chain, max_iter=12, checkpoint_dir=ckdir,
-              driver_threshold=2)
+    monkeypatch.setattr(graph, "DRIVER_UF_THRESHOLD", 2)
+    got = _cc(spark, chain, max_iter=12, checkpoint_dir=ckdir)
+    monkeypatch.undo()
     assert set(got.values()) == {0} and len(got) == 61
     # reliable checkpoints wrote RDD files under the requested dir
     found = [f for root, _d, fs in os.walk(ckdir) for f in fs]
@@ -203,32 +210,76 @@ def test_label_propagation_matches_python_replay(spark):
     assert got == labels
 
 
-def test_label_propagation_ignores_edge_orientation(spark):
+@pytest.mark.parametrize(
+    "rows_of",
+    [
+        pytest.param(
+            lambda df: {r.node: r.comp for r in connected_components(df).collect()},
+            id="connected_components",
+        ),
+        pytest.param(
+            lambda df: {r.v: r.label for r in label_propagation(df).collect()},
+            id="label_propagation",
+        ),
+        pytest.param(
+            lambda df: {r.v: r.pr for r in pagerank_undirected(df).collect()},
+            id="pagerank_undirected",
+        ),
+        pytest.param(
+            lambda df: {r.node: r.core_deg for r in kcore_membership(df).collect()},
+            id="kcore_membership",
+        ),
+        pytest.param(
+            lambda df: triangle_stats(df).collect(), id="triangle_stats"
+        ),
+    ],
+)
+def test_graph_operators_ignore_edge_orientation(spark, rows_of):
     """An undirected edge listed both ways, (a, b) and (b, a), is one
-    edge: the labels equal those of the oriented input, and so do the
-    labels of a fully reversed input."""
-    from rust_dms_cdc_operator_spark.operators.graph import (
-        label_propagation,
-    )
-
+    edge: every graph operator returns the rows of the oriented input,
+    and so it does for a fully reversed input."""
     edges = [(1, 2), (1, 3), (2, 3), (4, 5), (4, 6), (5, 6), (3, 4),
              (7, 8), (8, 9)]
 
-    def labels(rows):
-        df = spark.createDataFrame(rows, "id_a long, id_b long")
-        return {r.v: r.label for r in label_propagation(df, iters=3).collect()}
+    def rows(edge_list):
+        return rows_of(spark.createDataFrame(edge_list, "id_a long, id_b long"))
 
-    want = labels(edges)
-    assert labels(edges + [(4, 3), (2, 1), (9, 8)]) == want
-    assert labels([(b, a) for a, b in edges]) == want
+    want = rows(edges)
+    assert rows(edges + [(4, 3), (2, 1), (9, 8)]) == want
+    assert rows([(b, a) for a, b in edges]) == want
 
 
-def test_cc_schema_identical_across_paths(spark):
+def test_cc_job_counts(spark, monkeypatch):
+    """Jobs of one connected_components call (build + collect) on a
+    41-node chain plus two small components: the driver path is one
+    count and one collect; the contracting path (threshold 0 or 2)
+    recurses until the contracted graph is empty, one edge count per
+    level."""
+    from tests.cdc_fixtures import group_job_ids
+
+    from rust_dms_cdc_operator_spark.operators import graph
+
+    edges = [(i, i + 1) for i in range(40)]
+    edges += [(100, 101), (101, 102), (200, 201)]
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    want = {i: 0 for i in range(41)}
+    want.update({100: 100, 101: 100, 102: 100, 200: 200, 201: 200})
+    sc = spark.sparkContext
+    for threshold, bound in [(graph.DRIVER_UF_THRESHOLD, 4), (0, 181), (2, 181)]:
+        monkeypatch.setattr(graph, "DRIVER_UF_THRESHOLD", threshold)
+        with group_job_ids(sc, f"test_cc_job_counts_{threshold}") as jobs:
+            got = {r.node: r.comp for r in connected_components(df).collect()}
+        assert got == want, threshold
+        assert len(jobs) <= bound, (threshold, len(jobs))
+
+
+def test_cc_schema_identical_across_paths(spark, monkeypatch):
     """Which path the edge count selects (driver union-find fast path
     vs distributed contraction) must never be observable: the output
     schema derives from the INPUT edge column type on both paths —
-    long, int, and string node ids all round-trip (ADVICE r6: the fast
-    path used to hardcode `node long, comp long`)."""
+    long, int, and string node ids all round-trip."""
+    from rust_dms_cdc_operator_spark.operators import graph
+
     for ddl, edges, want in [
         ("id_a long, id_b long", [(2, 1), (3, 2)], {1: 1, 2: 1, 3: 1}),
         ("id_a int, id_b int", [(2, 1), (3, 2)], {1: 1, 2: 1, 3: 1}),
@@ -240,7 +291,9 @@ def test_cc_schema_identical_across_paths(spark):
     ]:
         df = spark.createDataFrame(edges, ddl)
         fast = connected_components(df)  # 2-3 edges → driver path
-        slow = connected_components(df, driver_threshold=0)  # forced
+        monkeypatch.setattr(graph, "DRIVER_UF_THRESHOLD", 0)
+        slow = connected_components(df)  # forced contraction
+        monkeypatch.undo()
         assert fast.schema == slow.schema
         in_type = df.schema["id_a"].dataType
         assert [f.dataType for f in fast.schema.fields] == [in_type] * 2

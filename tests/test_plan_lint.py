@@ -235,8 +235,9 @@ PERSIST_CALLER_OWNED = {
     "operators/dedup.py:_ranked_shingles": 1,        # ranked tokens
     "operators/dedup.py:sorted_neighborhood_pairs": 1,  # sorted keys
     "operators/dedup.py:hamming_pairs_from_signatures": 1,  # sig table
-    "operators/graph.py:_make_ckpt": 1,  # factory; freed by
-    # _free_local_checkpoint at the consumer (kcore peel)
+    "operators/graph.py:_make_ckpt": 1,  # factory; connected
+    # components is its only user and returns plans over its label
+    # checkpoints (k-core calls localCheckpoint itself)
     "operators/graph.py:triangle_stats": 2,          # edges + adjacency
     "operators/graph.py:pagerank_undirected": 2,     # adjacency + deg
     # (r10 build rework: deg is node-sized, joined per round)
