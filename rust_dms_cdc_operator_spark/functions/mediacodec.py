@@ -56,16 +56,14 @@ def _result(**kw) -> dict:
     return out
 
 
-def parse_ppm(payload: bytes) -> dict:
-    """netpbm header: magic, whitespace/comment-separated width height
-    [maxval]. Channels: 3 for pixmaps (P3/P6), 1 for graymaps."""
-    magic = payload[:2].decode("ascii", "replace")
-    if magic not in ("P2", "P3", "P5", "P6"):
-        raise UnknownMediaError(f"not a netpbm header: {magic!r}")
-    # tokenize the header region only (comments run # → end of line)
+def _netpbm_tokens(payload: bytes, start: int) -> tuple[list[int], int]:
+    """The three numeric header tokens (width, height, maxval) after
+    the magic at ``start``, and the offset just past the last one.
+    Tokens are whitespace-separated; comments run # → end of line;
+    only the 512-byte header region is read."""
     toks: list[int] = []
-    i = 2
-    while len(toks) < 3 and i < min(len(payload), 512):
+    i = start + 2
+    while len(toks) < 3 and i < min(len(payload), start + 512):
         c = payload[i]
         if c == ord("#"):
             nl = payload.find(b"\n", i)
@@ -82,6 +80,16 @@ def parse_ppm(payload: bytes) -> dict:
             i = j
     if len(toks) < 3:
         raise ValueError("truncated netpbm header")
+    return toks, i
+
+
+def parse_ppm(payload: bytes) -> dict:
+    """netpbm header: magic, whitespace/comment-separated width height
+    [maxval]. Channels: 3 for pixmaps (P3/P6), 1 for graymaps."""
+    magic = payload[:2].decode("ascii", "replace")
+    if magic not in ("P2", "P3", "P5", "P6"):
+        raise UnknownMediaError(f"not a netpbm header: {magic!r}")
+    toks, _ = _netpbm_tokens(payload, 0)
     return _result(
         codec="ppm" if magic in ("P3", "P6") else "pgm",
         width=toks[0],
@@ -103,24 +111,8 @@ def _netpbm_header(
         raise UnknownMediaError(
             f"not a binary netpbm header: {magic!r} (P2/P3 are ASCII)"
         )
-    toks: list[int] = []
-    i = start + 2
-    while len(toks) < 3 and i < min(len(payload), start + 512):
-        c = payload[i]
-        if c == ord("#"):
-            nl = payload.find(b"\n", i)
-            i = len(payload) if nl < 0 else nl + 1
-        elif c in b" \t\r\n":
-            i += 1
-        else:
-            j = i
-            while j < len(payload) and payload[j] in b"0123456789":
-                j += 1
-            if j == i:
-                raise ValueError(f"bad netpbm header byte at {i}")
-            toks.append(int(payload[i:j]))
-            i = j
-    if len(toks) < 3 or i >= len(payload):
+    toks, i = _netpbm_tokens(payload, start)
+    if i >= len(payload):
         raise ValueError("truncated netpbm header")
     if payload[i] not in b" \t\r\n":
         raise ValueError("missing whitespace before netpbm raster")

@@ -4,10 +4,10 @@ Media are opaque ``binary`` columns with a typed metadata struct; the
 compute pattern is Arrow-batched ``mapInPandas`` so decode libraries
 see contiguous byte buffers, never row-at-a-time Python. Header-level
 decode is REAL for netpbm/PNG/JPEG/BMP/GIF/TIFF/WebP/WAV/MP3 via the
-stdlib codecs in :mod:`.mediacodec` (``real_decode`` /
-``decode_media_features``), and pixel-level resize is REAL for raw
-binary netpbm (``mediacodec.resize_netpbm`` — nearest-neighbor over
-the uncompressed sample grid). Compressed-format pixel transforms and
+stdlib codecs in :mod:`.mediacodec` (``decode_media_features``), and
+pixel-level resize is REAL for raw binary netpbm
+(``mediacodec.resize_netpbm`` — nearest-neighbor over the
+uncompressed sample grid). Compressed-format pixel transforms and
 frame extraction, which need a codec library, remain stubbed behind
 deterministic fakes, with the Spark-side plumbing (schema, batch
 shape, partitioning) real and tested either way.
@@ -20,13 +20,21 @@ content-size bucket when payloads are skewed.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
+from operator import itemgetter
 from struct import error as struct_error
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from rust_dms_cdc_operator_spark.functions import mediacodec
+from rust_dms_cdc_operator_spark.session import _pandas_frame
+
+#: what a codec raises on a payload it cannot decode; the operators
+#: absorb exactly these (a poison-pill row must not kill the job)
+_CODEC_ERRORS = (NotImplementedError, ValueError, struct_error)
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -62,17 +70,58 @@ def with_media_columns(
     )
 
 
-def real_decode(payload: bytes) -> dict:
-    """The integration point for an actual decoder, wired to the
-    stdlib header codecs in
-    :mod:`rust_dms_cdc_operator_spark.functions.mediacodec`. Raises
-    ``mediacodec.UnknownMediaError`` (a ``NotImplementedError``) for
-    magics none of them covers."""
-    from rust_dms_cdc_operator_spark.functions import (  # noqa: PLC0415
-        mediacodec,
-    )
+def _per_payload(
+    media: DataFrame,
+    schema: T.StructType,
+    rows_of: Callable[[bytes], Iterable[tuple]],
+) -> DataFrame:
+    """The Arrow batch loop of the exploding operators: each non-NULL
+    payload contributes the rows ``rows_of(payload)`` — tuples of
+    ``schema``'s fields after ``media_id`` — prefixed by its
+    ``media_id``. ``rows_of`` runs to a full list inside the ``try``,
+    so a payload whose codec raises a :data:`_CODEC_ERRORS` error
+    contributes no rows, never a partial set. Integer columns stay
+    nullable through the batch (see ``session._pandas_frame``)."""
 
-    return mediacodec.decode(payload)
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows: list[tuple] = []
+            for mid, p in zip(pdf["media_id"], pdf["payload"]):
+                if p is None:
+                    continue
+                try:
+                    got = list(rows_of(p))
+                except _CODEC_ERRORS:
+                    continue
+                rows.extend((int(mid), *r) for r in got)
+            yield _pandas_frame(rows, schema)
+
+    return media.mapInPandas(batches, schema)
+
+
+def _rewrite_payloads(
+    media: DataFrame, one: Callable[[bytes | None], bytes | None]
+) -> DataFrame:
+    """The Arrow batch loop of the payload-rewrite operators: same
+    (media_id, payload, meta) contract in and out, each payload
+    replaced by ``one(payload)`` and ``meta.n_bytes`` recomputed. The
+    codec call is inherently per-item (a real decoder takes one blob at
+    a time); everything around it is column-vectorized."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = pdf.copy()
+            out["payload"] = pdf["payload"].map(one)
+            kinds = pd.DataFrame(
+                [m or {} for m in pdf["meta"]], index=pdf.index
+            ).get("kind")
+            n_bytes = out["payload"].str.len().fillna(0).astype("int64")
+            out["meta"] = pd.DataFrame(
+                {"kind": kinds, "n_bytes": n_bytes}, index=pdf.index
+            ).to_dict("records")
+            yield out
+
+    return media.mapInPandas(batches, MEDIA_SCHEMA)
 
 
 DECODED_SCHEMA = T.StructType(
@@ -104,37 +153,24 @@ def decode_media_features(media: DataFrame) -> DataFrame:
     fact of life in a 100 TB media table — poison-pill rows must not
     kill the job)."""
 
+    names = DECODED_SCHEMA.fieldNames()[1:]
+
+    def one(p) -> tuple:
+        try:
+            decoded = mediacodec.decode(p)
+        except _CODEC_ERRORS:
+            decoded = {}
+        return tuple(map(decoded.get, names))
+
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rust_dms_cdc_operator_spark.functions import (  # noqa: PLC0415
-            mediacodec,
-        )
-
-        def one(p) -> dict:
-            try:
-                return mediacodec.decode(p)
-            except (NotImplementedError, ValueError, struct_error):
-                return {}
-
         for pdf in it:
-            decoded = [one(p) for p in pdf["payload"]]
-            out = pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "codec": [d.get("codec") for d in decoded],
-                }
+            yield _pandas_frame(
+                [
+                    (int(mid), *one(p))
+                    for mid, p in zip(pdf["media_id"], pdf["payload"])
+                ],
+                DECODED_SCHEMA,
             )
-            for col, dtype in (
-                ("width", "Int32"),
-                ("height", "Int32"),
-                ("channels", "Int32"),
-                ("sample_rate_hz", "Int32"),
-                ("n_samples", "Int64"),
-                ("duration_ms", "Int64"),
-            ):
-                out[col] = pd.array(
-                    [d.get(col) for d in decoded], dtype=dtype
-                )
-            yield out
 
     return media.mapInPandas(batches, DECODED_SCHEMA)
 
@@ -196,35 +232,15 @@ def resize_media(media: DataFrame, width: int, height: int) -> DataFrame:
     until a PIL/libvips call replaces it — the batch shape, schema,
     and partitioning stay identical either way."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rust_dms_cdc_operator_spark.functions import (  # noqa: PLC0415
-            mediacodec,
-        )
+    def one(p) -> bytes:
+        if p is not None and p[:1] == b"P" and p[1:2] in (b"5", b"6"):
+            try:
+                return mediacodec.resize_netpbm(p, width, height)
+            except (NotImplementedError, ValueError):
+                pass  # malformed netpbm: stub keeps the row alive
+        return _stub_resize(p, width, height)
 
-        def one(p) -> bytes:
-            if p is not None and p[:1] == b"P" and p[1:2] in (b"5", b"6"):
-                try:
-                    return mediacodec.resize_netpbm(p, width, height)
-                except (NotImplementedError, ValueError):
-                    pass  # malformed netpbm: stub keeps the row alive
-            return _stub_resize(p, width, height)
-
-        for pdf in it:
-            out = pdf.copy()
-            # the codec call is inherently per-item (a real decoder
-            # takes one blob at a time); everything around it is
-            # column-vectorized
-            out["payload"] = pdf["payload"].map(one)
-            kinds = pd.DataFrame(
-                [m or {} for m in pdf["meta"]], index=pdf.index
-            ).get("kind")
-            n_bytes = out["payload"].str.len().fillna(0).astype("int64")
-            out["meta"] = pd.DataFrame(
-                {"kind": kinds, "n_bytes": n_bytes}, index=pdf.index
-            ).to_dict("records")
-            yield out
-
-    return media.mapInPandas(batches, MEDIA_SCHEMA)
+    return _rewrite_payloads(media, one)
 
 
 def resample_audio_media(
@@ -241,32 +257,15 @@ def resample_audio_media(
     rate for filtering). Same (media_id, payload, meta) contract in
     and out, so it pipelines with decode/feature stages."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rust_dms_cdc_operator_spark.functions import (  # noqa: PLC0415
-            mediacodec,
-        )
+    def one(p) -> bytes:
+        if p is not None and p[:4] == b"RIFF" and p[8:12] == b"WAVE":
+            try:
+                return mediacodec.resample_wav(p, rate, mono=mono)
+            except _CODEC_ERRORS:
+                pass
+        return p
 
-        def one(p) -> bytes:
-            if p is not None and p[:4] == b"RIFF" and p[8:12] == b"WAVE":
-                try:
-                    return mediacodec.resample_wav(p, rate, mono=mono)
-                except (NotImplementedError, ValueError, struct_error):
-                    pass
-            return p
-
-        for pdf in it:
-            out = pdf.copy()
-            out["payload"] = pdf["payload"].map(one)
-            kinds = pd.DataFrame(
-                [m or {} for m in pdf["meta"]], index=pdf.index
-            ).get("kind")
-            n_bytes = out["payload"].str.len().fillna(0).astype("int64")
-            out["meta"] = pd.DataFrame(
-                {"kind": kinds, "n_bytes": n_bytes}, index=pdf.index
-            ).to_dict("records")
-            yield out
-
-    return media.mapInPandas(batches, MEDIA_SCHEMA)
+    return _rewrite_payloads(media, one)
 
 
 AUDIO_WINDOWS_SCHEMA = T.StructType(
@@ -293,34 +292,14 @@ def audio_window_features(
     convention of the exploding ops (decode_media_features is the
     place to census undecodables)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rust_dms_cdc_operator_spark.functions import (  # noqa: PLC0415
-            mediacodec,
+    def rows_of(p):
+        return (
+            (w["window_idx"], w["n"], w["rms"], w["zero_crossings"],
+             w["peak"])
+            for w in mediacodec.pcm_window_features(p, window_ms=window_ms)
         )
 
-        for pdf in it:
-            rows: list[tuple] = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p is None:
-                    continue
-                try:
-                    wins = mediacodec.pcm_window_features(
-                        p, window_ms=window_ms
-                    )
-                except (NotImplementedError, ValueError, struct_error):
-                    continue
-                rows.extend(
-                    (int(mid), w["window_idx"], w["n"], w["rms"],
-                     w["zero_crossings"], w["peak"])
-                    for w in wins
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "window_idx", "n_frames", "rms",
-                         "zero_crossings", "peak"],
-            )
-
-    return media.mapInPandas(batches, AUDIO_WINDOWS_SCHEMA)
+    return _per_payload(media, AUDIO_WINDOWS_SCHEMA, rows_of)
 
 
 IMAGE_STATS_SCHEMA = T.StructType(
@@ -342,31 +321,12 @@ def image_channel_stats(media: DataFrame) -> DataFrame:
     contribute no rows, same convention as the other exploding
     ops."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rust_dms_cdc_operator_spark.functions import (  # noqa: PLC0415
-            mediacodec,
-        )
-
-        for pdf in it:
-            rows: list[tuple] = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p is None:
-                    continue
-                try:
-                    stats = mediacodec.netpbm_channel_stats(p)
-                except (NotImplementedError, ValueError, struct_error):
-                    continue
-                rows.extend(
-                    (int(mid), s["channel"], s["mean"], s["min"], s["max"])
-                    for s in stats
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "channel", "mean", "min_val",
-                         "max_val"],
-            )
-
-    return media.mapInPandas(batches, IMAGE_STATS_SCHEMA)
+    pick = itemgetter("channel", "mean", "min", "max")
+    return _per_payload(
+        media,
+        IMAGE_STATS_SCHEMA,
+        lambda p: map(pick, mediacodec.netpbm_channel_stats(p)),
+    )
 
 
 GIF_CENSUS_SCHEMA = T.StructType(
@@ -381,6 +341,12 @@ GIF_CENSUS_SCHEMA = T.StructType(
 )
 
 
+#: the census fields an animated GIF and an APNG share
+_animation = itemgetter(
+    "n_frames", "loop_count", "total_duration_ms", "width", "height"
+)
+
+
 def gif_animation_census(media: DataFrame) -> DataFrame:
     """REAL animated-GIF census (`mediacodec.gif_frame_census` —
     frame count, Netscape loop count, summed frame delays) at
@@ -388,33 +354,11 @@ def gif_animation_census(media: DataFrame) -> DataFrame:
     filter a media-curation pass runs. One row per decodable GIF;
     other payloads contribute no rows (exploding-op convention)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rust_dms_cdc_operator_spark.functions import (  # noqa: PLC0415
-            mediacodec,
-        )
-
-        for pdf in it:
-            rows: list[tuple] = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p is None:
-                    continue
-                try:
-                    c = mediacodec.gif_frame_census(p)
-                except (NotImplementedError, ValueError, struct_error):
-                    continue
-                rows.append(
-                    (int(mid), c["n_frames"], c["loop_count"],
-                     c["total_duration_ms"], c["width"], c["height"])
-                )
-            out = pd.DataFrame(
-                rows,
-                columns=["media_id", "n_frames", "loop_count",
-                         "total_duration_ms", "width", "height"],
-            )
-            out["loop_count"] = out["loop_count"].astype("Int32")
-            yield out
-
-    return media.mapInPandas(batches, GIF_CENSUS_SCHEMA)
+    return _per_payload(
+        media,
+        GIF_CENSUS_SCHEMA,
+        lambda p: [_animation(mediacodec.gif_frame_census(p))],
+    )
 
 
 METADATA_SCHEMA = T.StructType(
@@ -436,37 +380,16 @@ def extract_media_metadata(media: DataFrame) -> DataFrame:
     and pivots without a per-format schema; payloads with no readable
     metadata contribute no rows."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rust_dms_cdc_operator_spark.functions import (  # noqa: PLC0415
-            mediacodec,
-        )
+    def rows_of(p):
+        if p[:2] == b"\xff\xd8":
+            src, tags = "exif", mediacodec.jpeg_exif(p)
+        elif p[:3] == b"ID3":
+            src, tags = "id3", mediacodec.id3v2_tags(p)
+        else:
+            return []
+        return [(src, k, str(v)) for k, v in sorted(tags.items())]
 
-        def extract(p):
-            if p[:2] == b"\xff\xd8":
-                return "exif", mediacodec.jpeg_exif(p)
-            if p[:3] == b"ID3":
-                return "id3", mediacodec.id3v2_tags(p)
-            return None, {}
-
-        for pdf in it:
-            rows: list[tuple] = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p is None:
-                    continue
-                try:
-                    src, tags = extract(p)
-                except (NotImplementedError, ValueError, struct_error):
-                    continue
-                if src:
-                    rows.extend(
-                        (int(mid), src, k, str(v))
-                        for k, v in sorted(tags.items())
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "source", "key", "value"]
-            )
-
-    return media.mapInPandas(batches, METADATA_SCHEMA)
+    return _per_payload(media, METADATA_SCHEMA, rows_of)
 
 
 MULTI_IMAGE_SCHEMA = T.StructType(
@@ -492,46 +415,17 @@ def multi_image_census(media: DataFrame) -> DataFrame:
     header-walk cost. One row per census-able payload; everything
     else contributes no rows (exploding-op convention)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rust_dms_cdc_operator_spark.functions import (  # noqa: PLC0415
-            mediacodec,
-        )
+    def rows_of(p):
+        if p[:6] in (b"GIF87a", b"GIF89a"):
+            return [("gif", *_animation(mediacodec.gif_frame_census(p)))]
+        if p[:8] == mediacodec._PNG_SIG:
+            return [("png", *_animation(mediacodec.png_animation_census(p)))]
+        if p[:4] in (b"II*\x00", b"MM\x00*"):
+            c = mediacodec.tiff_page_census(p)
+            return [("tiff", c["n_pages"], None, 0, c["width"], c["height"])]
+        return []
 
-        def census(p):
-            if p[:6] in (b"GIF87a", b"GIF89a"):
-                c = mediacodec.gif_frame_census(p)
-                return ("gif", c["n_frames"], c["loop_count"],
-                        c["total_duration_ms"], c["width"], c["height"])
-            if p[:8] == mediacodec._PNG_SIG:
-                c = mediacodec.png_animation_census(p)
-                return ("png", c["n_frames"], c["loop_count"],
-                        c["total_duration_ms"], c["width"], c["height"])
-            if p[:4] in (b"II*\x00", b"MM\x00*"):
-                c = mediacodec.tiff_page_census(p)
-                return ("tiff", c["n_pages"], None, 0,
-                        c["width"], c["height"])
-            return None
-
-        for pdf in it:
-            rows: list[tuple] = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p is None:
-                    continue
-                try:
-                    c = census(p)
-                except (NotImplementedError, ValueError, struct_error):
-                    continue
-                if c is not None:
-                    rows.append((int(mid), *c))
-            out = pd.DataFrame(
-                rows,
-                columns=["media_id", "codec", "n_frames", "loop_count",
-                         "total_duration_ms", "width", "height"],
-            )
-            out["loop_count"] = out["loop_count"].astype("Int32")
-            yield out
-
-    return media.mapInPandas(batches, MULTI_IMAGE_SCHEMA)
+    return _per_payload(media, MULTI_IMAGE_SCHEMA, rows_of)
 
 
 FRAMES_SCHEMA = T.StructType(
@@ -556,48 +450,24 @@ def split_media_frames(
     deterministic byte-stride cut of :func:`sample_frames`. Same
     exploding (media_id, frame_idx, frame) shape either way."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rust_dms_cdc_operator_spark.functions import (  # noqa: PLC0415
-            mediacodec,
-        )
-
-        def cut(p) -> list[bytes]:
-            if p[:1] == b"P" and p[1:2] in (b"5", b"6"):
-                try:
-                    return mediacodec.split_netpbm_stream(
-                        p, max_frames=max_frames
-                    )
-                except (NotImplementedError, ValueError):
-                    pass  # corrupt stream: stride keeps the rows alive
-            return [
-                bytes(p[o : o + fallback_stride])
-                for o in range(
-                    0,
-                    min(len(p), max_frames * fallback_stride),
-                    fallback_stride,
+    def cut(p) -> list[bytes]:
+        if p[:1] == b"P" and p[1:2] in (b"5", b"6"):
+            try:
+                return mediacodec.split_netpbm_stream(
+                    p, max_frames=max_frames
                 )
-            ]
-
-        for pdf in it:
-            ids: list[int] = []
-            idxs: list[int] = []
-            frames: list[bytes] = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p is None:
-                    continue
-                cuts = cut(p)
-                ids.extend([int(mid)] * len(cuts))
-                idxs.extend(range(len(cuts)))
-                frames.extend(cuts)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="int64"),
-                    "frame_idx": pd.array(idxs, dtype="int32"),
-                    "frame": frames,
-                }
+            except (NotImplementedError, ValueError):
+                pass  # corrupt stream: stride keeps the rows alive
+        return [
+            bytes(p[o : o + fallback_stride])
+            for o in range(
+                0,
+                min(len(p), max_frames * fallback_stride),
+                fallback_stride,
             )
+        ]
 
-    return media.mapInPandas(batches, FRAMES_SCHEMA)
+    return _per_payload(media, FRAMES_SCHEMA, lambda p: enumerate(cut(p)))
 
 
 def sample_frames(
@@ -669,38 +539,15 @@ def video_container_census(media: DataFrame) -> DataFrame:
     BMFF payload; other payloads contribute no rows (the
     exploding-op convention the GIF census set)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rust_dms_cdc_operator_spark.functions import (  # noqa: PLC0415
-            mediacodec,
-        )
-
-        for pdf in it:
-            rows: list[tuple] = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p is None:
-                    continue
-                try:
-                    c = mediacodec.mp4_box_census(p)
-                except (NotImplementedError, ValueError, struct_error):
-                    continue
-                rows.append(
-                    (int(mid), c["major_brand"], c["n_tracks"],
-                     c["n_video_tracks"], c["n_audio_tracks"],
-                     c["duration_ms"], c["width"], c["height"],
-                     c["mdat_bytes"])
-                )
-            out = pd.DataFrame(
-                rows,
-                columns=["media_id", "major_brand", "n_tracks",
-                         "n_video_tracks", "n_audio_tracks",
-                         "duration_ms", "width", "height",
-                         "mdat_bytes"],
-            )
-            out["width"] = out["width"].astype("Int32")
-            out["height"] = out["height"].astype("Int32")
-            yield out
-
-    return media.mapInPandas(batches, VIDEO_CENSUS_SCHEMA)
+    pick = itemgetter(
+        "major_brand", "n_tracks", "n_video_tracks", "n_audio_tracks",
+        "duration_ms", "width", "height", "mdat_bytes",
+    )
+    return _per_payload(
+        media,
+        VIDEO_CENSUS_SCHEMA,
+        lambda p: [pick(mediacodec.mp4_box_census(p))],
+    )
 
 
 MKV_CENSUS_SCHEMA = T.StructType(
@@ -728,38 +575,15 @@ def mkv_container_census(media: DataFrame) -> DataFrame:
     other payloads contribute no rows (the exploding-op convention
     the GIF census set)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rust_dms_cdc_operator_spark.functions import (  # noqa: PLC0415
-            mediacodec,
-        )
-
-        for pdf in it:
-            rows: list[tuple] = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p is None:
-                    continue
-                try:
-                    c = mediacodec.mkv_census(p)
-                except (NotImplementedError, ValueError, struct_error):
-                    continue
-                rows.append(
-                    (int(mid), c["doc_type"], c["n_tracks"],
-                     c["n_video_tracks"], c["n_audio_tracks"],
-                     c["duration_ms"], c["width"], c["height"],
-                     c["void_bytes"])
-                )
-            out = pd.DataFrame(
-                rows,
-                columns=["media_id", "doc_type", "n_tracks",
-                         "n_video_tracks", "n_audio_tracks",
-                         "duration_ms", "width", "height",
-                         "void_bytes"],
-            )
-            out["width"] = out["width"].astype("Int32")
-            out["height"] = out["height"].astype("Int32")
-            yield out
-
-    return media.mapInPandas(batches, MKV_CENSUS_SCHEMA)
+    pick = itemgetter(
+        "doc_type", "n_tracks", "n_video_tracks", "n_audio_tracks",
+        "duration_ms", "width", "height", "void_bytes",
+    )
+    return _per_payload(
+        media,
+        MKV_CENSUS_SCHEMA,
+        lambda p: [pick(mediacodec.mkv_census(p))],
+    )
 
 
 DHASH_SCHEMA = T.StructType(
@@ -780,21 +604,8 @@ def image_dhash(media: DataFrame) -> DataFrame:
     contribute no rows (poison-pill contract: only the codec
     exception family is absorbed)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rust_dms_cdc_operator_spark.functions import (  # noqa: PLC0415
-            mediacodec,
-        )
+    def rows_of(p):
+        h = mediacodec.dhash64(p)
+        return [(h - (1 << 64) if h >= 1 << 63 else h,)]
 
-        for pdf in it:
-            rows: list[tuple] = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p is None:
-                    continue
-                try:
-                    h = mediacodec.dhash64(p)
-                except (NotImplementedError, ValueError, struct_error):
-                    continue
-                rows.append((int(mid), int(h - (1 << 64) if h >= 1 << 63 else h)))
-            yield pd.DataFrame(rows, columns=["media_id", "dhash"])
-
-    return media.mapInPandas(batches, DHASH_SCHEMA)
+    return _per_payload(media, DHASH_SCHEMA, rows_of)

@@ -157,11 +157,9 @@ def connected_components(
                     T.StructField("comp", node_type, True),
                 ]
             )
-            rows = [(n, find(n)) for n in parent]
-            out = local_relation(spark, rows, schema)
-            # an empty local relation is an RDD the optimizer cannot
-            # see into; limit(0) lets it drop the caller level's join
-            return out if rows else out.limit(0)
+            return local_relation(
+                spark, [(n, find(n)) for n in parent], schema
+            )
         ckpt = _make_ckpt(spark, checkpoint_dir)
         # label = min(self, neighbours): a FOREST whose pointer chains
         # end at local-minimum nodes (comp(r) == r). The symmetric view

@@ -179,40 +179,56 @@ def read_table(spark, data_dir: str, name: str):
 
 
 def local_relation(spark, rows, schema):
-    """Driver rows → DataFrame via pandas/Arrow (round 12, guide §6
-    "Arrow for driver transfers"): ``createDataFrame(list)``
-    parallelizes the rows into ``defaultParallelism`` pickled slices,
-    and EVERY later evaluation of the frame pays one Python-worker
-    round trip per slice — ~0.15 s each, serialized when a consumer
-    (e.g. ``coalesce(1)``) reads them in one task (measured: a
-    4096-row write cost 5-7 s through the list form, 0.3 s through
-    Arrow). The pandas/Arrow form lands as an Arrow-backed local
-    relation evaluated entirely JVM-side.
+    """Driver rows → DataFrame via pandas/Arrow (guide §6 "Arrow for
+    driver transfers"): ``createDataFrame(list)`` parallelizes the rows
+    into ``defaultParallelism`` pickled slices, and EVERY later
+    evaluation of the frame pays one Python-worker round trip per slice
+    — ~0.15 s each, serialized when a consumer (e.g. ``coalesce(1)``)
+    reads them in one task (measured: a 4096-row write cost 5-7 s
+    through the list form, 0.3 s through Arrow). The pandas/Arrow form
+    lands as an Arrow-backed local relation evaluated entirely
+    JVM-side; columns are built by :func:`_pandas_frame`.
 
-    Integer columns are built as pandas NULLABLE integer arrays
-    (round 13, advisor note): a bare ``pd.DataFrame`` silently
-    coerces an int column containing ``None`` to float64 (7 → 7.0,
-    and the Arrow cast back to long can raise or null) — with the
-    masked dtype, nulls stay nulls and values stay exact int64 for
-    any caller, not just the current null-free ones.
-
-    Naive ``datetime`` values of ``TimestampType`` columns are read in
-    the host's time zone, as ``createDataFrame(list)`` and ``collect()``
-    read them; left naive, pandas/Arrow would read them in the session
-    time zone instead, and a key collected on a non-UTC host would name
-    a different instant.
+    No rows build an empty Arrow table, which plans as ``LocalRelation
+    <empty>``: the optimizer sees the frame is empty and prunes the
+    joins and scans above it. (An empty list or pandas frame plans as
+    a ``LogicalRDD`` it cannot see into.)
 
     Private-API note: the string-schema convenience rides
     ``T._parse_datatype_string``, pinned to the vendored pyspark
     (4.1.x); callers that must outlive a pyspark upgrade can pass a
     ``StructType`` directly."""
-    import pandas as pd  # noqa: PLC0415
     from pyspark.sql import types as T  # noqa: PLC0415
 
     if isinstance(schema, str):
         schema = T._parse_datatype_string(schema)
     if not rows:
-        return spark.createDataFrame([], schema)
+        import pyarrow as pa  # noqa: PLC0415
+        from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+
+        empty = pa.Table.from_pylist([], schema=to_arrow_schema(schema))
+        return spark.createDataFrame(empty, schema)
+    return spark.createDataFrame(_pandas_frame(rows, schema), schema)
+
+
+def _pandas_frame(rows, schema):
+    """Row tuples in ``schema`` field order → a pandas frame that Arrow
+    converts to ``schema`` exactly.
+
+    Integer columns are built as pandas NULLABLE integer arrays: a bare
+    ``pd.DataFrame`` coerces an int column containing ``None`` to
+    float64 (7 → 7.0, and the Arrow cast back to long can raise or
+    null); with the masked dtype, nulls stay nulls and values stay
+    exact.
+
+    Naive ``datetime`` values of ``TimestampType`` columns are read in
+    the host's time zone, as ``createDataFrame(list)`` and ``collect()``
+    read them; left naive, pandas/Arrow would read them in the session
+    time zone instead, and a key collected on a non-UTC host would name
+    a different instant."""
+    import pandas as pd  # noqa: PLC0415
+    from pyspark.sql import types as T  # noqa: PLC0415
+
     _pd_int = {
         T.ByteType: "Int8",
         T.ShortType: "Int16",
@@ -231,8 +247,7 @@ def local_relation(spark, rows, schema):
             ]
         dt = _pd_int.get(type(f.dataType))
         data[f.name] = pd.array(vals, dtype=dt) if dt else vals
-    pdf = pd.DataFrame(data, columns=[f.name for f in schema.fields])
-    return spark.createDataFrame(pdf, schema)
+    return pd.DataFrame(data, columns=[f.name for f in schema.fields])
 
 
 def materialize_leaf(df):

@@ -296,7 +296,7 @@ class BucketedParquetState:
                 )
             )
         if not parts:
-            return spark.createDataFrame([], schema)
+            return local_relation(spark, [], schema)
         return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
     def exists(self) -> bool:

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rust_dms_cdc_operator_spark import fsio
+from rust_dms_cdc_operator_spark.session import local_relation
 from rust_dms_cdc_operator_spark.streaming.cdc_stream import (
     BUCKET_COL,
     BucketedParquetState,
@@ -175,8 +176,7 @@ class IncrementalAggView:
             )
         if not vman["agg_buckets"]:
             # state is empty: an empty frame with the result schema
-            empty = spark.createDataFrame([], self._result_schema(spark))
-            return empty
+            return local_relation(spark, [], self._result_schema(spark))
         dirs = [
             fsio.join(self.path, rel)
             for rel in sorted(set(vman["agg_buckets"].values()))

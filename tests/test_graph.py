@@ -301,6 +301,31 @@ def test_cc_schema_identical_across_paths(spark, monkeypatch):
         assert {r.node: r.comp for r in slow.collect()} == want
 
 
+def test_empty_local_relation_is_visible_to_the_optimizer(spark):
+    """An empty driver result plans as an empty ``LocalRelation``, not
+    an RDD scan, so the optimizer prunes a join against it; the
+    connected components of no edges are that empty relation with the
+    ``node``/``comp`` schema."""
+    from pyspark.sql import types as T
+
+    from rust_dms_cdc_operator_spark.session import local_relation
+
+    empty = local_relation(spark, [], "node long, comp long")
+    plan = empty._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in plan and "LocalRelation" in plan, plan
+    joined = spark.range(10).join(empty, F.col("id") == F.col("node"))
+    plan = joined._jdf.queryExecution().optimizedPlan().toString()
+    assert "Range" not in plan and "Join" not in plan, plan
+    assert empty.collect() == []
+
+    cc = connected_components(
+        spark.createDataFrame([], "id_a long, id_b long")
+    )
+    assert cc.schema.fieldNames() == ["node", "comp"]
+    assert [f.dataType for f in cc.schema.fields] == [T.LongType()] * 2
+    assert cc.collect() == []
+
+
 def _kcore_replay(edges, k, rounds):
     """Python replay of the synchronous peel schedule."""
     adj = set()

@@ -2471,39 +2471,48 @@ def test_mediacodec_fuzz_exception_contract():
 def test_multimodal_wrapper_fuzz_poison_pills(spark):
     """Wrapper-level poison-pill gate: the Spark `mapInPandas` wrappers
     themselves (not just the mediacodec entry points they call) must
-    survive any byte sequence. Round 6's entry-point fuzz missed a
+    survive any byte sequence. An entry-point fuzz alone missed a
     wrapper/codec catch-tuple mismatch: resample_audio_media caught
     only (NotImplementedError, ValueError) while resample_wav raises
     struct.error on a truncated fmt chunk — one bad row would have
     killed a whole 100 TB task. This gate pushes a corpus of valid
     payloads, their truncations (every fmt-chunk-relevant cut of a
-    valid WAV included explicitly), and magic-prefixed garbage through
-    EVERY multimodal wrapper and asserts each job completes."""
+    valid WAV included explicitly), bit flips, magic-prefixed garbage
+    and a NULL through EVERY multimodal wrapper. Each job completes,
+    the one-row-per-payload wrappers keep every row, and every
+    exploding wrapper's rows equal a driver-side replay of its
+    mediacodec call over the same corpus: an undecodable payload
+    gives no rows, never a partial set."""
     import random
     import struct
 
+    from rust_dms_cdc_operator_spark.functions import mediacodec as mc
     from rust_dms_cdc_operator_spark.functions import multimodal as mm
 
     wav = _golden_wav()
     fmt_at = wav.index(b"fmt ")
     corpus = [wav[:fmt_at + 8 + k] for k in range(0, 17)]  # fmt-body cuts
+    p6 = b"P6\n2 2\n255\n" + bytes(range(12))
     valid = [
         wav,
-        b"P6\n2 2\n255\n" + bytes(range(12)),
+        p6,
+        p6 + b"P5\n3 1\n255\n" + bytes(3),  # two-frame netpbm stream
         _gif(2, loop=0, delays=[1, 1]),
         _apng(2, 0, [5, 5]),
         _multi_tiff("<", 2),
         _exif_jpeg(),
         _id3_mp3(4),
         _golden_png(),
+        _mp4(),
+        _mkv(),
     ]
     magics = [
         b"P6", b"P5", b"RIFF", b"RIFFxxxxWAVE", b"GIF89a",
         b"\x89PNG\r\n\x1a\n", b"II*\x00", b"MM\x00*", b"\xff\xd8",
-        b"ID3", b"BM", b"",
+        b"ID3", b"BM", b"\x1aE\xdf\xa3", b"\x00\x00\x00\x18ftypisom", b"",
     ]
     rng = random.Random(7)
-    for _ in range(150):
+    for _ in range(200):
         mode = rng.random()
         if mode < 0.4:
             corpus.append(rng.choice(magics) + bytes(
@@ -2524,22 +2533,92 @@ def test_multimodal_wrapper_fuzz_poison_pills(spark):
     ]
     media = spark.createDataFrame(rows, mm.MEDIA_SCHEMA).coalesce(4)
     media.persist()
-    wrappers = [
+
+    one_per_payload = [
         lambda df: mm.decode_media_features(df),
         lambda df: mm.extract_media_features(df),
         lambda df: mm.resize_media(df, 3, 3),
         lambda df: mm.resample_audio_media(df, 16000, mono=True),
-        lambda df: mm.audio_window_features(df, window_ms=10),
-        lambda df: mm.image_channel_stats(df),
-        lambda df: mm.gif_animation_census(df),
-        lambda df: mm.extract_media_metadata(df),
-        lambda df: mm.multi_image_census(df),
-        lambda df: mm.split_media_frames(df, max_frames=3),
-        lambda df: mm.sample_frames(df, every_n_bytes=64),
-        lambda df: mm.video_container_census(df),
     ]
-    for wrap in wrappers:
-        assert wrap(media).count() >= 0  # completing IS the assertion
+    for wrap in one_per_payload:
+        assert wrap(media).count() == len(corpus)
+    assert mm.sample_frames(media, every_n_bytes=64).count() >= 0
+
+    def census(c, *keys):
+        return [tuple(c[k] for k in keys)]
+
+    def metadata(p):
+        if p[:2] == b"\xff\xd8":
+            src, tags = "exif", mc.jpeg_exif(p)
+        elif p[:3] == b"ID3":
+            src, tags = "id3", mc.id3v2_tags(p)
+        else:
+            return []
+        return [(src, k, str(v)) for k, v in sorted(tags.items())]
+
+    anim = ("n_frames", "loop_count", "total_duration_ms", "width", "height")
+
+    def multi_image(p):
+        if p[:6] in (b"GIF87a", b"GIF89a"):
+            return [("gif", *census(mc.gif_frame_census(p), *anim)[0])]
+        if p[:8] == mc._PNG_SIG:
+            return [("png", *census(mc.png_animation_census(p), *anim)[0])]
+        if p[:4] in (b"II*\x00", b"MM\x00*"):
+            c = mc.tiff_page_census(p)
+            return [("tiff", c["n_pages"], None, 0, c["width"], c["height"])]
+        return []
+
+    def frames(p):
+        if p[:1] == b"P" and p[1:2] in (b"5", b"6"):
+            try:
+                return list(enumerate(mc.split_netpbm_stream(p, max_frames=3)))
+            except (NotImplementedError, ValueError):
+                pass
+        cuts = range(0, min(len(p), 3 * 64), 64)  # the stride fallback
+        return [(k, p[o : o + 64]) for k, o in enumerate(cuts)]
+
+    def dhash(p):
+        h = mc.dhash64(p)
+        return [(h - (1 << 64) if h >= 1 << 63 else h,)]
+
+    track = ("n_tracks", "n_video_tracks", "n_audio_tracks", "duration_ms",
+             "width", "height")
+    exploding = [
+        (lambda df: mm.audio_window_features(df, window_ms=10),
+         lambda p: [(w["window_idx"], w["n"], w["rms"], w["zero_crossings"],
+                     w["peak"]) for w in mc.pcm_window_features(p, window_ms=10)]),
+        (mm.image_channel_stats,
+         lambda p: [(s["channel"], s["mean"], s["min"], s["max"])
+                    for s in mc.netpbm_channel_stats(p)]),
+        (mm.gif_animation_census,
+         lambda p: census(mc.gif_frame_census(p), *anim)),
+        (mm.extract_media_metadata, metadata),
+        (mm.multi_image_census, multi_image),
+        (lambda df: mm.split_media_frames(df, max_frames=3), frames),
+        (mm.video_container_census,
+         lambda p: census(mc.mp4_box_census(p), "major_brand", *track,
+                          "mdat_bytes")),
+        (mm.mkv_container_census,
+         lambda p: census(mc.mkv_census(p), "doc_type", *track,
+                          "void_bytes")),
+        (mm.image_dhash, dhash),
+    ]
+    for wrap, rows_of in exploding:
+        want = []
+        for i, p in enumerate(corpus):
+            if p is None:
+                continue
+            try:
+                got = rows_of(p)
+            except (NotImplementedError, ValueError, struct.error):
+                continue
+            want.extend((i, *r) for r in got)
+        got = [
+            tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+            for r in wrap(media).collect()
+        ]
+        assert want, wrap  # the valid payloads decode
+        assert sorted(got, key=repr) == sorted(want, key=repr), wrap
     media.unpersist()
 
 
