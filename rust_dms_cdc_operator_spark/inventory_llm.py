@@ -26,8 +26,12 @@ deliberately added to the registry with a justification.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import functools
 import itertools
 import os
+import shutil
 import tempfile
 import time
 from concurrent.futures import ThreadPoolExecutor, as_completed
@@ -58,6 +62,7 @@ from rust_dms_cdc_operator_spark.functions.text import (
     whitespace_token_count,
 )
 from rust_dms_cdc_operator_spark.operators.dedup import (
+    _pair_overlap,
     band_key_cols,
     exact_dedup,
     minhash_lsh_pairs,
@@ -129,8 +134,26 @@ def _link_stream_src(sf_dir: str, table: str, src_dir: str) -> None:
 STREAM_SETUP_SECS: dict[str, float] = {}
 
 
-def _stream_setup_done(name: str, t0: float) -> None:
-    STREAM_SETUP_SECS[name] = round(time.time() - t0, 3)
+@functools.cache
+def _scratch_root() -> str:
+    """This process's one parent dir for every query's scratch dirs,
+    removed at interpreter exit — not earlier: a returned frame reads
+    its output dir lazily, and state-store maintenance may still
+    touch a checkpoint after the stream stops."""
+    root = tempfile.mkdtemp(prefix="cdc_engine_scratch_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+@contextlib.contextmanager
+def _scratch(setup_of: str | None = None):
+    """Yields ``mkdir(prefix)``, which makes a fresh dir under
+    :func:`_scratch_root`. With ``setup_of``, the block's wall is
+    recorded as ``STREAM_SETUP_SECS[setup_of]``."""
+    t0 = time.time()
+    yield lambda prefix: tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
+    if setup_of is not None:
+        STREAM_SETUP_SECS[setup_of] = round(time.time() - t0, 3)
 
 
 class _stream_state_scope:
@@ -1119,11 +1142,11 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the file-stream source wants a directory; expose the single table
     # file through a symlinked staging dir
-    _setup_t0 = time.time()
-    src_dir = tempfile.mkdtemp(prefix="cdc_stream_src_")
-    _link_stream_src(sf_dir, "events", src_dir)
-    state_dir = tempfile.mkdtemp(prefix="cdc_stream_state_")
-    _stream_setup_done("stream_cdc_apply", _setup_t0)
+    with _scratch("stream_cdc_apply") as mkdir:
+        src_dir = mkdir("cdc_stream_src_")
+        _link_stream_src(sf_dir, "events", src_dir)
+        state_dir = mkdir("cdc_stream_state_")
+
     final = stream_replay_bucketed(
         spark,
         src_dir,
@@ -1331,7 +1354,9 @@ def q_debezium_cdc_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         op.alias("op"),
         F.expr("unix_micros(ts) div 1000").alias("ts_ms"),
     )
-    tmp = tempfile.mkdtemp(prefix="dbz_jsonl_")
+    with _scratch() as mkdir:
+        tmp = mkdir("dbz_jsonl_")
+
     env.select(
         F.to_json(F.struct("before", "after", "op", "ts_ms")).alias("value")
     ).write.mode("overwrite").text(tmp)
@@ -1363,12 +1388,11 @@ def q_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rust_dms_cdc_operator_spark.fixtures import normalized_ts  # noqa: PLC0415
 
     schema = events_stream_schema(spark, sf_dir)
-    _setup_t0 = time.time()
-    src_dir = tempfile.mkdtemp(prefix="tumble_stream_src_")
-    _link_stream_src(sf_dir, "events", src_dir)
-    out_dir = tempfile.mkdtemp(prefix="tumble_stream_out_")
-    ck_dir = tempfile.mkdtemp(prefix="tumble_stream_ck_")
-    _stream_setup_done("stream_tumbling_counts", _setup_t0)
+    with _scratch("stream_tumbling_counts") as mkdir:
+        src_dir = mkdir("tumble_stream_src_")
+        _link_stream_src(sf_dir, "events", src_dir)
+        out_dir = mkdir("tumble_stream_out_")
+        ck_dir = mkdir("tumble_stream_ck_")
 
     stream = spark.readStream.schema(schema).parquet(src_dir)
     stream = stream.withColumn("ts", normalized_ts(stream, "ts"))
@@ -1504,12 +1528,11 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rust_dms_cdc_operator_spark.fixtures import normalized_ts  # noqa: PLC0415
 
     schema = events_stream_schema(spark, sf_dir)
-    _setup_t0 = time.time()
-    src_dir = tempfile.mkdtemp(prefix="ssj_src_")
-    _link_stream_src(sf_dir, "events", src_dir)
-    out_dir = tempfile.mkdtemp(prefix="ssj_out_")
-    ck_dir = tempfile.mkdtemp(prefix="ssj_ck_")
-    _stream_setup_done("stream_stream_join", _setup_t0)
+    with _scratch("stream_stream_join") as mkdir:
+        src_dir = mkdir("ssj_src_")
+        _link_stream_src(sf_dir, "events", src_dir)
+        out_dir = mkdir("ssj_out_")
+        ck_dir = mkdir("ssj_ck_")
 
     raw = spark.readStream.schema(schema).parquet(src_dir)
     raw = raw.withColumn("ts", normalized_ts(raw, "ts"))
@@ -1572,12 +1595,11 @@ def q_stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     schema = read_table(spark, sf_dir, "documents").schema
-    _setup_t0 = time.time()
-    src_dir = tempfile.mkdtemp(prefix="cms_stream_src_")
-    _link_stream_src(sf_dir, "documents", src_dir)
-    acc_dir = tempfile.mkdtemp(prefix="cms_stream_acc_")
-    ck_dir = tempfile.mkdtemp(prefix="cms_stream_ck_")
-    _stream_setup_done("stream_cms_heavy_hitters", _setup_t0)
+    with _scratch("stream_cms_heavy_hitters") as mkdir:
+        src_dir = mkdir("cms_stream_src_")
+        _link_stream_src(sf_dir, "documents", src_dir)
+        acc_dir = mkdir("cms_stream_acc_")
+        ck_dir = mkdir("cms_stream_ck_")
 
     stream = spark.readStream.schema(schema).parquet(src_dir)
 
@@ -2311,12 +2333,11 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     schema = events_stream_schema(spark, sf_dir)
-    _setup_t0 = time.time()
-    src_dir = tempfile.mkdtemp(prefix="sess_stream_src_")
-    _link_stream_src(sf_dir, "events", src_dir)
-    out_dir = tempfile.mkdtemp(prefix="sess_stream_out_")
-    ck_dir = tempfile.mkdtemp(prefix="sess_stream_ck_")
-    _stream_setup_done("stream_sessionize", _setup_t0)
+    with _scratch("stream_sessionize") as mkdir:
+        src_dir = mkdir("sess_stream_src_")
+        _link_stream_src(sf_dir, "events", src_dir)
+        out_dir = mkdir("sess_stream_out_")
+        ck_dir = mkdir("sess_stream_ck_")
 
     stream = spark.readStream.schema(schema).parquet(src_dir)
     stream = stream.withColumn("ts", normalized_ts(stream, "ts"))
@@ -4447,12 +4468,11 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_tumbling_counts cross-check pattern). State is O(distinct
     digests), the same bound the batch operator's shuffle carries."""
     schema = read_table(spark, sf_dir, "documents").schema
-    _setup_t0 = time.time()
-    src_dir = tempfile.mkdtemp(prefix="dedup_stream_src_")
-    _link_stream_src(sf_dir, "documents", src_dir)
-    out_dir = tempfile.mkdtemp(prefix="dedup_stream_out_")
-    ck_dir = tempfile.mkdtemp(prefix="dedup_stream_ck_")
-    _stream_setup_done("stream_dedup", _setup_t0)
+    with _scratch("stream_dedup") as mkdir:
+        src_dir = mkdir("dedup_stream_src_")
+        _link_stream_src(sf_dir, "documents", src_dir)
+        out_dir = mkdir("dedup_stream_out_")
+        ck_dir = mkdir("dedup_stream_ck_")
 
     stream = spark.readStream.schema(schema).parquet(src_dir)
     agg = (
@@ -5013,8 +5033,9 @@ def q_cdc_incremental_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 1000).cast("long").alias("value_milli"),
         F.when(F.col("event_type") == "error", "D").otherwise("U").alias("Op"),
     )
-    state_dir = tempfile.mkdtemp(prefix="ivm_state_")
-    view_dir = tempfile.mkdtemp(prefix="ivm_view_")
+    with _scratch() as mkdir:
+        state_dir, view_dir = mkdir("ivm_state_"), mkdir("ivm_view_")
+
     state = BucketedParquetState(state_dir, ["user_id"], num_buckets=8)
     view = IncrementalAggView(
         state,
@@ -7719,13 +7740,12 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     schema = read_table(spark, sf_dir, "documents").schema
-    _setup_t0 = time.time()
-    src_dir = tempfile.mkdtemp(prefix="neardup_stream_src_")
-    _link_stream_src(sf_dir, "documents", src_dir)
-    acc_dir = tempfile.mkdtemp(prefix="neardup_stream_acc_")
-    out_dir = tempfile.mkdtemp(prefix="neardup_stream_out_")
-    ck_dir = tempfile.mkdtemp(prefix="neardup_stream_ck_")
-    _stream_setup_done("stream_neardup", _setup_t0)
+    with _scratch("stream_neardup") as mkdir:
+        src_dir = mkdir("neardup_stream_src_")
+        _link_stream_src(sf_dir, "documents", src_dir)
+        acc_dir = mkdir("neardup_stream_acc_")
+        out_dir = mkdir("neardup_stream_out_")
+        ck_dir = mkdir("neardup_stream_ck_")
 
     stream = spark.readStream.schema(schema).parquet(src_dir)
 
@@ -8490,14 +8510,13 @@ def q_docs_rareterm_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(shingle_set(F.col("text"), 3)).alias("term")
     )
     dfreq = w.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    rare = (
+    # materialized once: feeds the size census and both posting-join
+    # sides
+    rare = materialize_cache(
         w.join(
             dfreq.filter((F.col("df") >= 2) & (F.col("df") <= 20)), "term"
-        )
-        .select("doc_id", "term")
-        .persist()  # feeds the size census and both posting-join sides
+        ).select("doc_id", "term")
     )
-    rare.count()  # round 12: materialize before the 3-way fan-out
     na = rare.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_rare"))
     a = rare.select(F.col("doc_id").alias("id_a"), "term")
     b = rare.select(F.col("doc_id").alias("id_b"), "term")
@@ -9231,12 +9250,11 @@ def q_stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rust_dms_cdc_operator_spark.fixtures import normalized_ts  # noqa: PLC0415
 
     schema = events_stream_schema(spark, sf_dir)
-    _setup_t0 = time.time()
-    src_dir = tempfile.mkdtemp(prefix="topk_stream_src_")
-    _link_stream_src(sf_dir, "events", src_dir)
-    out_dir = tempfile.mkdtemp(prefix="topk_stream_out_")
-    ck_dir = tempfile.mkdtemp(prefix="topk_stream_ck_")
-    _stream_setup_done("stream_topk_per_window", _setup_t0)
+    with _scratch("stream_topk_per_window") as mkdir:
+        src_dir = mkdir("topk_stream_src_")
+        _link_stream_src(sf_dir, "events", src_dir)
+        out_dir = mkdir("topk_stream_out_")
+        ck_dir = mkdir("topk_stream_ck_")
 
     stream = spark.readStream.schema(schema).parquet(src_dir)
     stream = stream.withColumn("ts", normalized_ts(stream, "ts"))
@@ -10372,7 +10390,6 @@ def q_stream_late_data_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     (maxFilesPerTrigger=1 + strictly increasing mtimes pin the batch
     order — the repo's established replay determinism contract.)"""
     import glob  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
 
     from rust_dms_cdc_operator_spark.fixtures import read_events  # noqa: PLC0415
 
@@ -10392,25 +10409,25 @@ def q_stream_late_data_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the census is batching-invariant, not a fluke of trigger sizing
     is_late_slice = (hr <= F.lit(cut - 2)) & (F.col("event_id") % 97 == 0)
 
-    _setup_t0 = time.time()
-    src_dir = tempfile.mkdtemp(prefix="late_stream_src_")
-    for i, part in enumerate(
-        (
-            e.filter(is_early & ~is_late_slice),   # f1: on-time early
-            e.filter(~is_early),                   # f2: advances watermark
-            e.filter(is_late_slice),               # f3: arrives LAST
-        )
-    ):
-        tmp_out = tempfile.mkdtemp(prefix=f"late_slice_{i}_")
-        part.coalesce(1).write.mode("overwrite").parquet(tmp_out)
-        [pf] = glob.glob(os.path.join(tmp_out, "part-*.parquet"))
-        dst = os.path.join(src_dir, f"f{i}.parquet")
-        shutil.copy(pf, dst)
-        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
+    with _scratch("stream_late_data_census") as mkdir:
+        src_dir = mkdir("late_stream_src_")
+        for i, part in enumerate(
+            (
+                e.filter(is_early & ~is_late_slice),   # f1: on-time early
+                e.filter(~is_early),                   # f2: advances watermark
+                e.filter(is_late_slice),               # f3: arrives LAST
+            )
+        ):
+            tmp_out = mkdir(f"late_slice_{i}_")
+            part.coalesce(1).write.mode("overwrite").parquet(tmp_out)
+            [pf] = glob.glob(os.path.join(tmp_out, "part-*.parquet"))
+            dst = os.path.join(src_dir, f"f{i}.parquet")
+            shutil.copy(pf, dst)
+            os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
 
-    out_dir = tempfile.mkdtemp(prefix="late_stream_out_")
-    ck_dir = tempfile.mkdtemp(prefix="late_stream_ck_")
-    _stream_setup_done("stream_late_data_census", _setup_t0)
+        out_dir = mkdir("late_stream_out_")
+        ck_dir = mkdir("late_stream_ck_")
+
     stream = (
         spark.readStream.schema(e.schema)
         .option("maxFilesPerTrigger", 1)
@@ -10930,31 +10947,36 @@ def _group_cohesion_body(d: DataFrame, pairs: DataFrame) -> DataFrame:
         dedup_groups,
     )
 
-    # persist: the CC label table now has THREE consumers (participant
-    # semi-join, edge group attach, member counts) — without the cache
-    # each re-runs the post-checkpoint resolve joins (caller-owned via
-    # the returned lazy plan, same convention as the pair cache)
-    groups = dedup_groups(pairs).persist()
-    # round 12: materialize before the 3-way fan-out (participant
-    # semi-join, edge group attach, member counts)
-    groups.count()
+    # the CC label table has THREE consumers (participant join, edge
+    # group attach, member counts) — materialized once, or each re-runs
+    # the post-checkpoint resolve joins (caller-owned via the returned
+    # lazy plan, same convention as the pair cache)
+    groups = materialize_cache(dedup_groups(pairs))
     from rust_dms_cdc_operator_spark.session import (  # noqa: PLC0415
         scan_parallelism_floor,
     )
 
-    # round 12: the broadcast semi-join keeps the (single-file) scan's
+    # the broadcast participant join keeps the (single-file) scan's
     # partitioning, so the shingle-hash stage ran serial — floor it
     # (no-op at scale)
     sh = scan_parallelism_floor(
-        d.join(groups.select("doc_id"), "doc_id", "left_semi").select(
-            "doc_id", "text"
+        d.join(groups.select("doc_id", "group_id"), "doc_id").select(
+            "doc_id", "group_id", "text"
         )
-    ).select("doc_id", hashed_shingle_set(F.col("text"), 3).alias("h"))
+    ).select(
+        "doc_id", "group_id", hashed_shingle_set(F.col("text"), 3).alias("h")
+    )
     sizes = sh.select("doc_id", F.size("h").cast("long").alias("sz"))
-    tokh = sh.select("doc_id", F.explode("h").alias("tok"))
+    tokh = sh.select("doc_id", "group_id", F.explode("h").alias("tok"))
+    # every LSH edge lies inside one CC group, so keying the shared-token
+    # join on (group_id, tok) drops only cross-group co-tokens: a hot
+    # token costs Σ group_size² rows, not its corpus-wide frequency²
     st = (
-        tokh.select(F.col("doc_id").alias("id_a"), "tok")
-        .join(tokh.select(F.col("doc_id").alias("id_b"), "tok"), "tok")
+        tokh.select(F.col("doc_id").alias("id_a"), "group_id", "tok")
+        .join(
+            tokh.select(F.col("doc_id").alias("id_b"), "group_id", "tok"),
+            ["group_id", "tok"],
+        )
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("long").alias("inter"))
@@ -13533,25 +13555,12 @@ def q_dedup_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     uniq = tagged.select("id_a", "id_b").distinct()
     sets = d.select("doc_id", wh).select(
-        F.col("doc_id"), F.col("_wh").alias("wh")
+        F.col("doc_id"), F.col("_wh").alias("sh")
     )
-    verified = (
-        uniq.join(
-            sets.select(F.col("doc_id").alias("id_a"),
-                        F.col("wh").alias("wh_a")), "id_a")
-        .join(
-            sets.select(F.col("doc_id").alias("id_b"),
-                        F.col("wh").alias("wh_b")), "id_b")
-        .select(
-            "id_a", "id_b",
-            F.size(F.array_intersect("wh_a", "wh_b"))
-            .cast("long").alias("inter"),
-            (F.size("wh_a") + F.size("wh_b")
-             - F.size(F.array_intersect("wh_a", "wh_b")))
-            .cast("long").alias("uni"),
-        )
+    verified = _pair_overlap(uniq, sets, "doc_id")
+    is_true = (
+        F.lit(10) * F.col("inter_size") >= F.lit(8) * F.col("union_size")
     )
-    is_true = (F.lit(10) * F.col("inter")) >= (F.lit(8) * F.col("uni"))
     vt = verified.select("id_a", "id_b", is_true.alias("is_true")).persist()
     pooled = vt.agg(
         F.sum(F.col("is_true").cast("long")).alias("_pool")

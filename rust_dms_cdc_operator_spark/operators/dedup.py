@@ -19,6 +19,8 @@ whole-stage codegen — no Python UDFs in the hot path) and scale as:
   keeping the pairs that share a band key (``lsh_band_filter``); the
   candidate-stream verifiers (``jaccard_verify_pairs``,
   ``containment_verify_pairs``) serve sampled or capped candidates.
+  Every prefix join builds its candidates with ``_prefix_pairs``, and
+  every exact set-similarity stage verifies through ``_pair_overlap``.
 
 Portability note: hashes are md5-hex (same on every engine) rather
 than xxhash64 (Spark-specific seeds), so results are oracle-checkable;
@@ -31,7 +33,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rust_dms_cdc_operator_spark.session import scan_parallelism_floor
+from rust_dms_cdc_operator_spark.session import (
+    materialize_cache,
+    scan_parallelism_floor,
+)
 
 
 def _words(text: Column) -> Column:
@@ -200,18 +205,18 @@ def minhash_lsh_pairs(
     sigs = df.select(F.col(id_col), *carry_cols, wh).select(
         F.col(id_col), *carry_cols, *sig_cols
     )
-    keyed = sigs.select(
-        F.col(id_col), *carry_cols, *band_key_cols(num_hashes, bands)
-    ).persist()
-    # round 12: materialize the signature cache BEFORE the per-band
-    # joins fan out. AQE launches the band joins' broadcast builds as
-    # concurrent futures; on a cold multi-partition cache each future
-    # races to compute the same partitions and the signature pipeline
-    # (scan + md5 x num_hashes) runs once PER CONSUMER instead of once
-    # (measured: 19.6 -> 53.4 cpu-s at sf0.1 without this count). One
-    # cheap count is the materialize-then-fan-out pattern and costs a
-    # single cache-sized job at any scale.
-    keyed.count()
+    # materialize the signature cache BEFORE the per-band joins fan
+    # out. AQE launches the band joins' broadcast builds as concurrent
+    # futures; on a cold multi-partition cache each future races to
+    # compute the same partitions and the signature pipeline (scan +
+    # md5 x num_hashes) runs once PER CONSUMER instead of once
+    # (measured: 19.6 -> 53.4 cpu-s at sf0.1 without the eager fill).
+    # The fill is one cache-sized job at any scale.
+    keyed = materialize_cache(
+        sigs.select(
+            F.col(id_col), *carry_cols, *band_key_cols(num_hashes, bands)
+        )
+    )
 
     if max_bucket is not None:
         # hot-bucket flags per band: occupancy census over the cached
@@ -1077,17 +1082,7 @@ def jaccard_verify_pairs(
         )
     if max_candidates is not None:
         pairs = candidate_budget_sample(pairs, max_candidates)
-    a = s.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    b = s.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    j = pairs.join(a, "id_a").join(b, "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    out = j.select(
-        "id_a",
-        "id_b",
-        inter.cast("long").alias("inter_size"),
-        union.cast("long").alias("union_size"),
-    )
+    out = _pair_overlap(pairs, s, id_col)
     if min_jaccard is not None:
         out = out.filter(
             F.col("inter_size")
@@ -1106,13 +1101,40 @@ def _shingle_table(
     one count before its consumers fan out — concurrent consumers of
     a cold multi-partition cache each recompute it."""
     mk = hashed_shingle_set if hash_shingles else shingle_set
-    s = scan_parallelism_floor(
-        docs.select(F.col(id_col), F.col(text_col))
-    ).select(
-        F.col(id_col), mk(F.col(text_col), n).alias("sh")
-    ).persist()
-    s.count()
-    return s
+    return materialize_cache(
+        scan_parallelism_floor(
+            docs.select(F.col(id_col), F.col(text_col))
+        ).select(F.col(id_col), mk(F.col(text_col), n).alias("sh"))
+    )
+
+
+def _pair_overlap(
+    cand: DataFrame,
+    s: DataFrame,
+    id_col: str,
+    containment: bool = False,
+    ids: tuple[str, ...] = ("id_a", "id_b"),
+) -> DataFrame:
+    """The exact verify join every set-similarity stage ends in: the
+    candidates' ``id_a``/``id_b`` join the ``(id_col, sh)`` shingle
+    table once per side, and each pair gets ``inter_size`` =
+    |A ∩ B| plus ``union_size`` = |A ∪ B| (or, with ``containment``,
+    ``size_a`` and ``size_b``), counted on the arrays as given.
+    Returns ``ids`` (candidate columns, so a caller may carry other
+    ids through) followed by those counts, all long; the caller
+    applies its own threshold."""
+    sa = s.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
+    sb = s.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    na, nb = F.size("sh_a"), F.size("sh_b")
+    sizes = (
+        [na.cast("long").alias("size_a"), nb.cast("long").alias("size_b")]
+        if containment
+        else [(na + nb - inter).cast("long").alias("union_size")]
+    )
+    return cand.join(sa, "id_a").join(sb, "id_b").select(
+        *ids, inter.cast("long").alias("inter_size"), *sizes
+    )
 
 
 def segment_dedup(
@@ -1226,17 +1248,7 @@ def containment_verify_pairs(
     s = _shingle_table(docs, id_col, text_col, n, hash_shingles)
     if max_candidates is not None:
         pairs = candidate_budget_sample(pairs, max_candidates)
-    a = s.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    b = s.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    j = pairs.join(a, "id_a").join(b, "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    out = j.select(
-        "id_a",
-        "id_b",
-        inter.cast("long").alias("inter_size"),
-        F.size("sh_a").cast("long").alias("size_a"),
-        F.size("sh_b").cast("long").alias("size_b"),
-    )
+    out = _pair_overlap(pairs, s, id_col, containment=True)
     return out.filter(
         F.col("inter_size")
         >= F.least("size_a", "size_b") * F.lit(min_containment)
@@ -1397,6 +1409,47 @@ def _prefix_tokens(ranked: DataFrame, num: int, den: int) -> DataFrame:
     return ranked.filter(F.col("rn") <= plen)
 
 
+def _prefix_side(
+    rows: DataFrame, id_col: str, side: str, *carry: Column
+) -> DataFrame:
+    """One side of a prefix token join over ranked token rows:
+    ``id_{side}``, ``tok``, ``sz_{side}``, ``rn_{side}``, then the
+    ``carry`` columns."""
+    return rows.select(
+        F.col(id_col).alias(f"id_{side}"),
+        "tok",
+        F.col("sz").alias(f"sz_{side}"),
+        F.col("rn").alias(f"rn_{side}"),
+        *carry,
+    )
+
+
+def _prefix_pairs(
+    a: DataFrame,
+    b: DataFrame,
+    c: Column,
+    *keep: Column,
+    keys: tuple[str, ...] = ("id_a", "id_b"),
+) -> DataFrame:
+    """Prefix-filter candidates: :func:`_prefix_side` rows equi-join
+    on the token, each ``keep`` condition filters in turn, then the
+    positional filter, then the distinct ``keys`` remain.
+
+    Positional filter: at a match on ranks (i, j) the overlap is at
+    most 1 + min(|A| - i, |B| - j), which must still reach the pair's
+    overlap bound ``c``. A pair survives if ANY of its matches passes,
+    and a pair whose overlap reaches ``c`` passes at its FIRST common
+    token (every shared token ranks at or after it on both sides), so
+    the filter is complete."""
+    j = a.join(b, "tok")
+    for cond in keep:
+        j = j.filter(cond)
+    reach = F.lit(1) + F.least(
+        F.col("sz_a") - F.col("rn_a"), F.col("sz_b") - F.col("rn_b")
+    )
+    return j.filter(reach >= c).select(*keys).distinct()
+
+
 def prefix_jaccard_join(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -1436,54 +1489,16 @@ def prefix_jaccard_join(
     num, den = _frac(min_jaccard)
     s, ranked = _ranked_shingles(docs, id_col, text_col, n, hash_shingles)
     pref = _prefix_tokens(ranked, num, den)
-    a = pref.select(
-        F.col(id_col).alias("id_a"),
-        "tok",
-        F.col("sz").alias("sz_a"),
-        F.col("rn").alias("rn_a"),
+    cand = _prefix_pairs(
+        _prefix_side(pref, id_col, "a"),
+        _prefix_side(pref, id_col, "b"),
+        # pair-level overlap bound c = ceil(num*(sz_a+sz_b) / (den+num))
+        F.expr(f"(({num} * (sz_a + sz_b) + {den + num - 1}) div {den + num})"),
+        F.col("id_a") < F.col("id_b"),
+        F.least("sz_a", "sz_b") * den >= F.greatest("sz_a", "sz_b") * num,
     )
-    b = pref.select(
-        F.col(id_col).alias("id_b"),
-        "tok",
-        F.col("sz").alias("sz_b"),
-        F.col("rn").alias("rn_b"),
-    )
-    # pair-level overlap bound c = ceil(num*(sz_a+sz_b) / (den+num))
-    c = F.expr(
-        f"(({num} * (sz_a + sz_b) + {den + num - 1}) div {den + num})"
-    )
-    cand = (
-        a.join(b, "tok")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            F.least("sz_a", "sz_b") * den
-            >= F.greatest("sz_a", "sz_b") * num
-        )
-        .filter(
-            F.lit(1)
-            + F.least(
-                F.col("sz_a") - F.col("rn_a"),
-                F.col("sz_b") - F.col("rn_b"),
-            )
-            >= c
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.first("sz_a"))  # dedup multi-token matches
-        .select("id_a", "id_b")
-    )
-    sa = s.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    sb = s.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    j = cand.join(sa, "id_a").join(sb, "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        j.select(
-            "id_a",
-            "id_b",
-            inter.cast("long").alias("inter_size"),
-            union.cast("long").alias("union_size"),
-        )
-        .filter(F.col("inter_size") * den >= F.col("union_size") * num)
+    return _pair_overlap(cand, s, id_col).filter(
+        F.col("inter_size") * den >= F.col("union_size") * num
     )
 
 
@@ -1519,56 +1534,15 @@ def prefix_containment_join(
     survive adversarial vocabularies."""
     num, den = _frac(min_containment)
     s, ranked = _ranked_shingles(docs, id_col, text_col, n, hash_shingles)
-    a = _prefix_tokens(ranked, num, den).select(
-        F.col(id_col).alias("id_a"),
-        "tok",
-        F.col("sz").alias("sz_a"),
-        F.col("rn").alias("rn_a"),
+    cand = _prefix_pairs(
+        _prefix_side(_prefix_tokens(ranked, num, den), id_col, "a"),
+        _prefix_side(ranked, id_col, "b"),  # index side: ALL tokens
+        F.expr(f"(({num} * sz_a + {den - 1}) div {den})"),
+        (F.col("sz_a") < F.col("sz_b"))
+        | ((F.col("sz_a") == F.col("sz_b")) & (F.col("id_a") < F.col("id_b"))),
     )
-    b = ranked.select(  # index side: ALL tokens
-        F.col(id_col).alias("id_b"),
-        "tok",
-        F.col("sz").alias("sz_b"),
-        F.col("rn").alias("rn_b"),
-    )
-    c = F.expr(f"(({num} * sz_a + {den - 1}) div {den})")
-    cand = (
-        a.join(b, "tok")
-        .filter(
-            (F.col("sz_a") < F.col("sz_b"))
-            | (
-                (F.col("sz_a") == F.col("sz_b"))
-                & (F.col("id_a") < F.col("id_b"))
-            )
-        )
-        .filter(
-            F.lit(1)
-            + F.least(
-                F.col("sz_a") - F.col("rn_a"),
-                F.col("sz_b") - F.col("rn_b"),
-            )
-            >= c
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.first("sz_a"))
-        .select("id_a", "id_b")
-    )
-    sa = s.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    sb = s.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    j = cand.join(sa, "id_a").join(sb, "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (
-        j.select(
-            "id_a",
-            "id_b",
-            inter.cast("long").alias("inter_size"),
-            F.size("sh_a").cast("long").alias("size_a"),
-            F.size("sh_b").cast("long").alias("size_b"),
-        )
-        .filter(
-            F.col("inter_size") * den
-            >= F.least("size_a", "size_b") * num
-        )
+    return _pair_overlap(cand, s, id_col, containment=True).filter(
+        F.col("inter_size") * den >= F.least("size_a", "size_b") * num
     )
 
 
@@ -1716,53 +1690,18 @@ def prefix_jaccard_join_rs(
     sides = tagged.select("_uid", "_side", id_col).distinct()
     ranked = ranked.join(sides, "_uid")
     pref = _prefix_tokens(ranked, num, den)
-    a = pref.filter(F.col("_side") == "l").select(
-        F.col("_uid").alias("uid_l"),
-        F.col(id_col).alias("id_l"),
-        "tok",
-        F.col("sz").alias("sz_l"),
-        F.col("rn").alias("rn_l"),
+    pl, pr = (pref.filter(F.col("_side") == t) for t in ("l", "r"))
+    # internal _a/_b columns key the side-tagged uids; the caller's
+    # ids ride the join as id_l/id_r
+    cand = _prefix_pairs(
+        _prefix_side(pl, "_uid", "a", F.col(id_col).alias("id_l")),
+        _prefix_side(pr, "_uid", "b", F.col(id_col).alias("id_r")),
+        F.expr(f"(({num} * (sz_a + sz_b) + {den + num - 1}) div {den + num})"),
+        F.least("sz_a", "sz_b") * den >= F.greatest("sz_a", "sz_b") * num,
+        keys=("id_a", "id_b", "id_l", "id_r"),
     )
-    b = pref.filter(F.col("_side") == "r").select(
-        F.col("_uid").alias("uid_r"),
-        F.col(id_col).alias("id_r"),
-        "tok",
-        F.col("sz").alias("sz_r"),
-        F.col("rn").alias("rn_r"),
-    )
-    c = F.expr(
-        f"(({num} * (sz_l + sz_r) + {den + num - 1}) div {den + num})"
-    )
-    cand = (
-        a.join(b, "tok")
-        .filter(
-            F.least("sz_l", "sz_r") * den
-            >= F.greatest("sz_l", "sz_r") * num
-        )
-        .filter(
-            F.lit(1)
-            + F.least(
-                F.col("sz_l") - F.col("rn_l"),
-                F.col("sz_r") - F.col("rn_r"),
-            )
-            >= c
-        )
-        .groupBy("uid_l", "uid_r")
-        .agg(F.first("id_l").alias("id_l"), F.first("id_r").alias("id_r"))
-    )
-    sa = s.select(F.col("_uid").alias("uid_l"), F.col("sh").alias("sh_l"))
-    sb = s.select(F.col("_uid").alias("uid_r"), F.col("sh").alias("sh_r"))
-    j = cand.join(sa, "uid_l").join(sb, "uid_r")
-    inter = F.size(F.array_intersect("sh_l", "sh_r"))
-    union = F.size("sh_l") + F.size("sh_r") - inter
-    return (
-        j.select(
-            "id_l",
-            "id_r",
-            inter.cast("long").alias("inter_size"),
-            union.cast("long").alias("union_size"),
-        )
-        .filter(F.col("inter_size") * den >= F.col("union_size") * num)
+    return _pair_overlap(cand, s, "_uid", ids=("id_l", "id_r")).filter(
+        F.col("inter_size") * den >= F.col("union_size") * num
     )
 
 
@@ -1826,17 +1765,7 @@ def sorted_neighborhood_pairs(
         F.col(id_col).alias("id_b"), F.col("_rank").alias("_rank_b")
     )
     pairs = a.join(b, "_rank_b").select("id_a", "id_b")
-    sa = base.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    sb = base.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    j = pairs.join(sa, "id_a").join(sb, "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return j.select(
-        "id_a",
-        "id_b",
-        inter.cast("long").alias("inter_size"),
-        union.cast("long").alias("union_size"),
-    )
+    return _pair_overlap(pairs, base, id_col)
 
 
 def neardup_accumulate(

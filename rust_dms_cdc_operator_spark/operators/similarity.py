@@ -21,7 +21,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rust_dms_cdc_operator_spark.session import local_relation
+from rust_dms_cdc_operator_spark.session import (
+    local_relation,
+    materialize_cache,
+)
 
 
 def _as_double(vec: Column) -> Column:
@@ -615,9 +618,15 @@ def ivf_knn_density(
     # cell join below, and the returned plan is lazy, so unpersisting
     # here would recompute the scoring per reference (measured 5x the
     # query wall). The cache is one (id, int, nprobe ints) row per
-    # vector — corpus-bounded and LRU-evicted (the q11 contract).
+    # vector — corpus-bounded and LRU-evicted (the q11 contract). It is
+    # filled BEFORE the fan-out (guide §5 — the minhash_lsh_pairs
+    # signature-cache pattern): AQE launches both sides of the cell
+    # join as concurrent subplans, and on a cold cache each side re-ran
+    # the whole centroid scoring pass (measured at sf0.1: exec bimodal
+    # 3.0 s / 37 cpu-s on lucky runs vs 9-10 s / 183-225 cpu-s when the
+    # race lost).
     scored = _centroid_scores(e, centroid_vecs, id_col)
-    both = scored.groupBy(id_col).agg(
+    both = materialize_cache(scored.groupBy(id_col).agg(
         F.max(F.struct(F.col("s"), (-F.col("cid")).alias("ni"))).alias("m"),
         F.slice(
             F.array_sort(
@@ -628,15 +637,7 @@ def ivf_knn_density(
             1,
             nprobe,
         ).alias("_ls"),
-    ).persist()
-    # materialize BEFORE the fan-out (round 12, guide §5 — the
-    # minhash_lsh_pairs keyed.count() pattern): ``both`` feeds BOTH
-    # sides of the cell join below, which AQE launches as concurrent
-    # subplans; on a cold cache each side re-ran the whole centroid
-    # scoring pass (measured at sf0.1: exec bimodal 3.0 s / 37 cpu-s
-    # on lucky runs vs 9-10 s / 183-225 cpu-s when the race lost).
-    # One cache-sized count pins the scoring to exactly one run.
-    both.count()
+    ))
     assign = both.select(
         F.col(id_col).alias("id_b"), (-F.col("m.ni")).cast("int").alias("lst")
     )

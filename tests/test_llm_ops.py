@@ -987,6 +987,60 @@ def test_dedup_lsh_verified_hot_token(spark, tmp_path):
     assert _prefix_tokens(ranked, num, den).join(hot, "tok").count() == 0
 
 
+def _join_output_rows(df, key: str) -> list[int]:
+    """The ``numOutputRows`` of every equi-join whose left keys include
+    the column ``key``, read from the plan of an already-collected
+    ``df``."""
+    import re
+
+    rows, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        if "QueryStage" in name:
+            stack.append(node.plan())
+            continue
+        if name in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"):
+            if re.search(rf"\b{key}#", node.leftKeys().toString()):
+                rows.append(node.metrics().apply("numOutputRows").value())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return rows
+
+
+def test_group_cohesion_hot_token_stays_in_group(spark, tmp_path):
+    """One shingle occurs in all 2,000 documents, which form 1,000
+    near-dup groups of two. dedup_group_cohesion counts shared tokens
+    only inside a group, so its token join emits at most
+    Σ group_size² rows per shingle position — a join on the token
+    alone emits about 2·10⁶ rows for the hot shingle."""
+    from rust_dms_cdc_operator_spark.inventory_llm import q_dedup_group_cohesion
+
+    n = 2000
+    text = {
+        i: "hot common phrase "
+        + " ".join(f"u{i - i % 2}{c}" for c in "abcdefghijkl")
+        for i in range(n)
+    }
+    root = tmp_path / "sf"
+    spark.createDataFrame(
+        sorted(text.items()), "doc_id long, text string"
+    ).coalesce(1).write.parquet(str(root / "documents.parquet"))
+
+    out = q_dedup_group_cohesion(spark, str(root))
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == [(i, 2, 1, 1.0, 1.0) for i in range(0, n, 2)]
+
+    shingles_per_doc = 15 - 2
+    bound = shingles_per_doc * sum(size**2 for _, size, *_ in got)
+    [tok_rows] = _join_output_rows(out, "tok")
+    assert 0 < tok_rows <= bound, (tok_rows, bound)
+    spark.catalog.clearCache()
+
+
 def test_lsh_verified_queries_build_without_pair_jobs(spark, near_dup_sf):
     """Building dedup_lsh_verified or dedup_containment runs only the
     prefix join's shingle-cache fill: no LSH signature cache, no

@@ -209,13 +209,11 @@ def test_unpartitioned_window_allowlist_not_stale(plans):
 PERSIST_CALLER_OWNED = {
     # inventory: collect + lazy-return double consumers
     "inventory_tpch2.py:q_q11_important_stock": 1,   # per-part agg
-    "inventory_llm.py:_group_cohesion_body": 1,      # CC labels, 3 uses
     "inventory_llm.py:q_dedup_band_tuning": 2,       # tagged + verified
     # (round 12: the group-split/cohesion/rebuild pair streams now go
     # through session.materialize_leaf instead of in-function
     # persist/localCheckpoint sites)
     "inventory_llm.py:q_dedup_semantic_pairs": 1,    # centroid-scored docs
-    "inventory_llm.py:q_docs_rareterm_neighbors": 1, # rare-term postings
     "inventory_llm.py:_bm25_scored": 1,              # doc-length table
     # the shared lineage-cut helper — materializes a heavy BOUNDED
     # intermediate once (localCheckpoint) and returns the leaf; its
@@ -227,11 +225,9 @@ PERSIST_CALLER_OWNED = {
     # caller-owned per the module clearCache contract
     "session.py:materialize_cache": 1,
     # operator library: returned plan is lazy over the cache
-    "operators/dedup.py:minhash_lsh_pairs": 1,       # signature table
     "operators/dedup.py:minhash_knn_topk": 1,        # signature table
     "operators/dedup.py:ngram_jaccard_pairs": 1,     # shingle table
     "operators/dedup.py:candidate_budget_sample": 1, # sampled pairs
-    "operators/dedup.py:_shingle_table": 1,          # shingle arrays
     "operators/dedup.py:_ranked_shingles": 1,        # ranked tokens
     "operators/dedup.py:sorted_neighborhood_pairs": 1,  # sorted keys
     "operators/dedup.py:hamming_pairs_from_signatures": 1,  # sig table
@@ -242,7 +238,6 @@ PERSIST_CALLER_OWNED = {
     "operators/graph.py:pagerank_undirected": 2,     # adjacency + deg
     # (r10 build rework: deg is node-sized, joined per round)
     "operators/graph.py:label_propagation": 1,       # adjacency
-    "operators/similarity.py:ivf_knn_density": 1,    # assigned lists
     "operators/perplexity.py:unigram_logppl": 1,     # token table
     "operators/perplexity.py:source_token_drift": 1, # joint counts
 }

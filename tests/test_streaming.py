@@ -1850,3 +1850,45 @@ def test_lookup_builds_without_a_spark_job(spark, tmp_path):
     assert {(r.id, r.val) for r in df.collect()} == {
         (3, "v3.1"), (4, "v4.2"), (17, "v17.1")
     }
+
+
+def test_stream_query_scratch_dirs_removed_at_exit(tmp_path):
+    """A one-shot streaming query makes its source, output and
+    checkpoint dirs under the temp dir; none of them is left once the
+    process that ran it has exited."""
+    import subprocess
+    import sys
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(
+        pa.table({"doc_id": pa.array(range(6), pa.int64()),
+                  "text": ["a b", "c d", "a b", "e f", "c d", "g h"]}),
+        str(sf / "documents.parquet"),
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    prefixes = ("dedup_stream_src_", "dedup_stream_out_",
+                "dedup_stream_ck_")
+    script = f"""
+import os, sys
+sys.path.insert(0, {repo!r})
+from rust_dms_cdc_operator_spark.inventory_llm import q_stream_dedup
+from rust_dms_cdc_operator_spark.session import get_spark
+
+spark = get_spark(app_name="scratch-dirs", master="local[2]",
+                  shuffle_partitions=2)
+assert q_stream_dedup(spark, {str(sf)!r}).count() == 4
+made = [d for _, ds, _ in os.walk({str(tmp_path)!r}) for d in ds
+        if d.startswith({prefixes!r})]
+print("MADE", len(made))
+"""
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert "MADE 3" in proc.stdout, (proc.stdout[-2000:], proc.stderr[-3000:])
+    left = [p for p in tmp_path.rglob("*") if p.name.startswith(prefixes)]
+    assert left == []
