@@ -265,9 +265,8 @@ def q_sim_lsh_bucket_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: 8 deterministic centroids (the 8 smallest vec_ids —
-    production would train these with pyspark.ml KMeans), probe the 2
-    lists nearest the query, exact top-10 within them."""
+    """IVF ANN with fixed centroids (the 8 smallest vec_ids): probe
+    the 2 lists nearest the query, exact top-10 within them."""
     e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") > 0)
     cents = [
         [float(x) for x in r["embedding"]]
@@ -279,79 +278,103 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sim_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN with KMeans-TRAINED centroids (pyspark.ml, seed 42,
-    rounded to 4 digits — deterministic across session/partition
-    layouts), probing the 3 nearest lists. The oracle embeds the same
-    trained centroids as literals (ivf_constants.py, regenerated by
-    tools/gen_ivf_centroids.py), so the whole train→assign→probe→rank
-    path is hash-checked at sf0.01."""
-    from rust_dms_cdc_operator_spark.operators.similarity import (  # noqa: PLC0415
-        train_ivf_centroids,
-    )
-
+    """IVF ANN with TRAINED centroids (:func:`_trained_ivf_cents`:
+    driver-local seeded Lloyd, rounded to 4 digits — deterministic
+    across session/partition layouts), probing the 3 nearest lists.
+    The oracle embeds the same centroids as literals (the trained/
+    registry, regenerated by tools/gen_ivf_centroids.py), so the whole
+    train→assign→probe→rank path is hash-checked."""
     e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") > 0)
-    # train on a bounded, deterministic prefix of the table: centroid
-    # quality saturates long before the full corpus (standard IVF
-    # practice — faiss trains on a sample), and the cap keeps training
-    # cost flat as sf grows. At the correctness SF (0.01, 499 vectors)
-    # the cap admits every row, so the ivf_constants literals are
-    # unaffected.
-    cents = _trained_ivf_cents(spark, sf_dir)
     return ivf_topk(
-        e, _query_vec(spark, sf_dir), cents, "vec_id", "embedding", k=10, nprobe=3
+        e, _query_vec(spark, sf_dir), _trained_ivf_cents(spark, sf_dir),
+        "vec_id", "embedding", k=10, nprobe=3,
     )
 
 
-def _ensure_ivf_table(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
-    """Train-once/probe-many deployment shape: materialize the IVF
-    list assignment as a partitioned parquet table (cached per sf_dir
-    under /tmp, keyed by the embeddings file's mtime) and persist the
-    trained centroids beside it. Repeat calls skip training AND
-    writing — exactly what production does, so the benched probe cost
-    is the probe, not the offline build (r2 verdict #4)."""
-    import json as _json  # noqa: PLC0415
-    import os as _os  # noqa: PLC0415
+_ARTIFACTS: dict[tuple[str, str], object] = {}
 
+
+def _artifact(kind: str, sf_dir: str, build):
+    """The one build-once memo of the ANN artifacts — trained
+    centroids and codebooks, and the index table: ``build()`` runs on
+    the first call per (kind, sf_dir) in this process, so the bench
+    measures each query's probe, not a retraining. Every artifact is
+    a deterministic function of the sf dir's data."""
+    key = (kind, sf_dir)
+    if key not in _ARTIFACTS:
+        _ARTIFACTS[key] = build()
+    return _ARTIFACTS[key]
+
+
+def _ann_train_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The bounded, ordered training prefix (0 < vec_id <= 2048) of
+    the shared IVF centroids and PQ codebooks: quality saturates long
+    before the full corpus (faiss trains on a sample) and the cap
+    keeps training cost flat as sf grows."""
+    return _t(spark, sf_dir, "embeddings").filter(
+        (F.col("vec_id") > 0) & (F.col("vec_id") <= 2048)
+    )
+
+
+def _trained_ivf_cents(spark: SparkSession, sf_dir: str) -> list:
+    """The seed-42, 8-list IVF quantizer every trained IVF query
+    deploys."""
     from rust_dms_cdc_operator_spark.operators.similarity import (  # noqa: PLC0415
         train_ivf_centroids,
-        write_ivf_partitioned,
     )
 
-    src = _os.path.join(sf_dir, "embeddings.parquet")
-    base = _os.path.join(
-        "/tmp/spark-graft-ivf", _os.path.basename(_os.path.normpath(sf_dir))
+    return _artifact("ivf", sf_dir, lambda: train_ivf_centroids(
+        _ann_train_rows(spark, sf_dir), "embedding", n_lists=8, seed=42
+    ))
+
+
+def _trained_pq_books(spark: SparkSession, sf_dir: str) -> list:
+    """The seed-42 PQ codebooks (8 subspaces x 16 codes) of the PQ
+    queries."""
+    from rust_dms_cdc_operator_spark.operators.pq import (  # noqa: PLC0415
+        train_pq_codebooks,
     )
-    table, meta = _os.path.join(base, "table"), _os.path.join(base, "meta.json")
-    src_mtime = _os.path.getmtime(src)
-    if _os.path.exists(meta):
-        with open(meta) as fh:
-            rec = _json.load(fh)
-        if rec.get("src_mtime") == src_mtime:
-            return table, rec["centroids"]
-    e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") > 0)
-    cents = train_ivf_centroids(
-        e.filter(F.col("vec_id") <= 2048), "embedding", n_lists=8, seed=42
+
+    return _artifact("pq", sf_dir, lambda: train_pq_codebooks(
+        _ann_train_rows(spark, sf_dir), "embedding", m=8, n_codes=16, seed=42
+    ))
+
+
+def _ivf_index(spark: SparkSession, sf_dir: str) -> str:
+    """Path of the IVF-PQ index of sf_dir's embeddings: the
+    list-partitioned table with write-time PQ codes
+    (operators/pq.write_ivfpq_partitioned) under the shared trained
+    artifacts. Built once per process under :func:`_scratch_root`, so
+    no other process, checkout or same-named sf dir reads or
+    overwrites it; :func:`prepare_bench` builds it outside the timed
+    loop."""
+    from rust_dms_cdc_operator_spark.operators.pq import (  # noqa: PLC0415
+        write_ivfpq_partitioned,
     )
-    write_ivf_partitioned(e, table, cents, "embedding")
-    _os.makedirs(base, exist_ok=True)
-    with open(meta, "w") as fh:  # written AFTER the table: acts as marker
-        _json.dump({"src_mtime": src_mtime, "centroids": cents}, fh)
-    return table, cents
+
+    def build() -> str:
+        path = tempfile.mkdtemp(prefix="ivf_index_", dir=_scratch_root())
+        write_ivfpq_partitioned(
+            _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") > 0),
+            path,
+            _trained_ivf_cents(spark, sf_dir),
+            _trained_pq_books(spark, sf_dir),
+            "embedding",
+        )
+        return path
+
+    return _artifact("index", sf_dir, build)
 
 
 def q_sim_ivf_probe_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF probe as deployed: against the pre-materialized
-    list-partitioned table (:func:`_ensure_ivf_table` builds it once),
-    the list filter prunes partitions at the scan. Same ranking
-    semantics — and oracle — as sim_ivf_trained; only the physical
-    access path differs, which is the point being benched."""
-    from rust_dms_cdc_operator_spark.operators.similarity import (  # noqa: PLC0415
-        ivf_topk_partitioned,
-    )
-
-    table, cents = _ensure_ivf_table(spark, sf_dir)
-    return ivf_topk_partitioned(
-        spark, table, _query_vec(spark, sf_dir), cents,
+    list-partitioned index (:func:`_ivf_index`), where the list filter
+    prunes partitions at the scan. Same ranking semantics — and
+    oracle — as sim_ivf_trained; only the physical access path
+    differs."""
+    return ivf_topk(
+        spark.read.parquet(_ivf_index(spark, sf_dir)),
+        _query_vec(spark, sf_dir), _trained_ivf_cents(spark, sf_dir),
         "vec_id", "embedding", k=10, nprobe=3,
     )
 
@@ -360,8 +383,7 @@ def prepare_bench(spark: SparkSession, sf_dir: str) -> None:
     """Offline setup a production deployment does once — called by
     bench.py OUTSIDE the timed loop (and harmless to skip: queries
     build what's missing on first use)."""
-    _ensure_ivf_table(spark, sf_dir)
-    _ensure_ivfpq_table(spark, sf_dir)
+    _ivf_index(spark, sf_dir)
 
 
 # --------------------------------------------------------------------- text
@@ -2026,154 +2048,46 @@ def q_docs_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_CENT_CACHE: dict[str, list] = {}
+def _ivfpq_topk(spark: SparkSession, sf_dir: str, df: DataFrame) -> DataFrame:
+    """IVF-PQ over ``df``: the 3 of 8 trained lists nearest the query
+    (similarity.ivf_probe), a 60-row PQ/ADC shortlist within them and
+    an exact cosine rerank (pq.pq_topk_rerank)."""
+    from rust_dms_cdc_operator_spark.operators.pq import (  # noqa: PLC0415
+        pq_topk_rerank,
+    )
+    from rust_dms_cdc_operator_spark.operators.similarity import (  # noqa: PLC0415
+        ivf_probe,
+    )
 
-
-def _trained_ivf_cents(spark: SparkSession, sf_dir: str) -> list:
-    """Train-once/probe-many for the shared seed-42 IVF centroids:
-    sim_ivf_trained, sim_knn_density and dedup_semantic_pairs all
-    deploy the SAME artifact, so the bench measures each query's
-    probe, not three identical trainings (the _PQ_BOOK_CACHE
-    pattern). Training stays bounded (vec_id <= 2048 ordered prefix)
-    and deterministic, so the cache changes cost only."""
-    cents = _IVF_CENT_CACHE.get(sf_dir)
-    if cents is None:
-        from rust_dms_cdc_operator_spark.operators.similarity import (  # noqa: PLC0415
-            train_ivf_centroids,
-        )
-
-        e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") > 0)
-        cents = train_ivf_centroids(
-            e.filter(F.col("vec_id") <= 2048), "embedding",
-            n_lists=8, seed=42,
-        )
-        _IVF_CENT_CACHE[sf_dir] = cents
-    return cents
+    qv = _query_vec(spark, sf_dir)
+    cand = ivf_probe(df, qv, _trained_ivf_cents(spark, sf_dir), nprobe=3)
+    return pq_topk_rerank(
+        cand, qv, _trained_pq_books(spark, sf_dir), "vec_id", "embedding",
+        k=10, shortlist=60,
+    )
 
 
 def q_sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full production ANN stack, composed: IVF partition pruning
-    (probe the 3 of 8 trained lists nearest the query — at 100 TB the
-    list id is the table's partition key, so this is a partition-
-    pruned scan) → PQ/ADC integer shortlist within the probed lists
-    (Arrow kernel, code-width payload) → exact cosine rerank of the
-    shortlist. IVF-PQ is the faiss deployment default; both trained
-    artifacts (centroids, codebooks) are seed-deterministic and
-    embedded in the oracle (ivf_constants/pq_constants), so the whole
-    composed path hash-checks at sf0.01."""
-    from rust_dms_cdc_operator_spark.operators.pq import (  # noqa: PLC0415
-        pq_topk_rerank,
-        train_pq_codebooks,
-    )
-    from rust_dms_cdc_operator_spark.operators.similarity import (  # noqa: PLC0415
-        _nearest_centroids,
-        ivf_assign,
-        train_ivf_centroids,
-    )
-
+    """The full production ANN stack, composed (:func:`_ivfpq_topk`)
+    over the raw embeddings: the list filter is the ivf_assign
+    expression and the shortlist runs the Arrow ADC kernel. IVF-PQ is
+    the faiss deployment default; both trained artifacts (centroids,
+    codebooks) are seed-deterministic and embedded in the oracle, so
+    the whole composed path hash-checks."""
     e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") > 0)
-    train = e.filter(F.col("vec_id") <= 2048)
-    cents = _IVF_CENT_CACHE.get(sf_dir)
-    if cents is None:
-        cents = train_ivf_centroids(train, "embedding", n_lists=8, seed=42)
-        _IVF_CENT_CACHE[sf_dir] = cents
-    books = _PQ_BOOK_CACHE.get(sf_dir)
-    if books is None:
-        books = train_pq_codebooks(
-            train, "embedding", m=8, n_codes=16, seed=42
-        )
-        _PQ_BOOK_CACHE[sf_dir] = books
-    qv = _query_vec(spark, sf_dir)
-    probe_ids = _nearest_centroids(qv, cents, 3, 6)
-    cand = e.filter(ivf_assign(F.col("embedding"), cents, 6).isin(probe_ids))
-    return pq_topk_rerank(
-        cand, qv, books, "vec_id", "embedding", k=10, shortlist=60
-    )
-
-
-def _ensure_ivfpq_table(spark: SparkSession, sf_dir: str) -> tuple[str, list, list]:
-    """Build-once/probe-many for the FULL IVF-PQ index (the
-    _ensure_ivf_table pattern): list-partitioned table with write-time
-    PQ codes, centroids + codebooks persisted beside it, cache keyed
-    by the embeddings file's mtime."""
-    import json as _json  # noqa: PLC0415
-    import os as _os  # noqa: PLC0415
-
-    from rust_dms_cdc_operator_spark.operators.pq import (  # noqa: PLC0415
-        train_pq_codebooks,
-        write_ivfpq_partitioned,
-    )
-    from rust_dms_cdc_operator_spark.operators.similarity import (  # noqa: PLC0415
-        train_ivf_centroids,
-    )
-
-    src = _os.path.join(sf_dir, "embeddings.parquet")
-    base = _os.path.join(
-        "/tmp/spark-graft-ivfpq", _os.path.basename(_os.path.normpath(sf_dir))
-    )
-    table, meta = _os.path.join(base, "table"), _os.path.join(base, "meta.json")
-    src_mtime = _os.path.getmtime(src)
-    if _os.path.exists(meta):
-        with open(meta) as fh:
-            rec = _json.load(fh)
-        if rec.get("src_mtime") == src_mtime:
-            return table, rec["centroids"], rec["codebooks"]
-    e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") > 0)
-    train = e.filter(F.col("vec_id") <= 2048)
-    cents = train_ivf_centroids(train, "embedding", n_lists=8, seed=42)
-    books = train_pq_codebooks(train, "embedding", m=8, n_codes=16, seed=42)
-    write_ivfpq_partitioned(e, table, cents, books, "embedding")
-    _os.makedirs(base, exist_ok=True)
-    with open(meta, "w") as fh:  # written AFTER the table: acts as marker
-        _json.dump(
-            {"src_mtime": src_mtime, "centroids": cents, "codebooks": books},
-            fh,
-        )
-    return table, cents, books
+    return _ivfpq_topk(spark, sf_dir, e)
 
 
 def q_sim_ivfpq_probe_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The IVF-PQ probe as deployed: against the pre-materialized
-    index (_ensure_ivfpq_table — codes encoded at write time, lists
-    as partition keys). The shortlist scan reads ONLY (vec_id,
-    pq_codes) from the 3 probed partitions (partition pruning +
-    column pruning — the wide vector column never moves), then the
-    exact rerank re-reads vectors for the ~60 shortlist rows. Same
-    semantics — and oracle — as sim_ivfpq_topk; only the physical
-    access path differs, which is the point being benched."""
-    from rust_dms_cdc_operator_spark.operators.pq import (  # noqa: PLC0415
-        adc_from_codes,
-        pq_distance_table,
-    )
-    from rust_dms_cdc_operator_spark.operators.similarity import (  # noqa: PLC0415
-        IVF_LIST_COL,
-        _nearest_centroids,
-        cosine,
-    )
-
-    table, cents, books = _ensure_ivfpq_table(spark, sf_dir)
-    qv = _query_vec(spark, sf_dir)
-    probe_ids = _nearest_centroids(qv, cents, 3, 6)
-    dtable = pq_distance_table(qv, books)
-    idx = spark.read.parquet(table).filter(
-        F.col(IVF_LIST_COL).isin(probe_ids)
-    )
-    short_ids = (
-        idx.select(
-            "vec_id", adc_from_codes(F.col("pq_codes"), dtable).alias("pq_dist")
-        )
-        .orderBy(F.col("pq_dist").asc(), F.col("vec_id").asc())
-        .limit(60)
-        .select("vec_id")
-    )
-    cand = idx.join(F.broadcast(short_ids), "vec_id", "left_semi")
-    q = F.array(*[F.lit(float(x)) for x in qv])
-    return (
-        cand.select(
-            "vec_id", F.round(cosine(F.col("embedding"), q), 6).alias("cos_sim")
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-        .limit(10)
+    """The IVF-PQ probe as deployed: :func:`_ivfpq_topk` against the
+    pre-materialized index (:func:`_ivf_index`). The shortlist scan
+    reads ONLY (vec_id, pq_codes) from the 3 probed partitions
+    (partition pruning + column pruning — the wide vector column
+    never moves), then the exact rerank re-reads vectors for the 60
+    shortlist rows. Same semantics — and oracle — as sim_ivfpq_topk;
+    only the physical access path differs."""
+    return _ivfpq_topk(
+        spark, sf_dir, spark.read.parquet(_ivf_index(spark, sf_dir))
     )
 
 
@@ -2192,9 +2106,6 @@ def q_docs_bigram_logppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bigram_logppl(d, "doc_id", "text")
 
 
-_PQ_BOOK_CACHE: dict[str, list] = {}
-
-
 def q_sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN, shortlist + exact rerank
     (operators/pq.py): vectors encode to 8 codes (16-centroid
@@ -2203,32 +2114,19 @@ def q_sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables shortlists 100 candidates with zero shuffles, then the
     EXACT cosine reranks only those — the standard PQ deployment
     shape (recall from the shortlist width, precision from the
-    rerank; recall@10 vs brute force gated in test_pq). Codebooks
-    train live (pyspark.ml KMeans, seed 42, grid-snapped —
-    deterministic); the oracle embeds the sf0.01-trained codebooks
-    (pq_constants.py) and replays encode → integer shortlist → cosine
-    rerank in SQL, so the WHOLE path hash-checks at the driver scale
-    (like sim_ivf_trained, other scales train different codebooks by
-    design)."""
+    rerank; recall@10 vs brute force gated in test_pq). The codebooks
+    (:func:`_trained_pq_books`) are driver-local seeded Lloyd on the
+    int8 grid — deterministic; the oracle embeds them per scale (the
+    trained/ registry, tools/gen_pq_codebooks.py) and replays encode →
+    integer shortlist → cosine rerank in SQL."""
     from rust_dms_cdc_operator_spark.operators.pq import (  # noqa: PLC0415
         pq_topk_rerank,
-        train_pq_codebooks,
     )
 
     e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") > 0)
-    books = _PQ_BOOK_CACHE.get(sf_dir)
-    if books is None:
-        # train-once/probe-many: codebooks are an offline artifact in
-        # production (gen_pq_codebooks.py); cache per sf_dir so the
-        # bench measures the probe, not retraining per run
-        train = e.filter(F.col("vec_id") <= 2048)
-        books = train_pq_codebooks(
-            train, "embedding", m=8, n_codes=16, seed=42
-        )
-        _PQ_BOOK_CACHE[sf_dir] = books
     return pq_topk_rerank(
-        e, _query_vec(spark, sf_dir), books, "vec_id", "embedding",
-        k=10, shortlist=100,
+        e, _query_vec(spark, sf_dir), _trained_pq_books(spark, sf_dir),
+        "vec_id", "embedding", k=10, shortlist=100,
     )
 
 
@@ -2976,8 +2874,8 @@ ORACLE_SQL_LLM: dict[str, str] = {
 
 def _ivf_trained_oracle_sql(cents=None) -> str:
     """sim_ivf_trained oracle: identical IVF mechanics to the
-    sim_ivf_topk oracle, but the centroids are the seed-42
-    KMeans-trained literals instead of the first 8 vectors, and 3
+    sim_ivf_topk oracle, but the centroids are the seed-42 trained
+    literals (train_ivf_centroids) instead of the first 8 vectors, and 3
     lists are probed. Default literals are the sf0.01 constants (the
     correctness driver's scale); pass ``cents`` from the trained/
     registry to render the SAME oracle for another scale
@@ -7487,32 +7385,27 @@ def _density_n_lists(n_vectors: int) -> int:
     return max(8, -(-n_vectors // 256))
 
 
-_DENSITY_CENT_CACHE: dict[str, list] = {}
-
-
 def _trained_density_cents(spark: SparkSession, sf_dir: str) -> list:
     """Density-query centroids under the corpus-scaled list rule.
     When the rule lands on 8 lists (the driver scales) this IS the
     shared sim_ivf_trained artifact; larger corpora train their own
     seed-42 partitioning (registry kind 'ivfd',
     tools/gen_ivf_centroids.py writes it per sf)."""
-    cents = _DENSITY_CENT_CACHE.get(sf_dir)
-    if cents is None:
-        from rust_dms_cdc_operator_spark.operators.similarity import (  # noqa: PLC0415
-            train_ivf_centroids,
-        )
+    from rust_dms_cdc_operator_spark.operators.similarity import (  # noqa: PLC0415
+        train_ivf_centroids,
+    )
 
+    def build() -> list:
         e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") > 0)
         nl = _density_n_lists(e.count())  # bounded driver scalar
         if nl == 8:
-            cents = _trained_ivf_cents(spark, sf_dir)
-        else:
-            cents = train_ivf_centroids(
-                e.filter(F.col("vec_id") <= 4096), "embedding",
-                n_lists=nl, seed=42, max_train=4096,
-            )
-        _DENSITY_CENT_CACHE[sf_dir] = cents
-    return cents
+            return _trained_ivf_cents(spark, sf_dir)
+        return train_ivf_centroids(
+            e.filter(F.col("vec_id") <= 4096), "embedding",
+            n_lists=nl, seed=42, max_train=4096,
+        )
+
+    return _artifact("ivfd", sf_dir, build)
 
 
 def q_sim_knn_density(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7974,28 +7867,13 @@ def q_docs_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") > 0)
-    from rust_dms_cdc_operator_spark.operators.similarity import (  # noqa: PLC0415
-        _as_double,
-        _vec_lit,
-        cosine,
-    )
-
-    qv = _query_vec(spark, sf_dir)
-    cos = (
-        e.select(
-            F.col("vec_id").alias("doc_id"),
-            F.round(
-                cosine(_as_double(F.col("embedding")), _vec_lit(qv)), 6
-            ).alias("cs"),
-        )
-        .orderBy(F.desc("cs"), F.asc("doc_id"))
-        .limit(50)
-        .select(
-            "doc_id",
-            F.row_number()
-            .over(Window.orderBy(F.desc("cs"), F.asc("doc_id")))
-            .alias("r_cos"),
-        )
+    cos = cosine_topk(
+        e, _query_vec(spark, sf_dir), "vec_id", "embedding", k=50
+    ).select(
+        F.col("vec_id").alias("doc_id"),
+        F.row_number()
+        .over(Window.orderBy(F.desc("cos_sim"), F.asc("vec_id")))
+        .alias("r_cos"),
     )
     fused = bm.join(cos, "doc_id", "full_outer")
     score = F.round(
@@ -8678,81 +8556,19 @@ QUERIES_LLM["docs_token_budget_select"] = q_docs_token_budget_select
 
 
 def q_dedup_semantic_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup-style semantic near-duplicate candidates: assign every
-    embedding to its nearest KMeans-trained IVF centroid (the SAME
-    seed-42 artifact sim_ivf_trained deploys — train once, reuse
-    everywhere), then score pairwise cosine ONLY within a cluster and
-    keep pairs >= 0.3. This is the published SemDeDup recipe
-    (cluster, then compare intra-cluster only): the cluster count is
-    what bounds pair volume — intra-cluster pairs are
-    sum(|cluster|^2)/2, so a FIXED cluster count goes quadratic with
-    the corpus (measured 41x wall at 10x data with n_lists pinned to
-    8). Round 8: the list count follows the corpus via
-    :func:`_density_n_lists` (ceil(n/512), the same rule and trained
-    'ivfd' artifact sim_knn_density deploys), so cluster population —
-    and with it pair volume per row — stays ~constant at any scale.
-    At every driver scale the rule lands on 8 lists, which IS the
-    shared sim_ivf_trained artifact, so the static sf0.01 oracle is
-    unchanged.
-
-    Plan shape honors the HOF-join lint: candidates are generated
-    NARROW (ids only, equi-join on the cluster key), vectors attach
-    by id ABOVE the join, and the cosine HOF runs as a projection —
-    never inside a join condition."""
+    """SemDeDup-style semantic near-duplicate candidates
+    (operators/similarity.semantic_dedup_pairs): intra-cluster pairs
+    with cosine >= 0.3. The cluster count follows the corpus
+    (:func:`_density_n_lists`, the 'ivfd' artifact sim_knn_density
+    deploys), so pair volume per row stays ~constant — a fixed count
+    went 41x in wall at 10x data. At every driver scale the rule lands
+    on 8 lists, the shared sim_ivf_trained artifact."""
     from rust_dms_cdc_operator_spark.operators.similarity import (  # noqa: PLC0415
-        _as_double,
-        cosine,
-        ivf_assign_join,
+        semantic_dedup_pairs,
     )
 
     e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") > 0)
-    cents = _trained_density_cents(spark, sf_dir)
-    # broadcast-join centroid assignment (round 9): flat per-centroid
-    # cost under the corpus-scaled list count, bit-identical to the
-    # ivf_assign expression — see similarity._centroid_scores.
-    # persist: `a` feeds BOTH sides of the cluster self-join and the
-    # returned plan is lazy — without the cache the centroid scoring
-    # recomputes per reference (measured 52 s vs 10 s at native sf1).
-    # One (vec_id, int) row per vector: corpus-bounded, LRU-evicted
-    # (the q11 deliberate-cache contract).
-    a = ivf_assign_join(
-        e.select("vec_id", _as_double(F.col("embedding")).alias("v")),
-        cents,
-        "vec_id",
-        out_col="cluster",
-    ).persist()
-    # round 12: materialize before the self-join fans out — AQE runs
-    # both join sides as concurrent subplans and a cold cache lets
-    # each re-run the centroid scoring (the ivf_knn_density both.count
-    # pattern; one narrow cache-sized job at any scale)
-    a.count()
-    # width-repartition the NARROW pair stream (round 9, the
-    # ivf_knn_density fix): the cluster self-join multiplies row
-    # count by cluster occupancy while AQE sizes the next stage from
-    # the narrow map-side bytes, so the cosine projection would run
-    # at scan width. One cheap id-only shuffle pins it at cluster
-    # width. Measured at native sf1: 54.7 s -> 16 s, same rows.
-    cand = (
-        a.select(F.col("vec_id").alias("id_a"), "cluster")
-        .join(a.select(F.col("vec_id").alias("id_b"), "cluster"), "cluster")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .repartition(
-            spark.sparkContext.defaultParallelism, F.col("id_a")
-        )
-    )
-    va = e.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("emb_a"))
-    vb = e.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("emb_b"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.col("cluster").cast("long").alias("cluster"),
-            F.round(cosine(F.col("emb_a"), F.col("emb_b")), 6).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= 0.3)
-    )
+    return semantic_dedup_pairs(e, _trained_density_cents(spark, sf_dir), 0.3)
 
 
 def _semantic_pairs_oracle_sql(cents=None) -> str:
@@ -14122,8 +13938,8 @@ def q_sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram are sample-sized. Self is always a candidate (its own
     list is its top probe), so hits >= 1 and no query row vanishes."""
     from rust_dms_cdc_operator_spark.operators.similarity import (  # noqa: PLC0415
+        _cell_pairs,
         batch_cosine_topk,
-        cosine,
         ivf_assign_join,
         ivf_probe_lists_join,
     )
@@ -14142,21 +13958,16 @@ def q_sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("query_id", "vec_id")
     assigned = ivf_assign_join(
         e, cents, "vec_id", vec_col="embedding", out_col="lst"
-    )
+    ).withColumnRenamed("vec_id", "id_b")
     probes = ivf_probe_lists_join(
         q, cents, "query_id", nprobe, vec_col="query_vec", out_col="lst"
-    )
-    cand = (
-        e.join(assigned, "vec_id")
-        .join(probes, "lst")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                cosine(F.col("embedding"), F.col("query_vec")), 6
-            ).alias("s"),
-        )
+    ).withColumnRenamed("query_id", "id_a")
+    cand = _cell_pairs(
+        probes, assigned, "lst", F.broadcast(q), e.select("vec_id", "embedding")
+    ).select(
+        F.col("id_a").alias("query_id"),
+        F.col("id_b").alias("vec_id"),
+        F.col("cos_sim").alias("s"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("s"), F.asc("vec_id")

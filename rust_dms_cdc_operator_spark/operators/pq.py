@@ -21,8 +21,10 @@ is computed ONCE driver-side (the query vector is a constant of the
 query), so ranking is kernel projection + TakeOrderedAndProject: no
 shuffle at all before the k-row cut, and the full-precision vectors
 are re-read only for the shortlist during the exact rerank
-(pq_topk_rerank — the standard deployment shape). Composes with IVF
-partition pruning (encode within lists) for IVF-PQ.
+(pq_topk_rerank — the standard deployment shape). A frame that
+already carries its codes (``PQ_CODES_COL``, as written by
+write_ivfpq_partitioned) is ranked from them instead of re-encoding;
+filtered through similarity.ivf_probe first, that is IVF-PQ.
 """
 
 from __future__ import annotations
@@ -32,7 +34,14 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rust_dms_cdc_operator_spark.operators.similarity import quantize_vec
+from rust_dms_cdc_operator_spark.operators.similarity import (
+    cosine_topk,
+    quantize_vec,
+    write_ivf_partitioned,
+)
+
+#: Stored PQ codes of a materialized index (1-based, as pq_encode emits).
+PQ_CODES_COL = "pq_codes"
 
 
 def quantize_scalar(x: float, scale: int = 127) -> int:
@@ -203,14 +212,22 @@ def pq_topk(
     k: int = 10,
     scale: int = 127,
 ) -> DataFrame:
-    """Approximate top-k by PQ/ADC, ascending distance with the id as
-    the deterministic tie-break. Plan: Arrow kernel projection +
-    TakeOrderedAndProject; zero shuffles before the k-row merge."""
-    return (
-        adc_distances(df, query_vec, codebooks, id_col, vec_col, scale)
-        .orderBy(F.col("pq_dist").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    """Approximate top-k (id, pq_dist) by PQ/ADC, ascending distance
+    with the id as the deterministic tie-break. Distances come from
+    the stored ``PQ_CODES_COL`` when the frame has it
+    (:func:`adc_from_codes` — the scan reads codes, never vectors) and
+    from the :func:`adc_distances` kernel otherwise; both give the
+    same integers. Plan: one projection + TakeOrderedAndProject; zero
+    shuffles before the k-row merge."""
+    if PQ_CODES_COL in df.columns:
+        dtable = pq_distance_table(query_vec, codebooks, scale)
+        dist = df.select(
+            F.col(id_col),
+            adc_from_codes(F.col(PQ_CODES_COL), dtable).alias("pq_dist"),
+        )
+    else:
+        dist = adc_distances(df, query_vec, codebooks, id_col, vec_col, scale)
+    return dist.orderBy(F.col("pq_dist").asc(), F.col(id_col).asc()).limit(k)
 
 
 def pq_topk_rerank(
@@ -224,33 +241,19 @@ def pq_topk_rerank(
     scale: int = 127,
     round_digits: int = 6,
 ) -> DataFrame:
-    """The production PQ pattern: ADC shortlist (cheap, code-width
-    candidates) -> EXACT cosine rerank of the shortlist -> top-k.
-    Recall is set by the shortlist width, precision by the exact
-    rerank; at 100 TB the full-precision vectors are only touched for
-    ``shortlist`` rows per query instead of the whole corpus. Ties at
-    the shortlist boundary break on (pq_dist, id) — deterministic
-    membership in every engine."""
-    from rust_dms_cdc_operator_spark.operators.similarity import (  # noqa: PLC0415
-        cosine,
-    )
-
-    short_ids = (
-        adc_distances(df, query_vec, codebooks, id_col, vec_col, scale)
-        .orderBy(F.col("pq_dist").asc(), F.col(id_col).asc())
-        .limit(shortlist)
-        .select(id_col)
-    )
-    # the k-row shortlist broadcasts; full-precision vectors are read
-    # only for the matching rows
+    """The production PQ pattern: ADC shortlist (:func:`pq_topk`,
+    code-width candidates) -> EXACT cosine rerank of the shortlist
+    (:func:`similarity.cosine_topk`) -> top-k. Recall is set by the
+    shortlist width, precision by the exact rerank; the full-precision
+    vectors are only read for the ``shortlist`` rows (a broadcast
+    left-semi join) instead of the whole corpus. Ties at the shortlist
+    boundary break on (pq_dist, id) — deterministic membership in
+    every engine."""
+    short_ids = pq_topk(
+        df, query_vec, codebooks, id_col, vec_col, shortlist, scale
+    ).select(id_col)
     short = df.join(F.broadcast(short_ids), id_col, "left_semi")
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    cos = F.round(cosine(F.col(vec_col), q), round_digits)
-    return (
-        short.select(F.col(id_col), cos.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return cosine_topk(short, query_vec, id_col, vec_col, k, round_digits)
 
 
 # ------------------------------------------------------------- SQL mirrors
@@ -310,20 +313,18 @@ def write_ivfpq_partitioned(
     round_digits: int = 6,
     scale: int = 127,
 ) -> None:
-    """Materialize the full IVF-PQ index: rows carry their PQ codes
-    (encoded ONCE, write-side) and live under their IVF list as the
-    partition key. A probe then (a) partition-prunes to nprobe lists,
+    """Materialize the full IVF-PQ index: the
+    :func:`similarity.write_ivf_partitioned` table (IVF list as the
+    partition key) whose rows also carry their PQ codes, encoded ONCE
+    at write time. A probe then (a) partition-prunes to nprobe lists,
     (b) scans only (id, codes) for the ADC shortlist — column pruning
     drops the wide vector column, (c) re-reads vectors for the
     shortlist rows only. This is the faiss IVF-PQ layout expressed as
     a parquet table."""
-    from rust_dms_cdc_operator_spark.operators.similarity import (  # noqa: PLC0415
-        IVF_LIST_COL,
-        ivf_assign,
+    write_ivf_partitioned(
+        df.withColumn(PQ_CODES_COL, pq_encode(F.col(vec_col), codebooks, scale)),
+        path,
+        centroid_vecs,
+        vec_col,
+        round_digits,
     )
-
-    df.withColumn(
-        IVF_LIST_COL, ivf_assign(F.col(vec_col), centroid_vecs, round_digits)
-    ).withColumn(
-        "pq_codes", pq_encode(F.col(vec_col), codebooks, scale)
-    ).write.mode("overwrite").partitionBy(IVF_LIST_COL).parquet(path)

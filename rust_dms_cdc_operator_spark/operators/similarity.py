@@ -1,19 +1,25 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, mirroring how ANN is deployed at scale:
+Every score is the exact cosine of :func:`cosine` (``F.zip_with`` +
+``F.aggregate``: a JVM fold in fixed left-to-right order, so scores
+reproduce bit-for-bit), rounded for engine portability, and every
+single-query top-k is :func:`cosine_topk` — (cosine desc, id asc)
+over the candidates an index admits:
 
-- ``cosine_topk`` — brute-force exact top-k against a query vector.
-  The dot product is ``F.zip_with`` + ``F.aggregate`` (JVM fold, no
-  UDF, deterministic left-to-right order — reproducible bit-for-bit).
-  Linear scan; the right baseline and the recall oracle for ANN.
-- ``lsh_bucket_topk`` — sign-bit LSH: bucket every vector by the sign
-  pattern of its leading components (or any fixed projection set),
-  then scan only the query's bucket. At 100 TB the bucket column is
-  a partition/cluster key, so a probe touches one partition instead
-  of the fleet; recall is tuned by the number of sign bits.
+- brute force: ``cosine_topk`` over the whole frame, the recall
+  oracle of every ANN path;
+- sign-bit LSH: ``lsh_bucket_topk`` scans the query's bucket;
+- IVF: ``ivf_probe`` keeps the ``nprobe`` lists nearest the query —
+  a partition filter on a ``write_ivf_partitioned`` table, the
+  ``ivf_assign`` expression on any other frame — and ``ivf_topk``
+  ranks them;
+- shortlist + exact rerank: ``jl_rerank_topk`` shortlists in a
+  random projection, ``operators.pq.pq_topk_rerank`` by PQ/ADC.
 
-``embedding_neardup_pairs`` is the dedup flavor: bounded candidate
-pairs with exact cosine, for near-duplicate detection on embeddings.
+The pair operators (``embedding_neardup_pairs``, ``ivf_knn_density``,
+``semantic_dedup_pairs``) generate NARROW id-pair candidates and
+score them through one vector attach, :func:`_pair_cosine`; the
+IVF ones generate them with one cell join, :func:`_cell_pairs`.
 """
 
 from __future__ import annotations
@@ -96,6 +102,57 @@ def lsh_bucket_topk(
     return cosine_topk(candidates, query_vec, id_col, vec_col, k, round_digits)
 
 
+def _pair_cosine(
+    cand: DataFrame,
+    vecs_a: DataFrame,
+    vecs_b: DataFrame,
+    round_digits: int = 6,
+) -> DataFrame:
+    """Score NARROW candidate pairs: attach each side's vector by id
+    above ``cand`` (id_a, id_b, ...) — ``vecs_a`` and ``vecs_b`` are
+    (id, vector) frames — and add the rounded cosine as a projection,
+    ``cos_sim``. Vectors are absent from candidate generation, so a
+    caller's cosine threshold cannot sink into a candidate join's
+    condition next to its cheap id conjuncts (the cosine would then
+    run on every joined row instead of the survivors;
+    tests/test_plan_lint.py guards the shape), and the candidate
+    shuffles move ids, not payloads."""
+    cols = cand.columns
+    cos = F.round(cosine(F.col("va"), F.col("vb")), round_digits)
+    return (
+        cand.join(vecs_a.toDF("id_a", "va"), "id_a")
+        .join(vecs_b.toDF("id_b", "vb"), "id_b")
+        .select(*cols, cos.alias("cos_sim"))
+    )
+
+
+def _cell_pairs(
+    a: DataFrame,
+    b: DataFrame,
+    on: str,
+    vecs_a: DataFrame,
+    vecs_b: DataFrame,
+    keep: Column | None = None,
+) -> DataFrame:
+    """The one IVF cell join: equi-join the NARROW frames ``a``
+    (id_a, on) and ``b`` (id_b, on) on the cell ``on``, keep the pairs
+    ``keep`` admits, spread them over the default parallelism by id_a
+    and score them with :func:`_pair_cosine`. The join multiplies the
+    row count by cell occupancy while AQE sizes the next stage from
+    the narrow map-side bytes, so without the explicit repartition
+    (exempt from AQE coalescing) the cosine projection ran at scan
+    width (sf1: 114.6 s -> 38.8 s for ivf_knn_density, 54.7 s -> 16 s
+    for the semantic pairs); hash-partitioning by id_a is also the
+    distribution a per-id_a window above needs."""
+    cand = a.join(b, on)
+    if keep is not None:
+        cand = cand.filter(keep)
+    cand = cand.repartition(
+        a.sparkSession.sparkContext.defaultParallelism, F.col("id_a")
+    )
+    return _pair_cosine(cand, vecs_a, vecs_b)
+
+
 def embedding_neardup_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -113,35 +170,13 @@ def embedding_neardup_pairs(
     blocked equi-join; without one, the id-gap bound IS the blocking
     key — each left row explodes its ≤``max_id_gap`` candidate ids
     (``explode(sequence(...))``) and equi-joins them, which is linear
-    in rows×gap and shuffle-partitionable, where the old
-    crossJoin-then-filter was quadratic.
-
-    NARROW-THEN-FETCH (round-6 plan fix): candidate generation moves
-    only (id, block) — the vectors are attached AFTERWARDS by two
-    id equi-joins and scored above them. Generating candidates with
-    vectors inline let Catalyst push the caller's cosine threshold
-    into the block join's condition, PREPENDED to the cheap id/gap
-    conjuncts — the interpreted HOF cosine then ran (twice) on every
-    block-joined row instead of the gap survivors (measured 6.0 s →
-    1.3 s at sf0.1: 400k joined rows, 4.9k survivors). With vectors
-    absent from the candidate join, a cosine predicate physically
-    cannot sink below the fetch joins. At 100 TB the same shape is
-    what you want anyway: the block shuffle carries two longs per
-    row, not the embedding payload."""
-    join_keys = [block_col] if block_col else []
-    ids = df.select(
-        *(F.col(c) for c in join_keys), F.col(id_col)
-    )
-    a = ids.select(
-        *(F.col(c).alias(c) for c in join_keys),
-        F.col(id_col).alias("id_a"),
-    )
-    b = ids.select(
-        *(F.col(c).alias(c) for c in join_keys),
-        F.col(id_col).alias("id_b"),
-    )
-    if join_keys:
-        cand = a.join(b, join_keys).filter(
+    in rows×gap and shuffle-partitionable. Either way the candidates
+    carry ids only and :func:`_pair_cosine` scores them."""
+    ids = df.select(*([F.col(block_col)] if block_col else []), F.col(id_col))
+    a = ids.withColumnRenamed(id_col, "id_a")
+    b = ids.withColumnRenamed(id_col, "id_b")
+    if block_col:
+        cand = a.join(b, block_col).filter(
             (F.col("id_a") < F.col("id_b"))
             & (F.col("id_b") - F.col("id_a") <= max_id_gap)
         )
@@ -154,16 +189,9 @@ def embedding_neardup_pairs(
                 )
             ),
         ).join(b, "id_b")
-    cand = cand.select("id_a", "id_b")
-    va = df.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a")
-    )
-    vb = df.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b")
-    )
-    pairs = cand.join(va, "id_a").join(vb, "id_b")
-    cos = F.round(cosine(F.col("vec_a"), F.col("vec_b")), round_digits)
-    return pairs.select("id_a", "id_b", cos.alias("cos_sim")).filter(
+    vecs = df.select(id_col, vec_col)
+    pairs = _pair_cosine(cand.select("id_a", "id_b"), vecs, vecs, round_digits)
+    return pairs.select("id_a", "id_b", "cos_sim").filter(
         F.col("cos_sim") >= min_cosine
     )
 
@@ -204,15 +232,14 @@ def train_ivf_centroids(
     BOUNDED ordered sample — the same layout-independence contract as
     :func:`operators.pq.train_pq_codebooks`.
 
-    Earlier rounds used pyspark.ml KMeans here; round 7's full-scale
-    sweep measured that its centroids depend on the PARTITION LAYOUT
-    (k-means|| init samples per partition and the per-iteration
-    aggregation sums floats in partition order), so artifacts trained
-    at one --master/-shuffle-partition setting failed the oracle at
-    another. Coarse quantizers are KB-sized artifacts that every
-    production ANN system (faiss-style) trains on a bounded sample;
-    doing the same here makes the centroids a pure function of (data,
-    seed) — any cluster size, any layout.
+    The sample is bounded because a coarse quantizer is a KB-sized
+    artifact that production ANN systems (faiss-style) train on a
+    sample, and driver-local because a distributed fit (pyspark.ml
+    KMeans: k-means|| init samples per partition, per-iteration sums
+    in partition order) depends on the partition layout, so its
+    artifacts fail the oracle under another master or shuffle-
+    partition setting. Here the centroids are a pure function of
+    (data, seed) on any cluster size and layout.
 
     Vectors are L2-normalized (float64) so Euclidean Lloyd clusters
     *directions* — consistent with the cosine-based list assignment
@@ -280,29 +307,6 @@ def _nearest_centroids(
     return [-ni for _, ni in sims[:nprobe]]
 
 
-def ivf_topk_partitioned(
-    spark,
-    path: str,
-    query_vec: list[float],
-    centroid_vecs: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    nprobe: int = 2,
-    round_digits: int | None = 6,
-) -> DataFrame:
-    """IVF probe against a :func:`write_ivf_partitioned` table: the
-    list filter is a partition filter, so the scan touches only the
-    probed directories."""
-    probe_ids = _nearest_centroids(
-        query_vec, centroid_vecs, nprobe, round_digits or 6
-    )
-    candidates = spark.read.parquet(path).filter(
-        F.col(IVF_LIST_COL).isin(probe_ids)
-    )
-    return cosine_topk(candidates, query_vec, id_col, vec_col, k, round_digits)
-
-
 def _py_cosine(a: list[float], b: list[float]) -> float:
     """Driver-side cosine with the same sequential-fold order as
     ``dot``/``norm`` (bit-reproducible against the JVM fold)."""
@@ -318,6 +322,31 @@ def _py_cosine(a: list[float], b: list[float]) -> float:
     return d / ((na**0.5) * (nb**0.5))
 
 
+def ivf_probe(
+    df: DataFrame,
+    query_vec: list[float],
+    centroid_vecs: list[list[float]],
+    vec_col: str = "embedding",
+    nprobe: int = 2,
+    round_digits: int = 6,
+) -> DataFrame:
+    """The rows of ``df`` in the ``nprobe`` IVF lists nearest the
+    query (:func:`_nearest_centroids`, on the driver). A frame that
+    carries ``IVF_LIST_COL`` — a :func:`write_ivf_partitioned` table
+    written with the same centroids — is filtered on that column, which the scan turns into partition
+    pruning; any other frame is filtered on the :func:`ivf_assign`
+    expression. Both assign by the same rule, so both keep the same
+    rows."""
+    probe_ids = _nearest_centroids(
+        query_vec, centroid_vecs, nprobe, round_digits
+    )
+    if IVF_LIST_COL in df.columns:
+        lst = F.col(IVF_LIST_COL)
+    else:
+        lst = ivf_assign(F.col(vec_col), centroid_vecs, round_digits)
+    return df.filter(lst.isin(probe_ids))
+
+
 def ivf_topk(
     df: DataFrame,
     query_vec: list[float],
@@ -328,24 +357,19 @@ def ivf_topk(
     nprobe: int = 2,
     round_digits: int | None = 6,
 ) -> DataFrame:
-    """IVF ANN: assign every vector to its nearest centroid's inverted
-    list, probe only the ``nprobe`` lists nearest the query, exact
-    cosine top-k within them.
+    """IVF ANN: exact cosine top-k (:func:`cosine_topk`) within the
+    ``nprobe`` inverted lists nearest the query (:func:`ivf_probe`).
 
-    At 100 TB the assignment column is the table's partition/cluster
-    key, so a probe reads nprobe/n_centroids of the data (plus the
-    centroids are a broadcast-scale literal). Centroids here are
-    caller-supplied; production trains them with pyspark.ml KMeans —
-    the probing/partitioning mechanics are identical and are what this
-    operator provides. Deterministic given the centroids, so
-    oracle-checkable end to end.
-    """
-    probe_ids = _nearest_centroids(
-        query_vec, centroid_vecs, nprobe, round_digits or 6
+    On a :func:`write_ivf_partitioned` table the list id is the
+    partition key, so a probe reads nprobe/n_lists of the data; the
+    centroids are a driver-side literal. They are caller-supplied —
+    fixed vectors, or :func:`train_ivf_centroids`' driver-local
+    seeded Lloyd. Deterministic given the centroids, so
+    oracle-checkable end to end."""
+    cand = ivf_probe(
+        df, query_vec, centroid_vecs, vec_col, nprobe, round_digits or 6
     )
-    assign = ivf_assign(F.col(vec_col), centroid_vecs, round_digits or 6)
-    candidates = df.filter(assign.isin(probe_ids))
-    return cosine_topk(candidates, query_vec, id_col, vec_col, k, round_digits)
+    return cosine_topk(cand, query_vec, id_col, vec_col, k, round_digits)
 
 
 def batch_cosine_topk(
@@ -448,33 +472,6 @@ def quantized_topk(
     return scored.orderBy(F.col("dot_int").desc(), F.col(id_col)).limit(k)
 
 
-def ivf_probe_lists(
-    vec: Column,
-    centroid_vecs: list[list[float]],
-    nprobe: int,
-    round_digits: int = 6,
-) -> Column:
-    """Per-row top-``nprobe`` nearest centroid ids (cosine desc, ties
-    -> lowest id) as an array — the multi-list generalization of
-    :func:`ivf_assign` for operators where every ROW is a query (self
-    k-NN, density scoring). Pure expression: n_lists rounded cosines
-    per row, one array_sort, one slice — no join, no shuffle."""
-    scored = F.array(
-        *[
-            F.struct(
-                (-F.round(cosine(vec, _vec_lit(c)), round_digits)).alias(
-                    "ns"
-                ),
-                F.lit(i).alias("i"),
-            )
-            for i, c in enumerate(centroid_vecs)
-        ]
-    )
-    return F.transform(
-        F.slice(F.array_sort(scored), 1, nprobe), lambda s: s["i"]
-    )
-
-
 def _centroid_scores(
     df: DataFrame,
     centroid_vecs: list[list[float]],
@@ -501,9 +498,9 @@ def _centroid_scores(
     IEEE-identical to the expression form: same cosine fold over the
     same doubles."""
     spark = df.sparkSession
-    # Arrow local relation (round 12): the list form re-paid one
-    # Python-worker hop per pickled slice at every evaluation of the
-    # broadcast build side — see session.local_relation
+    # an Arrow local relation: a pickled-list frame re-pays one
+    # Python-worker hop per slice at every evaluation of the broadcast
+    # build side — see session.local_relation
     cents = local_relation(
         spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroid_vecs)],
@@ -517,6 +514,32 @@ def _centroid_scores(
     )
 
 
+def _nearest_list() -> Column:
+    """Aggregate over :func:`_centroid_scores` rows: max of
+    struct(s, -cid), so ties go to the lowest centroid index —
+    :func:`ivf_assign`'s greatest() rule. Read the list as -ni."""
+    return F.max(F.struct(F.col("s"), (-F.col("cid")).alias("ni")))
+
+
+def _probe_lists(nprobe: int) -> Column:
+    """Aggregate over :func:`_centroid_scores` rows: the ``nprobe``
+    nearest lists as a sorted array of struct(-s, cid) — cosine desc,
+    ties to the lowest id, the :func:`_nearest_centroids` rule."""
+    return F.slice(
+        F.array_sort(
+            F.collect_list(
+                F.struct((-F.col("s")).alias("ns"), F.col("cid").alias("i"))
+            )
+        ),
+        1,
+        nprobe,
+    )
+
+
+def _explode_lists(lists: Column) -> Column:
+    return F.explode(F.transform(lists, lambda s: s["i"]))
+
+
 def ivf_assign_join(
     df: DataFrame,
     centroid_vecs: list[list[float]],
@@ -527,14 +550,11 @@ def ivf_assign_join(
 ) -> DataFrame:
     """(id, lst) nearest-centroid assignment via the broadcast
     centroid join (:func:`_centroid_scores`) + a map-side-combinable
-    struct-max argmax. Ties -> lowest centroid index: max over
-    struct(s, -cid) is exactly :func:`ivf_assign`'s greatest() rule,
-    so the two forms are interchangeable bit-for-bit."""
+    struct-max argmax (:func:`_nearest_list`), interchangeable
+    bit-for-bit with the :func:`ivf_assign` expression."""
     scored = _centroid_scores(df, centroid_vecs, id_col, vec_col,
                               round_digits)
-    best = scored.groupBy(id_col).agg(
-        F.max(F.struct(F.col("s"), (-F.col("cid")).alias("ni"))).alias("m")
-    )
+    best = scored.groupBy(id_col).agg(_nearest_list().alias("m"))
     return best.select(
         F.col(id_col), (-F.col("m.ni")).cast("int").alias(out_col)
     )
@@ -550,29 +570,15 @@ def ivf_probe_lists_join(
     round_digits: int = 6,
 ) -> DataFrame:
     """(id, lst) EXPLODED top-``nprobe`` probe lists via the broadcast
-    centroid join — the corpus-scaled twin of
-    :func:`ivf_probe_lists` (cosine desc, ties -> lowest id; the
-    same (-s, cid) struct sort, so list sets match the expression
-    form exactly). One narrow (id, struct) shuffle of n x n_lists
-    rows; the collect_list per id is n_lists-bounded."""
+    centroid join: every row is a query, probed by the same rule as
+    :func:`_nearest_centroids` (cosine desc, ties -> lowest id). One
+    narrow (id, struct) shuffle of n x n_lists rows; the collect_list
+    per id is n_lists-bounded."""
     scored = _centroid_scores(df, centroid_vecs, id_col, vec_col,
                               round_digits)
-    lists = scored.groupBy(id_col).agg(
-        F.slice(
-            F.array_sort(
-                F.collect_list(
-                    F.struct((-F.col("s")).alias("ns"), F.col("cid").alias("i"))
-                )
-            ),
-            1,
-            nprobe,
-        ).alias("_ls")
-    )
+    lists = scored.groupBy(id_col).agg(_probe_lists(nprobe).alias("_ls"))
     return lists.select(
-        F.col(id_col),
-        F.explode(F.transform(F.col("_ls"), lambda s: s["i"])).alias(
-            out_col
-        ),
+        F.col(id_col), _explode_lists(F.col("_ls")).alias(out_col)
     )
 
 
@@ -597,81 +603,42 @@ def ivf_knn_density(
     WHOLE corpus, not per bounded query set — so the IVF cell
     structure is the plan: candidates are (probe-side id, cell) ×
     (index-side id, cell) equi-joins, bounded by cell occupancy ×
-    nprobe, never all-pairs. The candidate stream is NARROW (two ids);
-    vectors attach by id-join above it (the embedding_neardup_pairs
-    rewrite — measured 12x there), cosines round to 6 digits and then
-    become exact MICRO-unit integers, so neighbor ranking, distance
-    sums, and the final ordering are integer-exact cross-engine; the
-    two closing divisions are single IEEE ops. Neighbor quality
-    degrades gracefully at cell boundaries exactly as IVF recall
-    does — same determinism contract as the ivf_topk family (the
-    oracle replays the identical algorithm, literally)."""
+    nprobe, never all-pairs (:func:`_cell_pairs`; the window below is
+    per id_a, the cell join's distribution). Cosines round to 6
+    digits and then become exact MICRO-unit integers, so neighbor
+    ranking, distance sums, and the final ordering are integer-exact
+    cross-engine; the two closing divisions are single IEEE ops.
+    Neighbor quality degrades gracefully at cell boundaries exactly as
+    IVF recall does — same determinism contract as the ivf_topk
+    family (the oracle replays the identical algorithm, literally)."""
     e = df.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-    # broadcast-join centroid scoring (round 9): the expression forms
-    # inline n_lists literal arrays per row, so their per-row cost
-    # grows with the corpus-scaled list count (22 s to assign 20k rows
-    # at 79 lists); the join form is flat per (row, centroid) and
-    # bit-identical — see _centroid_scores. ONE scored pass feeds both
-    # the assignment argmax and the top-nprobe probe lists (same
-    # struct-sort tie rules as ivf_assign / ivf_probe_lists), and the
-    # n-row result persists: it is referenced from BOTH sides of the
-    # cell join below, and the returned plan is lazy, so unpersisting
-    # here would recompute the scoring per reference (measured 5x the
-    # query wall). The cache is one (id, int, nprobe ints) row per
-    # vector — corpus-bounded and LRU-evicted (the q11 contract). It is
-    # filled BEFORE the fan-out (guide §5 — the minhash_lsh_pairs
-    # signature-cache pattern): AQE launches both sides of the cell
-    # join as concurrent subplans, and on a cold cache each side re-ran
-    # the whole centroid scoring pass (measured at sf0.1: exec bimodal
-    # 3.0 s / 37 cpu-s on lucky runs vs 9-10 s / 183-225 cpu-s when the
-    # race lost).
+    # The broadcast centroid join scores each (row, centroid) pair at
+    # flat cost, where the expression forms inline n_lists literal
+    # arrays per row (22 s to assign 20k rows at 79 lists) — see
+    # _centroid_scores. ONE scored pass feeds both the assignment and
+    # the probe lists. It is cached because both sides of the cell
+    # join read it and the returned plan is lazy (recomputing it per
+    # reference cost 5x the query wall), and filled BEFORE the
+    # fan-out: AQE runs both join sides as concurrent subplans, and on
+    # a cold cache each re-ran the scoring (sf0.1 exec 3.0 s vs
+    # 9-10 s when the race lost). One (id, int, nprobe ints) row per
+    # vector, LRU-evictable.
     scored = _centroid_scores(e, centroid_vecs, id_col)
     both = materialize_cache(scored.groupBy(id_col).agg(
-        F.max(F.struct(F.col("s"), (-F.col("cid")).alias("ni"))).alias("m"),
-        F.slice(
-            F.array_sort(
-                F.collect_list(
-                    F.struct((-F.col("s")).alias("ns"), F.col("cid").alias("i"))
-                )
-            ),
-            1,
-            nprobe,
-        ).alias("_ls"),
+        _nearest_list().alias("m"), _probe_lists(nprobe).alias("_ls")
     ))
     assign = both.select(
         F.col(id_col).alias("id_b"), (-F.col("m.ni")).cast("int").alias("lst")
     )
     probes = both.select(
-        F.col(id_col).alias("id_a"),
-        F.explode(F.transform(F.col("_ls"), lambda s: s["i"])).alias("lst"),
+        F.col(id_col).alias("id_a"), _explode_lists(F.col("_ls")).alias("lst")
     )
-    # width-repartition the NARROW candidate stream (round 9): the
-    # cell join multiplies row count by cell occupancy, but AQE sizes
-    # the post-join stage from the MAP-SIDE shuffle bytes (ids only —
-    # a few hundred MB at 10x), so the expensive cosine projection
-    # below would run at scan width (4 tasks on the committed
-    # fixtures, every core idle). Explicit numPartitions is exempt
-    # from AQE coalescing; the shuffle moves 12-byte id pairs, and
-    # hash-partitioning by id_a doubles as the window's required
-    # distribution so no second exchange appears. Measured at native
-    # sf1: 114.6 s -> 38.8 s, identical results.
-    cand = (
-        probes.join(assign, "lst")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .repartition(
-            df.sparkSession.sparkContext.defaultParallelism, F.col("id_a")
-        )
-    )
-    va = e.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"))
-    vb = e.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"))
-    cosm = (
-        F.round(F.round(cosine(F.col("va"), F.col("vb")), 6) * 1_000_000, 0)
-        .cast("long")
-    )
-    pairs = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", cosm.alias("cosm"))
+    pairs = _cell_pairs(
+        probes, assign, "lst", e, e, F.col("id_a") != F.col("id_b")
+    ).select(
+        "id_a",
+        "id_b",
+        F.round(F.col("cos_sim") * 1_000_000, 0).cast("long").alias("cosm"),
     )
     from pyspark.sql import Window  # noqa: PLC0415
 
@@ -697,6 +664,49 @@ def ivf_knn_density(
         .orderBy(F.col("mean_dist").desc(), F.col(id_col).asc())
         .limit(top_n)
     )
+
+
+def semantic_dedup_pairs(
+    df: DataFrame,
+    centroid_vecs: list[list[float]],
+    min_cosine: float,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """SemDeDup-style semantic near-duplicate candidates: assign every
+    vector to its nearest IVF centroid (:func:`ivf_assign_join`), then
+    score cosine only within a cluster and keep pairs with
+    ``cos_sim >= min_cosine``. Returns (id_a, id_b, cluster, cos_sim)
+    with id_a < id_b.
+
+    The cluster count bounds the pair volume: intra-cluster pairs are
+    sum(|cluster|^2)/2, so callers scale the centroid count with the
+    corpus to keep pairs per row ~constant. The assignment is cached
+    (:func:`session.materialize_cache`) before the fan-out: both sides
+    of the cell join read it, and on a cold cache AQE's concurrent
+    subplans each re-ran the centroid scoring (52 s vs 10 s at sf1).
+    One (id, int) row per vector, LRU-evictable."""
+    a = materialize_cache(ivf_assign_join(
+        df.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v")),
+        centroid_vecs,
+        id_col,
+        out_col="cluster",
+    ))
+    vecs = df.select(id_col, vec_col)
+    pairs = _cell_pairs(
+        a.withColumnRenamed(id_col, "id_a"),
+        a.withColumnRenamed(id_col, "id_b"),
+        "cluster",
+        vecs,
+        vecs,
+        F.col("id_a") < F.col("id_b"),
+    )
+    return pairs.select(
+        "id_a",
+        "id_b",
+        F.col("cluster").cast("long").alias("cluster"),
+        "cos_sim",
+    ).filter(F.col("cos_sim") >= min_cosine)
 
 
 def jl_matrix(k: int, d: int, seed: str = "jl") -> list[list[float]]:
@@ -786,22 +796,12 @@ def jl_rerank_topk(
     short = proj.orderBy(
         F.col("jl_sim").desc(), F.col(id_col).asc()
     ).limit(shortlist)
-    rer = (
-        short.join(e, id_col)
-        .select(
-            id_col,
-            F.round(cosine(F.col("v"), _vec_lit(query_vec)), round_digits)
-            .alias("cos_sim"),
-        )
+    rer = cosine_topk(
+        short.select(id_col).join(e, id_col), query_vec, id_col, "v", k,
+        round_digits,
     )
     exact = (
-        e.select(
-            F.col(id_col),
-            F.round(cosine(F.col("v"), _vec_lit(query_vec)), round_digits)
-            .alias("cs"),
-        )
-        .orderBy(F.col("cs").desc(), F.col(id_col).asc())
-        .limit(k)
+        cosine_topk(e, query_vec, id_col, "v", k, round_digits)
         .select(id_col)
         .withColumn("_hit", F.lit(True))
     )

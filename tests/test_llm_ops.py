@@ -243,12 +243,11 @@ def _clustered_vectors(n_clusters=8, per_cluster=40, dim=16, noise=0.15):
 
 
 def test_trained_ivf_recall(spark, tmp_path):
-    """KMeans-trained centroids (seed-fixed) must give recall@10 >= 0.8
+    """Trained centroids (seed-fixed Lloyd) must give recall@10 >= 0.8
     vs the exact scan at nprobe=2 on clustered data, and the
     partitioned write must prune the scan to the probed lists."""
     from rust_dms_cdc_operator_spark.operators.similarity import (
         ivf_topk,
-        ivf_topk_partitioned,
         train_ivf_centroids,
         write_ivf_partitioned,
     )
@@ -266,7 +265,7 @@ def test_trained_ivf_recall(spark, tmp_path):
     # materialized assignment: probe prunes partitions at the scan
     path = str(tmp_path / "ivf_table")
     write_ivf_partitioned(df, path, cents)
-    part = ivf_topk_partitioned(spark, path, query, cents, k=10, nprobe=2)
+    part = ivf_topk(spark.read.parquet(path), query, cents, k=10, nprobe=2)
     assert [r.vec_id for r in part.collect()] == approx
     plan = part._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [ivf_list" in plan.replace("#", " #").replace(
@@ -4945,15 +4944,16 @@ def test_check_oracle_embedding_groups_assist_gating():
 
 
 def test_ivf_join_forms_match_expression_forms(spark):
-    """The broadcast-quantizer join forms (ivf_assign_join /
-    ivf_probe_lists_join, round 9) must reproduce the expression
-    forms (ivf_assign / ivf_probe_lists) bit-for-bit — same rounded
-    cosines, same argmax and probe-list tie rules — on a frame with
-    deliberate ties (duplicate vectors, symmetric centroids)."""
+    """The broadcast-quantizer join forms must reproduce the per-row
+    rules bit-for-bit on a frame with deliberate ties (duplicate
+    vectors, symmetric centroids): ivf_assign_join the ivf_assign
+    expression, ivf_probe_lists_join a driver-side replay of every
+    row as a query through _nearest_centroids (the single-query
+    probe's rule: rounded cosine desc, ties -> lowest list id)."""
     from rust_dms_cdc_operator_spark.operators.similarity import (
+        _nearest_centroids,
         ivf_assign,
         ivf_assign_join,
-        ivf_probe_lists,
         ivf_probe_lists_join,
     )
 
@@ -4973,14 +4973,56 @@ def test_ivf_join_forms_match_expression_forms(spark):
            ivf_assign_join(df, cents, "vec_id").collect()}
     assert got == exp, (got, exp)
     exp_p = sorted(
-        (r.vec_id, r.lst) for r in df.select(
-            "vec_id",
-            F.explode(ivf_probe_lists(F.col("v"), cents, 2)).alias("lst"),
-        ).collect())
+        (vid, lst) for vid, v in rows
+        for lst in _nearest_centroids(v, cents, 2, 6)
+    )
     got_p = sorted(
         (r.vec_id, r.lst)
         for r in ivf_probe_lists_join(df, cents, "vec_id", 2).collect())
     assert got_p == exp_p, (got_p, exp_p)
+    # ties across cents 0/1/2 go to the lowest ids: row 6 has no
+    # better list, row 7 is nearest cent 3
+    assert [lst for vid, lst in exp_p if vid == 6] == [0, 1]
+    assert [lst for vid, lst in exp_p if vid == 7] == [0, 3]
+
+
+def test_ivf_index_private_per_sf_dir(spark, tmp_path):
+    """The prebuilt IVF-PQ index belongs to one sf dir in one process:
+    two sf dirs that share a basename but hold different rows each
+    probe their own index, and building the second leaves the first's
+    table intact (a basename-keyed shared cache dir let the second
+    overwrite the first under its lazy frames)."""
+    import random
+
+    from rust_dms_cdc_operator_spark.inventory_llm import QUERIES_LLM
+
+    def write(d, seed):
+        rng = random.Random(seed)
+        rows = [(i, [rng.uniform(-1, 1) for _ in range(16)])
+                for i in range(64)]
+        spark.createDataFrame(
+            rows, "vec_id long, embedding array<float>"
+        ).write.parquet(f"{d}/embeddings.parquet")
+
+    a, b = tmp_path / "x" / "sf_shared", tmp_path / "y" / "sf_shared"
+    write(a, 1)
+    write(b, 2)
+    twins = {"sim_ivf_probe_partitioned": "sim_ivf_trained",
+             "sim_ivfpq_probe_partitioned": "sim_ivfpq_topk"}
+    want = {n: sorted(map(tuple, QUERIES_LLM[t](spark, str(a)).collect()))
+            for n, t in twins.items()}
+    frames = {n: QUERIES_LLM[n](spark, str(a)) for n in twins}
+    for n in twins:
+        assert QUERIES_LLM[n](spark, str(b)).collect()
+    for n, df in frames.items():
+        assert sorted(map(tuple, df.collect())) == want[n], n
+
+    from rust_dms_cdc_operator_spark.inventory_llm import _ivf_index
+
+    idx = spark.read.parquet(_ivf_index(spark, str(a)))
+    assert sorted(r.vec_id for r in idx.select("vec_id").collect()) == list(
+        range(1, 64)
+    )
 
 
 def test_q22_q11_empty_input_guard(spark):

@@ -213,7 +213,6 @@ PERSIST_CALLER_OWNED = {
     # (round 12: the group-split/cohesion/rebuild pair streams now go
     # through session.materialize_leaf instead of in-function
     # persist/localCheckpoint sites)
-    "inventory_llm.py:q_dedup_semantic_pairs": 1,    # centroid-scored docs
     "inventory_llm.py:_bm25_scored": 1,              # doc-length table
     # the shared lineage-cut helper — materializes a heavy BOUNDED
     # intermediate once (localCheckpoint) and returns the leaf; its

@@ -4,6 +4,8 @@ shuffle, whole-stage codegen covers the hot path."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from rust_dms_cdc_operator_spark.inventory import QUERIES
@@ -521,45 +523,24 @@ def test_triangle_census_no_cartesian(spark):
 
 
 def test_ivfpq_index_shortlist_prunes_vector_column(spark):
-    """The materialized IVF-PQ index's contract: the ADC shortlist
-    scan shows partition filters on the list key and reads ONLY
-    (vec_id, pq_codes) — the wide embedding column must never cross
-    the scan until the rerank."""
-    from pyspark.sql import functions as F
-
-    from rust_dms_cdc_operator_spark.inventory_llm import (
-        _ensure_ivfpq_table,
-        _query_vec,
-    )
-    from rust_dms_cdc_operator_spark.operators.pq import (
-        adc_from_codes,
-        pq_distance_table,
-    )
-    from rust_dms_cdc_operator_spark.operators.similarity import (
-        IVF_LIST_COL,
-        _nearest_centroids,
-    )
+    """The registered IVF-PQ index probe's contract: its plan shows
+    partition filters on the list key, and the ADC shortlist scan
+    (the one reading pq_codes) reads ONLY (vec_id, pq_codes) — the
+    wide embedding column never crosses it; only the rerank scan of
+    the shortlist rows reads vectors."""
+    from rust_dms_cdc_operator_spark.operators.pq import PQ_CODES_COL
+    from rust_dms_cdc_operator_spark.operators.similarity import IVF_LIST_COL
     from rust_dms_cdc_operator_spark.plans.inspect import (
         formatted_plan,
         read_schemas,
     )
 
-    table, cents, books = _ensure_ivfpq_table(spark, SF_DIR)
-    qv = _query_vec(spark, SF_DIR)
-    probe = _nearest_centroids(qv, cents, 3, 6)
-    dt = pq_distance_table(qv, books)
-    idx = spark.read.parquet(table).filter(F.col(IVF_LIST_COL).isin(probe))
-    short = (
-        idx.select(
-            "vec_id", adc_from_codes(F.col("pq_codes"), dt).alias("d")
-        )
-        .orderBy("d", "vec_id")
-        .limit(60)
-    )
-    plan = formatted_plan(short)
-    assert "PartitionFilters" in plan and IVF_LIST_COL in plan
-    schemas = read_schemas(short)
-    assert schemas and all("embedding" not in sc for sc in schemas), schemas
+    df = QUERIES["sim_ivfpq_probe_partitioned"](spark, SF_DIR)
+    plan = formatted_plan(df)
+    filters = re.findall(r"PartitionFilters: \[(.*)\]", plan)
+    assert filters and all(IVF_LIST_COL in f for f in filters), plan
+    short = [sc for sc in read_schemas(df) if PQ_CODES_COL in sc]
+    assert short and all("embedding" not in sc for sc in short), short
 
 
 def test_simhash_hamming_banded_no_cartesian(spark):

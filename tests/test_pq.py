@@ -109,6 +109,43 @@ def test_adc_kernel_matches_expression_path(spark):
     assert expr.exceptAll(kernel).count() == 0
 
 
+def test_pq_shortlist_stored_codes_match_kernel(spark, tmp_path):
+    """pq_topk / pq_topk_rerank over a write_ivfpq_partitioned table
+    rank from the stored codes and return exactly the rows the ADC
+    kernel gives over the raw vectors — on data whose replicated
+    vectors tie in PQ distance across the shortlist boundary and in
+    cosine inside the rerank (both break on the id)."""
+    import random
+
+    from rust_dms_cdc_operator_spark.operators.pq import (
+        PQ_CODES_COL,
+        pq_topk_rerank,
+        write_ivfpq_partitioned,
+    )
+
+    rng = random.Random(5)
+    bases = [[rng.uniform(-1, 1) for _ in range(8)] for _ in range(6)]
+    ids = list(range(1, 31))
+    rng.shuffle(ids)
+    rows = [(ids[i], bases[i % 6]) for i in range(30)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    books = train_pq_codebooks(df, m=4, n_codes=4, seed=1)
+    path = str(tmp_path / "ivfpq")
+    write_ivfpq_partitioned(df, path, [bases[0], bases[3]], books)
+    idx = spark.read.parquet(path)
+    assert PQ_CODES_COL in idx.columns
+    q = [x + 0.01 for x in bases[2]]
+    for shortlist in (3, 7, 12):
+        kernel = pq_topk(df, q, books, k=shortlist).collect()
+        stored = pq_topk(idx, q, books, k=shortlist).collect()
+        assert stored == kernel, (shortlist, stored, kernel)
+        dists = [r.pq_dist for r in pq_topk(df, q, books, k=30).collect()]
+        assert dists[shortlist - 1] == dists[shortlist]  # boundary tie
+        got = pq_topk_rerank(idx, q, books, k=4, shortlist=shortlist)
+        exp = pq_topk_rerank(df, q, books, k=4, shortlist=shortlist)
+        assert got.collect() == exp.collect(), shortlist
+
+
 def test_pq_rerank_recall_on_fixture(spark):
     """End-to-end recall gate on the real sf0.01 embeddings: the
     shortlist-100 + exact-rerank top-10 must recover >= 6/10 of the
