@@ -1613,7 +1613,9 @@ def q_stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the reason sketches exist in streaming)."""
     from rust_dms_cdc_operator_spark.operators.sketch import (  # noqa: PLC0415
         cms_accumulate,
-        cms_estimate,
+    )
+    from rust_dms_cdc_operator_spark.session import (  # noqa: PLC0415
+        scan_parallelism_floor,
     )
 
     schema = read_table(spark, sf_dir, "documents").schema
@@ -1626,25 +1628,15 @@ def q_stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(schema).parquet(src_dir)
 
     def sink(batch_df: DataFrame, bid: int) -> None:
-        # cms_accumulate probes accumulator existence EXPLICITLY — a
-        # corrupt accumulator fails the microbatch loudly instead of
-        # being silently treated as "first batch" (r6 verdict item;
-        # crash test: test_streaming.py cms_accumulate corrupt case).
-        # Round 12: the word explode + the sketch's depth x md5
-        # bucketing moved INSIDE the batch body, above a parallelism
-        # floor — as a pre-foreachBatch streaming projection the whole
-        # rowwise stage ran in the file source's (single-file) task;
-        # the accumulated sketch is identical either way.
-        from rust_dms_cdc_operator_spark.session import (  # noqa: PLC0415
-            scan_parallelism_floor,
-        )
-
-        # Round 12: pre-aggregate to per-word counts BEFORE sketching
-        # (guide §2.3 "aggregate before you shuffle") — the sketch's
-        # bucket totals are sums, so sketching the vocabulary with
-        # count weights is bit-identical to sketching the token
-        # stream, and the depth x md5 bucketing runs once per
-        # DISTINCT word instead of once per token occurrence.
+        # The word explode and the per-word pre-aggregation run inside
+        # the batch body, above a parallelism floor: as a streaming
+        # projection before foreachBatch they would run in the file
+        # source's single task. Bucket totals are sums, so sketching
+        # the vocabulary with count weights is bit-identical to
+        # sketching the token stream, with one depth x md5 bucketing
+        # per DISTINCT word. cms_accumulate probes the accumulator's
+        # existence explicitly, so a corrupt accumulator fails the
+        # microbatch loudly (test_streaming.py corrupt case).
         wc = (
             scan_parallelism_floor(batch_df.select("text"))
             .select(F.explode(F.split(F.col("text"), " ")).alias("word"))
@@ -1662,20 +1654,8 @@ def q_stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
 
-    sketch = spark.read.parquet(acc_dir)
     # probes = exact top-30 (batch-side, same as the batch query)
-    d = _t(spark, sf_dir, "documents")
-    words = d.select(
-        F.explode(F.split(F.col("text"), " ")).alias("word")
-    ).filter(F.col("word") != "")
-    probes = (
-        words.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("exact_n"))
-        .orderBy(F.col("exact_n").desc(), "word")
-        .limit(30)
-    )
-    est = cms_estimate(sketch, probes.select("word"), "word", width=1024)
-    return probes.join(est, "word").select("word", "exact_n", "cms_count")
+    return _cms_top_words(spark, sf_dir, spark.read.parquet(acc_dir))
 
 
 def q_dedup_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2160,12 +2140,25 @@ def q_events_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_docs_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min-sketch frequency estimation for the corpus's top-30
-    words (operators/sketch.cms_build/cms_estimate): the 4x1024
-    integer sketch is built in four map-side-combined passes, then the
+    words (operators/sketch.cms_build/cms_estimate, through
+    _cms_top_words): the 4x1024 integer sketch is built in one
+    map-side-combined pass over the word-frequency table, then the
     probe estimates are broadcast-joined bucket lookups. Pure integer
     arithmetic on md5 slices, so the ESTIMATES are bit-identical
     cross-engine and the oracle checks them next to the exact counts
     (CMS never under-counts; over-count = collision mass)."""
+    return _cms_top_words(spark, sf_dir)
+
+
+def _cms_top_words(
+    spark: SparkSession, sf_dir: str, sketch: DataFrame | None = None
+) -> DataFrame:
+    """(word, exact_n, cms_count) for the corpus's exact top-30 words:
+    the word-frequency table, its top-30 as probes, their
+    ``cms_estimate`` against ``sketch`` (a 4 x 1024 count-min sketch;
+    None builds it from the frequency table), joined back. ONE
+    corpus-sized aggregation: the sketch builds from the
+    vocabulary-sized frequency table, not a second pass over words."""
     from rust_dms_cdc_operator_spark.operators.sketch import (  # noqa: PLC0415
         cms_build,
         cms_estimate,
@@ -2175,10 +2168,9 @@ def q_docs_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = d.select(
         F.explode(F.split(F.col("text"), " ")).alias("word")
     ).filter(F.col("word") != "")
-    # ONE corpus-sized aggregation: the sketch builds from the
-    # vocabulary-sized frequency table, not a second pass over words
     freq = words.groupBy("word").agg(F.count(F.lit(1)).alias("exact_n"))
-    sketch = cms_build(freq, "word", width=1024, count_col="exact_n")
+    if sketch is None:
+        sketch = cms_build(freq, "word", width=1024, count_col="exact_n")
     probes = freq.orderBy(F.col("exact_n").desc(), "word").limit(30)
     est = cms_estimate(sketch, probes.select("word"), "word", width=1024)
     return probes.join(est, "word").select("word", "exact_n", "cms_count")
@@ -11192,64 +11184,49 @@ ORACLE_SQL_LLM["docs_dsir_weights"] = f"""
 QUERIES_LLM["docs_dsir_weights"] = q_docs_dsir_weights
 
 
+# the event queries' HLL width: 512 registers over a 48-bit md5 slice;
+# the register pass and the denominator must use the same pair
+_EVENT_HLL = {"p": 9, "hash_chars": 12}
+
+
 def q_events_hll_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily distinct-user census as an EXACT-INTEGER HyperLogLog: the
     mergeable sketch a 100 TB pipeline keeps instead of per-day
-    count-distinct state. p=9 (512 registers); h = 48-bit md5 of the
-    user id; register = max over hits of rho (leading-zero rank of the
-    upper 39 bits). The HLL denominator sum(2^-M) is emitted SCALED BY
-    2^40 — a dyadic rational, so it is an exact BIGINT both engines
-    compute bit-identically (the float estimate is a driver-side
-    formula over these integers). exact_users rides along so the
-    sketch's error is auditable per day.
+    count-distinct state (operators/sketch.hll_registers +
+    hll_scaled_sum at hash_chars=12). p=9 (512 registers); h = 48-bit
+    md5 of the user id; register = max over hits of rho (leading-zero
+    rank of the upper 39 bits). The HLL denominator sum(2^-M) is
+    emitted SCALED BY 2^40 — a dyadic rational, so it is an exact
+    BIGINT both engines compute bit-identically (the float estimate is
+    a driver-side formula over these integers). exact_users rides
+    along so the sketch's error is auditable per day.
 
     Scale shape: registers reduce map-side to <= 512 rows/day before
     the shuffle (groupBy(day, bucket).max); the per-day rollup then
     touches 512 rows — state is CONSTANT in the corpus, the whole
     point of the sketch. The exact count is one distinct agg on the
     same (day, user) partitioning."""
-    from rust_dms_cdc_operator_spark.operators.dedup import (  # noqa: PLC0415
-        hex_to_long,
+    from rust_dms_cdc_operator_spark.operators.sketch import (  # noqa: PLC0415
+        hll_registers,
+        hll_scaled_sum,
     )
 
-    M_REG = 512
     e = _t(spark, sf_dir, "events").select(
         F.to_date("ts").alias("event_date"), "user_id"
     )
-    h = hex_to_long(F.md5(F.col("user_id").cast("string")), 12)
-    bucket = (h % M_REG).alias("b")
-    rest = F.floor(h / M_REG).cast("long")
-    rho = (
-        F.when(rest == 0, F.lit(40))
-        .otherwise(F.lit(40) - F.length(F.bin(rest)))
-        .cast("long")
+    regs = hll_registers(
+        e.select("event_date", F.col("user_id").cast("string").alias("u")),
+        "u", ["event_date"], **_EVENT_HLL,
     )
-    regs = (
-        e.select("event_date", bucket, rho.alias("rho"))
-        .groupBy("event_date", "b")
-        .agg(F.max("rho").alias("m"))
-    )
-    per_day = regs.groupBy("event_date").agg(
-        F.count(F.lit(1)).cast("long").alias("used_registers"),
-        F.sum(
-            F.pow(F.lit(2.0), F.lit(40) - F.col("m")).cast("long")
-        ).alias("_present"),
-    )
+    per_day = hll_scaled_sum(regs, ["event_date"], **_EVENT_HLL)
     exact = e.groupBy("event_date").agg(
         F.countDistinct("user_id").alias("exact_users")
     )
-    denom = (
-        F.col("_present")
-        + (F.lit(M_REG) - F.col("used_registers")) * F.lit(1 << 40)
-    ).cast("long")
-    return (
-        per_day.join(exact, "event_date")
-        .select(
-            "event_date",
-            "exact_users",
-            "used_registers",
-            denom.alias("denom_scaled"),
-        )
+    return per_day.join(exact, "event_date").select(
+        "event_date",
+        "exact_users",
+        F.col("m_hit").alias("used_registers"),
+        F.col("s_scaled").alias("denom_scaled"),
     )
 
 
@@ -11739,72 +11716,44 @@ def q_events_hll_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     of two days is a register-wise max (512 integers), and the
     intersection estimate falls out of inclusion-exclusion
     (|A∩B| ≈ est(A) + est(B) - est(A∪B)) WITHOUT re-scanning either
-    day. Same sketch as ``events_hll_daily_users`` (p=9, 48-bit md5,
-    2^40-scaled dyadic denominators — exact BIGINTs both engines
-    compute bit-identically; the float estimates are a driver-side
-    formula). ``exact_retained`` rides along so the estimate's error
-    is auditable per day pair.
+    day. Same sketch as ``events_hll_daily_users`` (hll_registers +
+    hll_scaled_sum: p=9, 48-bit md5, 2^40-scaled dyadic denominators
+    — exact BIGINTs both engines compute bit-identically; the float
+    estimates are a driver-side formula). ``exact_retained`` rides
+    along so the estimate's error is auditable per day pair.
 
     Scale shape: registers reduce map-side to <= 512 rows/day; the
-    union merge is a full-outer join of two (days x 512)-row frames —
-    calendar-bounded state, constant in the corpus. The exact audit
-    is one distinct + a (day,user)-keyed self-join, the only
-    corpus-sized shuffle here (and exactly the cost the sketch path
-    deletes in production)."""
-    from rust_dms_cdc_operator_spark.operators.dedup import (  # noqa: PLC0415
-        hex_to_long,
+    union merge is one max(mreg) per (day, reg) over the union of two
+    (days x 512)-row frames — calendar-bounded state, constant in the
+    corpus. The exact audit is one distinct + a (day,user)-keyed
+    self-join, the only corpus-sized shuffle here (and exactly the
+    cost the sketch path deletes in production)."""
+    from rust_dms_cdc_operator_spark.operators.sketch import (  # noqa: PLC0415
+        hll_registers,
+        hll_scaled_sum,
     )
 
-    M_REG = 512
     e = _t(spark, sf_dir, "events").select(
         F.to_date("ts").alias("day"), "user_id"
     )
-    h = hex_to_long(F.md5(F.col("user_id").cast("string")), 12)
-    rest = F.floor(h / M_REG).cast("long")
-    rho = (
-        F.when(rest == 0, F.lit(40))
-        .otherwise(F.lit(40) - F.length(F.bin(rest)))
-        .cast("long")
+    regs = hll_registers(
+        e.select("day", F.col("user_id").cast("string").alias("u")),
+        "u", ["day"], **_EVENT_HLL,
     )
-    regs = (
-        e.select("day", (h % M_REG).alias("b"), rho.alias("rho"))
-        .groupBy("day", "b")
-        .agg(F.max("rho").alias("m"))
-    )
+    # day d+1's registers keyed by d: the pair (d, d+1) shares a key
+    nxt = regs.select(F.date_sub("day", 1).alias("day"), "reg", "mreg")
 
     def _denom(rf: DataFrame, out: str) -> DataFrame:
-        per = rf.groupBy("day").agg(
-            F.count(F.lit(1)).cast("long").alias("used"),
-            F.sum(
-                F.pow(F.lit(2.0), F.lit(40) - F.col("m")).cast("long")
-            ).alias("present"),
+        return hll_scaled_sum(rf, ["day"], **_EVENT_HLL).select(
+            "day", F.col("s_scaled").alias(out)
         )
-        denom = (
-            F.col("present")
-            + (F.lit(M_REG) - F.col("used")) * F.lit(1 << 40)
-        ).cast("long")
-        return per.select("day", denom.alias(out))
 
     d_a = _denom(regs, "denom_a")
-    d_b = _denom(
-        regs.select(F.date_sub("day", 1).alias("day"), "b", "m"),
-        "denom_b",
-    )
-    merged = regs.select("day", "b", F.col("m").alias("ma")).join(
-        regs.select(
-            F.date_sub("day", 1).alias("day"), "b", F.col("m").alias("mb")
-        ),
-        ["day", "b"],
-        "full_outer",
-    )
+    d_b = _denom(nxt, "denom_b")
     d_u = _denom(
-        merged.select(
-            "day",
-            "b",
-            F.greatest(
-                F.coalesce("ma", F.lit(0)), F.coalesce("mb", F.lit(0))
-            ).alias("m"),
-        ),
+        regs.unionByName(nxt)
+        .groupBy("day", "reg")
+        .agg(F.max("mreg").alias("mreg")),
         "denom_union",
     )
     du = e.distinct()
@@ -11987,74 +11936,35 @@ def q_docs_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     negatives) — asserted in tests.
 
     Eval set = doc_id < 40, corpus = doc_id >= 40 (the
-    docs_contamination convention)."""
+    docs_contamination convention). Build and probe are
+    operators/sketch.bloom_word_table and bloom_contains."""
     from rust_dms_cdc_operator_spark.operators.dedup import (  # noqa: PLC0415
-        hex_to_long,
         sliding_word_ngrams,
     )
-
-    M_BITS, WORDS = 4096, 128
+    from rust_dms_cdc_operator_spark.operators.sketch import (  # noqa: PLC0415
+        bloom_contains,
+        bloom_word_table,
+    )
     from rust_dms_cdc_operator_spark.session import (  # noqa: PLC0415
         scan_parallelism_floor,
     )
 
     d = _t(spark, sf_dir, "documents")
-    # round 12: floor the gram-explode + salted-md5 build stage's
-    # parallelism (single-file scan; no-op at scale)
+    # floor the gram-explode + salted-md5 build stage's parallelism
+    # (single-file scan; no-op at scale)
     corpus_grams = scan_parallelism_floor(
         d.filter(F.col("doc_id") >= 40).select("text")
     ).select(
         F.explode(sliding_word_ngrams(F.col("text"), 5)).alias("g")
     )
-
-    def pos(g, salt: str):
-        return hex_to_long(F.md5(F.concat(g, F.lit(salt))), 8) % M_BITS
-
-    # build: 3 salted positions per gram occurrence -> bit_or per word
-    stacked = corpus_grams.select(
-        F.explode(
-            F.array(*[pos(F.col("g"), s) for s in ("b1", "b2", "b3")])
-        ).alias("p")
-    )
-    built = (
-        stacked.select(
-            (F.col("p") / 32).cast("int").alias("w"),
-            F.call_function(
-                "shiftleft",
-                F.lit(1).cast("long"),
-                (F.col("p") % 32).cast("int"),
-            ).alias("m"),
-        )
-        .groupBy("w")
-        .agg(F.expr("bit_or(m)").alias("bits"))
-        .collect()
-    )
-    words = [0] * WORDS
-    for r in built:
-        words[r["w"]] = int(r["bits"])
-    lit_words = F.array(*[F.lit(v).cast("long") for v in words])
-
+    words = bloom_word_table(corpus_grams).collect()
     ev = d.filter(F.col("doc_id") < 40).select(
         "doc_id",
         F.explode(
             F.array_distinct(sliding_word_ngrams(F.col("text"), 5))
         ).alias("g"),
     )
-
-    def is_set(g, salt: str):
-        p = pos(g, salt)
-        word = F.element_at(lit_words, (p / 32).cast("int") + 1)
-        return (
-            F.call_function(
-                "shiftright", word, (p % 32).cast("int")
-            ).bitwiseAND(F.lit(1))
-        )
-
-    hit = (
-        is_set(F.col("g"), "b1")
-        * is_set(F.col("g"), "b2")
-        * is_set(F.col("g"), "b3")
-    )
+    hit = bloom_contains(F.col("g"), words)
     bloom = ev.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_grams"),
         F.sum(hit).cast("long").alias("bloom_hits"),
@@ -12135,7 +12045,7 @@ QUERIES_LLM["docs_bloom_contamination"] = q_docs_bloom_contamination
 def q_docs_bloom_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The decontamination artifact's ADDITIVE per-ingest maintenance
     (operators/sketch.bloom_word_table / merge_bloom_word_tables —
-    round 12, the merge_bucket_counts pattern applied to Bloom bits):
+    the merge_bucket_counts pattern applied to Bloom bits):
     the corpus's 5-gram Bloom filter is built as TWO epoch word
     tables (doc_id % 2 split of the docs_bloom_contamination corpus)
     and OR-merged; the result must equal the from-scratch filter over
@@ -13017,30 +12927,23 @@ def q_docs_source_kmv_jaccard(
     dimension-metadata collect (the chunk-offset pattern) joined
     broadcast against the k-row-per-source sketch lists; the exact
     truth is one token-keyed self-join whose fanout per token is
-    <= |sources|^2."""
-    from rust_dms_cdc_operator_spark.operators.dedup import (  # noqa: PLC0415
-        hex_to_long,
+    <= |sources|^2. Sketch and merge are operators/sketch.kmv_sketch
+    (hash_chars=8) and kmv_union."""
+    from rust_dms_cdc_operator_spark.operators.sketch import (  # noqa: PLC0415
+        kmv_hash,
+        kmv_sketch,
+        kmv_union,
     )
 
     k = _KMV_JACCARD_K
     d = _t(spark, sf_dir, "documents")
-    th = (
-        d.select(
-            "source",
-            F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias(
-                "tok"
-            ),
-        )
-        .select("source", hex_to_long(F.md5(F.col("tok")), 8).alias("h"))
-        .distinct()
+    toks = d.select(
+        "source",
+        F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias(
+            "tok"
+        ),
     )
-    w_k = Window.partitionBy("source").orderBy(F.col("h").asc())
-    sk = (
-        th.withColumn("rn", F.row_number().over(w_k))
-        .filter(F.col("rn") <= k)
-        .groupBy("source")
-        .agg(F.sort_array(F.collect_list("h")).alias("hs"))
-    )
+    sk = kmv_sketch(toks, ["source"], "tok", k, hash_chars=8)
     # bounded collect: the source dimension (pair spine, |S|^2/2 rows)
     sources = sorted(r["source"] for r in sk.select("source").collect())
     pairs = [
@@ -13053,14 +12956,16 @@ def q_docs_source_kmv_jaccard(
             "exact_inter long, exact_union long",
         )
     pair_df = spark.createDataFrame(pairs, "src_a string, src_b string")
-    ska = sk.select(F.col("source").alias("src_a"), F.col("hs").alias("hs_a"))
-    skb = sk.select(F.col("source").alias("src_b"), F.col("hs").alias("hs_b"))
+    ska = sk.select(
+        F.col("source").alias("src_a"), F.col("kmv_hashes").alias("hs_a")
+    )
+    skb = sk.select(
+        F.col("source").alias("src_b"), F.col("kmv_hashes").alias("hs_b")
+    )
     j = pair_df.join(F.broadcast(ska), "src_a").join(
         F.broadcast(skb), "src_b"
     )
-    union_k = F.slice(
-        F.array_sort(F.array_distinct(F.concat("hs_a", "hs_b"))), 1, k
-    )
+    union_k = kmv_union(F.col("hs_a"), F.col("hs_b"), k)
     both = F.array_intersect(F.col("hs_a"), F.col("hs_b"))
     est = j.select(
         "src_a",
@@ -13071,6 +12976,9 @@ def q_docs_source_kmv_jaccard(
         .alias("kmv_matches"),
     )
     # exact truth: token-keyed self-join, fanout bounded by |S| per tok
+    th = toks.select(
+        "source", kmv_hash(F.col("tok"), 8).alias("h")
+    ).distinct()
     ta = th.select(F.col("source").alias("src_a"), "h")
     tb = th.select(F.col("source").alias("src_b"), "h")
     inter = (
@@ -13084,6 +12992,7 @@ def q_docs_source_kmv_jaccard(
     )
     va = vocab.select(F.col("source").alias("src_a"), F.col("v").alias("va"))
     vb = vocab.select(F.col("source").alias("src_b"), F.col("v").alias("vb"))
+    exact_inter = F.coalesce(F.col("exact_inter"), F.lit(0))
     return (
         est.join(inter, ["src_a", "src_b"], "left")
         .join(F.broadcast(va), "src_a")
@@ -13093,13 +13002,8 @@ def q_docs_source_kmv_jaccard(
             "src_b",
             "k_used",
             "kmv_matches",
-            F.coalesce(F.col("exact_inter"), F.lit(0))
-            .cast("long")
-            .alias("exact_inter"),
-            (
-                F.col("va") + F.col("vb")
-                - F.coalesce(F.col("exact_inter"), F.lit(0))
-            )
+            exact_inter.cast("long").alias("exact_inter"),
+            (F.col("va") + F.col("vb") - exact_inter)
             .cast("long")
             .alias("exact_union"),
         )

@@ -1,27 +1,29 @@
-"""KMV (k-minimum-values) distinct-count sketch — deterministic, so
-the estimate itself is oracle-checkable cross-engine (unlike
-approx_count_distinct / HLL, whose estimates are implementation-
-specific and can't hash-match another engine).
+"""Deterministic, mergeable sketches — every hash is an md5 slice
+decoded to an integer and every estimate is integer arithmetic up to
+one final literal IEEE expression, so each engine (and the DuckDB
+oracle) computes the IDENTICAL estimate, unlike approx_count_distinct
+or Spark's HLL++, whose estimates are implementation-specific.
 
-Theory (Bar-Yossef et al. 2002): hash every distinct value uniformly
-into [0, 2^60); if the k-th smallest hash over a set of n distinct
-values is h_k, then h_k/2^60 ~ k/n, so n ~ (k-1) * 2^60 / h_k (the
-unbiased form). Relative error ~ 1/sqrt(k-2). With md5 as the hash,
-both engines compute the IDENTICAL estimate on identical data.
-
-The k smallest per group are found with a per-key ranked window — one
-hash exchange on the group key over the pre-distincted (group, hash)
-table. A production sketch at 100 TB replaces the window with a
-partial aggregate (per-partition k-min lists merged associatively,
-e.g. an Aggregator/pandas-UDAF holding a k-bounded heap) so the
-shuffle carries k values per group per map task instead of every
-distinct hash; the estimator arithmetic — the contract this module
-pins — is unchanged. KMV sketches also merge by union+re-truncate
-(the k smallest of the combined lists), giving distributed set-union
-cardinality, the property HLL is usually reached for.
+- KMV (k minimum values, Bar-Yossef et al. 2002): ``kmv_sketch``
+  keeps each group's k smallest distinct hashes; ``kmv_union`` merges
+  two sketches by union + re-truncate; ``kmv_cardinality`` estimates
+  from the k-th hash.
+- HyperLogLog (Flajolet et al. 2007): ``hll_registers`` is the one
+  register pass, ``hll_scaled_sum`` the exact-integer harmonic
+  denominator, ``hll_cardinality`` the raw estimate.
+- Count-min (Cormode & Muthukrishnan 2005): ``cms_build`` /
+  ``cms_estimate`` / ``cms_inner_product``, and ``cms_accumulate``
+  for a streaming accumulator.
+- Fixed-grid histogram: ``hist_build`` / ``hist_quantiles``.
+- Bloom filter as 32-bit words: ``bloom_word_table`` builds,
+  ``merge_bloom_word_tables`` OR-merges, ``bloom_contains`` probes.
+- Misra-Gries: ``misra_gries_candidates`` proposes and
+  ``heavy_hitters_exact`` verifies an exact top-k.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterable
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
@@ -29,16 +31,64 @@ from pyspark.sql import functions as F
 
 from rust_dms_cdc_operator_spark.operators.dedup import hex_to_long
 
-# 2^60: the hash domain. 15 hex chars keep the value positive in a
-# signed 64-bit long in every engine.
-_DOMAIN = float(1 << 60)
+# default hash width: 15 hex chars (60 bits) keep the value positive
+# in a signed 64-bit long in every engine
 _HASH_CHARS = 15
 
 
-def kmv_hash(col: Column) -> Column:
-    """Deterministic 60-bit uniform hash: leading 15 hex chars of
-    md5, digit-decoded (portable — no engine-specific hex parsing)."""
-    return hex_to_long(F.md5(col), _HASH_CHARS)
+def kmv_hash(col: Column, hash_chars: int = _HASH_CHARS) -> Column:
+    """Deterministic uniform hash in [0, 2^(4 * hash_chars)): the
+    leading ``hash_chars`` hex chars of md5, digit-decoded (portable —
+    no engine-specific hex parsing)."""
+    return hex_to_long(F.md5(col), hash_chars)
+
+
+# ------------------------------------------------------------------ KMV
+# If the k-th smallest of n distinct uniform hashes in [0, D) is h_k,
+# then h_k / D ~ k / n, so n ~ (k - 1) * D / h_k (the unbiased form),
+# with relative error ~ 1/sqrt(k - 2). Both operators rank the
+# distinct (group, hash) table in one group-keyed window. The sketch
+# keeps ranks <= k, so Spark bounds the window's shuffle with a
+# WindowGroupLimit (k rows per group per map task); the cardinality
+# also counts every distinct hash, so its window sees them all. A
+# 100 TB deployment would replace that window with a partial
+# aggregate holding a k-bounded heap per map task — the estimator
+# arithmetic is unchanged.
+
+
+def _kmv_ranked(
+    df: DataFrame, group_cols: list[str], value_col: str, hash_chars: int
+) -> DataFrame:
+    """(group..., _kmv_h, _rn): each group's distinct hashes, ranked
+    ascending from 1."""
+    d = df.select(
+        *group_cols, kmv_hash(F.col(value_col), hash_chars).alias("_kmv_h")
+    ).distinct()
+    w = Window.partitionBy(*group_cols).orderBy("_kmv_h")
+    return d.withColumn("_rn", F.row_number().over(w))
+
+
+def kmv_sketch(
+    df: DataFrame,
+    group_cols: list[str],
+    value_col: str,
+    k: int,
+    hash_chars: int = _HASH_CHARS,
+) -> DataFrame:
+    """Per-group KMV sketch: (group..., kmv_hashes) — the group's
+    <= k smallest distinct ``kmv_hash`` values, sorted ascending."""
+    return (
+        _kmv_ranked(df, group_cols, value_col, hash_chars)
+        .filter(F.col("_rn") <= k)
+        .groupBy(*group_cols)
+        .agg(F.sort_array(F.collect_list("_kmv_h")).alias("kmv_hashes"))
+    )
+
+
+def kmv_union(a: Column, b: Column, k: int) -> Column:
+    """Merge two KMV sketches: the k smallest of their combined
+    distinct hashes — the sketch of the union of the two sets."""
+    return F.slice(F.array_sort(F.array_distinct(F.concat(a, b))), 1, k)
 
 
 def kmv_cardinality(
@@ -50,20 +100,20 @@ def kmv_cardinality(
     """Per-group distinct-count estimate: ``kmv_estimate`` (exact when
     the group has < k distinct values — the sketch saturates to
     truth) next to ``exact_distinct`` for error inspection."""
-    d = df.select(
-        *group_cols, kmv_hash(F.col(value_col)).alias("_kmv_h")
-    ).distinct()
-    w = Window.partitionBy(*group_cols).orderBy("_kmv_h")
-    ranked = d.withColumn("_rn", F.row_number().over(w))
-    per_group = ranked.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).alias("exact_distinct"),
-        F.max(F.when(F.col("_rn") == k, F.col("_kmv_h"))).alias("_kth"),
+    per_group = (
+        _kmv_ranked(df, group_cols, value_col, _HASH_CHARS)
+        .groupBy(*group_cols)
+        .agg(
+            F.count(F.lit(1)).alias("exact_distinct"),
+            F.max(F.when(F.col("_rn") == k, F.col("_kmv_h"))).alias("_kth"),
+        )
     )
     est = F.when(
         F.col("_kth").isNull(), F.col("exact_distinct")
     ).otherwise(
         F.round(
-            F.lit(float(k - 1) * _DOMAIN) / F.col("_kth").cast("double")
+            F.lit(float(k - 1) * float(1 << 4 * _HASH_CHARS))
+            / F.col("_kth").cast("double")
         ).cast("long")
     )
     return per_group.select(
@@ -114,8 +164,6 @@ def hist_quantiles(
     float rank arithmetic), so estimates hash-match across engines.
     The cumulative scan runs over the bucket-ordered histogram
     (dimension-sized — ``buckets`` rows at most, one tiny window)."""
-    from pyspark.sql import Window  # noqa: PLC0415
-
     width = (hi - lo + buckets - 1) // buckets
     w = Window.orderBy("hist_bucket").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -152,8 +200,8 @@ def hist_quantiles(
 
 # ------------------------------------------------------------- count-min
 # depth-4 count-min sketch: row r hashes a value into one of `width`
-# buckets via disjoint 15-hex-char slices of md5 (independent-enough
-# 60-bit hashes, and — critically — pure integer arithmetic, so the
+# buckets via disjoint 8-hex-char slices of one md5 (independent-enough
+# 32-bit hashes, and — critically — pure integer arithmetic, so the
 # estimate is bit-identical in every engine)
 _CMS_DEPTH = 4
 
@@ -272,14 +320,13 @@ def cms_accumulate(batch_df: DataFrame, acc_dir: str, col: str,
     for part files), never try/except around the read: a corrupt or
     partially-written accumulator must fail the microbatch loudly —
     silently treating a read error as "first batch" would reset the
-    sketch and undercount every key seen before the crash (r6
-    verdict item). State is depth x width integers, constant however
-    long the stream runs.
+    sketch and undercount every key seen before the crash. State is
+    depth x width integers, constant however long the stream runs.
 
-    ``count_col`` passes through to :func:`cms_build` (round 12): a
-    caller that already holds per-value counts sketches the
-    vocabulary instead of the token stream — identical totals
-    (bucket sums commute with pre-aggregation), fewer md5s.
+    ``count_col`` passes through to :func:`cms_build`: a caller that
+    already holds per-value counts sketches the vocabulary instead of
+    the token stream — identical totals (bucket sums commute with
+    pre-aggregation), fewer md5s.
     """
     from rust_dms_cdc_operator_spark import fsio  # noqa: PLC0415
 
@@ -296,13 +343,12 @@ def cms_accumulate(batch_df: DataFrame, acc_dir: str, col: str,
     else:  # first batch: no accumulator yet
         merged = part
     out = merged.collect()  # sketch is depth x width rows — bounded
-    # re-upload through pandas/Arrow, NOT a row list (round 12, guide
-    # §6 Arrow for driver transfers): createDataFrame(list) ships the
-    # rows as defaultParallelism pickled slices that each need a
-    # Python-worker round trip at evaluation, and the coalesce(1)
-    # below then pays all of them SEQUENTIALLY in one task — measured
-    # 5-7 s per batch for a 4096-row sketch vs 0.3 s via Arrow (the
-    # Arrow-backed local relation evaluates JVM-side). The
+    # re-upload through pandas/Arrow, NOT a row list: createDataFrame
+    # (list) ships the rows as defaultParallelism pickled slices that
+    # each need a Python-worker round trip at evaluation, and the
+    # coalesce(1) below then pays all of them SEQUENTIALLY in one task
+    # — measured 5-7 s per batch for a 4096-row sketch vs 0.3 s via
+    # Arrow (the Arrow-backed local relation evaluates JVM-side). The
     # collect-then-rewrite itself stays: the flat accumulator layout
     # overwrites in place, so the driver copy is the self-overwrite
     # guard (never read and overwrite the same files in one job).
@@ -315,6 +361,7 @@ def cms_accumulate(batch_df: DataFrame, acc_dir: str, col: str,
     ).parquet(acc_dir)
 
 
+# --------------------------------------------------------- Misra-Gries
 def misra_gries_candidates(
     tokens: DataFrame, col: str, m: int = 64
 ) -> DataFrame:
@@ -328,14 +375,14 @@ def misra_gries_candidates(
     whose per-item undercount is bounded by N_p/(m+1) for a partition
     of N_p tokens. Output: candidate rows (token, NULL) per partition
     plus ONE accounting row (NULL, N_p) per partition, so callers get
-    the global token total without a second corpus pass.
+    the global token total without a second corpus pass. NULL tokens
+    are neither counted nor proposed (``value_counts`` drops them).
 
     Pigeonhole guarantee: any token with GLOBAL count > N/(m+1) must
     exceed N_p/(m+1) in at least one partition, so it survives that
     partition's summary — the union of summaries is a superset of
     every global heavy hitter above the threshold.
     """
-    import pandas as pd  # noqa: PLC0415
 
     def per_partition(it):
         summary = None
@@ -366,9 +413,10 @@ def misra_gries_candidates(
 def heavy_hitters_exact(
     tokens: DataFrame, col: str, k: int = 20, m: int = 64
 ) -> DataFrame:
-    """EXACT top-k heavy hitters in bounded memory — the two-pass
-    sketch-propose / exact-verify pattern a 100 TB token stream
-    requires instead of a full (token)-keyed shuffle:
+    """EXACT top-k heavy hitters among the non-NULL tokens, in bounded
+    memory — the two-pass sketch-propose / exact-verify pattern a
+    100 TB token stream requires instead of a full (token)-keyed
+    shuffle:
 
     1. Propose: per-partition Misra-Gries summaries (≤ m entries per
        partition, Arrow-vectorized) — a guaranteed superset of every
@@ -382,9 +430,15 @@ def heavy_hitters_exact(
        The result is therefore EXACT on every input; only the plan
        degrades when m is undersized for the distribution.
 
+    NULL tokens are dropped on entry, for both paths: the summaries
+    never see them and NULL marks their accounting rows, so counting
+    NULL in the fallback alone would make the answer depend on which
+    path ran.
+
     Driver traffic: candidate recounts (≤ m × partitions rows) and two
     scalars — bounded by configuration, not by corpus size.
     """
+    tokens = tokens.where(F.col(col).isNotNull())
     mg = misra_gries_candidates(tokens, col, m).persist()
     cands = mg.where(F.col("token").isNotNull()).select("token").distinct()
     n_total = int(
@@ -416,39 +470,83 @@ def heavy_hitters_exact(
     return tokens.sparkSession.createDataFrame(top, f"{col} string, n long")
 
 
-# ---------------------------------------------------------------------------
-# HyperLogLog (dense, engine-portable)
-# ---------------------------------------------------------------------------
-# Flajolet, Fusy, Gandouet & Meunier, "HyperLogLog: the analysis of a
-# near-optimal cardinality estimation algorithm" (AofA 2007). The KMV
-# sketch above keeps k 60-bit minima (k longs of state); HLL gets the
-# same job done in m 6-bit registers and — unlike KMV — merges by a
-# plain elementwise MAX, which Spark expresses as ONE groupBy(reg)
-# aggregation with map-side partial combine and NO distinct shuffle:
-# repeated values hash to identical (reg, rho) rows that max() absorbs
-# on the map side. Everything is integer until one final literal
-# expression, so the estimate is bit-identical on any engine (the
-# DuckDB oracle replays the identical expression; IEEE doubles make
-# the single divide + multiply deterministic).
+# ---------------------------------------------------------- HyperLogLog
+# Dense, engine-portable HLL (Flajolet, Fusy, Gandouet & Meunier, AofA
+# 2007). KMV keeps k hashes of state; HLL gets the same job done in
+# m = 2^p small registers and merges by a plain elementwise MAX, which
+# Spark expresses as ONE groupBy(reg) aggregation with map-side
+# partial combine and NO distinct shuffle: repeated values hash to
+# identical (reg, rho) rows that max() absorbs on the map side.
 
 
-def hll_add_cols(col: Column, p: int = 9) -> tuple[Column, Column]:
-    """(register, rho) for one value: 60-bit md5-slice hash; low ``p``
-    bits pick the register, the remaining w = 60 - p bits yield
-    rho = position of the leftmost 1-bit (1-based from the MSB of the
-    w-bit field), w + 1 when the field is zero. Integer-only: the
-    bit-length of the remainder comes from length(bin(x)) — identical
-    on Spark and DuckDB."""
-    w = 60 - p
-    h = kmv_hash(col)  # hex_to_long(md5, 15): the shared 60-bit slice
-    reg = (h % F.lit(1 << p)).cast("long")
+def hll_registers(
+    df: DataFrame,
+    col: str,
+    group_cols: list[str] | None = None,
+    p: int = 9,
+    hash_chars: int = _HASH_CHARS,
+) -> DataFrame:
+    """The register pass: (group..., reg, mreg), one row per hit
+    register. Each value hashes to h = ``kmv_hash(col, hash_chars)``
+    (b = 4 * hash_chars bits); the low ``p`` bits pick the register,
+    the remaining w = b - p bits yield rho = position of the leftmost
+    1-bit (1-based from the MSB of the w-bit field), w + 1 when the
+    field is zero; mreg = max rho over the register's values.
+    Integer-only: the bit-length of the remainder comes from
+    length(bin(x)) — identical on Spark and DuckDB.
+
+    Sketches merge without touching data: union the register rows and
+    take max(mreg) per (group, reg) again."""
+    gcols = list(group_cols or [])
+    w = 4 * hash_chars - p
+    h = kmv_hash(F.col(col), hash_chars)
     rest = F.shiftright(h, p)
-    rho = (
-        F.when(rest == 0, F.lit(w + 1))
-        .otherwise(F.lit(w + 1) - F.length(F.bin(rest)))
-        .cast("long")
+    rho = F.when(rest == 0, F.lit(w + 1)).otherwise(
+        F.lit(w + 1) - F.length(F.bin(rest))
     )
-    return reg, rho
+    return (
+        df.select(
+            *gcols,
+            (h % F.lit(1 << p)).cast("long").alias("reg"),
+            rho.cast("long").alias("rho"),
+        )
+        .groupBy(*gcols, "reg")
+        .agg(F.max("rho").alias("mreg"))
+    )
+
+
+def hll_scaled_sum(
+    regs: DataFrame,
+    group_cols: list[str] | None = None,
+    p: int = 9,
+    hash_chars: int = _HASH_CHARS,
+) -> DataFrame:
+    """The harmonic denominator of a register table as an exact
+    integer: (group..., m_hit, s_scaled).
+
+    - ``m_hit``: registers with at least one value.
+    - ``s_scaled``: Σ_reg 2^-M_reg scaled by 2^maxexp, maxexp =
+      4 * hash_chars - p + 1, with 2^maxexp (= 2^-0 scaled) for each of
+      the m - m_hit empty registers — every term is an integer shift,
+      no float pow on the data path. Bounded by m·2^maxexp =
+      2^(4 * hash_chars + 1), inside int64 for hash_chars <= 15."""
+    gcols = list(group_cols or [])
+    maxexp = 4 * hash_chars - p + 1
+    s_hit = F.sum(
+        F.expr(f"shiftleft(cast(1 as bigint), {maxexp} - cast(mreg as int))")
+    )
+    agg = regs.groupBy(*gcols).agg(
+        F.count(F.lit(1)).cast("long").alias("m_hit"),
+        s_hit.cast("long").alias("_s_hit"),
+    )
+    return agg.select(
+        *gcols,
+        "m_hit",
+        (
+            F.col("_s_hit")
+            + (F.lit(1 << p) - F.col("m_hit")) * F.lit(1 << maxexp)
+        ).cast("long").alias("s_scaled"),
+    )
 
 
 def hll_cardinality(
@@ -459,91 +557,58 @@ def hll_cardinality(
 ) -> DataFrame:
     """Per-group distinct-count estimate via dense HLL, plus the raw
     sketch scalars so a downstream merge can combine groups without
-    touching data: (group..., m_hit, s_scaled, hll_estimate).
-
-    - ``m_hit``: registers with at least one value (m - m_hit are the
-      empty registers, which contribute 2^w each to the harmonic sum).
-    - ``s_scaled``: the harmonic denominator as the EXACT integer
-      Σ_reg 2^(w + 1 - M_reg) (+ 2^(w+1)·zeros... normalized at
-      maxexp = w + 1 so every term is integral); bounded by m·2^w+1 —
-      fits int64 up to p >= 4.
-    - ``hll_estimate``: floor(alpha_m · m² · 2^maxexp / s_scaled) —
-      the raw HLL estimate (no small/large-range corrections: those
-      need ln(), whose last-ulp behavior is libm-specific; the raw
-      form is one IEEE divide + multiplies, bit-stable cross-engine).
+    touching data: (group..., m_hit, s_scaled, hll_estimate), where
+    ``hll_estimate`` = floor(alpha_m · m² · 2^maxexp / s_scaled) —
+    the raw HLL estimate (no small/large-range corrections: those need
+    ln(), whose last-ulp behavior is libm-specific; the raw form is
+    one IEEE divide + multiplies, bit-stable cross-engine).
 
     Plan: one groupBy(group, reg) max(rho) — m-bounded state per
     group, map-side combine absorbs duplicates, NO count-distinct
-    expand — then one group rollup. Merging sketches across groups
-    (or across days at 100 TB) is max(rho) again over the register
-    rows; registers, not raw values, are the only state."""
-    w = 60 - p
+    expand — then one group rollup."""
     m = 1 << p
-    maxexp = w + 1
+    maxexp = 4 * _HASH_CHARS - p + 1
     alpha = 0.7213 / (1.0 + 1.079 / m)
     gcols = list(group_cols or [])
-    reg, rho = hll_add_cols(F.col(col), p)
-    regs = (
-        df.select(*gcols, reg.alias("reg"), rho.alias("rho"))
-        .groupBy(*gcols, "reg")
-        .agg(F.max("rho").alias("mreg"))
-    )
-    # Σ 2^(maxexp - M) over hit registers + 2^maxexp per empty register
-    # — integer shifts, no float pow on the data path
-    s_hit = F.sum(
-        F.expr(f"shiftleft(cast(1 as bigint), {maxexp} - cast(mreg as int))")
-    )
-    agg = regs.groupBy(*gcols).agg(
-        F.count(F.lit(1)).cast("long").alias("m_hit"),
-        s_hit.cast("long").alias("s_hit"),
-    )
-    s_scaled = (
-        F.col("s_hit")
-        + (F.lit(m) - F.col("m_hit")) * F.lit(1 << maxexp)
-    ).cast("long")
+    sk = hll_scaled_sum(hll_registers(df, col, gcols, p), gcols, p)
     est = F.floor(
-        F.lit(alpha * m * m * float(1 << maxexp)) / s_scaled.cast("double")
+        F.lit(alpha * m * m * float(1 << maxexp))
+        / F.col("s_scaled").cast("double")
     ).cast("long")
-    return agg.select(
-        *gcols,
-        F.col("m_hit"),
-        s_scaled.alias("s_scaled"),
-        est.alias("hll_estimate"),
-    )
+    return sk.select(*gcols, "m_hit", "s_scaled", est.alias("hll_estimate"))
 
 
-def bloom_word_table(
-    grams: DataFrame,
-    gram_col: str = "g",
-    m_bits: int = 4096,
-    salts: tuple[str, ...] = ("b1", "b2", "b3"),
-) -> DataFrame:
-    """The contamination Bloom filter as a FRAME of 32-bit words:
-    (w, bits) — the same m-bit / k-salted-md5 construction the
-    docs_bloom_contamination query builds inline (inventory_llm.py),
-    factored out so the filter is a PERSISTED, MERGEABLE artifact.
-    One map-side-combined bit_or aggregate straight off the gram
-    stream (OR is idempotent — no distinct, no gram-string shuffle);
-    absent words simply have no row (bits = 0 implicitly), so the
-    table is at most m_bits/32 rows at any corpus size.
+# ---------------------------------------------------------------- Bloom
+# the filter's shape: m bits in m/32 words, one salted md5 position
+# per salt; the build and the probe must agree on both
+_BLOOM_BITS = 4096
+_BLOOM_SALTS = ("b1", "b2", "b3")
 
-    This is the decontamination family's incremental-maintenance
-    primitive (round 12 — the `merge_bucket_counts` pattern applied
-    to Bloom bits): a deployment builds the filter once, then each
-    ingest ORs its batch's word table in via
+
+def _bloom_positions(g: Column) -> list[Column]:
+    """The filter's bit positions of ``g``: an 8-hex md5 slice of
+    ``g || salt`` per salt, mod the filter's bit count."""
+    return [
+        hex_to_long(F.md5(F.concat(g, F.lit(s))), 8) % F.lit(_BLOOM_BITS)
+        for s in _BLOOM_SALTS
+    ]
+
+
+def bloom_word_table(grams: DataFrame, gram_col: str = "g") -> DataFrame:
+    """A Bloom filter over ``gram_col`` as a FRAME of 32-bit words:
+    (w, bits) — 4096 bits, one salted-md5 position per salt — so the
+    filter is a persistable, mergeable artifact. One map-side-combined
+    bit_or aggregate straight off the gram stream (OR is idempotent —
+    no distinct, no gram-string shuffle); absent words simply have no
+    row (bits = 0 implicitly), so the table is at most 128 rows at any
+    corpus size. :func:`bloom_contains` probes it.
+
+    Incremental maintenance: a deployment builds the filter once, then
+    each ingest ORs its batch's word table in via
     :func:`merge_bloom_word_tables` — merged == from-scratch over the
     union corpus (bit_or is associative/commutative/idempotent),
     pinned by the ``docs_bloom_merge`` oracle row."""
-    g = F.col(gram_col)
-    pos = F.explode(
-        F.array(
-            *[
-                hex_to_long(F.md5(F.concat(g, F.lit(s))), 8)
-                % F.lit(m_bits)
-                for s in salts
-            ]
-        )
-    ).alias("p")
+    pos = F.explode(F.array(*_bloom_positions(F.col(gram_col)))).alias("p")
     return (
         grams.select(pos)
         .select(
@@ -572,3 +637,24 @@ def merge_bloom_word_tables(a: DataFrame, b: DataFrame) -> DataFrame:
         .groupBy("w")
         .agg(F.expr("bit_or(bits)").cast("long").alias("bits"))
     )
+
+
+def bloom_contains(col: Column, words: Iterable[tuple[int, int]]) -> Column:
+    """Membership probe against a collected :func:`bloom_word_table`
+    (``words``: its (w, bits) rows): 1 when every salted position of
+    ``col`` is set, else 0 — never 0 for a member (no false
+    negatives). The filter travels as a literal array of its 128
+    words, so membership is a pure expression: no join on the probe
+    side."""
+    dense = [0] * (_BLOOM_BITS // 32)
+    for w, bits in words:
+        dense[w] = int(bits)
+    lit_words = F.array(*[F.lit(v).cast("long") for v in dense])
+    hit = None
+    for p in _bloom_positions(col):
+        word = F.element_at(lit_words, (p / 32).cast("int") + 1)
+        bit = F.call_function(
+            "shiftright", word, (p % 32).cast("int")
+        ).bitwiseAND(F.lit(1))
+        hit = bit if hit is None else hit * bit
+    return hit

@@ -184,12 +184,15 @@ def test_hist_merge_equals_full_build(spark):
 def test_kmv_merge_union_retruncate(spark):
     """KMV's mergeability claim: union two groups' sketches (take the
     k smallest of the combined hash lists) == the sketch of the union
-    — i.e. the estimate of |A ∪ B| needs only the two sketches."""
+    — i.e. the estimate of |A ∪ B| needs only the two sketches; and
+    ``kmv_sketch`` + ``kmv_union`` compute exactly that merge."""
     from pyspark.sql import functions as F2
 
     from rust_dms_cdc_operator_spark.operators.sketch import (
         kmv_cardinality,
         kmv_hash,
+        kmv_sketch,
+        kmv_union,
     )
 
     rows_a = [("g", f"a-{i}") for i in range(800)]
@@ -210,6 +213,23 @@ def test_kmv_merge_union_retruncate(spark):
     kth = combined[63]
     est = round(63 * float(1 << 60) / kth)
     assert est == direct.kmv_estimate
+
+    # the operators: per-half kmv_sketch lists, merged by kmv_union
+    halves = spark.createDataFrame(
+        [("a", v) for _, v in rows_a] + [("b", v) for _, v in rows_b],
+        "half string, v string",
+    )
+    sk = {r.half: r for r in kmv_sketch(halves, ["half"], "v", 64).collect()}
+    assert sk["a"].kmv_hashes == kmins(rows_a)
+    assert sk["b"].kmv_hashes == kmins(rows_b)
+    pair = spark.createDataFrame(
+        [(sk["a"].kmv_hashes, sk["b"].kmv_hashes)],
+        "a array<bigint>, b array<bigint>",
+    )
+    merged = pair.select(
+        kmv_union(F2.col("a"), F2.col("b"), 64).alias("u")
+    ).first().u
+    assert merged == combined
 
 
 def test_cms_inner_product_upper_bound(spark):
@@ -243,7 +263,7 @@ def test_heavy_hitters_exact_bounded_and_fallback(spark):
     asc) tie order; (2) per-partition MG summaries stay <= m + 1 rows;
     (3) on a near-uniform stream where the pigeonhole guarantee fails
     the operator falls back and is STILL exact; (4) k larger than the
-    vocabulary returns every token."""
+    vocabulary returns every token; (5) NULL tokens are dropped."""
     import random
 
     from pyspark.sql import functions as F
@@ -296,6 +316,18 @@ def test_heavy_hitters_exact_bounded_and_fallback(spark):
              heavy_hitters_exact(tiny, "w", k=10, m=8).collect()]
     assert got_t == [("a", 2), ("b", 1)]
 
+    # (5) NULL tokens are never hitters, on either path: m=16 certifies
+    # the bounded answer, m=1 forces the fallback aggregation
+    nulls = spark.createDataFrame(
+        [(None,)] * 500 + [("a",)] * 300 + [("b",)] * 200
+        + [("c",)] * 150,
+        "w string",
+    ).repartition(3)
+    for m in (16, 1):
+        got_n = [(r.w, r.n) for r in
+                 heavy_hitters_exact(nulls, "w", k=3, m=m).collect()]
+        assert got_n == [("a", 300), ("b", 200), ("c", 150)], m
+
 
 def test_hll_cardinality_accuracy_and_layout_independence(spark):
     """Raw HLL at p=9 (m=512): within ~3x the theoretical 4.6% rsd on
@@ -319,46 +351,68 @@ def test_hll_cardinality_accuracy_and_layout_independence(spark):
 
 def test_hll_merge_equals_whole(spark):
     """Mergeability — the property KMV lacks a cheap form of: the
-    register-wise max of two group sketches equals the sketch of the
-    union, exactly (not approximately)."""
+    register-wise max of two group sketches (union + max per register,
+    the merge events_hll_retention runs) equals the sketch of the
+    union, exactly (not approximately), at both hash widths the
+    queries use."""
     from pyspark.sql import functions as F
 
     from rust_dms_cdc_operator_spark.operators.sketch import (
-        hll_add_cols,
         hll_cardinality,
+        hll_registers,
+        hll_scaled_sum,
     )
 
     df = spark.createDataFrame(
         [(("a" if i % 2 else "b"), f"x{i % 700}") for i in range(3000)],
         "g string, v string",
     )
-    whole = hll_cardinality(df.select("v"), "v", p=9).collect()[0]
-    # merge the per-group register tables by plain max(rho)
-    reg, rho = hll_add_cols(F.col("v"), 9)
-    merged_regs = (
-        df.select("g", reg.alias("reg"), rho.alias("rho"))
-        .groupBy("g", "reg").agg(F.max("rho").alias("rho"))
-        .groupBy("reg").agg(F.max("rho").alias("mreg"))
-    )
-    s_hit = merged_regs.agg(
-        F.sum(F.expr("shiftleft(cast(1 as bigint), 52 - cast(mreg as int))"))
-        .alias("s"), F.count(F.lit(1)).alias("m_hit")
-    ).collect()[0]
-    s_scaled = s_hit.s + (512 - s_hit.m_hit) * (1 << 52)
-    assert (s_hit.m_hit, s_scaled) == (whole.m_hit, whole.s_scaled)
+    for hash_chars in (15, 12):
+        whole = hll_scaled_sum(
+            hll_registers(df.select("v"), "v", p=9, hash_chars=hash_chars),
+            p=9, hash_chars=hash_chars,
+        ).collect()[0]
+        regs = hll_registers(df, "v", ["g"], p=9, hash_chars=hash_chars)
+
+        def side(g):
+            return regs.where(F.col("g") == g).select("reg", "mreg")
+
+        union = (
+            side("a").unionByName(side("b"))
+            .groupBy("reg").agg(F.max("mreg").alias("mreg"))
+        )
+        merged = hll_scaled_sum(union, p=9, hash_chars=hash_chars).collect()[0]
+        assert (merged.m_hit, merged.s_scaled) == (
+            whole.m_hit, whole.s_scaled
+        ), hash_chars
+        assert 0 < whole.m_hit <= 512
+        # s_scaled rebuilt on the driver from the collected registers:
+        # Σ 2^(maxexp - M) over hit registers + 2^maxexp per empty one
+        maxexp = 4 * hash_chars - 9 + 1
+        hit = union.collect()
+        assert len(hit) == whole.m_hit
+        assert whole.s_scaled == sum(
+            1 << (maxexp - r.mreg) for r in hit
+        ) + (512 - len(hit)) * (1 << maxexp), hash_chars
+    # the default width is hll_cardinality's sketch
+    card = hll_cardinality(df.select("v"), "v", p=9).collect()[0]
+    whole15 = hll_scaled_sum(hll_registers(df, "v", p=9), p=9).collect()[0]
+    assert (card.m_hit, card.s_scaled) == (whole15.m_hit, whole15.s_scaled)
 
 
 def test_bloom_word_table_merge_equals_scratch(spark):
-    """Round 12: OR-merging per-epoch Bloom word tables reproduces
-    the from-scratch filter bit-for-bit, for any partition of the
-    corpus — the additive-maintenance contract of the
-    decontamination artifact."""
+    """OR-merging per-epoch Bloom word tables reproduces the
+    from-scratch filter bit-for-bit, for any partition of the corpus
+    — the additive-maintenance contract of the decontamination
+    artifact; and ``bloom_contains`` finds every member gram in the
+    built table (no false negatives)."""
     from pyspark.sql import functions as F
 
     from rust_dms_cdc_operator_spark.operators.dedup import (
         sliding_word_ngrams,
     )
     from rust_dms_cdc_operator_spark.operators.sketch import (
+        bloom_contains,
         bloom_word_table,
         merge_bloom_word_tables,
     )
@@ -387,3 +441,9 @@ def test_bloom_word_table_merge_equals_scratch(spark):
     # idempotence: re-merging an epoch changes nothing
     again = merge_bloom_word_tables(merged, parts[1])
     assert {(r.w, r.bits) for r in again.collect()} == scratch
+    # every member gram probes as present against the built table
+    members = grams(F.lit(True)).select(
+        bloom_contains(F.col("g"), sorted(scratch)).alias("hit")
+    )
+    hits = members.groupBy("hit").count().collect()
+    assert [(r.hit, r["count"] > 0) for r in hits] == [(1, True)]
