@@ -547,6 +547,34 @@ class BucketedParquetState:
         return (self.log.load(epoch) or {}).get("stats")
 
 
+def drain(
+    stream: DataFrame,
+    handle,
+    checkpoint_dir: str,
+    output_mode: str | None = None,
+) -> None:
+    """Run ``handle(batch, batch_id)`` on every microbatch of
+    ``stream`` until the source is drained, then return: the
+    ``availableNow`` trigger processes whatever exists when the query
+    starts and stops. ``output_mode`` is the streaming output mode
+    (``"append"``, ``"complete"``, ``"update"``; None keeps Spark's
+    default, append). A failing ``handle`` fails the query: this raises
+    ``StreamingQueryException`` carrying the handler's error, batches
+    committed before it keep their effects, and the query is stopped
+    either way, so a long-lived session is left with no active
+    stream."""
+    writer = stream.writeStream.foreachBatch(handle).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if output_mode is not None:
+        writer = writer.outputMode(output_mode)
+    q = writer.trigger(availableNow=True).start()
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+
+
 def stream_replay_bucketed(
     spark: SparkSession,
     source_dir: str,
@@ -568,9 +596,9 @@ def stream_replay_bucketed(
     ``FOLD_DELTAS`` + 1-th commit folds it into a new base
     (``BucketedParquetState``'s fold policy).
 
-    Uses ``availableNow`` so the call is synchronous (drains whatever
-    exists, then stops) — the 24/7 deployment drops the trigger and
-    keeps the query running.
+    Runs through :func:`drain`, so the call is synchronous (drains
+    whatever exists, then stops) — the 24/7 deployment drops the
+    trigger and keeps the query running.
 
     ``compact_every=N`` folds maintenance into the loop: after every
     N merged batches every bucket is folded into one generation of
@@ -605,12 +633,6 @@ def stream_replay_bucketed(
             if compact_every and merged_count % compact_every == 0:
                 store.compact(batch.sparkSession)
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", fsio.join(state_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, handle, fsio.join(state_dir, "_checkpoint"))
     return store.read(spark)
 

@@ -11,12 +11,14 @@ from types import SimpleNamespace
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rust_dms_cdc_operator_spark.operators.compact import compact_cdc
 from rust_dms_cdc_operator_spark.streaming.cdc_stream import (
     BucketedParquetState,
+    drain,
     entry_rels,
     stream_replay_bucketed,
 )
@@ -1852,14 +1854,18 @@ def test_lookup_builds_without_a_spark_job(spark, tmp_path):
     }
 
 
-def test_stream_query_scratch_dirs_removed_at_exit(tmp_path):
+@pytest.mark.parametrize("sf_path", ["absolute", "relative"])
+def test_stream_query_scratch_dirs_removed_at_exit(tmp_path, sf_path):
     """A one-shot streaming query makes its source, output and
     checkpoint dirs under the temp dir; none of them is left once the
-    process that ran it has exited."""
+    process that ran it has exited. A relative ``sf_dir`` (resolved
+    against the working dir) reads the same table: its source links
+    must not dangle."""
     import subprocess
     import sys
 
     sf = tmp_path / "sf"
+    sf_arg = str(sf) if sf_path == "absolute" else "sf"
     sf.mkdir()
     pq.write_table(
         pa.table({"doc_id": pa.array(range(6), pa.int64()),
@@ -1877,7 +1883,7 @@ from rust_dms_cdc_operator_spark.session import get_spark
 
 spark = get_spark(app_name="scratch-dirs", master="local[2]",
                   shuffle_partitions=2)
-assert q_stream_dedup(spark, {str(sf)!r}).count() == 4
+assert q_stream_dedup(spark, {sf_arg!r}).count() == 4
 made = [d for _, ds, _ in os.walk({str(tmp_path)!r}) for d in ds
         if d.startswith({prefixes!r})]
 print("MADE", len(made))
@@ -1885,6 +1891,7 @@ print("MADE", len(made))
     proc = subprocess.run(
         [sys.executable, "-c", script],
         env={**os.environ, "TMPDIR": str(tmp_path)},
+        cwd=str(tmp_path),
         capture_output=True,
         text=True,
         timeout=600,
@@ -1892,3 +1899,52 @@ print("MADE", len(made))
     assert "MADE 3" in proc.stdout, (proc.stdout[-2000:], proc.stderr[-3000:])
     left = [p for p in tmp_path.rglob("*") if p.name.startswith(prefixes)]
     assert left == []
+
+
+def test_drain_failing_handler_keeps_committed_batches(spark, tmp_path):
+    """A handler that raises fails ``drain`` with a
+    StreamingQueryException carrying its message; the batch committed
+    before it keeps its effect and no stream is left active."""
+    src = tmp_path / "src"
+    src.mkdir()
+    _write(str(src / "a.parquet"), [("I", 1, "a", 1)], 1_700_000_000)
+    _write(str(src / "b.parquet"), [("I", 2, "b", 2)], 1_700_000_010)
+    out = str(tmp_path / "out")
+    stream = (
+        spark.readStream.schema(SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    done: list[int] = []
+
+    def handle(batch, bid):
+        if done:
+            raise RuntimeError("second batch refused")
+        batch.write.parquet(out)
+        done.append(bid)
+
+    with pytest.raises(StreamingQueryException, match="second batch refused"):
+        drain(stream, handle, str(tmp_path / "ck"))
+    assert [r.id for r in spark.read.parquet(out).collect()] == [1]
+    assert spark.streams.active == []
+
+
+def test_check_oracle_stream_queries():
+    """`check_oracle.py` on every registered streaming query at
+    sf0.001: each stream drain must reproduce its DuckDB oracle."""
+    import subprocess
+    import sys
+
+    from rust_dms_cdc_operator_spark.inventory import QUERIES
+    from tests.test_diff import SF_DIR
+
+    names = sorted(n for n in QUERIES if n.startswith("stream_"))
+    assert len(names) == 9, names
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [sys.executable, "tools/check_oracle.py",
+         "--sf-dir", SF_DIR, *names],
+        capture_output=True, text=True, cwd=repo, timeout=900,
+    )
+    assert r.returncode == 0, (r.stdout[-3000:], r.stderr[-3000:])
+    assert "9/9 queries match" in r.stdout
